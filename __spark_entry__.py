@@ -16,15 +16,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from schema_infer_plugin_spark.checks import (
-    contiguity_violations,
-    domain_violations,
-    drift_stats,
-    histogram,
-    null_violations,
-    uniqueness_violations,
-)
-from schema_infer_plugin_spark.checks.domains import tool_requires_role_violations
+from schema_infer_plugin_spark.checks import drift_stats, histogram
 from schema_infer_plugin_spark.operators.profile import profile, type_profile
 from schema_infer_plugin_spark.operators.violations import union_violations
 from schema_infer_plugin_spark.schema import ROLE_DOMAIN, TOOL_DOMAIN
@@ -51,6 +43,16 @@ def _viol(df: DataFrame) -> DataFrame:
     """Project check output to oracle-friendly column names ('column' is a
     reserved word in DuckDB)."""
     return df.withColumnRenamed("column", "col_name")
+
+
+def _fused(spark: SparkSession, sf_dir: str, *checks: str, rules=None) -> DataFrame:
+    """The fused validation plan's rows for ``checks`` (plans/validate.py;
+    ``rules`` default to the built-ins) — every per-check violation query
+    reads the ONE rule engine; its oracle SQL is the independent witness."""
+    from schema_infer_plugin_spark.plans.validate import validate_transcripts
+
+    viol = validate_transcripts(_transcripts(spark, sf_dir), rules)
+    return _viol(viol.filter(F.col("check_name").isin(*checks)))
 
 
 _INT_RE = "^[+-]?[0-9]+$"
@@ -118,7 +120,7 @@ FROM (
 
 
 def q_uniqueness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _viol(uniqueness_violations(_transcripts(spark, sf_dir)))
+    return _fused(spark, sf_dir, "uniqueness")
 
 
 ORACLE_UNIQUENESS = oracle_cte(
@@ -185,7 +187,7 @@ FROM transcripts GROUP BY conv_id, turn_idx HAVING count(DISTINCT role) > 1
 
 
 def q_contiguity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _viol(contiguity_violations(_transcripts(spark, sf_dir)))
+    return _fused(spark, sf_dir, "contiguity", "contiguity_start")
 
 
 ORACLE_CONTIGUITY = oracle_cte(
@@ -208,7 +210,7 @@ FROM lagged WHERE prev_idx IS NULL AND turn_idx != 0
 
 
 def q_role_domain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _viol(domain_violations(_transcripts(spark, sf_dir), "role", ROLE_DOMAIN))
+    return _fused(spark, sf_dir, "domain_role")
 
 
 ORACLE_ROLE_DOMAIN = oracle_cte(
@@ -221,7 +223,7 @@ FROM transcripts WHERE role IS NOT NULL AND role NOT IN ({",".join(repr(r) for r
 
 
 def q_tool_domain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _viol(domain_violations(_transcripts(spark, sf_dir), "tool", TOOL_DOMAIN))
+    return _fused(spark, sf_dir, "domain_tool")
 
 
 ORACLE_TOOL_DOMAIN = oracle_cte(
@@ -234,7 +236,7 @@ FROM transcripts WHERE tool IS NOT NULL AND tool NOT IN ({",".join(repr(t) for t
 
 
 def q_tool_without_role(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _viol(tool_requires_role_violations(_transcripts(spark, sf_dir)))
+    return _fused(spark, sf_dir, "tool_without_role")
 
 
 ORACLE_TOOL_WITHOUT_ROLE = oracle_cte(
@@ -247,9 +249,9 @@ FROM transcripts WHERE tool IS NOT NULL AND coalesce(role, '') != 'tool'
 
 
 def q_role_alternation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from schema_infer_plugin_spark.checks import role_alternation_violations
+    from schema_infer_plugin_spark.checks import alternation_rules
 
-    return _viol(role_alternation_violations(_transcripts(spark, sf_dir)))
+    return _fused(spark, sf_dir, "role_alternation", rules=alternation_rules())
 
 
 ORACLE_ROLE_ALTERNATION = oracle_cte(
@@ -258,7 +260,8 @@ SELECT 'role_alternation' AS check_name, conv_id, turn_idx, 'role' AS col_name,
        role AS observed, concat('!= ', prev_role) AS expected
 FROM (
   SELECT conv_id, turn_idx, role,
-         lag(role) OVER (PARTITION BY conv_id ORDER BY turn_idx ASC NULLS FIRST, ts ASC NULLS FIRST) AS prev_role
+         lag(role) OVER (PARTITION BY conv_id ORDER BY turn_idx ASC NULLS FIRST, ts ASC NULLS FIRST,
+                         role ASC NULLS FIRST) AS prev_role
   FROM transcripts WHERE conv_id IS NOT NULL AND turn_idx IS NOT NULL)
 WHERE role IS NOT NULL AND prev_role IS NOT NULL AND role = prev_role AND role != 'tool'
 """
@@ -338,12 +341,14 @@ FROM (
 def q_conv_boundaries(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conversation boundary-role validation (checks/boundaries.py): convs
     opening outside {user,system} or closing outside {assistant,tool} — the
-    lost-prompt / dangling-question defects no per-turn check can see. One
-    conv_id window exchange (zero on a bucketed table), stable
-    (turn_idx, ts NULLS FIRST, role) boundary order."""
-    from schema_infer_plugin_spark.checks import conv_boundary_violations
+    lost-prompt / dangling-question defects no per-turn check can see. Two
+    conversation rules of the fused plan: one conv_id window exchange (zero
+    on a bucketed table), first/last flags by lag/lead in schema.conv_order."""
+    from schema_infer_plugin_spark.checks import boundary_rules
 
-    return _viol(conv_boundary_violations(_transcripts(spark, sf_dir)))
+    return _fused(
+        spark, sf_dir, "conv_start_role", "conv_end_role", rules=boundary_rules()
+    )
 
 
 ORACLE_CONV_BOUNDARIES = oracle_cte(
@@ -515,16 +520,17 @@ _ALLOWED_TRANSITIONS = [
 
 def q_role_transition_domain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Config-declared transition whitelist (checks/alternation.
-    transition_domain_violations): one violation per adjacent-turn
-    (prev_role → role) edge outside the declared legal set — the DOMAIN
-    constraint over the protocol's edge set that role_transition_matrix
-    profiles. One lag window on the conv_id exchange (zero on a bucketed
-    table), output ∝ violations; wired into run_validation additively via
+    transition_rules): one violation per adjacent-turn (prev_role → role)
+    edge outside the declared legal set — the DOMAIN constraint over the
+    protocol's edge set that role_transition_matrix profiles. A conversation
+    rule of the fused plan (one conv_id exchange, zero on a bucketed table),
+    output ∝ violations; enabled in run_validation via
     validation.allowed_transitions."""
-    from schema_infer_plugin_spark.checks import transition_domain_violations
+    from schema_infer_plugin_spark.checks import transition_rules
 
-    return _viol(
-        transition_domain_violations(_transcripts(spark, sf_dir), _ALLOWED_TRANSITIONS)
+    return _fused(
+        spark, sf_dir, "role_transition_domain",
+        rules=transition_rules(_ALLOWED_TRANSITIONS),
     )
 
 
@@ -618,7 +624,7 @@ FROM transcripts WHERE NOT coalesce(epoch_us(ts) >= 1701388800000000, FALSE)
 
 
 def q_null_text(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _viol(null_violations(_transcripts(spark, sf_dir), "text"))
+    return _fused(spark, sf_dir, "not_null_text")
 
 
 ORACLE_NULL_TEXT = oracle_cte(
@@ -5439,7 +5445,7 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full Pass-B validation over the sf0.001 transcripts fixture —
     every check via the FUSED single-pass plan (plans/validate.py: one scan,
-    one exchange), stamped and stably ordered like the modular union."""
+    one exchange), stamped and stably ordered by (conv_id, turn_idx, check)."""
     from schema_infer_plugin_spark.plans.validate import validate_transcripts
 
     t = _transcripts(spark, SF0001)

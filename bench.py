@@ -276,7 +276,15 @@ local[{cpus}], min-of-5 calm iterations:
 **Per-turn overhead ratio: {result["value"]}** (≈1 means the hot key costs
 its own rows' work in one straggler task, no cascade). Structural assertions
 (hot conv whole in one partition, residual partition balance < 3x mean,
-fused == modular rows) live in tests/test_bucketed.py.
+fused == DuckDB oracle rows with every option on) live in tests/test_bucketed.py.
+
+Residual NULL-key skew on the bucketed path: rows missing conv_id or
+turn_idx are salted across 64 window partitions only when the plan has an
+exchange. Over a conv_id-bucketed table there is none, so every NULL-conv_id
+row stays in the one bucket that xxhash64(NULL) selects and is windowed by a
+single task; NULL-turn_idx rows stay in their conversation's bucket. The
+keyless rows emit only their not_null_* violations, but a flood of them is
+still one straggler task on the zero-exchange plan. Not measured here.
 
 ```json
 {json.dumps(result, indent=2)}

@@ -1,31 +1,29 @@
 """Pass-B constraint checks over a transcripts DataFrame.
 
-Each check returns typed violation rows with a common column set
-(check_name, conv_id, turn_idx, column, observed, expected) so they union into
-the violations table (operators/violations.py). The reference's analog is the
-per-message parse/validity outcome ladder (core/inferrer.py:199-261); here each
-check is one declarative plan with an explicit scale posture documented per
-module.
+Every Pass-B check is a ``custom.Rule``; plans/validate.py compiles a rule
+list into one fused plan emitting typed violation rows (check_name, conv_id,
+turn_idx, column, observed, expected) for the violations table
+(operators/violations.py). The reference's analog is the per-message
+parse/validity outcome ladder (core/inferrer.py:199-261). The other modules
+are profiles and table-level checks, each one declarative plan with an
+explicit scale posture documented per module.
 """
 
 from .alternation import (  # noqa: F401
-    role_alternation_violations,
+    alternation_rules,
     role_transition_matrix,
     transition_buckets,
     transition_chi2,
-    transition_domain_violations,
     transition_histogram,
+    transition_rules,
     transition_self_drift,
 )
-from .custom import expr_suite_violations  # noqa: F401
-from .uniqueness import uniqueness_violations  # noqa: F401
-from .contiguity import contiguity_violations  # noqa: F401
-from .domains import domain_violations, infer_domain  # noqa: F401
+from .custom import Rule, expr_suite_violations  # noqa: F401
+from .domains import infer_domain  # noqa: F401
 from .fd import fd_violations  # noqa: F401
-from .nulls import null_violations  # noqa: F401
 from .outliers import iqr_outliers  # noqa: F401
 from .volume import daily_volume_anomalies  # noqa: F401
-from .temporal import conv_latency_stats, ts_monotonic_violations  # noqa: F401
+from .temporal import conv_latency_stats, ts_monotonic_violations_us  # noqa: F401
 from .skew import group_size_stats, hot_key_report  # noqa: F401
 from .drift import (  # noqa: F401
     bucket_counts,
@@ -54,5 +52,5 @@ from .correlation import (  # noqa: F401
     grouped_int_corr_merge,
     grouped_int_corr_partial,
 )
-from .boundaries import conv_boundary_violations  # noqa: F401
+from .boundaries import boundary_rules  # noqa: F401
 from .evolution import evolution_verdicts, schema_evolution_check  # noqa: F401

@@ -1,36 +1,39 @@
-"""Role-alternation check: agent transcripts should alternate speakers.
+"""Conversation-protocol checks: role alternation, the transition whitelist,
+and the (prev_role → role) transition profiles.
 
-Engine-added, transcript-native constraint (no reference analog — SURVEY.md
-§2.6 family): within a conversation ordered by ``(turn_idx, ts)``, two
-CONSECUTIVE turns with the same non-null role indicate a stitching or
-ingestion fault — except ``tool`` turns, which legitimately run in sequences
-(multiple tool results between assistant turns) and are therefore exempt on
-both sides of the comparison.
+Engine-added, transcript-native constraints (no reference analog — SURVEY.md
+§2.6 family): within a conversation in the engine's turn order
+(schema.conv_order), two CONSECUTIVE turns with the same non-null role
+indicate a stitching or ingestion fault — except ``tool`` turns, which
+legitimately run in sequences (multiple tool results between assistant
+turns) and are therefore exempt on both sides of the comparison.
 
-Same window shape as contiguity/ts-monotonic (one lag over the conv_id
-exchange), so a future fused-plan inclusion costs zero extra shuffles; kept
-standalone for now so the fused plan's verdict grid stays stable.
+The two constraints are conversation rules (checks/custom.Rule) over the
+fused plan's annotated frame (plans/validate.py), so enabling them adds no
+scan and no exchange; the profiles below are one lag window each over the
+conv_id exchange.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from schema_infer_plugin_spark.schema import well_keyed
+from schema_infer_plugin_spark.schema import conv_order, well_keyed
+
+from .custom import Rule, unless
 
 
 def role_transition_matrix(df: DataFrame) -> DataFrame:
     """Counts and rates of adjacent-turn (prev_role → role) transitions —
-    the DISTRIBUTIONAL companion to :func:`role_alternation_violations`:
+    the DISTRIBUTIONAL companion to :func:`alternation_rules`:
     instead of emitting only the forbidden repeats, it profiles the whole
     transition structure (user→assistant share, tool-chain lengths showing up
     as tool→tool mass, conversation openers under prev_role NULL), which is
     what a drift check compares across ingest batches.
 
-    Ordering is the engine's stable turn order (turn_idx, ts NULLS FIRST)
-    plus role as a final tie-breaker so lag() is deterministic even on full
-    (turn_idx, ts) duplicate rows — both engines sort identically with NULLS
-    FIRST pinned explicitly.
+    Ordering is the engine's turn order (schema.conv_order), so lag() is
+    deterministic even on full (turn_idx, ts) duplicate rows — both engines
+    sort identically with NULLS FIRST pinned explicitly.
 
     Plan: one lag window over the conv_id exchange (zero exchanges over a
     conv_id-bucketed table) → one hash agg on (prev_role, role). The rate
@@ -42,11 +45,7 @@ def role_transition_matrix(df: DataFrame) -> DataFrame:
     rounded to 6 decimals. prev_role is NULL for each conversation's first
     turn in the stable order.
     """
-    w = Window.partitionBy("conv_id").orderBy(
-        F.col("turn_idx").asc(),
-        F.col("ts").asc_nulls_first(),
-        F.col("role").asc_nulls_first(),
-    )
+    w = Window.partitionBy("conv_id").orderBy(*conv_order())
     # NULL-key rows form no adjacency (engine-wide posture, plans/validate.py)
     # — one corpus-wide NULL pseudo-conversation would chain unrelated rows
     # into fabricated edges AND recreate the unsplittable hot window partition
@@ -74,11 +73,7 @@ def transition_buckets(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     a NULL ts maps to −inf epoch, consistent with the NULLS FIRST turn
     order. One lag window over the conv_id exchange (zero on a bucketed
     table)."""
-    w = Window.partitionBy("conv_id").orderBy(
-        F.col("turn_idx").asc(),
-        F.col(ts_col).asc_nulls_first(),
-        F.col("role").asc_nulls_first(),
-    )
+    w = Window.partitionBy("conv_id").orderBy(*conv_order(ts_col))
     neg_inf = -(1 << 62)
     # NULL-key rows form no adjacency (same posture as role_transition_matrix)
     df = well_keyed(df)
@@ -153,66 +148,45 @@ def transition_self_drift(
     return drift_stats(cur, base)
 
 
-def transition_domain_violations(
-    df: DataFrame, allowed: "list[str] | tuple[str, ...]"
-) -> DataFrame:
-    """Config-declared transition whitelist: one violation per adjacent-turn
+def transition_rules(allowed: "list[str] | tuple[str, ...]") -> list[Rule]:
+    """Config-declared transition whitelist as a conversation rule
+    ``role_transition_domain``: one violation per adjacent-turn
     (prev_role → role) pair outside ``allowed`` — the DOMAIN check over the
-    protocol's edge set, generalizing :func:`role_alternation_violations`
-    (which forbids exactly the repeat edges) to an arbitrary declared machine
+    protocol's edge set, generalizing :func:`alternation_rules` (which
+    forbids exactly the repeat edges) to an arbitrary declared machine
     ("tool may only follow assistant", "system never mid-conversation", …).
     The matrix (:func:`role_transition_matrix`) profiles the distribution;
     this emits the typed violation slice against a declared legal set —
     the same profile/constraint pairing as domains vs infer_domain.
 
-    ``allowed``: 'prev->next' strings (both sides non-empty). Ordering is the
-    engine's stable turn order (turn_idx, ts NULLS FIRST, role) so prev_role
-    is deterministic on full duplicate rows in both engines. Conversation
+    ``allowed``: 'prev->next' strings (both sides non-empty). Conversation
     openers carry no transition (prev NULL ⇒ skipped); NULL roles are the
     null check's job, not this one's — both sides must be non-null to form a
-    judgeable edge.
-
-    Plan: ONE lag window over the conv_id exchange (zero exchanges on a
-    conv_id-bucketed table) → pure filter; output ∝ violations. The whitelist
-    is |roles|²-bounded, inlined as an isin literal list.
+    judgeable edge. The whitelist is |roles|²-bounded, inlined as an isin
+    literal list; observed is the 'prev->role' pair.
     """
     allowed = sorted(set(allowed))
     if not allowed:
-        raise ValueError("transition_domain_violations: allowed set must be non-empty")
+        raise ValueError("transition_rules: allowed set must be non-empty")
     for a in allowed:
         head, sep, tail = a.partition("->")
         if not sep or not head or not tail:
-            raise ValueError(
-                f"transition_domain_violations: entries must be 'prev->next': {a!r}"
-            )
-    w = Window.partitionBy("conv_id").orderBy(
-        F.col("turn_idx").asc(),
-        F.col("ts").asc_nulls_first(),
-        F.col("role").asc_nulls_first(),
-    )
-    expected = "in {" + ",".join(allowed) + "}"
+            raise ValueError(f"transition_rules: entries must be 'prev->next': {a!r}")
+    # concat is NULL unless both roles are non-null, and unless() passes NULL
     pair = F.concat(F.col("prev_role"), F.lit("->"), F.col("role"))
-    # NULL-key rows form no judgeable edge (engine-wide posture,
-    # plans/validate.py) — filtered before the lag so they break no chain
-    return (
-        well_keyed(df)
-        .select(
-            "conv_id", "turn_idx", "role", F.lag("role").over(w).alias("prev_role")
-        )
-        .filter(
-            F.col("role").isNotNull()
-            & F.col("prev_role").isNotNull()
-            & ~pair.isin(*allowed)
-        )
-        .select(
-            F.lit("role_transition_domain").alias("check_name"),
-            F.col("conv_id"),
-            F.col("turn_idx"),
-            F.lit("role").alias("column"),
-            pair.alias("observed"),
-            F.lit(expected).alias("expected"),
-        )
-    )
+    expected = "in {" + ",".join(allowed) + "}"
+    bad = ~pair.isin(*allowed)
+    return [Rule("role_transition_domain", unless(bad), "role", pair, expected, conv=True)]
+
+
+def alternation_rules() -> list[Rule]:
+    """Conversation rule ``role_alternation``: one violation per turn whose
+    role repeats the previous turn's role (both non-null, neither 'tool');
+    observed the role, expected '!= prev_role'."""
+    role, prev = F.col("role"), F.col("prev_role")
+    repeat = (role == prev) & (role != "tool")
+    expected = F.concat(F.lit("!= "), prev)
+    return [Rule("role_alternation", unless(repeat), "role", role, expected, conv=True)]
 
 
 def transition_chi2(
@@ -249,32 +223,3 @@ def transition_chi2(
     base = counts(with_med.filter(F.col("_ts_us") < F.col("_med")))
     cur = counts(with_med.filter(F.col("_ts_us") >= F.col("_med")))
     return chi2_terms(cur, base)
-
-
-def role_alternation_violations(df: DataFrame) -> DataFrame:
-    """One violation per turn whose role repeats the previous turn's role
-    (both non-null, neither 'tool'), ordered by (turn_idx, ts nulls first)."""
-    w = Window.partitionBy("conv_id").orderBy(
-        F.col("turn_idx").asc(), F.col("ts").asc_nulls_first()
-    )
-    prev_role = F.lag("role").over(w)
-    # NULL-key rows sit outside every conversation's turn sequence — the
-    # engine-wide NULL-key posture (plans/validate.py)
-    return (
-        well_keyed(df)
-        .select("conv_id", "turn_idx", "role", prev_role.alias("prev_role"))
-        .filter(
-            F.col("role").isNotNull()
-            & F.col("prev_role").isNotNull()
-            & (F.col("role") == F.col("prev_role"))
-            & (F.col("role") != "tool")
-        )
-        .select(
-            F.lit("role_alternation").alias("check_name"),
-            F.col("conv_id"),
-            F.col("turn_idx"),
-            F.lit("role").alias("column"),
-            F.col("role").alias("observed"),
-            F.concat(F.lit("!= "), F.col("prev_role")).alias("expected"),
-        )
-    )

@@ -9,12 +9,12 @@ every row can individually pass nulls/domains/contiguity while the
 conversation as a whole is broken. This is the conversation-level analog of
 the reference's per-message validity ladder (core/inferrer.py:199-261).
 
-Plan shape: two row_numbers (ascending + descending) over ONE window
-partitioning on conv_id — a single exchange (ZERO over a conv_id-bucketed
-table, same argument as plans/validate.py), then a pure filter. Ordering is
-the engine's stable turn order (turn_idx, ts NULLS FIRST, role) — the
-role tie-breaker makes the boundary turn deterministic on full duplicate
-rows in both engines (the role_transition_matrix invariant).
+The check is two conversation rules (checks/custom.Rule) that ride the fused
+plan (plans/validate.py) when ``validation.boundary_*_roles`` are set: the
+first/last flags of its one annotated frame come from lag/lead over the
+engine's turn order (schema.conv_order — the role tie-breaker makes the
+boundary turn deterministic on full duplicate rows in both engines), so
+the check adds no scan and no exchange.
 
 NULL semantics: a NULL boundary role FAILS membership (quality_funnel
 posture — an unevaluable constraint is a data defect).
@@ -22,86 +22,31 @@ posture — an unevaluable constraint is a data defect).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import functions as F
 
-from schema_infer_plugin_spark.schema import well_keyed
+from .custom import Rule, unless
 
 DEFAULT_FIRST_ROLES = ("user", "system")
 DEFAULT_LAST_ROLES = ("assistant", "tool")
 
 
-def conv_boundary_violations(
-    df: DataFrame,
+def boundary_rules(
     allowed_first: tuple[str, ...] = DEFAULT_FIRST_ROLES,
     allowed_last: tuple[str, ...] = DEFAULT_LAST_ROLES,
-) -> DataFrame:
-    """Standard violation rows for conversations whose first / last turn has
-    a role outside the allowed sets:
-    (check_name ∈ {conv_start_role, conv_end_role}, conv_id, turn_idx,
-    column='role', observed, expected).
-    """
+) -> list[Rule]:
+    """Rules ``conv_start_role`` / ``conv_end_role``: a conversation's first /
+    last turn must have a role in the allowed set (column='role', observed
+    the role or 'NULL', expected 'in {sorted roles}')."""
     if not allowed_first or not allowed_last:
-        raise ValueError("conv_boundary_violations: role sets must be non-empty")
-    order = [
-        F.col("turn_idx").asc(),
-        F.col("ts").asc_nulls_first(),
-        F.col("role").asc(),
+        raise ValueError("boundary_rules: role sets must be non-empty")
+    role = F.col("role")
+
+    def rule(name: str, at: str, allowed) -> Rule:
+        bad = F.col(at) & ~F.coalesce(role.isin(*allowed), F.lit(False))
+        expected = "in {" + ",".join(sorted(allowed)) + "}"
+        return Rule(name, unless(bad), "role", role, expected, conv=True)
+
+    return [
+        rule("conv_start_role", "is_first", allowed_first),
+        rule("conv_end_role", "is_last", allowed_last),
     ]
-    w_asc = Window.partitionBy("conv_id").orderBy(*order)
-    # the descending twin must keep NULL ts FIRST in the ascending sense,
-    # i.e. LAST when descending
-    w_desc = Window.partitionBy("conv_id").orderBy(
-        F.col("turn_idx").desc(),
-        F.col("ts").desc_nulls_last(),
-        F.col("role").desc(),
-    )
-    # NULL-key rows are outside every conversation (engine-wide posture,
-    # plans/validate.py): they can be neither its opener nor its closer
-    marked = well_keyed(df).select(
-        "conv_id",
-        "turn_idx",
-        "role",
-        F.row_number().over(w_asc).alias("rn_first"),
-        F.row_number().over(w_desc).alias("rn_last"),
-    )
-    in_set = lambda vals: F.coalesce(F.col("role").isin(*vals), F.lit(False))  # noqa: E731
-    first_bad = (F.col("rn_first") == 1) & ~in_set(allowed_first)
-    last_bad = (F.col("rn_last") == 1) & ~in_set(allowed_last)
-    fmt = lambda vals: "in {" + ",".join(sorted(vals)) + "}"  # noqa: E731
-    viols = marked.select(
-        "conv_id",
-        "turn_idx",
-        "role",
-        F.filter(
-            F.array(
-                F.when(
-                    first_bad,
-                    F.struct(
-                        F.lit("conv_start_role").alias("check_name"),
-                        F.lit(fmt(allowed_first)).alias("expected"),
-                    ),
-                ),
-                F.when(
-                    last_bad,
-                    F.struct(
-                        F.lit("conv_end_role").alias("check_name"),
-                        F.lit(fmt(allowed_last)).alias("expected"),
-                    ),
-                ),
-            ),
-            lambda s: s.isNotNull(),
-        ).alias("fails"),
-    ).filter(F.size("fails") > 0)
-    return viols.select(
-        F.explode("fails").alias("v"),
-        "conv_id",
-        "turn_idx",
-        "role",
-    ).select(
-        F.col("v.check_name").alias("check_name"),
-        "conv_id",
-        "turn_idx",
-        F.lit("role").alias("column"),
-        F.coalesce(F.col("role"), F.lit("NULL")).alias("observed"),
-        F.col("v.expected").alias("expected"),
-    )

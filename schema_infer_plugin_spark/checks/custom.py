@@ -1,81 +1,119 @@
-"""User-declared expression constraints (the engine's open check surface).
+"""Rules: the one representation of a Pass-B check.
 
-The built-in checks cover the transcript invariants the reference implies
-(nulls, domains, uniqueness, contiguity, …); production tables always grow
-constraints nobody anticipated — "turn_idx under the product cap", "ts inside
-the retention window", "text at least N chars". Instead of a new module per
-rule, ``expr_suite_violations`` compiles a LIST of declarative rules — any
-boolean Spark-SQL predicate — into ONE scan that emits rows in the standard
-violation shape, so custom rules ride the same verdict/scorecard/triage
-machinery as the built-ins (the Deequ-style check API, re-expressed as a
-single Catalyst projection).
+Every check — the built-ins (nulls, domains, uniqueness, contiguity, …), the
+config-enabled conversation checks (boundary roles, transition whitelist,
+role alternation) and user-declared expression constraints ("turn_idx under
+the product cap", "text at least N chars") — is a :class:`Rule`: a boolean
+pass predicate plus how to render a failure. ``plans/validate.py`` compiles
+any rule list into the single fused plan; ``expr_suite_violations`` is the
+same compilation for row rules alone (a pure projection — one scan, ZERO
+exchanges, output rows ∝ violations — which is also what makes it valid on a
+streaming frame).
 
 Plan shape: per row, an array of per-rule CASE structs is filtered to the
-failing rules and exploded — one scan, ZERO exchanges, output rows ∝
-violations (identical posture to plans/validate.py's fused pass, which this
-deliberately does not touch: the fused plan's verdict grid is pinned; custom
-rules are additive).
+failing rules and exploded.
 
 NULL semantics: a predicate that evaluates to NULL is a FAILURE, never a
 silent pass (same posture as datapipe/text.quality_funnel) — an unevaluable
 constraint is a data defect. Declare NULL-tolerant rules explicitly
-(``x IS NULL OR x <= cap``).
+(``x IS NULL OR x <= cap``). Built-in checks that fire only when their fail
+condition is TRUE say so with :func:`unless`.
 """
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import Column, DataFrame, functions as F
 
-#: rule tuple: (check_name, predicate, column, observed, expected_desc) —
-#: predicate/observed accept a Column or a Spark-SQL string.
-Rule = tuple[str, "Column | str", str, "Column | str", str]
+from schema_infer_plugin_spark.schema import violation
 
 
-def _as_col(x: "Column | str") -> Column:
+class Rule(NamedTuple):
+    """(check_name, predicate, column, observed, expected[, conv]).
+
+    ``predicate`` (pass condition) and ``observed`` accept a Column or a
+    Spark-SQL string; ``expected`` is a Column or a literal description.
+    ``conv`` marks a conversation rule: it reads the annotated frame of
+    plans/validate.py (prev_idx, prev_ts, prev_role, key_count, is_first,
+    is_last) and runs after the exchange; row rules run before it."""
+
+    name: str
+    predicate: Column | str
+    column: str
+    observed: Column | str
+    expected: Column | str
+    conv: bool = False
+
+
+def unless(fail: Column) -> Column:
+    """Pass predicate of a check that fails only where ``fail`` is TRUE — a
+    NULL fail condition passes (the built-in checks' semantics)."""
+    return ~F.coalesce(fail, F.lit(False))
+
+
+def as_rules(rules) -> list[Rule]:
+    """``rules`` as Rule tuples (config supplies plain 5-lists), refusing an
+    empty list or colliding check names."""
+    rules = [Rule(*r) for r in rules]
+    if not rules:
+        raise ValueError("rules must be non-empty")
+    names = [r.name for r in rules]
+    dups = sorted({n for n in names if names.count(n) > 1})
+    if dups:
+        raise ValueError(f"rule names collide: {dups}")
+    return rules
+
+
+def _expr(x: Column | str) -> Column:
     return F.expr(x) if isinstance(x, str) else x
+
+
+def failed(rule: Rule) -> Column:
+    """TRUE where ``rule`` fails: its predicate is FALSE or NULL."""
+    return ~F.coalesce(_expr(rule.predicate), F.lit(False))
+
+
+def violation_array(rules: list[Rule]) -> Column:
+    """array<violation struct> of the rules that fail on the current row."""
+    return F.filter(
+        F.array(
+            *[
+                F.when(
+                    failed(r),
+                    violation(
+                        r.name,
+                        r.column,
+                        _expr(r.observed),
+                        F.lit(r.expected) if isinstance(r.expected, str) else r.expected,
+                    ),
+                )
+                for r in rules
+            ]
+        ),
+        lambda v: v.isNotNull(),
+    )
+
+
+def explode_violations(
+    df: DataFrame, violations: Column, keys: tuple[str, ...] = ("conv_id", "turn_idx")
+) -> DataFrame:
+    """One row per array element of ``violations``, standard shape:
+    (check_name, *keys, column, observed, expected)."""
+    return df.select(*keys, F.explode(violations).alias("_v")).select(
+        F.col("_v.check_name").alias("check_name"),
+        *keys,
+        F.col("_v.column").alias("column"),
+        F.col("_v.observed").alias("observed"),
+        F.col("_v.expected").alias("expected"),
+    )
 
 
 def expr_suite_violations(
     df: DataFrame,
     rules: list[Rule],
-    keys: tuple[str, str] = ("conv_id", "turn_idx"),
+    keys: tuple[str, ...] = ("conv_id", "turn_idx"),
 ) -> DataFrame:
-    """One violation row per (row, failing rule), standard shape:
-    (check_name, conv_id, turn_idx, column, observed, expected).
-
-    ``observed`` is stringified with NULL rendered as ``'NULL'`` (the
-    null-check convention), so the output schema is stable across rules of
-    any type.
-    """
-    if not rules:
-        raise ValueError("expr_suite_violations: rules must be non-empty")
-    names = [r[0] for r in rules]
-    if len(set(names)) != len(names):
-        raise ValueError(f"expr_suite_violations: duplicate check names: {names}")
-    structs = []
-    for name, pred, column, observed, expected in rules:
-        failed = ~F.coalesce(_as_col(pred), F.lit(False))
-        structs.append(
-            F.when(
-                failed,
-                F.struct(
-                    F.lit(name).alias("check_name"),
-                    F.lit(column).alias("column"),
-                    F.coalesce(_as_col(observed).cast("string"), F.lit("NULL")).alias(
-                        "observed"
-                    ),
-                    F.lit(expected).alias("expected"),
-                ),
-            )
-        )
-    arr = F.filter(F.array(*structs), lambda x: x.isNotNull())
-    fanned = df.select(
-        *[F.col(k) for k in keys], F.explode(arr).alias("_v")
-    )
-    return fanned.select(
-        F.col("_v.check_name").alias("check_name"),
-        *[F.col(k) for k in keys],
-        F.col("_v.column").alias("column"),
-        F.col("_v.observed").alias("observed"),
-        F.col("_v.expected").alias("expected"),
-    )
+    """Row rules as a pure projection: one violation row per (row, failing
+    rule), (check_name, *keys, column, observed, expected)."""
+    return explode_violations(df, violation_array(as_rules(rules)), keys)

@@ -1,64 +1,16 @@
-"""Domain membership: role/tool values must come from declared domains.
+"""Domain inference: suggest the value domains that role/tool must come from.
 
 Generalizes the reference's include/exclude topic filtering
 (/root/reference/schema_infer/core/discovery.py:29-61) into value-domain
-validation. Plan: **broadcast left-anti join** against the domain table — the
-domain side is tiny by construction, so the anti join is a map-side hash probe
-with zero shuffle of the big table (the canonical shape for "IN (small set)"
-at 100 TB; for literal domains Catalyst folds the broadcast to the same thing
-an isin() would produce, but the join form also covers catalog-backed domains).
+validation. The membership checks themselves are the fused plan's
+``domain_role`` / ``domain_tool`` row rules (plans/validate.default_rules) —
+an isin() over a literal list, evaluated map-side with zero shuffle; this
+module infers the lists they check against.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.functions import broadcast
-
-
-def domain_violations(
-    df: DataFrame,
-    column: str,
-    domain: list[str] | DataFrame,
-    check_name: str | None = None,
-) -> DataFrame:
-    """Violation rows for non-null ``column`` values outside ``domain``."""
-    spark = df.sparkSession
-    if isinstance(domain, list):
-        dom_df = spark.createDataFrame([(v,) for v in domain], [column])
-        expected = ",".join(domain)
-    else:
-        dom_df = domain.toDF(column)
-        expected = "<domain table>"
-    check = check_name or f"domain_{column}"
-    return (
-        df.filter(F.col(column).isNotNull())
-        .join(broadcast(dom_df), on=column, how="left_anti")
-        .select(
-            F.lit(check).alias("check_name"),
-            F.col("conv_id"),
-            F.col("turn_idx"),
-            F.lit(column).alias("column"),
-            F.col(column).cast("string").alias("observed"),
-            F.lit(expected).alias("expected"),
-        )
-    )
-
-
-def tool_requires_role_violations(df: DataFrame, tool_role: str = "tool") -> DataFrame:
-    """Cross-column rule: ``tool`` may only be set on rows whose role is 'tool'.
-
-    Pure filter — pushed to the scan, no shuffle at all.
-    """
-    return df.filter(
-        F.col("tool").isNotNull() & (F.coalesce(F.col("role"), F.lit("")) != tool_role)
-    ).select(
-        F.lit("tool_without_role").alias("check_name"),
-        F.col("conv_id"),
-        F.col("turn_idx"),
-        F.lit("tool").alias("column"),
-        F.col("tool").cast("string").alias("observed"),
-        F.lit("NULL unless role=tool").alias("expected"),
-    )
 
 
 def infer_domain(
@@ -71,8 +23,10 @@ def infer_domain(
     inference-first philosophy applied to constraints: the suggested domain
     is the most-frequent values whose cumulative share of non-null rows
     reaches ``coverage`` (a value is in-domain iff the mass BEFORE it is
-    still below the bar), capped at ``max_values``. Feed the accepted rows
-    straight into :func:`domain_violations` as a catalog-backed domain.
+    still below the bar), capped at ``max_values``. The accepted values
+    (:func:`inferred_domain_values`) become the ``role_domain`` /
+    ``tool_domain`` of the validation rules (plans/validate.default_rules,
+    the runner's ``--infer-domains``).
 
     Plan: one hash agg on the column (partial-agg bounded), then
     ``orderBy(count desc).limit(max_values)`` — a distributed TakeOrdered,

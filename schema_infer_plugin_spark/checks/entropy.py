@@ -6,7 +6,7 @@ distribution is — a `role` column whose entropy collapses between runs has
 degenerated (e.g. a producer started emitting only 'user') even if the
 distinct count is unchanged. Mutual information quantifies coupling between
 two categorical columns; for (role, tool) it is the soft version of the
-engine's hard tool-requires-role rule (checks/domains.py) — a drop in
+engine's hard tool_without_role rule (plans/validate.py) — a drop in
 MI(role, tool) flags that the association itself is eroding.
 
 Numeric determinism (the cross-engine oracle contract): every statistic is

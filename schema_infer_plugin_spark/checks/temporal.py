@@ -2,9 +2,10 @@
 
 The reference has no time semantics at all (SURVEY.md §2.9 — wall-clock timing
 only); this is the engine's event-time addition: within a conversation ordered
-by ``(turn_idx, ts)``, every timestamp must be >= its predecessor. Same window
-shape as contiguity, so the fused plan (plans/validate.py) computes it from the
-very same exchange + sort at zero extra shuffle.
+by the engine's turn order (schema.conv_order), every timestamp must be >= its
+predecessor. The check itself is the ``ts_monotonic`` rule of the fused plan
+(plans/validate.py); this module keeps its epoch-µs witness and the latency
+profile over the same order.
 
 NULL ts rows sort first within their turn (asc_nulls_first in Spark; the oracle
 SQL must say NULLS FIRST — DuckDB defaults to NULLS LAST) and never produce or
@@ -15,37 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from schema_infer_plugin_spark.schema import well_keyed
-
-
-def _rewinds(df: DataFrame) -> DataFrame:
-    """(conv_id, turn_idx, ts, prev_ts) rows where ts rewinds vs the previous
-    row of the conversation — ONE windowed pass, one output row per violating
-    input row (ordering: turn_idx asc, ts asc nulls first, deterministic)."""
-    w = Window.partitionBy("conv_id").orderBy(
-        F.col("turn_idx").asc(), F.col("ts").asc_nulls_first()
-    )
-    prev_ts = F.lag("ts").over(w)
-    # NULL-key rows are outside every conversation's timeline (engine-wide
-    # posture, plans/validate.py) — their keys are the violation, not their ts
-    return (
-        well_keyed(df)
-        .select("conv_id", "turn_idx", "ts", prev_ts.alias("prev_ts"))
-        .filter(F.col("ts") < F.col("prev_ts"))
-    )
-
-
-def ts_monotonic_violations(df: DataFrame) -> DataFrame:
-    """One violation per row whose ts rewinds vs the previous row of the
-    conversation, rendered as typed violation strings."""
-    return _rewinds(df).select(
-        F.lit("ts_monotonic").alias("check_name"),
-        F.col("conv_id"),
-        F.col("turn_idx"),
-        F.lit("ts").alias("column"),
-        F.col("ts").cast("string").alias("observed"),
-        F.concat(F.lit(">= "), F.col("prev_ts").cast("string")).alias("expected"),
-    )
+from schema_infer_plugin_spark.schema import conv_order, well_keyed
 
 
 def conv_latency_stats(df: DataFrame) -> DataFrame:
@@ -53,9 +24,9 @@ def conv_latency_stats(df: DataFrame) -> DataFrame:
     transcripts payload invites (agent-latency dashboards, stalled-session
     detection) on top of the pass/fail monotonicity check.
 
-    Exactly the contiguity/monotonicity window (partitionBy conv_id, orderBy
-    turn_idx asc, ts asc nulls first), so a fused plan computes the lags from
-    the same exchange + sort. Gaps are epoch-microsecond deltas (engine-
+    The fused plan's conversation window (partitionBy conv_id, orderBy
+    schema.conv_order), so a fused plan computes the lags from the same
+    exchange + sort. Gaps are epoch-microsecond deltas (engine-
     portable per the repo invariant — timestamp STRING rendering differs
     between engines on trailing-zero microseconds); a gap exists only where
     both endpoints are non-null, and rewinds (negative gaps — the
@@ -67,9 +38,7 @@ def conv_latency_stats(df: DataFrame) -> DataFrame:
     Output: (conv_id, n_turns, n_gaps, mean_gap_us, max_gap_us, n_responses,
     mean_response_us) — means NULL when no qualifying gap exists.
     """
-    w = Window.partitionBy("conv_id").orderBy(
-        F.col("turn_idx").asc(), F.col("ts").asc_nulls_first(), F.col("role").asc_nulls_first()
-    )
+    w = Window.partitionBy("conv_id").orderBy(*conv_order())
     # conversation-unit profile: well-keyed rows only (NULL-key posture,
     # plans/validate.py) — a keyless row sits on no conversation's timeline
     df = well_keyed(df)
@@ -102,14 +71,24 @@ def conv_latency_stats(df: DataFrame) -> DataFrame:
 
 
 def ts_monotonic_violations_us(df: DataFrame) -> DataFrame:
-    """Numeric variant of the same check: observed/expected timestamps as epoch
-    microseconds (engine-portable compare — string rendering of trailing-zero
-    microseconds differs between engines). Single windowed pass; duplicated
-    (conv_id, turn_idx) keys cannot fan out because there is no rejoin."""
-    return _rewinds(df).select(
-        F.lit("ts_monotonic").alias("check_name"),
-        F.col("conv_id"),
-        F.col("turn_idx"),
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("observed_us"),
-        F.unix_micros(F.col("prev_ts").cast("timestamp")).alias("expected_after_us"),
+    """Epoch-µs witness of the fused plan's ``ts_monotonic`` rule: one row per
+    row whose ts rewinds vs the previous row of the conversation, with
+    observed/expected timestamps as epoch microseconds (engine-portable
+    compare — string rendering of trailing-zero microseconds differs between
+    engines). Single windowed pass; duplicated (conv_id, turn_idx) keys cannot
+    fan out because there is no rejoin."""
+    w = Window.partitionBy("conv_id").orderBy(*conv_order())
+    # NULL-key rows are outside every conversation's timeline (engine-wide
+    # posture, plans/validate.py) — their keys are the violation, not their ts
+    return (
+        well_keyed(df)
+        .select("conv_id", "turn_idx", "ts", F.lag("ts").over(w).alias("prev_ts"))
+        .filter(F.col("ts") < F.col("prev_ts"))
+        .select(
+            F.lit("ts_monotonic").alias("check_name"),
+            F.col("conv_id"),
+            F.col("turn_idx"),
+            F.unix_micros(F.col("ts").cast("timestamp")).alias("observed_us"),
+            F.unix_micros(F.col("prev_ts").cast("timestamp")).alias("expected_after_us"),
+        )
     )

@@ -466,7 +466,10 @@ def cmd_estimate(args: argparse.Namespace) -> int:
     prints one line per check; with --fail-above R, exits 1 when any
     check's ci_lo exceeds R (statistically confident the true rate does)."""
     from schema_infer_plugin_spark.plans.runner import resolve_transcripts_input
-    from schema_infer_plugin_spark.plans.validate import sampled_validation_estimate
+    from schema_infer_plugin_spark.plans.validate import (
+        default_rules,
+        sampled_validation_estimate,
+    )
 
     cfg = _load_cfg(args)
     try:
@@ -483,8 +486,7 @@ def cmd_estimate(args: argparse.Namespace) -> int:
     t, _ = resolve_transcripts_input(spark, args.input)
     est = sampled_validation_estimate(
         t, num, width,
-        role_domain=cfg.validation.role_domain or None,
-        tool_domain=cfg.validation.tool_domain or None,
+        default_rules(cfg.validation.role_domain or None, cfg.validation.tool_domain or None),
     )
     est.coalesce(1).write.mode("overwrite").parquet(
         os.path.join(args.out, "estimate")

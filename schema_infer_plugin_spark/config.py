@@ -186,7 +186,7 @@ class ValidationConfig:
     n_buckets: int = 64
     batch_buckets: int = 16
     psi_threshold: float = 0.2
-    #: user-declared constraints (checks/custom.expr_suite_violations): each
+    #: user-declared constraints (checks/custom.Rule, row rules): each
     #: entry is [name, predicate_sql, column, observed_sql, expected_desc].
     #: FILE-config only — the flat env-var overlay can't express nested lists
     #: (a comma-split env string is rejected by validate() below).
@@ -196,7 +196,7 @@ class ValidationConfig:
     #: Half-set pairs are a config error, not a silent skip.
     boundary_first_roles: list[str] = field(default_factory=list)
     boundary_last_roles: list[str] = field(default_factory=list)
-    #: transition whitelist (checks/alternation.transition_domain_violations):
+    #: transition whitelist (checks/alternation.transition_rules):
     #: 'prev->next' pairs; runs only when non-empty (opt-in). Comma-separated
     #: env form is accepted ('user->assistant,assistant->user').
     allowed_transitions: list[str] = field(default_factory=list)

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from schema_infer_plugin_spark.schema import well_keyed
+from schema_infer_plugin_spark.schema import conv_order, well_keyed
 
 
 def conversation_features(df: DataFrame) -> DataFrame:
@@ -107,12 +107,9 @@ def shared_prefixes(df: DataFrame, k: int = 1, min_count: int = 2) -> DataFrame:
     df = well_keyed(df)
     if min_count < 1:
         raise ValueError(f"shared_prefixes: min_count must be >= 1: {min_count}")
-    w = Window.partitionBy("conv_id").orderBy(
-        F.col("turn_idx").asc(),
-        F.col("ts").asc(),  # Spark asc() is NULLS FIRST; oracle spells it
-        F.col("role").asc(),
-        F.col("text").asc(),
-    )
+    # the turn order plus a text tie-break: full-duplicate (turn_idx, ts,
+    # role) rows still render one deterministic prefix
+    w = Window.partitionBy("conv_id").orderBy(*conv_order(), F.col("text").asc_nulls_first())
     part = F.concat_ws(
         ":",
         F.coalesce(F.col("role"), F.lit("<null>")),

@@ -141,6 +141,12 @@ def dedup_impact_report(
     singletons. Exact BIGINT counts; ``corpus_share`` is the only float
     (round-6 double, positive — no -0.0 hazard).
 
+    PRECONDITION: ``id_col`` is unique in ``docs``. The share denominator
+    counts ROWS of ``docs`` and each row is labeled on its own, so a
+    duplicated id would count as a cluster member twice and inflate
+    cluster_size, n_docs and n_dropped. Dedupe ids upstream; this report
+    does not check it.
+
     Plan: components over the pair graph (edges ∝ near-dups, never corpus),
     one left equi-join to label singletons, two hash aggregations
     (component → size, size → histogram), and a single-row corpus-total

@@ -40,10 +40,13 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
+from schema_infer_plugin_spark.checks.alternation import transition_rules
+from schema_infer_plugin_spark.checks.boundaries import boundary_rules
+from schema_infer_plugin_spark.checks.custom import as_rules
 from schema_infer_plugin_spark.operators.profile import profile
 from schema_infer_plugin_spark.operators.violations import verdicts
 from schema_infer_plugin_spark.plans.ledger import append_ledger, completed_keys
-from schema_infer_plugin_spark.plans.validate import CHECK_NAMES, validate_transcripts
+from schema_infer_plugin_spark.plans.validate import default_rules, validate_transcripts
 
 PASS_B = "validate"
 PASS_A = "profile"
@@ -88,24 +91,21 @@ def run_validation(
 ) -> dict:
     """Pass B over ``transcripts`` with bucket-level checkpoint-resume.
 
-    ``custom_rules``: user-declared (name, predicate, column, observed,
-    expected) constraints (checks/custom.expr_suite_violations), unioned with
-    the fused plan's violations and added to every bucket's verdict grid.
-    Cost when present: ONE extra scan of each batch (the fused plan's
-    text-pruned shuffle invariant is pinned — arbitrary rule columns must not
-    enter it); zero cost when absent.
+    Every enabled check is one rule of ONE list (plans/validate.py), so each
+    batch is one fused plan — 1 scan and 1 exchange (0 over a bucketed
+    table) whatever options are on — and the verdict grid is the rule names:
 
-    ``boundary_roles``: (allowed_first, allowed_last) role sets for the
-    conversation boundary check (checks/boundaries.py) — same additive
-    posture as custom rules (one extra scan + its own conv_id window per
-    batch when present; conv_start_role / conv_end_role join the verdict
-    grid), deliberately NOT folded into the fused plan (its window set and
-    verdict grid are pinned by tests/test_plans.py).
-
-    ``allowed_transitions``: 'prev->next' whitelist for the transition-domain
-    check (checks/alternation.transition_domain_violations) — same additive
-    posture (one extra scan + lag window per batch when present;
-    role_transition_domain joins the verdict grid).
+    * ``role_domain`` / ``tool_domain``: the built-in rules' domains
+      (:func:`~schema_infer_plugin_spark.plans.validate.default_rules`);
+    * ``boundary_roles``: (allowed_first, allowed_last) role sets for the
+      conversation boundary rules conv_start_role / conv_end_role
+      (checks/boundaries.py);
+    * ``allowed_transitions``: 'prev->next' whitelist for the
+      role_transition_domain rule (checks/alternation.transition_rules);
+    * ``custom_rules``: user-declared (name, predicate, column, observed,
+      expected) row rules (checks/custom.py), evaluated before the exchange
+      so the columns they read (``text``) never shuffle. Rule names must not
+      collide (raises).
 
     Returns summary metrics. ``fail_after_batches`` injects a crash after that
     many completed batches (tests prove resumability with it). Domains default
@@ -121,14 +121,13 @@ def run_validation(
     iceberg_verified_counts (as ``main`` does), which verify the persisted
     scheme and return None when they can't; counts keyed by any other hash
     (e.g. Iceberg ``bucket(N, conv_id)`` Murmur3) would prune live buckets."""
-    custom_rules = list(custom_rules or [])
-    boundary_checks = ["conv_start_role", "conv_end_role"] if boundary_roles else []
+    rules = default_rules(role_domain, tool_domain)
+    if boundary_roles:
+        rules += boundary_rules(tuple(boundary_roles[0]), tuple(boundary_roles[1]))
     if allowed_transitions:
-        boundary_checks = boundary_checks + ["role_transition_domain"]
-    clash = {r[0] for r in custom_rules} & set(CHECK_NAMES + boundary_checks)
-    if clash:
-        raise ValueError(f"custom rule names collide with built-in checks: {sorted(clash)}")
-    check_names = CHECK_NAMES + boundary_checks + [r[0] for r in custom_rules]
+        rules += transition_rules(allowed_transitions)
+    rules = as_rules(rules + list(custom_rules or []))
+    check_names = [r.name for r in rules]
     keyed = with_partition_key(transcripts, n_buckets)
     all_keys = [str(i) for i in range(n_buckets)]
     done = completed_keys(spark, out_dir, run_id, PASS_B)
@@ -184,33 +183,8 @@ def run_validation(
             ],
         )
         # partition_key is a pure function of conv_id — recompute, don't join.
-        checked = validate_transcripts(part, role_domain, tool_domain)
-        if boundary_roles:
-            from schema_infer_plugin_spark.checks.boundaries import (
-                conv_boundary_violations,
-            )
-
-            checked = checked.unionByName(
-                conv_boundary_violations(
-                    part, tuple(boundary_roles[0]), tuple(boundary_roles[1])
-                )
-            )
-        if allowed_transitions:
-            from schema_infer_plugin_spark.checks.alternation import (
-                transition_domain_violations,
-            )
-
-            checked = checked.unionByName(
-                transition_domain_violations(part, allowed_transitions)
-            )
-        if custom_rules:
-            from schema_infer_plugin_spark.checks.custom import expr_suite_violations
-
-            checked = checked.unionByName(
-                expr_suite_violations(part, [tuple(r) for r in custom_rules])
-            )
         viol = (
-            checked
+            validate_transcripts(part, rules)
             .withColumn(
                 "partition_key",
                 F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("string"),

@@ -1,37 +1,44 @@
-"""Fused single-pass Pass B: every constraint check in ONE scan + ONE shuffle.
+"""Fused single-pass Pass B: every rule in ONE scan + ONE shuffle.
 
-The modular checks (``checks/``) are the unit-testable, oracle-checked API; at
-10^12 turns their naive union is wasteful: 6 scans of the table, a groupBy
-shuffle (uniqueness), a distinct shuffle *plus* a window shuffle (contiguity).
-This plan computes identical rows with:
+Every check is a ``checks/custom.Rule`` (a pass predicate plus how to render
+a failure), and :func:`validate_transcripts` compiles any rule list — the
+built-ins of :func:`default_rules`, boundary roles, the transition
+whitelist, role alternation and user expression rules — into one plan:
 
-* one scan, projection-pruned to ``(conv_id, turn_idx, role, tool,
-  text IS NULL)`` before the exchange — ``text`` bytes (the bulk of a
-  transcripts table) never enter the shuffle;
-* one hash exchange on ``conv_id`` + one sort ``(conv_id, turn_idx)`` serving
-  BOTH window specs: ``partitionBy(conv_id)`` (lag for contiguity) and
-  ``partitionBy(conv_id, turn_idx)`` (count for uniqueness) — Spark's
-  ``ClusteredDistribution`` is satisfied by the coarser ``HashPartitioning``
-  since {conv_id} ⊆ {conv_id, turn_idx}, so no second exchange appears;
-* row-level checks (domains, tool-without-role, not-null) evaluated as a
-  stacked array of violation structs in the same projection, then exploded —
-  zero extra passes.
+* one scan; ROW rules (domains, not-null, tool-without-role, user rules,
+  which may read ``text``) evaluate map-side, before the exchange, into a
+  violation-array column that is NULL on clean rows, and the projection
+  keeps only ``(conv_id, turn_idx, role, ts)`` beside it — ``text`` bytes
+  (the bulk of a transcripts table) never enter the shuffle;
+* one hash exchange on ``conv_id`` + one sort in the engine's turn order
+  (schema.conv_order) serving ONE annotated frame: lag of
+  turn_idx/ts/role, lead for the last-turn flag (no descending twin sort),
+  and the per-key row count over ``partitionBy(conv_id, turn_idx)`` —
+  Spark's ``ClusteredDistribution`` is satisfied by the coarser
+  ``HashPartitioning`` since {conv_id} ⊆ {conv_id, turn_idx}, so no second
+  exchange appears. Over a conv_id-bucketed table there is no exchange at
+  all (tests/test_bucketed.py);
+* CONVERSATION rules (uniqueness, contiguity, ts_monotonic, boundary roles,
+  the transition whitelist, alternation) evaluate on that frame; both
+  violation arrays are concatenated and exploded — output rows ∝ violations.
 
-Row-for-row equivalence with the modular union is asserted by
-``tests/test_plans.py`` (fixture + synth inputs).
+Enabling options therefore changes the projection, never the plan shape:
+1 scan and 1 exchange (0 bucketed) per run. The DuckDB oracle's per-check
+SQL (__spark_entry__.py) is the independent witness of every rule
+(tests/test_plans.py property test).
 
-Contiguity-over-duplicates note: the modular check runs lag over DISTINCT
-``(conv_id, turn_idx)``. Here duplicates are adjacent after the sort, so a row
-is "first of its key group" iff ``lag(turn_idx) IS DISTINCT FROM turn_idx``;
-lag at such rows equals the previous *distinct* index, and only those rows may
-emit contiguity violations — same result, no distinct needed.
+Uniqueness/contiguity over duplicates: duplicates are adjacent after the
+sort, so a row is "first of its key group" iff ``lag(turn_idx) IS DISTINCT
+FROM turn_idx``; lag at such rows equals the previous *distinct* index, and
+only those rows may emit uniqueness/contiguity violations — the result of a
+distinct + lag, with no distinct needed.
 
 NULL-key posture: rows missing ``conv_id`` or ``turn_idx`` raise
 ``not_null_conv_id`` / ``not_null_turn_idx`` violations and are excluded from
-every sequence check (no well-formed conversation to assert against); in the
-window exchange they are salted across ``_NULL_KEY_SALT`` partitions instead
-of collapsing onto the single NULL hash key — window outputs for them are
-guarded, so the salt can be any deterministic spread.
+every conversation rule (no well-formed conversation to assert against); in
+the window exchange they are salted across ``_NULL_KEY_SALT`` partitions
+instead of collapsing onto the single NULL hash key — conversation rules
+are guarded for them, so the salt can be any deterministic spread.
 
 Skew: the only partition-heavy key is ``conv_id``; conversations are bounded
 (≤ thousands of turns) while the table is not, so hash partitioning stays
@@ -46,27 +53,39 @@ skew-join splitting does not apply to windows, and salting would break window
 exactness. What the plan guarantees instead: (a) the hot key costs exactly ONE
 straggler task — the hash exchange keeps every other partition's residual load
 balanced; (b) memory is safe at any conversation length because WindowExec
-sorts spillably and both window functions (lag / count over the frame) stream.
-If per-task wall-time of the one straggler ever dominates a run, the fallback
-is range-partitioning by ``(conv_id, turn_idx)`` and running per-chunk
-contiguity with boundary stitching (compare each chunk's first index against
-the previous chunk's max — an equi-join on chunk edges); that variant trades
-one exchange for bounded task time and is deliberately NOT the default: it
-costs a second shuffle on every healthy run to protect against a shape
+sorts spillably and every window function (lag / lead / count over the frame)
+streams. If per-task wall-time of the one straggler ever dominates a run, the
+fallback is range-partitioning by ``(conv_id, turn_idx)`` and running
+per-chunk contiguity with boundary stitching (compare each chunk's first index
+against the previous chunk's max — an equi-join on chunk edges); that variant
+trades one exchange for bounded task time and is deliberately NOT the default:
+it costs a second shuffle on every healthy run to protect against a shape
 (multi-billion-turn single conversations) the transcripts contract excludes.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from functools import reduce
 
+from pyspark.sql import Column, DataFrame, Window, functions as F
+
+from schema_infer_plugin_spark.checks.custom import (
+    Rule,
+    as_rules,
+    explode_violations,
+    expr_suite_violations,
+    failed,
+    unless,
+    violation_array,
+)
 from schema_infer_plugin_spark.schema import (
     ROLE_DOMAIN,
     TOOL_DOMAIN,
+    conv_order,
     well_keyed_predicate,
 )
 
-#: check_name values emitted by this plan (verdict grid rows).
+#: check_name values of :func:`default_rules` (verdict grid rows).
 CHECK_NAMES = [
     "uniqueness",
     "contiguity",
@@ -82,60 +101,107 @@ CHECK_NAMES = [
 
 #: salt modulus for NULL-key rows in the window exchange (see
 #: validate_transcripts docstring — any deterministic per-row spread works
-#: because window outputs for those rows are guarded, never emitted)
+#: because conversation rules are guarded for those rows, never emitted)
 _NULL_KEY_SALT = 64
 
 
-def _v(check: str, column: str, observed, expected) -> F.Column:
-    return F.struct(
-        F.lit(check).alias("check_name"),
-        F.lit(column).alias("column"),
-        observed.cast("string").alias("observed"),
-        expected.cast("string").alias("expected"),
-    )
-
-
-def validate_transcripts(
-    df: DataFrame,
+def default_rules(
     role_domain: list[str] | None = None,
     tool_domain: list[str] | None = None,
-    include_alternation: bool = False,
-) -> DataFrame:
-    """All Pass-B violations of ``df`` in one fused plan.
-
-    Output columns: (check_name, conv_id, turn_idx, column, observed,
-    expected) — identical rows to the union of the modular checks.
-
-    ``include_alternation`` adds the role-alternation check
-    (checks/alternation.py) as a ninth lag over the SAME window — zero extra
-    exchanges (plan-gated in tests). Off by default so the verdict grid of
-    existing runs stays stable; callers opting in must extend their
-    check-name grid with ``"role_alternation"``.
-    """
+) -> list[Rule]:
+    """The built-in Pass-B rules, one per :data:`CHECK_NAMES` entry. Each
+    fires only where its fail condition is TRUE (:func:`unless`). Domains
+    default to the schema constants."""
     roles = role_domain or ROLE_DOMAIN
     tools = tool_domain or TOOL_DOMAIN
+    idx, prev = F.col("turn_idx"), F.col("prev_idx")
+    role, tool, ts = F.col("role"), F.col("tool"), F.col("ts")
+    first_of_key = ~prev.eqNullSafe(idx)
+
+    def not_null(c: str) -> Rule:
+        return Rule(f"not_null_{c}", F.col(c).isNotNull(), c, F.lit("NULL"), "NOT NULL")
+
+    return [
+        Rule(
+            "uniqueness",
+            unless(first_of_key & (F.col("key_count") > 1)),
+            "conv_id,turn_idx",
+            F.col("key_count"),
+            "1",
+            conv=True,
+        ),
+        Rule(
+            "contiguity",
+            unless(first_of_key & (idx != prev + 1)),
+            "turn_idx",
+            idx,
+            prev + 1,
+            conv=True,
+        ),
+        Rule(
+            "contiguity_start",
+            unless(F.col("is_first") & (idx != 0)),
+            "turn_idx",
+            idx,
+            "0",
+            conv=True,
+        ),
+        Rule(
+            "ts_monotonic",
+            unless(ts < F.col("prev_ts")),
+            "ts",
+            ts,
+            F.concat(F.lit(">= "), F.col("prev_ts").cast("string")),
+            conv=True,
+        ),
+        Rule("domain_role", unless(~role.isin(roles)), "role", role, ",".join(roles)),
+        Rule("domain_tool", unless(~tool.isin(tools)), "tool", tool, ",".join(tools)),
+        Rule(
+            "tool_without_role",
+            unless(tool.isNotNull() & (F.coalesce(role, F.lit("")) != "tool")),
+            "tool",
+            tool,
+            "NULL unless role=tool",
+        ),
+        not_null("text"),
+        not_null("conv_id"),
+        not_null("turn_idx"),
+    ]
+
+
+def validate_transcripts(df: DataFrame, rules: list[Rule] | None = None) -> DataFrame:
+    """All violations of ``rules`` (default :func:`default_rules`) over
+    ``df`` in one fused plan. Output columns: (check_name, conv_id,
+    turn_idx, column, observed, expected). Rule names must be unique."""
+    rules = as_rules(default_rules() if rules is None else rules)
+    row_rules = [r for r in rules if not r.conv]
+    conv_rules = [r for r in rules if r.conv]
+    if not conv_rules:
+        return expr_suite_violations(df, row_rules)
 
     # NULL-key posture: a row missing conv_id or turn_idx belongs to no
     # well-formed conversation, so (a) it raises a not_null_conv_id /
-    # not_null_turn_idx violation, (b) it is EXCLUDED from every sequence
-    # check (uniqueness/contiguity/ts_monotonic/alternation — asserting
-    # contiguity among unrelated keyless rows would fabricate violations),
-    # and (c) it must not collapse into one hot window partition: hashing
-    # all NULL conv_ids to a single reducer would recreate the irreducible-
-    # skew problem for rows that don't even need window semantics. The salt
-    # spreads ONLY NULL-key rows across _NULL_KEY_SALT partitions on the
-    # exchange path; well-keyed rows keep salt 0, so their window results
-    # are bit-identical, and HashPartitioning(conv_id) from a bucketed scan
-    # still satisfies both clusterings ({conv_id} ⊆ {conv_id, _ksalt[, …]})
-    # — the zero-exchange bucketed plan survives.
+    # not_null_turn_idx violation, (b) it is EXCLUDED from every
+    # conversation rule (asserting contiguity among unrelated keyless rows
+    # would fabricate violations), and (c) it must not collapse into one hot
+    # window partition: hashing all NULL conv_ids to a single reducer would
+    # recreate the irreducible-skew problem for rows that don't even need
+    # window semantics. The salt spreads ONLY NULL-key rows across
+    # _NULL_KEY_SALT partitions on the exchange path; well-keyed rows keep
+    # salt 0, so their window results are bit-identical, and
+    # HashPartitioning(conv_id) from a bucketed scan still satisfies both
+    # clusterings ({conv_id} ⊆ {conv_id, _ksalt[, …]}) — the zero-exchange
+    # bucketed plan survives.
     key_ok = well_keyed_predicate()
+    # NULL on clean rows, so the shuffle carries one null bit for them
+    any_failed = reduce(Column.__or__, map(failed, row_rules), F.lit(False))
+    row_v = [F.when(any_failed, violation_array(row_rules)).alias("_row_v")] if row_rules else []
     slim = df.select(
         "conv_id",
         "turn_idx",
         "role",
-        "tool",
         "ts",
-        F.col("text").isNull().alias("text_null"),
+        *row_v,
         # 1 + pmod: the NULL-key salt range (1.._NULL_KEY_SALT) is DISJOINT
         # from the well-keyed 0 — a colliding salt would put a keyless row
         # back into a real conversation's window partition and shift its
@@ -145,7 +211,7 @@ def validate_transcripts(
         .otherwise(
             F.lit(1)
             + F.pmod(
-                F.xxhash64(F.col("turn_idx"), F.col("role"), F.col("tool"), F.col("ts")),
+                F.xxhash64(F.col("turn_idx"), F.col("role"), F.col("ts")),
                 F.lit(_NULL_KEY_SALT),
             )
         )
@@ -153,115 +219,30 @@ def validate_transcripts(
         .alias("_ksalt"),
     )
 
-    # ts tie-break inside duplicate turn_idx groups makes the ts_monotonic lag
-    # deterministic; lag(turn_idx)/key_count are insensitive to within-group order.
-    w_conv = Window.partitionBy("conv_id", "_ksalt").orderBy(
-        F.col("turn_idx").asc(), F.col("ts").asc_nulls_first()
-    )
+    w_conv = Window.partitionBy("conv_id", "_ksalt").orderBy(*conv_order())
     w_key = Window.partitionBy("conv_id", "_ksalt", "turn_idx")
     annotated = slim.select(
         "*",
         F.lag("turn_idx").over(w_conv).alias("prev_idx"),
         F.lag("ts").over(w_conv).alias("prev_ts"),
+        F.lag("role").over(w_conv).alias("prev_role"),
+        F.lead("turn_idx").over(w_conv).isNull().alias("is_last"),
         F.count(F.lit(1)).over(w_key).alias("key_count"),
-        *([F.lag("role").over(w_conv).alias("prev_role")] if include_alternation else []),
-    )
+    ).withColumn("is_first", F.col("prev_idx").isNull())
 
-    first_of_key = ~F.col("prev_idx").eqNullSafe(F.col("turn_idx"))
-    prev = F.col("prev_idx")
-    idx = F.col("turn_idx")
-    null_s = F.lit(None).cast("string")
-
-    checks = F.array(
-        F.when(
-            key_ok & first_of_key & (F.col("key_count") > 1),
-            _v("uniqueness", "conv_id,turn_idx", F.col("key_count"), F.lit("1")),
-        ),
-        F.when(
-            key_ok & first_of_key & prev.isNotNull() & (idx != prev + 1),
-            _v("contiguity", "turn_idx", idx, prev + 1),
-        ),
-        F.when(
-            key_ok & prev.isNull() & (idx != 0),
-            _v("contiguity_start", "turn_idx", idx, F.lit("0")),
-        ),
-        F.when(
-            key_ok & (F.col("ts") < F.col("prev_ts")),
-            _v(
-                "ts_monotonic",
-                "ts",
-                F.col("ts"),
-                F.concat(F.lit(">= "), F.col("prev_ts").cast("string")),
-            ),
-        ),
-        F.when(
-            F.col("role").isNotNull() & ~F.col("role").isin(roles),
-            _v("domain_role", "role", F.col("role"), F.lit(",".join(roles))),
-        ),
-        F.when(
-            F.col("tool").isNotNull() & ~F.col("tool").isin(tools),
-            _v("domain_tool", "tool", F.col("tool"), F.lit(",".join(tools))),
-        ),
-        F.when(
-            F.col("tool").isNotNull() & (F.coalesce(F.col("role"), F.lit("")) != "tool"),
-            _v("tool_without_role", "tool", F.col("tool"), F.lit("NULL unless role=tool")),
-        ),
-        F.when(
-            F.col("text_null"),
-            _v("not_null_text", "text", F.lit("NULL"), F.lit("NOT NULL")),
-        ),
-        F.when(
-            F.col("conv_id").isNull(),
-            _v("not_null_conv_id", "conv_id", F.lit("NULL"), F.lit("NOT NULL")),
-        ),
-        F.when(
-            F.col("turn_idx").isNull(),
-            _v("not_null_turn_idx", "turn_idx", F.lit("NULL"), F.lit("NOT NULL")),
-        ),
-        *(
-            [
-                F.when(
-                    key_ok
-                    & F.col("role").isNotNull()
-                    & F.col("prev_role").isNotNull()
-                    & (F.col("role") == F.col("prev_role"))
-                    & (F.col("role") != "tool"),
-                    _v(
-                        "role_alternation",
-                        "role",
-                        F.col("role"),
-                        F.concat(F.lit("!= "), F.col("prev_role")),
-                    ),
-                )
-            ]
-            if include_alternation
-            else []
-        ),
-    )
-
-    return (
-        annotated.select(
-            "conv_id",
-            "turn_idx",
-            F.explode(F.filter(checks, lambda c: c.isNotNull())).alias("v"),
-        )
-        .select(
-            F.col("v.check_name").alias("check_name"),
-            "conv_id",
-            "turn_idx",
-            F.col("v.column").alias("column"),
-            F.col("v.observed").alias("observed"),
-            F.col("v.expected").alias("expected"),
-        )
-    )
+    found = F.when(key_ok, violation_array(conv_rules))
+    if row_rules:
+        checked = annotated.select("conv_id", "turn_idx", "_row_v", found.alias("_conv_v"))
+        row, conv = F.col("_row_v"), F.col("_conv_v")
+        return explode_violations(checked, F.coalesce(F.concat(row, conv), conv, row))
+    return explode_violations(annotated, found)
 
 
 def sampled_validation_estimate(
     df: DataFrame,
     rate_num: int,
     width: int = 2,
-    role_domain: list[str] | None = None,
-    tool_domain: list[str] | None = None,
+    rules: list[Rule] | None = None,
 ) -> DataFrame:
     """Cheap pre-pass for 10^12-turn tables: run the FUSED validation on a
     deterministic md5 sample of CONVERSATIONS and estimate each check's
@@ -296,16 +277,17 @@ def sampled_validation_estimate(
     Plan: map-side sample predicate (pushes to the scan) → the fused
     single-exchange validation → one hash agg on check_name (≤ |checks|
     rows, count + distinct-conv count together) joined to the driver-local
-    check grid → one-row sampled-totals broadcast. Output: (check_name,
-    n_turns, n_violations, rate, ci_lo, ci_hi, n_convs, conv_violations,
-    conv_rate, conv_ci_lo, conv_ci_hi); NULL estimates when the sample is
-    empty.
+    check grid (the names of ``rules``, default :func:`default_rules`) →
+    one-row sampled-totals broadcast. Output: (check_name, n_turns,
+    n_violations, rate, ci_lo, ci_hi, n_convs, conv_violations, conv_rate,
+    conv_ci_lo, conv_ci_hi); NULL estimates when the sample is empty.
     """
     from schema_infer_plugin_spark.sources.sampling import deterministic_sample
 
+    rules = as_rules(default_rules() if rules is None else rules)
     sample = deterministic_sample(df, ["conv_id"], rate_num, width)
     counts = (
-        validate_transcripts(sample, role_domain, tool_domain)
+        validate_transcripts(sample, rules)
         .groupBy("check_name")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_violations"),
@@ -313,7 +295,7 @@ def sampled_validation_estimate(
         )
     )
     grid = df.sparkSession.createDataFrame(
-        [(c,) for c in CHECK_NAMES], ["check_name"]
+        [(r.name,) for r in rules], ["check_name"]
     )
     totals = sample.agg(
         F.count(F.lit(1)).cast("long").alias("n_turns"),

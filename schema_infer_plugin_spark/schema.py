@@ -123,3 +123,29 @@ def well_keyed(df: DataFrame) -> DataFrame:
     rows are the validation pass's job (not_null_conv_id/turn_idx), never an
     input to key semantics."""
     return df.filter(well_keyed_predicate())
+
+
+def conv_order(ts_col: str = "ts") -> list[Column]:
+    """The conversation turn order as ONE definition, for every window
+    partitioned by conv_id: ``(turn_idx, ts NULLS FIRST, role NULLS FIRST)``.
+    The role tie-breaker makes the order total up to full-duplicate rows, so
+    lag/lead/row_number give the same answer whatever the input row order.
+    DuckDB oracles must spell the NULLS FIRST explicitly (its ASC default is
+    NULLS LAST)."""
+    return [
+        F.col("turn_idx").asc_nulls_first(),
+        F.col(ts_col).asc_nulls_first(),
+        F.col("role").asc_nulls_first(),
+    ]
+
+
+def violation(check: str, column: str, observed: Column, expected: Column) -> Column:
+    """One violation as a struct (check_name, column, observed, expected) —
+    the single builder behind every Pass-B check. Both values are rendered
+    as strings; a NULL observed value renders as ``'NULL'``."""
+    return F.struct(
+        F.lit(check).alias("check_name"),
+        F.lit(column).alias("column"),
+        F.coalesce(observed.cast("string"), F.lit("NULL")).alias("observed"),
+        expected.cast("string").alias("expected"),
+    )

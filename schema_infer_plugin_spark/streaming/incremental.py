@@ -29,8 +29,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
-from schema_infer_plugin_spark.plans.validate import validate_transcripts
-from schema_infer_plugin_spark.schema import ROLE_DOMAIN, TOOL_DOMAIN, well_keyed
+from schema_infer_plugin_spark.checks.custom import expr_suite_violations
+from schema_infer_plugin_spark.plans.validate import default_rules, validate_transcripts
+from schema_infer_plugin_spark.schema import well_keyed
 
 
 def row_level_violations_stream(
@@ -39,60 +40,12 @@ def row_level_violations_stream(
     tool_domain: list[str] | None = None,
     keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Stateless Pass-B subset as a streaming-safe projection (no shuffle, no
-    state; valid in append output mode). ``keep_cols`` carries extra source
-    columns (e.g. ``ts`` for downstream event-time windowing)."""
-    roles = role_domain or ROLE_DOMAIN
-    tools = tool_domain or TOOL_DOMAIN
-
-    def v(check: str, column: str, observed, expected):
-        return F.struct(
-            F.lit(check).alias("check_name"),
-            F.lit(column).alias("column"),
-            observed.cast("string").alias("observed"),
-            expected.cast("string").alias("expected"),
-        )
-
-    checks = F.array(
-        F.when(
-            F.col("role").isNotNull() & ~F.col("role").isin(roles),
-            v("domain_role", "role", F.col("role"), F.lit(",".join(roles))),
-        ),
-        F.when(
-            F.col("tool").isNotNull() & ~F.col("tool").isin(tools),
-            v("domain_tool", "tool", F.col("tool"), F.lit(",".join(tools))),
-        ),
-        F.when(
-            F.col("tool").isNotNull() & (F.coalesce(F.col("role"), F.lit("")) != "tool"),
-            v("tool_without_role", "tool", F.col("tool"), F.lit("NULL unless role=tool")),
-        ),
-        F.when(
-            F.col("text").isNull(),
-            v("not_null_text", "text", F.lit("NULL"), F.lit("NOT NULL")),
-        ),
-        F.when(
-            F.col("conv_id").isNull(),
-            v("not_null_conv_id", "conv_id", F.lit("NULL"), F.lit("NOT NULL")),
-        ),
-        F.when(
-            F.col("turn_idx").isNull(),
-            v("not_null_turn_idx", "turn_idx", F.lit("NULL"), F.lit("NOT NULL")),
-        ),
-    )
-    return stream_df.select(
-        "conv_id",
-        "turn_idx",
-        *keep_cols,
-        F.explode(F.filter(checks, lambda c: c.isNotNull())).alias("v"),
-    ).select(
-        F.col("v.check_name").alias("check_name"),
-        "conv_id",
-        "turn_idx",
-        *keep_cols,
-        F.col("v.column").alias("column"),
-        F.col("v.observed").alias("observed"),
-        F.col("v.expected").alias("expected"),
-    )
+    """Stateless Pass-B subset — the row rules of plans/validate.default_rules
+    — as a streaming-safe projection (no shuffle, no state; valid in append
+    output mode). ``keep_cols`` carries extra source columns (e.g. ``ts`` for
+    downstream event-time windowing)."""
+    rules = [r for r in default_rules(role_domain, tool_domain) if not r.conv]
+    return expr_suite_violations(stream_df, rules, keys=("conv_id", "turn_idx", *keep_cols))
 
 
 def stream_expr_violations(
@@ -108,8 +61,6 @@ def stream_expr_violations(
     row-identical to the batch run over the same data (driver-checked by the
     ``expr_suite_stream`` query against the SAME oracle SQL as the batch
     ``expr_suite``)."""
-    from ..checks.custom import expr_suite_violations
-
     return expr_suite_violations(stream_df, rules, keys=keys)
 
 

@@ -82,8 +82,9 @@ def test_fused_validation_survives_extreme_conv_skew(spark):
     for windows — plans/validate.py module docstring documents the
     range-partition + boundary-stitch fallback). The evidence required here:
 
-    * the fused validation COMPLETES on the skewed corpus and stays
-      row-identical to the modular union (exactness is not load-dependent);
+    * the fused validation COMPLETES on the skewed corpus with every option
+      on and stays row-identical to the DuckDB oracle (exactness is not
+      load-dependent);
     * the shuffle's residual load stays balanced: excluding the hot
       conversation's own rows, every partition carries < 3x the mean
       residual — the hot key costs one straggler task, never a cascade;
@@ -93,7 +94,7 @@ def test_fused_validation_survives_extreme_conv_skew(spark):
     from pyspark.sql import functions as F
 
     from schema_infer_plugin_spark.schema import TRANSCRIPTS_SCHEMA
-    from tests.test_plans import _modular_union
+    from tests.test_plans import assert_matches_oracle
 
     n_hot = 20_000
     base = synth_transcripts(spark, 5_000)  # ~40k turns
@@ -111,10 +112,7 @@ def test_fused_validation_survives_extreme_conv_skew(spark):
         assert n_hot / total > 0.3  # the stress is real
 
         # (1) exactness under skew
-        fused = validate_transcripts(t)
-        union = _modular_union(t)
-        assert union.exceptAll(fused).count() == 0
-        assert fused.exceptAll(union).count() == 0
+        assert assert_matches_oracle(t) > 0
 
         # (2) + (3) residual balance of the conv_id hash exchange the fused
         # plan performs (same partitioning expression, observable via
@@ -137,3 +135,37 @@ def test_fused_validation_survives_extreme_conv_skew(spark):
         assert max(residuals) < 3 * mean_resid + 50, (residuals, mean_resid)
     finally:
         t.unpersist()
+
+
+def _plan_nodes(plan):
+    """Physical plan nodes, descending through the adaptive wrapper."""
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    yield plan
+    kids = plan.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i))
+
+
+def test_every_option_rides_one_scan_and_one_exchange(bucketed, spark, tmp_path):
+    """Plan gate with boundary roles, a transition whitelist, alternation and
+    a custom rule reading ``text`` all on: exactly one FileScan, one Exchange
+    on unbucketed input and none on the bucketed table, ``text`` in no
+    Exchange's output, and no row-at-a-time Python."""
+    from tests.test_plans import all_option_rules
+
+    bt, t = bucketed
+    assert any("text" in str(r[1]) for r in all_option_rules())  # a rule reads text
+    t.write.parquet(str(tmp_path / "flat"))
+    flat = spark.read.parquet(str(tmp_path / "flat"))
+    for df, n_exchanges in ((flat, 1), (bt, 0)):
+        plan = validate_transcripts(df, all_option_rules())._jdf.queryExecution().executedPlan()
+        text = plan.toString()
+        assert text.count("FileScan") == 1, text
+        assert text.count("Exchange") == n_exchanges, text
+        assert "BatchEvalPython" not in text
+        for node in _plan_nodes(plan):
+            if "Exchange" in node.nodeName():
+                out = node.output()
+                cols = {out.apply(i).name() for i in range(out.size())}
+                assert "text" not in cols, cols

@@ -39,47 +39,37 @@ def _mini_transcripts(spark):
     )
 
 
-def test_uniqueness_micro(spark):
-    from schema_infer_plugin_spark.checks import uniqueness_violations
+def _fused(df, *checks, rules=None):
+    """Rows of the fused validation plan (plans/validate.py) for ``checks``."""
+    from schema_infer_plugin_spark.plans.validate import validate_transcripts
 
+    return validate_transcripts(df, rules).filter(F.col("check_name").isin(*checks)).collect()
+
+
+def test_uniqueness_micro(spark):
     got = {
         (r["conv_id"], r["turn_idx"], r["observed"])
-        for r in uniqueness_violations(_mini_transcripts(spark)).collect()
+        for r in _fused(_mini_transcripts(spark), "uniqueness")
     }
     assert got == {("B", 1, "2")}
 
 
 def test_contiguity_micro(spark):
-    from schema_infer_plugin_spark.checks import contiguity_violations
-
     got = {
         (r["check_name"], r["conv_id"], r["turn_idx"], r["expected"])
-        for r in contiguity_violations(_mini_transcripts(spark)).collect()
+        for r in _fused(_mini_transcripts(spark), "contiguity", "contiguity_start")
     }
     assert got == {("contiguity", "B", 3, "2"), ("contiguity_start", "C", 2, "0")}
 
 
 def test_domains_micro(spark):
-    from schema_infer_plugin_spark.checks import domain_violations
-    from schema_infer_plugin_spark.checks.domains import tool_requires_role_violations
-    from schema_infer_plugin_spark.schema import ROLE_DOMAIN, TOOL_DOMAIN
-
     t = _mini_transcripts(spark)
-    bad_roles = {(r["conv_id"], r["observed"]) for r in domain_violations(t, "role", ROLE_DOMAIN).collect()}
+    bad_roles = {(r["conv_id"], r["observed"]) for r in _fused(t, "domain_role")}
     assert bad_roles == {("B", "moderator")}
-    bad_tools = {(r["conv_id"], r["observed"]) for r in domain_violations(t, "tool", TOOL_DOMAIN).collect()}
+    bad_tools = {(r["conv_id"], r["observed"]) for r in _fused(t, "domain_tool")}
     assert bad_tools == {("B", "laser")}
-    misuse = {(r["conv_id"], r["turn_idx"]) for r in tool_requires_role_violations(t).collect()}
+    misuse = {(r["conv_id"], r["turn_idx"]) for r in _fused(t, "tool_without_role")}
     assert misuse == {("B", 3), ("C", 2)}
-
-
-def test_domain_accepts_dataframe(spark):
-    from schema_infer_plugin_spark.checks import domain_violations
-
-    t = _mini_transcripts(spark)
-    dom = spark.createDataFrame([("user",), ("assistant",), ("tool",)], ["role"])
-    got = {r["observed"] for r in domain_violations(t, "role", dom).collect()}
-    assert got == {"moderator"}
 
 
 def test_drift_detects_shift(spark):
@@ -142,7 +132,10 @@ def test_ts_monotonic_us_no_fanout_on_duplicate_turn_idx(spark):
         ("A", 2, "2026-01-01 00:00:30"),  # rewind #2
     ]
     df = spark.createDataFrame(rows, ["conv_id", "turn_idx", "ts_s"]).select(
-        "conv_id", "turn_idx", F.col("ts_s").cast("timestamp").alias("ts")
+        "conv_id",
+        "turn_idx",
+        F.lit(None).cast("string").alias("role"),
+        F.col("ts_s").cast("timestamp").alias("ts"),
     )
     out = ts_monotonic_violations_us(df).collect()
     assert len(out) == 2
@@ -160,7 +153,10 @@ def test_ts_monotonic_us_duplicate_key_both_violating(spark):
         ("B", 1, "2026-01-01 00:01:00"),  # sorts first within turn 1; rewinds vs 00:10
     ]
     df = spark.createDataFrame(rows, ["conv_id", "turn_idx", "ts_s"]).select(
-        "conv_id", "turn_idx", F.col("ts_s").cast("timestamp").alias("ts")
+        "conv_id",
+        "turn_idx",
+        F.lit(None).cast("string").alias("role"),
+        F.col("ts_s").cast("timestamp").alias("ts"),
     )
     out = ts_monotonic_violations_us(df).collect()
     # ordering within turn 1: 00:01 then 00:02 -> 00:01 rewinds vs 00:10;
@@ -170,7 +166,7 @@ def test_ts_monotonic_us_duplicate_key_both_violating(spark):
 
 
 def test_role_alternation_micro(spark):
-    from schema_infer_plugin_spark.checks import role_alternation_violations
+    from schema_infer_plugin_spark.checks import alternation_rules
 
     rows = [
         ("A", 0, "user", "2026-01-01 00:00:00"),
@@ -186,8 +182,53 @@ def test_role_alternation_micro(spark):
         "conv_id", "turn_idx", "role", F.col("ts_s").cast("timestamp").alias("ts")
     )
     got = [(r["conv_id"], r["turn_idx"], r["observed"]) for r in
-           role_alternation_violations(df).collect()]
+           _fused(df, "role_alternation", rules=alternation_rules())]
     assert got == [("A", 2, "assistant")]
+
+
+def test_conv_rules_deterministic_on_turn_ties(spark):
+    """Rows duplicating (turn_idx, ts) with different roles: the turn order
+    (schema.conv_order) breaks the tie on role, so alternation, the
+    transition whitelist and both boundary rules give the SAME rows however
+    the input is ordered or partitioned — sorted order here is
+    a0 u0 a1 a2 u2 (role asc within a tied turn)."""
+    from schema_infer_plugin_spark.checks import (
+        alternation_rules,
+        boundary_rules,
+        transition_rules,
+    )
+
+    rows = [
+        ("T", 0, "assistant", "2026-01-01 00:00:00"),
+        ("T", 0, "user", "2026-01-01 00:00:00"),
+        ("T", 1, "assistant", "2026-01-01 00:01:00"),
+        ("T", 2, "assistant", "2026-01-01 00:02:00"),
+        ("T", 2, "user", "2026-01-01 00:02:00"),
+    ]
+    rules = (
+        alternation_rules()
+        + transition_rules(["user->assistant", "assistant->user"])
+        + boundary_rules()
+    )
+    want = {
+        ("role_alternation", 2, "assistant", "!= assistant"),
+        ("role_transition_domain", 2, "assistant->assistant",
+         "in {assistant->user,user->assistant}"),
+        ("conv_start_role", 0, "assistant", "in {system,user}"),
+        ("conv_end_role", 2, "user", "in {assistant,tool}"),
+    }
+    for ordered in (rows, rows[::-1], rows[2:] + rows[:2]):
+        for n_parts in (1, 3):
+            df = (
+                spark.createDataFrame(ordered, ["conv_id", "turn_idx", "role", "ts_s"])
+                .select("conv_id", "turn_idx", "role", F.col("ts_s").cast("timestamp").alias("ts"))
+                .repartition(n_parts)
+            )
+            got = {
+                (r["check_name"], r["turn_idx"], r["observed"], r["expected"])
+                for r in _fused(df, *{r.name for r in rules}, rules=rules)
+            }
+            assert got == want, (ordered, n_parts)
 
 
 def test_role_transition_matrix_micro(spark):
@@ -218,7 +259,7 @@ def test_role_transition_matrix_micro(spark):
 def test_transition_domain_violations_micro(spark):
     import pytest
 
-    from schema_infer_plugin_spark.checks import transition_domain_violations
+    from schema_infer_plugin_spark.checks import transition_rules
 
     rows = [
         ("A", 0, "user", "2026-01-01 00:00:00"),
@@ -233,18 +274,15 @@ def test_transition_domain_violations_micro(spark):
         "conv_id", "turn_idx", "role", F.col("ts_s").cast("timestamp").alias("ts")
     )
     allowed = ["user->assistant", "assistant->user", "system->user"]
-    got = [
-        (r["conv_id"], r["turn_idx"], r["observed"], r["check_name"])
-        for r in transition_domain_violations(df, allowed).collect()
-    ]
+    out = _fused(df, "role_transition_domain", rules=transition_rules(allowed))
+    got = [(r["conv_id"], r["turn_idx"], r["observed"], r["check_name"]) for r in out]
     assert got == [("A", 2, "assistant->assistant", "role_transition_domain")]
-    exp = transition_domain_violations(df, allowed).collect()[0]["expected"]
-    assert exp == "in {assistant->user,system->user,user->assistant}"
+    assert out[0]["expected"] == "in {assistant->user,system->user,user->assistant}"
 
     with pytest.raises(ValueError, match="non-empty"):
-        transition_domain_violations(df, [])
+        transition_rules([])
     with pytest.raises(ValueError, match="prev->next"):
-        transition_domain_violations(df, ["user->"])
+        transition_rules(["user->"])
 
 
 def test_expr_suite_violations_micro(spark):

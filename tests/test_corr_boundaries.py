@@ -95,7 +95,7 @@ def test_corr_single_exchange(spark):
 
 
 # ---------------------------------------------------------------------------
-# conv_boundary_violations
+# boundary_rules (conv_start_role / conv_end_role in the fused plan)
 # ---------------------------------------------------------------------------
 
 
@@ -105,10 +105,15 @@ def _tdf(spark, rows):
     )
 
 
+def _boundaries(df, **kw):
+    from schema_infer_plugin_spark.checks import boundary_rules
+    from schema_infer_plugin_spark.plans.validate import validate_transcripts
+
+    return validate_transcripts(df, boundary_rules(**kw))
+
+
 def test_boundaries_rules_fire(spark):
     import datetime as dt
-
-    from schema_infer_plugin_spark.checks import conv_boundary_violations
 
     t0 = dt.datetime(2024, 1, 1)
     rows = [
@@ -123,7 +128,7 @@ def test_boundaries_rules_fire(spark):
         # NULL role at both boundaries -> fails both (NULL = FAIL)
         ("c4", 0, None, t0),
     ]
-    out = conv_boundary_violations(_tdf(spark, rows))
+    out = _boundaries(_tdf(spark, rows))
     got = {(r["check_name"], r["conv_id"]): (r["observed"], r["expected"]) for r in out.collect()}
     assert got == {
         ("conv_start_role", "c2"): ("assistant", "in {system,user}"),
@@ -138,8 +143,6 @@ def test_boundaries_rules_fire(spark):
 def test_boundaries_deterministic_on_dup_rows(spark):
     import datetime as dt
 
-    from schema_infer_plugin_spark.checks import conv_boundary_violations
-
     t0 = dt.datetime(2024, 1, 1)
     # duplicate (turn_idx, ts) at the start with different roles: the role
     # tie-breaker must pick 'assistant' (asc) as the boundary row every time
@@ -150,7 +153,7 @@ def test_boundaries_deterministic_on_dup_rows(spark):
     ]
     outs = {
         tuple(sorted((r["check_name"], r["observed"]) for r in
-                     conv_boundary_violations(_tdf(spark, rows)).collect()))
+                     _boundaries(_tdf(spark, rows)).collect()))
         for _ in range(3)
     }
     assert outs == {(("conv_start_role", "assistant"),)}
@@ -159,15 +162,8 @@ def test_boundaries_deterministic_on_dup_rows(spark):
 def test_boundaries_single_exchange(spark):
     import datetime as dt
 
-    from schema_infer_plugin_spark.checks import conv_boundary_violations
-
     df = _tdf(spark, [("c1", 0, "user", dt.datetime(2024, 1, 1))])
-    plan = (
-        conv_boundary_violations(df)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    plan = _boundaries(df)._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") <= 1
     assert "BatchEvalPython" not in plan
 
@@ -175,11 +171,9 @@ def test_boundaries_single_exchange(spark):
 def test_boundaries_empty_sets_raise(spark):
     import datetime as dt
 
-    from schema_infer_plugin_spark.checks import conv_boundary_violations
-
     df = _tdf(spark, [("c1", 0, "user", dt.datetime(2024, 1, 1))])
     with pytest.raises(ValueError):
-        conv_boundary_violations(df, allowed_first=())
+        _boundaries(df, allowed_first=())
 
 
 # ---------------------------------------------------------------------------

@@ -1,52 +1,96 @@
-"""Fused single-pass validation plan: equivalence + physical-plan shape."""
+"""Fused single-pass validation plan: DuckDB-oracle equivalence + physical-plan
+shape. The witness is the per-check DuckDB oracle SQL of __spark_entry__.py
+run over the same rows, with every option on."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from schema_infer_plugin_spark.checks import (
-    contiguity_violations,
-    domain_violations,
-    null_violations,
-    uniqueness_violations,
-)
-from schema_infer_plugin_spark.checks.domains import tool_requires_role_violations
-from schema_infer_plugin_spark.checks.temporal import ts_monotonic_violations
-from schema_infer_plugin_spark.plans.validate import validate_transcripts
-from schema_infer_plugin_spark.schema import ROLE_DOMAIN, TOOL_DOMAIN
+import __spark_entry__ as entrymod
+from schema_infer_plugin_spark.checks import alternation_rules, boundary_rules, transition_rules
+from schema_infer_plugin_spark.plans.validate import default_rules, validate_transcripts
 from schema_infer_plugin_spark.sources.synth import synth_transcripts
+from schema_infer_plugin_spark.sources.views import oracle_cte
+from tests.conftest import canon
+
+#: __spark_entry__ oracle SQL bodies, one per check family of all_option_rules()
+_ORACLES = [
+    entrymod.ORACLE_VALIDATE_FUSED,  # the ten built-ins except ts_monotonic
+    entrymod.ORACLE_ROLE_ALTERNATION,
+    entrymod.ORACLE_CONV_BOUNDARIES,
+    entrymod.ORACLE_TRANSITION_DOMAIN,
+    entrymod.ORACLE_EXPR_SUITE,
+]
 
 
-def _modular_union(t):
+def all_option_rules():
+    """Every rule the engine can enable: built-ins, alternation, boundary
+    roles, the __spark_entry__ transition whitelist and custom rules (one of
+    which reads ``text``)."""
     return (
-        uniqueness_violations(t)
-        .unionByName(contiguity_violations(t))
-        .unionByName(
-            domain_violations(t, "role", ROLE_DOMAIN).withColumn(
-                "check_name", F.lit("domain_role")
-            )
-        )
-        .unionByName(
-            domain_violations(t, "tool", TOOL_DOMAIN).withColumn(
-                "check_name", F.lit("domain_tool")
-            )
-        )
-        .unionByName(tool_requires_role_violations(t))
-        .unionByName(null_violations(t, "text"))
-        .unionByName(null_violations(t, "conv_id"))
-        .unionByName(null_violations(t, "turn_idx"))
-        .unionByName(ts_monotonic_violations(t))
+        default_rules()
+        + alternation_rules()
+        + boundary_rules()
+        + transition_rules(entrymod._ALLOWED_TRANSITIONS)
+        + list(entrymod._EXPR_RULES)
     )
 
 
-def test_fused_equals_modular_union_on_synth(spark):
+def _rows(records, cols):
+    return sorted(tuple(canon(r[c]) for c in cols) for r in records)
+
+
+def assert_matches_oracle(t, rules=None):
+    """``validate_transcripts(t, rules)`` (default: every option on) emits
+    exactly the rows of the __spark_entry__ DuckDB oracle SQL over ``t``'s
+    rows. ts_monotonic compares in epoch µs (its oracle's unit); the rest
+    compare as rendered strings. Returns the fused row count."""
+    import duckdb
+
+    rules = all_option_rules() if rules is None else rules
+    names = {r[0] for r in rules}
+    fused = validate_transcripts(t, rules).persist()
+    try:
+        con = duckdb.connect()
+        con.register("rows_in", t.toArrow())
+        bind = lambda sql: sql.replace(  # noqa: E731
+            oracle_cte(""), "WITH transcripts AS (SELECT * FROM rows_in) ", 1
+        )
+        want = [
+            r
+            for sql in _ORACLES
+            for r in con.execute(bind(sql)).fetch_arrow_table().to_pylist()
+            if r["check_name"] in names
+        ]
+        cols = ["check_name", "conv_id", "turn_idx", "col_name", "observed", "expected"]
+        got = fused.filter(F.col("check_name") != "ts_monotonic")
+        assert _rows(got.withColumnRenamed("column", "col_name").collect(), cols) == _rows(
+            want, cols
+        )
+
+        if "ts_monotonic" in names:
+            us = lambda c: F.unix_micros(F.to_timestamp(c))  # noqa: E731
+            ts_cols = ["conv_id", "turn_idx", "observed_us", "expected_after_us"]
+            got_ts = fused.filter(F.col("check_name") == "ts_monotonic").select(
+                "conv_id",
+                "turn_idx",
+                us(F.col("observed")).alias("observed_us"),
+                us(F.substring("expected", 4, 64)).alias("expected_after_us"),
+            )
+            want_ts = con.execute(bind(entrymod.ORACLE_TS_MONOTONIC))
+            assert _rows(got_ts.collect(), ts_cols) == _rows(
+                want_ts.fetch_arrow_table().to_pylist(), ts_cols
+            )
+        return fused.count()
+    finally:
+        fused.unpersist()
+
+
+def test_fused_matches_oracle_on_synth(spark):
     t = synth_transcripts(spark, 2_000).persist()
     try:
-        fused = validate_transcripts(t)
-        union = _modular_union(t)
-        assert union.exceptAll(fused).count() == 0
-        assert fused.exceptAll(union).count() == 0
-        assert fused.count() > 0  # synth injects violations; a zero here means the checks went blind
+        # synth injects violations; a zero here means the checks went blind
+        assert assert_matches_oracle(t) > 0
     finally:
         t.unpersist()
 
@@ -114,11 +158,8 @@ def test_fused_null_key_posture(spark):
         ("not_null_turn_idx", "A", None),
     }
     assert validate_transcripts(t).count() == 3  # 2× conv_id NULL, 1× turn_idx NULL
-    # and the modular union agrees row-for-row
-    fused = validate_transcripts(t)
-    union = _modular_union(t)
-    assert fused.exceptAll(union).count() == 0
-    assert union.exceptAll(fused).count() == 0
+    # and the DuckDB oracle agrees row-for-row with every option on
+    assert_matches_oracle(t)
 
 
 def test_fused_plan_has_single_exchange(spark):
@@ -129,7 +170,7 @@ def test_fused_plan_has_single_exchange(spark):
 
 
 # ---------------------------------------------------------------------------
-# property: fused == modular on ADVERSARIAL micro-fixtures (Hypothesis)
+# property: fused == DuckDB oracle on ADVERSARIAL micro-fixtures (Hypothesis)
 # ---------------------------------------------------------------------------
 
 import datetime
@@ -144,9 +185,9 @@ _row = st.tuples(
     st.sampled_from(["A", "B", None]),                # conv_id (collisions + NULL keys)
     st.sampled_from([0, 1, 2, 3, 4, None]),           # turn_idx (dups, gaps, NULL keys)
     st.sampled_from(_ROLES),
-    st.sampled_from(["hi", None]),                    # text (null-check)
+    st.sampled_from(["hi", "hello", None]),           # text (null + length rules)
     st.sampled_from(_TOOLS),
-    st.sampled_from([None, 0, 60, 120]),              # ts offset sec (rewinds likely)
+    st.sampled_from([None, 0, 60, 120]),              # ts offset sec (rewinds, ties)
 )
 
 
@@ -156,10 +197,11 @@ _row = st.tuples(
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
 )
 @given(rows=st.lists(_row, min_size=1, max_size=8))
-def test_fused_equals_modular_union_property(spark, rows):
-    """Whatever combination of duplicate keys, gaps, bad starts, domain
-    violations, null text and ts rewinds Hypothesis throws, the fused
-    single-exchange plan must emit EXACTLY the modular checks' rows."""
+def test_fused_matches_oracle_property(spark, rows):
+    """Whatever combination of duplicate keys, (turn_idx, ts) ties, gaps,
+    bad starts and ends, repeats, domain violations, null text and ts
+    rewinds Hypothesis throws, the fused single-exchange plan with every
+    option on must emit EXACTLY the DuckDB oracles' rows."""
     base = datetime.datetime(2026, 1, 1)
     data = [
         (c, i, r, x, tl, None if o is None else base + datetime.timedelta(seconds=o))
@@ -168,24 +210,17 @@ def test_fused_equals_modular_union_property(spark, rows):
     t = spark.createDataFrame(
         data, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
     )
-    fused = validate_transcripts(t)
-    modular = _modular_union(t)
-    assert fused.exceptAll(modular).count() == 0
-    assert modular.exceptAll(fused).count() == 0
+    assert_matches_oracle(t)
 
 
 def test_fused_alternation_opt_in(spark):
-    """include_alternation adds the ninth check from the SAME window: rows ==
-    modular union + alternation rows, and the plan gains no exchange."""
-    from schema_infer_plugin_spark.checks import role_alternation_violations
-
+    """Alternation is one more rule over the SAME window: its rows equal the
+    oracle's, and the plan gains no exchange."""
     t = synth_transcripts(spark, 2_000)
-    fused = validate_transcripts(t, include_alternation=True)
-    modular = _modular_union(t).unionByName(role_alternation_violations(t))
-    assert fused.exceptAll(modular).count() == 0
-    assert modular.exceptAll(fused).count() == 0
+    rules = default_rules() + alternation_rules()
+    assert assert_matches_oracle(t, rules) > 0
     base_plan = validate_transcripts(t)._jdf.queryExecution().executedPlan().toString()
-    alt_plan = fused._jdf.queryExecution().executedPlan().toString()
+    alt_plan = validate_transcripts(t, rules)._jdf.queryExecution().executedPlan().toString()
     assert alt_plan.count("Exchange") == base_plan.count("Exchange")
 
 

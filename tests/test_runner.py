@@ -100,8 +100,8 @@ def test_runner_keeps_keyless_rows(spark, tmp_path):
 
 
 def test_custom_rules_ride_validation_run(spark, tmp_path):
-    """Config-declared expression constraints (checks/custom) union with the
-    fused plan's violations and extend every bucket's verdict grid."""
+    """Config-declared expression constraints (checks/custom) ride the fused
+    plan and extend every bucket's verdict grid."""
     import pytest
 
     t = synth_transcripts(spark, 500)
@@ -112,7 +112,7 @@ def test_custom_rules_ride_validation_run(spark, tmp_path):
     viol = spark.read.parquet(os.path.join(out, "violations"))
     n_custom = viol.filter(F.col("check_name") == "turn_cap_3").count()
     assert n_custom == t.filter("turn_idx > 3").count() and n_custom > 0
-    # built-in rows unchanged by the union
+    # built-in rows unchanged by the extra rule
     assert viol.filter(
         F.col("check_name") != "turn_cap_3"
     ).count() == validate_transcripts(t).count()
@@ -131,10 +131,10 @@ def test_custom_rules_ride_validation_run(spark, tmp_path):
 
 
 def test_boundary_check_rides_validation_run(spark, tmp_path):
-    """Opt-in conversation boundary check (checks/boundaries.py) unions with
-    the fused plan's violations and extends the verdict grid — same additive
-    posture as custom rules; name collisions with its check names raise."""
-    from schema_infer_plugin_spark.checks.boundaries import conv_boundary_violations
+    """Opt-in conversation boundary rules (checks/boundaries.py) ride the
+    fused plan and extend the verdict grid; name collisions with their check
+    names raise."""
+    from schema_infer_plugin_spark.checks.boundaries import boundary_rules
 
     t = synth_transcripts(spark, 500)
     out = str(tmp_path / "run")
@@ -146,7 +146,7 @@ def test_boundary_check_rides_validation_run(spark, tmp_path):
     viol = spark.read.parquet(os.path.join(out, "violations"))
     bnames = {"conv_start_role", "conv_end_role"}
     n_boundary = viol.filter(F.col("check_name").isin(*bnames)).count()
-    assert n_boundary == conv_boundary_violations(t).count() > 0
+    assert n_boundary == validate_transcripts(t, boundary_rules()).count() > 0
     assert viol.filter(
         ~F.col("check_name").isin(*bnames)
     ).count() == validate_transcripts(t).count()
@@ -164,11 +164,10 @@ def test_boundary_check_rides_validation_run(spark, tmp_path):
 
 
 def test_transition_domain_rides_validation_run(spark, tmp_path):
-    """Opt-in transition-whitelist check (checks/alternation.
-    transition_domain_violations) unions with the fused plan's violations and
-    extends the verdict grid — same additive posture as custom rules and the
-    boundary check."""
-    from schema_infer_plugin_spark.checks import transition_domain_violations
+    """Opt-in transition-whitelist rule (checks/alternation.
+    transition_rules) rides the fused plan and extends the verdict grid —
+    same posture as custom rules and the boundary check."""
+    from schema_infer_plugin_spark.checks import transition_rules
 
     t = synth_transcripts(spark, 500)
     out = str(tmp_path / "run")
@@ -181,7 +180,7 @@ def test_transition_domain_rides_validation_run(spark, tmp_path):
 
     viol = spark.read.parquet(os.path.join(out, "violations"))
     n_tr = viol.filter(F.col("check_name") == "role_transition_domain").count()
-    assert n_tr == transition_domain_violations(t, allowed).count() > 0
+    assert n_tr == validate_transcripts(t, transition_rules(allowed)).count() > 0
     assert viol.filter(
         F.col("check_name") != "role_transition_domain"
     ).count() == validate_transcripts(t).count()
@@ -198,15 +197,11 @@ def test_transition_domain_rides_validation_run(spark, tmp_path):
         )
 
 
-def test_one_input_scan_per_batch(spark, tmp_path):
-    """VERDICT r2 #2 acceptance: ledger row counts now ride the violations
-    write job as observations — each batch reads its input EXACTLY once. An
-    accumulator-instrumented conv_id column counts evaluations: the old
-    groupBy().count().collect() path made this 2× the row count."""
+def _instrumented_run(spark, t, out, **options) -> int:
+    """run_validation over ``t`` with a conv_id column that counts its own
+    evaluations; returns the count (one scan reads each row once)."""
     from pyspark.sql.types import StringType
 
-    t = synth_transcripts(spark, 300)
-    n_rows = t.count()
     acc = spark.sparkContext.accumulator(0)
 
     def tick(v):
@@ -217,15 +212,42 @@ def test_one_input_scan_per_batch(spark, tmp_path):
     # filters — each surviving evaluation then maps 1:1 to a scanned row
     udf = F.udf(tick, StringType()).asNondeterministic()
     instrumented = t.withColumn("conv_id", udf("conv_id"))
+    run_validation(spark, instrumented, out, n_buckets=4, batch_buckets=4, **options)
+    return acc.value
+
+
+def test_one_input_scan_per_batch(spark, tmp_path):
+    """VERDICT r2 #2 acceptance: ledger row counts now ride the violations
+    write job as observations — each batch reads its input EXACTLY once. An
+    accumulator-instrumented conv_id column counts evaluations: the old
+    groupBy().count().collect() path made this 2× the row count."""
+    t = synth_transcripts(spark, 300)
+    n_rows = t.count()
     out = str(tmp_path / "run")
-    run_validation(spark, instrumented, out, n_buckets=4, batch_buckets=4)
-    assert acc.value == n_rows  # one scan; the double-scan bug reads 2×
+    assert _instrumented_run(spark, t, out) == n_rows  # the double-scan bug reads 2×
 
     # and the observation-fed ledger still carries exact per-bucket counts
     led = read_ledger(spark, out).filter(F.col("pass_name") == PASS_B)
     rows = led.collect()
     assert sum(r["rows_processed"] for r in rows) == n_rows
     assert sum(r["violation_count"] for r in rows) == validate_transcripts(t).count()
+
+
+def test_one_input_scan_per_batch_every_option(spark, tmp_path):
+    """Boundary roles, a transition whitelist and a custom rule reading
+    ``text`` are rules of the ONE fused plan, so a batch still reads its
+    input exactly once with every option on."""
+    t = synth_transcripts(spark, 300)
+    out = str(tmp_path / "run")
+    scanned = _instrumented_run(
+        spark, t, out,
+        custom_rules=[("text_cap", "length(text) <= 40", "text", "length(text)", "<= 40")],
+        boundary_roles=(["user", "system"], ["assistant", "tool"]),
+        allowed_transitions=["user->assistant", "assistant->user"],
+    )
+    assert scanned == t.count()
+    names = {r["check_name"] for r in _violations(spark, out).select("check_name").collect()}
+    assert {"text_cap", "conv_start_role", "conv_end_role", "role_transition_domain"} <= names
 
 
 def test_profile_pass_resumes_without_recompute(spark, tmp_path):
@@ -243,7 +265,7 @@ def test_inferred_domains_drive_validation(spark):
     accepted set, and run-validation wiring with it equals an explicit-domain
     run — inference-first validation without configured constants."""
     from schema_infer_plugin_spark.checks.domains import inferred_domain_values
-    from schema_infer_plugin_spark.plans.validate import validate_transcripts
+    from schema_infer_plugin_spark.plans.validate import default_rules
 
     t = synth_transcripts(spark, 5_000).persist()
     try:
@@ -252,8 +274,8 @@ def test_inferred_domains_drive_validation(spark):
         # cannot clear a 99.9% cumulative bar
         assert {"user", "assistant", "system", "tool"} <= set(roles)
         assert "moderator" not in roles
-        inferred = validate_transcripts(t, role_domain=roles)
-        explicit = validate_transcripts(t, role_domain=sorted(roles))
+        inferred = validate_transcripts(t, default_rules(role_domain=roles))
+        explicit = validate_transcripts(t, default_rules(role_domain=sorted(roles)))
         assert inferred.exceptAll(explicit).count() == 0
         assert explicit.exceptAll(inferred).count() == 0
         # moderator rows ARE flagged under the inferred domain
