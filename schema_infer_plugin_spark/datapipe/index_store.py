@@ -36,6 +36,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from schema_infer_plugin_spark.session import local_frame
+
 _CENTROID_SCHEMA = StructType(
     [
         StructField("cell", IntegerType(), False),
@@ -57,7 +59,7 @@ def centroids_to_df(
 ) -> DataFrame:
     """IVF centroids (``ivf_centroids`` output) as a (cell, vector) frame."""
     rows = [(i, [float(x) for x in v]) for i, v in enumerate(centroids)]
-    return spark.createDataFrame(rows, _CENTROID_SCHEMA)
+    return local_frame(spark, rows, _CENTROID_SCHEMA)
 
 
 def save_ivf_centroids(
@@ -93,7 +95,7 @@ def codebook_to_df(
         for j, words in enumerate(codebook)
         for c, w in enumerate(words)
     ]
-    return spark.createDataFrame(rows, _CODEBOOK_SCHEMA)
+    return local_frame(spark, rows, _CODEBOOK_SCHEMA)
 
 
 def save_pq_codebook(

@@ -13,6 +13,8 @@ from functools import reduce
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import broadcast
 
+from schema_infer_plugin_spark.session import local_frame
+
 
 def union_violations(parts: list[DataFrame], run_id: str = "run0") -> DataFrame:
     """Union check outputs and stamp run_id + detail; stable output ordering is
@@ -45,8 +47,8 @@ def verdicts(
     ``violations`` must carry a ``partition_key`` column (callers derive it from
     conv_id or the table's partition transform).
     """
-    checks = violations.sparkSession.createDataFrame(
-        [(c,) for c in check_names], ["check_name"]
+    checks = local_frame(
+        violations.sparkSession, [(c,) for c in check_names], "check_name string"
     )
     grid = partition_keys.crossJoin(broadcast(checks))
     counts = violations.groupBy("partition_key", "check_name").agg(
@@ -111,8 +113,8 @@ def violations_scorecard(violations: DataFrame) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_violations"),
         F.countDistinct("conv_id").cast("long").alias("n_convs"),
     )
-    seed = spark.createDataFrame(
-        [("__all__", 0, 0)], "check_name string, n_violations long, n_convs long"
+    seed = local_frame(
+        spark, [("__all__", 0, 0)], "check_name string, n_violations long, n_convs long"
     )
     return (
         per.unionByName(seed)

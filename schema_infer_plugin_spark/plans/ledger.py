@@ -16,12 +16,13 @@ atomic-append table format works). Bucket counts are bounded (10^3–10^5 even a
 
 from __future__ import annotations
 
+import datetime
 import os
-import time
 
-from pyspark.sql import DataFrame, Row, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from schema_infer_plugin_spark.schema import LEDGER_SCHEMA
+from schema_infer_plugin_spark.session import local_frame
 
 
 def ledger_path(out_dir: str) -> str:
@@ -34,7 +35,7 @@ def read_ledger(spark: SparkSession, out_dir: str) -> DataFrame:
     try:
         return spark.read.schema(LEDGER_SCHEMA).parquet(path)
     except Exception:
-        return spark.createDataFrame([], LEDGER_SCHEMA)
+        return local_frame(spark, [], LEDGER_SCHEMA)
 
 
 def completed_keys(spark: SparkSession, out_dir: str, run_id: str, pass_name: str) -> set[str]:
@@ -56,21 +57,11 @@ def append_ledger(
     bucket_metrics: list[tuple[str, int, int, float]],
 ) -> None:
     """Append one row per completed bucket: (key, rows, violations, wall_sec)."""
-    now = time.time()
+    now = datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None)
     rows = [
-        Row(
-            run_id=run_id,
-            partition_key=key,
-            pass_name=pass_name,
-            rows_processed=int(nrows),
-            violation_count=int(nviol),
-            wall_sec=float(wall),
-            completed_ts=__import__("datetime").datetime.fromtimestamp(
-                now, __import__("datetime").timezone.utc
-            ).replace(tzinfo=None),
-        )
+        (run_id, key, pass_name, int(nrows), int(nviol), float(wall), now)
         for key, nrows, nviol, wall in bucket_metrics
     ]
-    spark.createDataFrame(rows, LEDGER_SCHEMA).coalesce(1).write.mode("append").parquet(
+    local_frame(spark, rows, LEDGER_SCHEMA).coalesce(1).write.mode("append").parquet(
         ledger_path(out_dir)
     )

@@ -8,10 +8,15 @@ table, split into conversation-aligned hash buckets::
 Bucketing by conv_id keeps every conversation whole inside one bucket, so the
 fused validation plan (uniqueness + contiguity windows over conv_id) is exact
 per bucket and buckets are embarrassingly parallel — the unit of both resume
-and lineage. On an Iceberg deployment the table carries a precomputed
-``partition_key`` column (this module's ``with_partition_key``) with an
-IDENTITY partition on it, so each batch's filter prunes at the manifest level
-instead of re-scanning; on plain parquet the filter is a scan-side predicate.
+and lineage. A batch selects its buckets with a filter on ``partition_key``.
+On a verified ``bucketed:`` layout (written by ``write_bucketed``, its
+sidecar matching ``n_buckets``) that filter runs on the table's STORED
+partition column, so it prunes partition directories and a batch reads only
+its own buckets. Any other input recomputes the key from conv_id, and every
+batch scans the whole table (``n_buckets / batch_buckets`` reads in all).
+``iceberg:`` input is in that second group today: an IDENTITY partition on a
+precomputed ``partition_key`` column would prune at the manifest level the
+same way, but the runner does not filter on the stored column there yet.
 Do NOT partition by Iceberg's own ``bucket(N, conv_id)`` — that transform is
 Murmur3 (Iceberg spec) and never agrees with this engine's
 ``pmod(xxhash64(conv_id), N)`` keys, so metadata pruning against it would skip
@@ -34,19 +39,21 @@ CLI (spark-submit --py-files engine.zip -m runner style)::
 from __future__ import annotations
 
 import argparse
+import itertools
 import os
 import time
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 
 from schema_infer_plugin_spark.checks.alternation import transition_rules
 from schema_infer_plugin_spark.checks.boundaries import boundary_rules
 from schema_infer_plugin_spark.checks.custom import as_rules
 from schema_infer_plugin_spark.operators.profile import profile
-from schema_infer_plugin_spark.operators.violations import verdicts
 from schema_infer_plugin_spark.plans.ledger import append_ledger, completed_keys
 from schema_infer_plugin_spark.plans.validate import default_rules, validate_transcripts
+from schema_infer_plugin_spark.schema import VERDICT_SCHEMA
+from schema_infer_plugin_spark.session import local_frame
 
 PASS_B = "validate"
 PASS_A = "profile"
@@ -71,6 +78,78 @@ def write_bucketed(df: DataFrame, path: str, n_buckets: int) -> None:
     keyed = df if "partition_key" in df.columns else with_partition_key(df, n_buckets)
     keyed.write.mode("overwrite").partitionBy("partition_key").parquet(path)
     write_bucket_scheme(path, n_buckets)
+
+
+def _position(values: list[str], col: str) -> Column:
+    """1-based position of ``col``'s value in ``values``; 0 when absent."""
+    return F.array_position(F.array(*map(F.lit, values)), F.col(col))
+
+
+def _observe_cells(
+    df: DataFrame, name: str, cell: Column, n_cells: int
+) -> tuple[DataFrame, Observation]:
+    """``df`` with an Observation of its exact row count per integer
+    ``cell`` in ``0..n_cells-1``, plus a plain ``count(1)``. The cells are
+    ONE array-valued SQL expression (``n_cells`` separate Column aggregates
+    cost a py4j round trip each), and exact: never ``histogram_numeric``,
+    whose partial merges fold distinct cells together."""
+    obs = Observation(name)
+    cells = ", ".join(f"count_if(_cell = {i})" for i in range(n_cells))
+    observed = (
+        df.withColumn("_cell", cell)
+        .observe(obs, F.expr(f"array({cells})").alias("cells"), F.count(F.lit(1)).alias("n"))
+        .drop("_cell")
+    )
+    return observed, obs
+
+
+def _cell_counts(metrics: dict) -> list[int]:
+    """The per-cell counts of an :func:`_observe_cells` observation. Raises
+    unless they sum to the observed row count: a row outside every cell
+    means the cell index and the data disagree, and counts built from it
+    would silently under-report."""
+    cells = [int(n) for n in metrics["cells"]]
+    if sum(cells) != metrics["n"]:
+        raise RuntimeError(
+            f"observed cell counts sum to {sum(cells)}, but {metrics['n']} rows"
+            " were observed: some rows fall outside every cell"
+        )
+    return cells
+
+
+def _write_verdicts(
+    spark: SparkSession,
+    verd_dir: str,
+    run_id: str,
+    keys: list[str],
+    check_names: list[str],
+    counts: list[int],
+) -> None:
+    """One verdict row per (bucket, check), built on the driver from
+    ``counts`` (violations per cell, bucket-major over ``keys ×
+    check_names``) and written over those buckets' verdict partitions."""
+    rows = [
+        (run_id, k, c, n == 0, n, {"violation_count": float(n)})
+        for (k, c), n in zip(itertools.product(keys, check_names), counts, strict=True)
+    ]
+    (
+        local_frame(spark, rows, VERDICT_SCHEMA)
+        .coalesce(1)  # one file per partition dir
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("partition_key")
+        .parquet(verd_dir)
+    )
+
+
+def _write_observed(df: DataFrame, name: str, path: str, *metrics: Column) -> dict:
+    """Write ``df`` as one parquet file at ``path`` and return its row count
+    ``n`` plus ``metrics``, observed on that write rather than read back."""
+    obs = Observation(name)
+    df.observe(obs, F.count(F.lit(1)).alias("n"), *metrics).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(path)
+    return obs.get
 
 
 def run_validation(
@@ -111,6 +190,14 @@ def run_validation(
     many completed batches (tests prove resumability with it). Domains default
     to the schema constants; a config file overrides them (config.py).
 
+    A batch is one scan of its buckets (pruned to them when ``bucket_rows``
+    is given and ``transcripts`` carries the layout's stored
+    ``partition_key``), one violations write, and two driver-built
+    writes. The verdict rows and the ledger's ``rows_processed`` /
+    ``violation_count`` come from Observations on the violations write
+    (input rows per bucket, violations per (bucket, check)); the written
+    violations are never read back.
+
     ``bucket_rows``: metadata-derived row count per partition_key. Buckets
     whose metadata count is 0 — or absent — are metadata-pruned: their PASS
     verdicts and ledger rows are emitted from the driver without EVER
@@ -128,7 +215,13 @@ def run_validation(
         rules += transition_rules(allowed_transitions)
     rules = as_rules(rules + list(custom_rules or []))
     check_names = [r.name for r in rules]
-    keyed = with_partition_key(transcripts, n_buckets)
+    n_checks = len(check_names)
+    if bucket_rows is not None and "partition_key" in transcripts.columns:
+        # a verified layout's stored key IS with_partition_key's value (read
+        # back as an int): filtering on it prunes partition directories
+        keyed = transcripts.withColumn("partition_key", F.col("partition_key").cast("string"))
+    else:
+        keyed = with_partition_key(transcripts, n_buckets)
     all_keys = [str(i) for i in range(n_buckets)]
     done = completed_keys(spark, out_dir, run_id, PASS_B)
     pending = [k for k in all_keys if k not in done]
@@ -143,21 +236,9 @@ def run_validation(
         if pruned:
             t0 = time.time()
             # every pruned (bucket, check) gets an explicit PASS verdict built
-            # from driver-local rows — the input table is not read
-            grid = spark.createDataFrame([(k,) for k in pruned], ["partition_key"])
-            empty_viol = spark.createDataFrame(
-                [],
-                "check_name string, conv_id string, turn_idx int, column string,"
-                " observed string, expected string, partition_key string",
-            )
-            (
-                verdicts(empty_viol, grid, check_names, run_id=run_id)
-                .repartition("partition_key")
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("partition_key")
-                .parquet(verd_dir)
-            )
+            # on the driver — the input table is not read
+            zeros = [0] * (len(pruned) * n_checks)
+            _write_verdicts(spark, verd_dir, run_id, pruned, check_names, zeros)
             wall = (time.time() - t0) / len(pruned)
             append_ledger(
                 spark, out_dir, run_id, PASS_B, [(k, 0, 0, wall) for k in pruned]
@@ -169,33 +250,28 @@ def run_validation(
     total_viol = 0
     for b_i, batch in enumerate(batches):
         t0 = time.time()
-        # Ledger metrics ride the write job as CollectMetrics observations —
-        # per-bucket input rows and violation rows cost ZERO extra scans
-        # (VERDICT r2 #2: the old groupBy().count().collect() scheduled a
-        # second full read of each batch's input just to fill the ledger).
-        obs_rows = Observation(f"rows_b{b_i}")
-        obs_viol = Observation(f"viol_b{b_i}")
-        part = keyed.filter(F.col("partition_key").isin(batch)).observe(
-            obs_rows,
-            *[
-                F.count(F.when(F.col("partition_key") == k, True)).alias(f"n_{k}")
-                for k in batch
-            ],
+        # Every count rides the write job as an Observation (CollectMetrics):
+        # input rows per bucket, and violations per (bucket, check) —
+        # bounded by batch_buckets × |rules|. The verdicts and the ledger
+        # are built from them on the driver, so a batch neither re-scans its
+        # input nor reads back what it wrote.
+        part, obs_rows = _observe_cells(
+            keyed.filter(F.col("partition_key").isin(batch)),
+            f"rows_b{b_i}",
+            _position(batch, "partition_key") - 1,
+            len(batch),
         )
         # partition_key is a pure function of conv_id — recompute, don't join.
-        viol = (
-            validate_transcripts(part, rules)
-            .withColumn(
-                "partition_key",
-                F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("string"),
-            )
-            .observe(
-                obs_viol,
-                *[
-                    F.count(F.when(F.col("partition_key") == k, True)).alias(f"n_{k}")
-                    for k in batch
-                ],
-            )
+        viol = validate_transcripts(part, rules).withColumn(
+            "partition_key",
+            F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("string"),
+        )
+        b, c = _position(batch, "partition_key"), _position(check_names, "check_name")
+        viol, obs_viol = _observe_cells(
+            viol,
+            f"viol_b{b_i}",
+            F.when((b > 0) & (c > 0), (b - 1) * n_checks + c - 1),
+            len(batch) * n_checks,
         )
         # One job: violations written partitioned + stably ordered within bucket.
         # Dynamic partition overwrite makes a bucket write idempotent: a crash
@@ -210,32 +286,18 @@ def run_validation(
             .parquet(viol_dir)
         )
         # .get blocks on the completed write action — no extra job
-        row_counts = {k: obs_rows.get[f"n_{k}"] for k in batch}
-        viol_counts = {k: obs_viol.get[f"n_{k}"] for k in batch}
-        # partition-column type inference reads the key back as int — restore string
-        viol_written = (
-            spark.read.parquet(viol_dir)
-            .withColumn("partition_key", F.col("partition_key").cast("string"))
-            .filter(F.col("partition_key").isin(batch))
-        )
-        grid = spark.createDataFrame([(k,) for k in batch], ["partition_key"])
-        (
-            verdicts(viol_written, grid, check_names, run_id=run_id)
-            .repartition("partition_key")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("partition_key")
-            .parquet(verd_dir)
-        )
+        row_counts = _cell_counts(obs_rows.get)
+        viol_counts = _cell_counts(obs_viol.get)
+        _write_verdicts(spark, verd_dir, run_id, batch, check_names, viol_counts)
         wall = time.time() - t0
         metrics = [
             (
                 k,
-                int(row_counts.get(k, 0)),
-                int(viol_counts.get(k, 0)),
-                wall / max(len(batch), 1),
+                row_counts[i],
+                sum(viol_counts[i * n_checks : (i + 1) * n_checks]),
+                wall / len(batch),
             )
-            for k in batch
+            for i, k in enumerate(batch)
         ]
         append_ledger(spark, out_dir, run_id, PASS_B, metrics)
         total_rows += sum(m[1] for m in metrics)
@@ -270,8 +332,7 @@ def run_profile(
         return spark.read.parquet(prof_dir)
     t0 = time.time()
     prof = profile(transcripts, columns or PROFILE_COLS, run_id=run_id)
-    prof.coalesce(1).write.mode("overwrite").parquet(prof_dir)
-    nrows = spark.read.parquet(prof_dir).count()
+    nrows = _write_observed(prof, "profile_rows", prof_dir)["n"]
     append_ledger(spark, out_dir, run_id, PASS_A, [("__all__", nrows, 0, time.time() - t0)])
     return spark.read.parquet(prof_dir)
 
@@ -463,7 +524,8 @@ def run_drift(
             m["dof"] = float(ks["dof"])
             m["chi2_z"] = _chi2_z(m["chi2"], m["dof"])
         rows.append((f"ks_{c}", stat <= ks_threshold, m))
-    verd = spark.createDataFrame(
+    verd = local_frame(
+        spark,
         [(run_id, "__all__", name, ok, 0, metrics) for name, ok, metrics in rows],
         "run_id string, partition_key string, check_name string, pass boolean,"
         " violation_count long, metrics map<string, double>",
@@ -500,15 +562,14 @@ def run_profile_compare(
     base = spark.read.parquet(os.path.join(baseline_dir, "profiles"))
     cur = spark.read.parquet(os.path.join(out_dir, "profiles"))
     diff = profile_compare(cur, base).withColumn("run_id", F.lit(run_id))
-    diff.coalesce(1).write.mode("overwrite").parquet(verd_dir)
-    written = spark.read.parquet(verd_dir)
-    n_rows = written.count()
-    n_bad = written.filter(F.col("verdict") != "OK").count()
+    m = _write_observed(
+        diff, "profile_diff_rows", verd_dir, F.count_if(F.col("verdict") != "OK").alias("bad")
+    )
     append_ledger(
         spark, out_dir, run_id, PASS_PROFILE_DIFF,
-        [("__all__", n_rows, n_bad, time.time() - t0)],
+        [("__all__", m["n"], m["bad"], time.time() - t0)],
     )
-    return written
+    return spark.read.parquet(verd_dir)
 
 
 PASS_EVOLUTION = "schema_evolution"
@@ -542,7 +603,8 @@ def run_schema_evolution(
         (run_id, "__all__", f"evolution_{mode.lower()}", False, i.kind, i.field, i.detail)
         for i in issues
     ] or [(run_id, "__all__", f"evolution_{mode.lower()}", True, None, None, None)]
-    verd = spark.createDataFrame(
+    verd = local_frame(
+        spark,
         rows,
         "run_id string, partition_key string, check_name string, pass boolean,"
         " kind string, field string, detail string",
@@ -571,8 +633,7 @@ def write_triage(
         "partition_key", F.col("partition_key").cast("string")
     )
     sample = violations_sample(viol, k=k).withColumn("run_id", F.lit(run_id))
-    sample.coalesce(1).write.mode("overwrite").parquet(triage_dir)
-    return spark.read.parquet(triage_dir).count()
+    return _write_observed(sample, "triage_rows", triage_dir)["n"]
 
 
 PASS_VIOL_DIFF = "violations_diff"
@@ -641,7 +702,7 @@ def run_violations_diff(
         .withColumn("pass", F.col("n_new") == 0)
         .withColumn("run_id", F.lit(run_id))
     )
-    verdict.coalesce(1).write.mode("overwrite").parquet(verd_dir)
+    m = _write_observed(verdict, "violations_diff_rows", verd_dir, F.sum("n_new").alias("n_new"))
     # bounded sample of the regressions only — the rows a human triages
     new_rows = per_identity.filter(
         (F.col("in_cur") == 1) & (F.col("in_base") == 0)
@@ -649,13 +710,11 @@ def run_violations_diff(
     violations_sample(new_rows, k=k).withColumn("run_id", F.lit(run_id)).coalesce(
         1
     ).write.mode("overwrite").parquet(os.path.join(out_dir, "violations_new"))
-    written = spark.read.parquet(verd_dir)
-    n_new = written.agg(F.sum("n_new")).collect()[0][0] or 0
     append_ledger(
         spark, out_dir, run_id, PASS_VIOL_DIFF,
-        [("__all__", written.count(), int(n_new), time.time() - t0)],
+        [("__all__", m["n"], m["n_new"] or 0, time.time() - t0)],
     )
-    return written
+    return spark.read.parquet(verd_dir)
 
 
 def write_scorecard(spark: SparkSession, out_dir: str, run_id: str = "run0") -> int:
@@ -671,8 +730,7 @@ def write_scorecard(spark: SparkSession, out_dir: str, run_id: str = "run0") -> 
     card_dir = os.path.join(out_dir, "scorecard")
     viol = spark.read.parquet(viol_dir)
     card = violations_scorecard(viol).withColumn("run_id", F.lit(run_id))
-    card.coalesce(1).write.mode("overwrite").parquet(card_dir)
-    return spark.read.parquet(card_dir).count()
+    return _write_observed(card, "scorecard_rows", card_dir)["n"]
 
 
 def resolve_transcripts_input(
@@ -698,12 +756,16 @@ def resolve_transcripts_input(
         # feeds empty-bucket pruning only when the sidecar proves the values
         # came from with_partition_key at THIS n_buckets; any other dir
         # (external tool, different bucket count, no sidecar) scans in full.
+        # A verified dir keeps its stored partition_key, so run_validation's
+        # batch filter prunes partition directories instead of re-hashing.
         from schema_infer_plugin_spark.sources.metadata import verified_partition_counts
 
         bdir = input_str.split(":", 1)[1]
         if n_buckets is not None:
             bucket_rows = verified_partition_counts(bdir, n_buckets)
-        t = spark.read.parquet(bdir).drop("partition_key")
+        t = spark.read.parquet(bdir)
+        if bucket_rows is None:
+            t = t.drop("partition_key")
     elif input_str.startswith("iceberg:"):
         from schema_infer_plugin_spark.sources.metadata import iceberg_verified_counts
 

@@ -84,6 +84,7 @@ from schema_infer_plugin_spark.schema import (
     conv_order,
     well_keyed_predicate,
 )
+from schema_infer_plugin_spark.session import local_frame
 
 #: check_name values of :func:`default_rules` (verdict grid rows).
 CHECK_NAMES = [
@@ -294,9 +295,7 @@ def sampled_validation_estimate(
             F.count_distinct(F.col("conv_id")).cast("long").alias("conv_violations"),
         )
     )
-    grid = df.sparkSession.createDataFrame(
-        [(r.name,) for r in rules], ["check_name"]
-    )
+    grid = local_frame(df.sparkSession, [(r.name,) for r in rules], "check_name string")
     totals = sample.agg(
         F.count(F.lit(1)).cast("long").alias("n_turns"),
         F.count_distinct(F.col("conv_id")).cast("long").alias("n_convs"),

@@ -83,15 +83,21 @@ VIOLATION_SCHEMA = StructType(
     ]
 )
 
-#: Pass-B per-partition verdicts.
+#: Pass-B per-partition verdicts. The nullability is what the verdict files
+#: have always carried (``operators/violations.verdicts`` output): only
+#: ``check_name`` is nullable.
 VERDICT_SCHEMA = StructType(
     [
-        StructField("run_id", StringType()),
-        StructField("partition_key", StringType()),
+        StructField("run_id", StringType(), nullable=False),
+        StructField("partition_key", StringType(), nullable=False),
         StructField("check_name", StringType()),
-        StructField("pass", BooleanType()),
-        StructField("violation_count", LongType()),
-        StructField("metrics", MapType(StringType(), DoubleType())),
+        StructField("pass", BooleanType(), nullable=False),
+        StructField("violation_count", LongType(), nullable=False),
+        StructField(
+            "metrics",
+            MapType(StringType(), DoubleType(), valueContainsNull=False),
+            nullable=False,
+        ),
     ]
 )
 

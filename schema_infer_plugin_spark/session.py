@@ -6,13 +6,22 @@ core/inferrer.py:129-164). On Spark all of that is configuration: AQE re-plans
 shuffles at runtime (skew-join splitting, partition coalescing), Arrow makes the
 few pandas-UDF paths vectorized, and shuffle partitioning is sized for the target
 parallelism rather than hardcoded.
+
+Python runs in exactly two places: the driver, and Arrow-batched pandas UDFs
+(``mapInPandas`` / ``applyInPandasWithState``). Never row-pickled Python —
+that also covers the small frames the driver builds itself (ledger rows,
+verdict rows, check grids): :func:`local_frame` ships them to the JVM as one
+Arrow table that plans as a ``LocalRelation``, never as a ``PythonRDD``
+stage that would start a Python worker.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType, TimestampType
 
 
 def get_spark(
@@ -53,3 +62,30 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession, rows: Sequence[Sequence], schema: StructType | str
+) -> DataFrame:
+    """A driver-built frame (``rows`` as tuples in ``schema`` field order;
+    ``schema`` a StructType or DDL string) as a ``LocalRelation``.
+
+    The rows go to the JVM as one ``pyarrow.Table``, so no Python worker
+    runs, unlike ``createDataFrame(<list>)``, which plans a ``PythonRDD``
+    stage. Values match the list path: a ``TimestampType`` value becomes the
+    instant ``TimestampType.toInternal`` gives it (a naive datetime is read in
+    the driver's local zone, never the session zone)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    arrays = []
+    for field, values in zip(schema.fields, columns):
+        if isinstance(field.dataType, TimestampType):
+            micros = [None if v is None else field.dataType.toInternal(v) for v in values]
+            arrays.append(pa.array(micros, pa.timestamp("us", tz="UTC")))
+        else:
+            arrays.append(pa.array(values, to_arrow_type(field.dataType)))
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, names=schema.names), schema)

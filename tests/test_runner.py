@@ -197,9 +197,17 @@ def test_transition_domain_rides_validation_run(spark, tmp_path):
         )
 
 
-def _instrumented_run(spark, t, out, **options) -> int:
+def _instrumented_run(spark, t, out, deterministic=False, **options) -> int:
     """run_validation over ``t`` with a conv_id column that counts its own
-    evaluations; returns the count (one scan reads each row once)."""
+    evaluations; returns the count (one scan reads each row once).
+    ``options`` default to n_buckets=4, batch_buckets=4.
+
+    The counting UDF is non-deterministic by default, which stops Catalyst
+    duplicating it into pushed-down filters on the recomputed key, so each
+    evaluation maps 1:1 to a scanned row. ``deterministic=True`` is for
+    input that carries a stored partition_key: the batch filter then reads
+    no conv_id, and only a deterministic column lets it sink to the scan
+    and prune partition directories."""
     from pyspark.sql.types import StringType
 
     acc = spark.sparkContext.accumulator(0)
@@ -208,11 +216,12 @@ def _instrumented_run(spark, t, out, **options) -> int:
         acc.add(1)
         return v
 
-    # asNondeterministic stops Catalyst duplicating the UDF into pushed-down
-    # filters — each surviving evaluation then maps 1:1 to a scanned row
-    udf = F.udf(tick, StringType()).asNondeterministic()
+    udf = F.udf(tick, StringType())
+    if not deterministic:
+        udf = udf.asNondeterministic()
     instrumented = t.withColumn("conv_id", udf("conv_id"))
-    run_validation(spark, instrumented, out, n_buckets=4, batch_buckets=4, **options)
+    options = {"n_buckets": 4, "batch_buckets": 4, **options}
+    run_validation(spark, instrumented, out, **options)
     return acc.value
 
 
@@ -393,3 +402,141 @@ def test_violations_diff_new_and_resolved(spark, tmp_path):
         assert sorted(map(tuple, again.collect())) == sorted(map(tuple, verd.collect()))
     finally:
         full.unpersist()
+
+
+def _rows(df):
+    """Sorted plain tuples of ``df`` (map values as sorted item tuples)."""
+    def plain(v):
+        return tuple(sorted(v.items())) if isinstance(v, dict) else v
+
+    return sorted(tuple(plain(v) for v in r) for r in df.collect())
+
+
+def _as_string_key(df):
+    # partition columns read back as inferred ints
+    return df.withColumn("partition_key", F.col("partition_key").cast("string"))
+
+
+def test_verified_bucketed_batches_read_only_their_buckets(spark, tmp_path):
+    """A verified ``bucketed:`` layout keeps its stored partition_key, so a
+    batch's filter prunes partition directories: over 8 buckets in batches
+    of 2 the table is read once in all, not once per batch. A dir whose
+    sidecar is absent or names another bucket count recomputes the key and
+    scans the whole table per batch, with identical violations and
+    verdicts."""
+    from schema_infer_plugin_spark.plans.runner import resolve_transcripts_input, write_bucketed
+    from schema_infer_plugin_spark.sources.metadata import (
+        BUCKET_SCHEME_FILE,
+        write_bucket_scheme,
+    )
+
+    t = synth_transcripts(spark, 300)
+    n_rows = t.count()
+    scanned, violations, verdict_rows = {}, {}, {}
+    for layout in ("verified", "absent", "mismatched"):
+        bdir = str(tmp_path / layout)
+        write_bucketed(t, bdir, 8)
+        if layout == "absent":
+            os.remove(os.path.join(bdir, BUCKET_SCHEME_FILE))
+        if layout == "mismatched":
+            write_bucket_scheme(bdir, 4)
+        src, bucket_rows = resolve_transcripts_input(spark, f"bucketed:{bdir}", 8)
+        verified = layout == "verified"
+        assert (bucket_rows is not None) == verified
+        assert ("partition_key" in src.columns) == verified
+        out = str(tmp_path / f"out_{layout}")
+        scanned[layout] = _instrumented_run(
+            spark, src, out, deterministic=verified,
+            n_buckets=8, batch_buckets=2, bucket_rows=bucket_rows,
+        )
+        violations[layout] = _rows(_as_string_key(_violations(spark, out)))
+        verdict_rows[layout] = _rows(
+            _as_string_key(spark.read.parquet(os.path.join(out, "verdicts")))
+        )
+    # 8 buckets in batches of 2: an unpruned layout is read once per batch
+    assert scanned["verified"] == n_rows
+    assert scanned["absent"] == scanned["mismatched"] == 4 * n_rows
+    assert violations["verified"]  # the synth corpus injects violations
+    assert violations["absent"] == violations["mismatched"] == violations["verified"]
+    assert len(verdict_rows["verified"]) == 8 * len(CHECK_NAMES)
+    assert verdict_rows["absent"] == verdict_rows["mismatched"] == verdict_rows["verified"]
+
+
+def test_observed_verdicts_and_ledger_match_read_back(spark, tmp_path):
+    """The verdicts and ledger counts a run builds on the driver from its
+    write's Observations are row-identical to ``verdicts()`` and per-bucket
+    counts over what it wrote: shared fixture, every option on, an uneven
+    last batch, one metadata-pruned bucket and a crash-and-resume."""
+    import __spark_entry__ as entrymod
+    from schema_infer_plugin_spark.checks import boundary_rules, transition_rules
+    from schema_infer_plugin_spark.checks.custom import as_rules
+    from schema_infer_plugin_spark.operators.violations import verdicts
+    from schema_infer_plugin_spark.plans.runner import (
+        resolve_transcripts_input,
+        with_partition_key,
+        write_bucketed,
+    )
+    from schema_infer_plugin_spark.plans.validate import default_rules
+    from schema_infer_plugin_spark.session import local_frame
+    from tests.conftest import SF_CORRECT
+
+    n = 8
+    first, last = ["user", "system"], ["assistant", "tool"]
+    source = with_partition_key(entrymod._transcripts(spark, SF_CORRECT), n)
+    bdir = str(tmp_path / "bucketed")
+    write_bucketed(source.filter(F.col("partition_key") != "5"), bdir, n)
+    t, bucket_rows = resolve_transcripts_input(spark, f"bucketed:{bdir}", n)
+    assert bucket_rows["5"] == 0
+    out = str(tmp_path / "run")
+    options = dict(
+        n_buckets=n, batch_buckets=3, bucket_rows=bucket_rows,
+        custom_rules=list(entrymod._EXPR_RULES),
+        boundary_roles=(first, last),
+        allowed_transitions=entrymod._ALLOWED_TRANSITIONS,
+    )
+    # batches [0,1,2] [3,4,6] [7] after pruning 5; crash after the first
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_validation(spark, t, out, fail_after_batches=1, **options)
+    resumed = run_validation(spark, t, out, **options)
+    assert (resumed["skipped"], resumed["processed"]) == (4, 4)  # [3,4,6] [7]
+
+    names = [
+        r.name
+        for r in as_rules(
+            default_rules()
+            + boundary_rules(tuple(first), tuple(last))
+            + transition_rules(entrymod._ALLOWED_TRANSITIONS)
+            + list(entrymod._EXPR_RULES)
+        )
+    ]
+    written = _as_string_key(_violations(spark, out))
+    keys = local_frame(spark, [(str(i),) for i in range(n)], "partition_key string")
+    got = _as_string_key(spark.read.parquet(os.path.join(out, "verdicts")))
+    want = verdicts(written, keys, names, run_id="run0")
+    assert _rows(got.select(*want.columns)) == _rows(want)
+    assert len(_rows(got)) == n * len(names)
+    assert got.filter(~F.col("pass")).count() > 0
+
+    ledger = read_ledger(spark, out).filter(F.col("pass_name") == PASS_B).collect()
+    per_bucket = lambda df: dict(df.groupBy("partition_key").count().collect())  # noqa: E731
+    rows, viols = per_bucket(_as_string_key(t)), per_bucket(written)
+    assert sorted(
+        (r["partition_key"], r["rows_processed"], r["violation_count"]) for r in ledger
+    ) == sorted((str(k), rows.get(str(k), 0), viols.get(str(k), 0)) for k in range(n))
+    assert sum(rows.values()) == source.filter(F.col("partition_key") != "5").count()
+
+
+def test_cell_count_guard_fails_loudly(spark):
+    """Observed per-cell counts must account for every observed row; a row
+    outside every cell raises instead of under-counting a verdict."""
+    from schema_infer_plugin_spark.plans.runner import _cell_counts, _observe_cells
+
+    df = spark.range(5)
+    whole, obs = _observe_cells(df, "cells_whole", F.col("id") % 2, 2)
+    whole.collect()
+    assert _cell_counts(obs.get) == [3, 2]
+
+    lossy, obs = _observe_cells(df, "cells_lossy", F.when(F.col("id") < 4, F.col("id") % 2), 2)
+    lossy.collect()
+    with pytest.raises(RuntimeError, match="outside every cell"):
+        _cell_counts(obs.get)
