@@ -5049,7 +5049,7 @@ _PPM_COLS = ["doc_id", "lang", "n_chars"]
 
 
 def q_profile_partial_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mergeable partial profiles (operators/profile_partial): the documents
+    """Mergeable partial profiles (operators/profile.profile_partial): the documents
     table profiled as TWO independent partial runs (doc_id parity split)
     whose persisted-shape state rows are merged WITHOUT rescanning input —
     the incremental-profiling path (profile 90 daily partitions once, merge
@@ -5057,7 +5057,7 @@ def q_profile_partial_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     (counts / native-typed min+max / ladder histogram); the HLL distinct
     sketch rides the same artifact but is estimate-valued, so it stays
     pytest-verified (tests/test_mixing_partial.py)."""
-    from schema_infer_plugin_spark.operators.profile_partial import (
+    from schema_infer_plugin_spark.operators.profile import (
         profile_merge,
         profile_partial,
     )

@@ -66,9 +66,9 @@ def grouped_int_corr_partial(
     """The mergeable state behind :func:`grouped_int_corr`: one row per group
     of exact sufficient statistics (n_rows, Σx, Σy, Σxy, Σx², Σy² as
     DECIMAL(38,0)) — additive, so "correlation over the last 90 days" is a
-    sum of 90 persisted state rows, zero input rescans (the
-    operators/profile_partial design applied to a PAIR statistic; unlike the
-    HLL/KLL columns there, this merge is EXACT)."""
+    sum of 90 persisted state rows, zero input rescans (the operators/profile
+    mergeable-state design applied to a PAIR statistic; unlike the HLL/KLL
+    columns there, this merge is EXACT)."""
     xc = _as_col(x).cast("decimal(19,0)")
     yc = _as_col(y).cast("decimal(19,0)")
     base = df.select(

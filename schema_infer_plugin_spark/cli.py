@@ -791,10 +791,10 @@ def cmd_mix(args: argparse.Namespace) -> int:
 
 def cmd_profile_partial(args: argparse.Namespace) -> int:
     """Scan ONE table/partition and persist its mergeable profile state
-    (operators/profile_partial): the incremental-profiling producer — run it
+    (operators/profile.profile_partial): the incremental-profiling producer — run it
     per ingest batch, answer period-level profiles later via
     ``profile-merge`` without rescanning a byte."""
-    from schema_infer_plugin_spark.operators.profile_partial import profile_partial
+    from schema_infer_plugin_spark.operators.profile import profile_partial
     from schema_infer_plugin_spark.sources.io import load_table
 
     spark = _spark()
@@ -813,7 +813,7 @@ def cmd_profile_merge(args: argparse.Namespace) -> int:
     profile — work ∝ (#artifacts × #columns), never ∝ input."""
     from functools import reduce
 
-    from schema_infer_plugin_spark.operators.profile_partial import profile_merge
+    from schema_infer_plugin_spark.operators.profile import profile_merge
 
     spark = _spark()
     parts = reduce(
@@ -840,7 +840,7 @@ def cmd_profile_diff(args: argparse.Namespace) -> int:
     BREAKING column or failed quantile shift."""
     from functools import reduce
 
-    from schema_infer_plugin_spark.operators.profile_partial import profile_merge
+    from schema_infer_plugin_spark.operators.profile import profile_merge
     from schema_infer_plugin_spark.plans.compare import (
         profile_compare,
         quantile_drift_verdicts,

@@ -27,18 +27,3 @@ def hex_hash_long(value: Column, salt: int | str = 0) -> Column:
     DuckDB equivalent: CAST('0x' || substr(md5(concat(salt,':',x)),1,15) AS UBIGINT).
     """
     return F.conv(F.substring(salted_md5(value, salt), 1, 15), 16, 10).cast("long")
-
-
-def minhash_signature(value: Column, num_hashes: int = 16) -> Column:
-    """MinHash signature helper for a *single* set literal column.
-
-    For set-valued data prefer the aggregation form in operators/dedup.py
-    (min over exploded shingles — no per-row array churn); this expression form
-    serves small arrays: array of min(md5(salt||elem)) per salt.
-    """
-    return F.array(
-        *[
-            F.array_min(F.transform(value, lambda e, s=s: salted_md5(e, s)))
-            for s in range(num_hashes)
-        ]
-    )

@@ -12,13 +12,6 @@ import re
 from pyspark.sql import Column, DataFrame, functions as F
 
 
-def parse_json(df: DataFrame, col: str, schema_ddl: str) -> DataFrame:
-    """JSON with a declared schema: from_json + validity flag (JSONParser,
-    parsers.py:77-118). Dynamic-schema inference lives in operators/inference.py."""
-    parsed = F.from_json(F.col(col), schema_ddl)
-    return df.withColumn("_parsed", parsed).withColumn("_parse_ok", parsed.isNotNull())
-
-
 def parse_csv_line(df: DataFrame, col: str, headers: list[str], delimiter: str = ",") -> DataFrame:
     """CSV line → one string column per header; short rows pad with '', long
     rows truncate (CSVParser pad/truncate, parsers.py:169-175). All values stay
@@ -32,17 +25,6 @@ def parse_csv_line(df: DataFrame, col: str, headers: list[str], delimiter: str =
     # get() (not getItem) tolerates short rows by returning NULL → pad with ''
     cols = [F.coalesce(F.get(parts, i), F.lit("")).alias(h) for i, h in enumerate(headers)]
     return df.select(*cols)
-
-
-def parse_tsv_line(df: DataFrame, col: str, headers: list[str]) -> DataFrame:
-    """TSV = CSV with tab (TSVParser, parsers.py:254-259)."""
-    return parse_csv_line(df, col, headers, delimiter="\t")
-
-
-def parse_delimited_line(df: DataFrame, col: str, delimiter: str, n_fields: int) -> DataFrame:
-    """Custom delimiter with generic field_i headers (DelimitedParser,
-    parsers.py:386-449)."""
-    return parse_csv_line(df, col, [f"field_{i}" for i in range(n_fields)], delimiter)
 
 
 def kv_coerced_value(value: Column) -> Column:

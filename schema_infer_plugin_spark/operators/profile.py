@@ -1,28 +1,68 @@
-"""Pass A — column profiling in a single wide aggregation.
+"""Pass A — column profiles from ONE mergeable state definition.
 
-Generalizes the reference's per-record field accumulator
-(/root/reference/schema_infer/schemas/inference.py:199-264: per-field Counter of
-types, null_count, total_count, ≤5 examples over a ≤50-message sample) into one
-full-table scan that computes, for every column at once:
+The reference folds every record into one per-field accumulator (its
+schemas/inference.py:199-264: per-field Counter of types, null_count,
+total_count, ≤5 examples over a ≤50-message sample).
+Every statistic that accumulator keeps is MERGEABLE — counts add, mins/maxes
+combine, type histograms add — and so is every statistic here. This module
+spells the accumulator once, as two private pieces:
 
-    count, null_count, null_rate, distinct (HyperLogLog approx or exact),
-    min, max, quantiles (numeric), bounded examples, and the reference's
-    type histogram + (inferred_type, confidence, nullable, required).
+``_state`` — ONE wide aggregation of per-column state (one row globally, or
+one per ``partition_by`` value):
 
-Plan shape: ``scan → partial agg (map-side combine) → final agg`` — one shuffle
-of a handful of bytes per column per partition, no matter the table size. The
-long-format output (one row per column) is produced by stacking the wide agg
-row, which happens on the driver over ~dozens of values, not in a shuffle.
+* ``{col}__total`` / ``{col}__nulls`` — exact longs (add under merge);
+* ``{col}__min`` / ``{col}__max`` — NATIVE-typed (merging string-rendered
+  mins would corrupt numerics: ``"10" < "9"`` lexicographically);
+* ``{col}__hll`` — a Datasketches HLL sketch (``hll_sketch_agg``), the
+  mergeable form of distinct counting; ``hll_union_agg`` over partials is
+  the union sketch, register-exact at equal lgK;
+* ``{col}__kll`` — numeric columns only: a Datasketches KLL doubles sketch
+  (``kll_sketch_agg_double``, k=200), the mergeable form of quantiles
+  (~1.65% two-sided normalized rank error). Spark's KLL merge has no
+  strict-k mode (unlike the HLL union's strict lgK), so merging mixed-k
+  partials would silently degrade to the smaller k — k is a constant here;
+* ``{col}__cnt_{type}`` — string columns only: the reference's type-ladder
+  histogram (adds under merge, so a merged inferred type / confidence is
+  EXACTLY what a full-table profile resolves).
 
-At 100 TB this is the right shape: all stats are algebraic or sketch-based
-(HLL / percentile_approx), so partial aggregation bounds shuffle traffic by
-#columns × #partitions, and the scan reads each column exactly once.
+``_resolve`` — ONE wide → long resolution of that state into the profile
+surface: one row per (partition_key, column) with inferred_type,
+type_histogram, counts, null_rate, required, nullable, confidence,
+distinct_approx, min/max and [p25, p50, p75] quantiles. State from an empty
+input (NULL sums, NULL or empty sketches) resolves to zero counts, a 0.0
+null_rate, distinct 0 and NULL quantiles.
+
+Two consumers share them:
+
+* :func:`profile` — one state aggregation straight into the resolution, plus
+  bounded examples. Its single partial is never re-merged.
+* :func:`profile_partial` / :func:`profile_merge` — incremental profiling:
+  persist one state row per run (a tiny artifact), and answer "profile of
+  the last 90 days" by merging 90 artifact rows, then resolving — never
+  rescanning a byte of input. Merge work is ∝ (#partials × #columns).
+
+``distinct_approx`` and ``quantiles`` are sketch ESTIMATES (merging halves is
+not bit-identical to sketching the whole) — keep them out of exact
+cross-engine comparisons. ``profile(approx_distinct=False)`` is the one
+exact, non-mergeable override: it aggregates ``count_distinct`` in place of
+the HLL sketch, for oracle-checkable distinct counts at test scale.
+
+Plan shape: ``scan → partial agg (map-side combine) → final agg`` — one
+shuffle of a handful of bytes per column per partition, no matter the table
+size, and the scan reads each column exactly once. The long output is a
+projection over the tiny wide row(s), not a shuffle.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import NumericType, StringType
+from pyspark.sql.types import (
+    BinaryType,
+    IntegerType,
+    LongType,
+    NumericType,
+    StringType,
+)
 
 from ..functions.typeladder import (
     TYPE_NAMES,
@@ -31,30 +71,146 @@ from ..functions.typeladder import (
     type_profile_exprs,
 )
 
+#: KLL sketch size of every quantile state column (rank error above)
+_KLL_K = 200
 
-def _stat_exprs(df: DataFrame, col_name: str, approx_distinct: bool, n_examples: int) -> list:
-    c = F.col(col_name)
-    dtype = df.schema[col_name].dataType
-    exprs = [
-        F.count(F.lit(1)).alias(f"{col_name}__total"),
-        F.sum(c.isNull().cast("long")).cast("long").alias(f"{col_name}__nulls"),
-        (
-            F.approx_count_distinct(c) if approx_distinct else F.count_distinct(c)
-        ).cast("long").alias(f"{col_name}__distinct"),
-        F.min(c).cast("string").alias(f"{col_name}__min"),
-        F.max(c).cast("string").alias(f"{col_name}__max"),
-    ]
-    if isinstance(dtype, NumericType):
-        exprs.append(
-            F.percentile_approx(c.cast("double"), F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75)))
-            .alias(f"{col_name}__quantiles")
+#: types Datasketches HLL ingests natively; anything else is sketched over
+#: its string rendering (injective for dates/timestamps/decimals — the
+#: distinct count is over VALUES either way)
+_HLL_NATIVE = (IntegerType, LongType, StringType, BinaryType)
+
+#: suffixes of the mergeable state columns (besides the string-only cnt_*)
+_STATE_SUFFIXES = ("__total", "__nulls", "__min", "__max", "__hll")
+
+
+def _state(
+    df: DataFrame,
+    columns: list[str],
+    partition_by: str | None,
+    lg_k: int = 12,
+    exact_distinct: bool = False,
+) -> DataFrame:
+    """The wide state aggregation (module docstring) over ``columns``.
+    ``exact_distinct`` aggregates ``{col}__distinct = count_distinct`` in
+    place of the HLL sketch."""
+    agg_exprs: list = []
+    for c in columns:
+        col, dtype = F.col(c), df.schema[c].dataType
+        if exact_distinct:
+            distinct = F.count_distinct(col).alias(f"{c}__distinct")
+        else:
+            sketch_input = col if isinstance(dtype, _HLL_NATIVE) else col.cast("string")
+            distinct = F.hll_sketch_agg(sketch_input, lg_k).alias(f"{c}__hll")
+        agg_exprs.extend(
+            [
+                F.count(F.lit(1)).alias(f"{c}__total"),
+                F.sum(col.isNull().cast("long")).cast("long").alias(f"{c}__nulls"),
+                F.min(col).alias(f"{c}__min"),
+                F.max(col).alias(f"{c}__max"),
+                distinct,
+            ]
         )
-    else:
-        exprs.append(F.lit(None).cast("array<double>").alias(f"{col_name}__quantiles"))
-    if isinstance(dtype, StringType):
-        # cnt_{type} only; ladder pre-classified to {col}__code in the projection
-        exprs.extend(type_profile_exprs(col_name, from_code=True)[: len(TYPE_NAMES)])
-    return exprs
+        if isinstance(dtype, NumericType):
+            agg_exprs.append(
+                F.kll_sketch_agg_double(col.cast("double"), _KLL_K).alias(f"{c}__kll")
+            )
+        if isinstance(dtype, StringType):
+            agg_exprs.extend(type_profile_exprs(c, from_code=True)[: len(TYPE_NAMES)])
+    # classify each string column ONCE per row (type_code_proj docstring)
+    code_cols = [
+        type_code_proj(c) for c in columns if isinstance(df.schema[c].dataType, StringType)
+    ]
+    prep = df.select("*", *code_cols) if code_cols else df
+    return prep.groupBy(partition_by).agg(*agg_exprs) if partition_by else prep.agg(*agg_exprs)
+
+
+def _resolve(wide: DataFrame, columns: list[str], key: str | None, run_id: str) -> DataFrame:
+    """Wide state row(s) → long profile, one row per (partition_key, column).
+    Reads ``{col}__distinct`` in place of the HLL estimate and emits
+    ``examples`` when the wide frame carries those columns."""
+
+    def count(name: str):
+        # a sum over zero rows (empty input, or no partials) is NULL: count 0
+        return F.coalesce(F.col(name), F.lit(0)).cast("long")
+
+    dtypes = dict(wide.dtypes)
+    structs = []
+    for c in columns:
+        total, nulls = count(f"{c}__total"), count(f"{c}__nulls")
+        if f"{c}__cnt_{TYPE_NAMES[0]}" in dtypes:
+            cnts = {t: count(f"{c}__cnt_{t}") for t in TYPE_NAMES}
+            resolved = resolve_profile(
+                cnts["boolean"], cnts["int"], cnts["float"], cnts["string"], total, nulls
+            )
+            hist = F.map_from_arrays(
+                F.array(*[F.lit(t) for t in TYPE_NAMES]),
+                F.array(*[cnts[t] for t in TYPE_NAMES]),
+            )
+        else:
+            # the native dtype rides along on the min state column
+            spark_type = dtypes[f"{c}__min"]
+            resolved = {
+                "inferred_type": F.lit(spark_type),
+                "confidence": F.lit(1.0),
+                "nullable": nulls > 0,
+                "required": (nulls == 0) | ((nulls / total) < 0.1),
+            }
+            hist = F.map_from_arrays(
+                F.array(F.lit(spark_type), F.lit("null")),
+                F.array(total - nulls, nulls),
+            )
+        if f"{c}__kll" in dtypes:
+            sk = F.col(f"{c}__kll")
+            # an all-empty KLL sketch is valid but get_quantile raises on it —
+            # gate on the sketch's own n (a NULL sketch gates to NULL too)
+            quantiles = F.when(
+                F.kll_sketch_get_n_double(sk) > 0,
+                F.array(
+                    *[
+                        F.kll_sketch_get_quantile_double(sk, F.lit(p))
+                        for p in (0.25, 0.5, 0.75)
+                    ]
+                ),
+            )
+        else:
+            quantiles = F.lit(None).cast("array<double>")
+        if f"{c}__distinct" in dtypes:
+            distinct = F.col(f"{c}__distinct")
+        else:
+            # NULL sketch = zero observed values
+            distinct = F.coalesce(F.hll_sketch_estimate(F.col(f"{c}__hll")), F.lit(0))
+        fields = [
+            F.lit(c).alias("column"),
+            resolved["inferred_type"].alias("inferred_type"),
+            hist.alias("type_histogram"),
+            total.alias("total_count"),
+            nulls.alias("null_count"),
+            # zero rows must not emit a NULL rate (0/0): empty is 0-null
+            F.when(total > 0, nulls / total)
+            .otherwise(F.lit(0.0))
+            .cast("double")
+            .alias("null_rate"),
+            resolved["required"].alias("required"),
+            resolved["nullable"].alias("nullable"),
+            resolved["confidence"].cast("double").alias("confidence"),
+            distinct.cast("long").alias("distinct_approx"),
+            F.col(f"{c}__min").cast("string").alias("min_val"),
+            F.col(f"{c}__max").cast("string").alias("max_val"),
+            quantiles.alias("quantiles"),
+        ]
+        if f"{c}__examples" in dtypes:
+            fields.append(
+                F.array_sort(
+                    F.coalesce(F.col(f"{c}__examples"), F.array().cast("array<string>"))
+                ).alias("examples")
+            )
+        structs.append(F.struct(*fields))
+    part_key = F.col(key).cast("string") if key else F.lit("_global_")
+    return wide.select(
+        F.lit(run_id).alias("run_id"),
+        part_key.alias("partition_key"),
+        F.explode(F.array(*structs)).alias("p"),
+    ).select("run_id", "partition_key", "p.*")
 
 
 def profile(
@@ -68,11 +224,12 @@ def profile(
 ) -> DataFrame:
     """Profile ``columns`` (default: all) in one aggregation pass.
 
-    Returns long format: one row per (partition_key, column) with
-    PROFILE_SCHEMA-compatible columns. ``partition_by`` groups the profile per
-    partition (the per-topic analog of the reference); None profiles globally.
-    ``approx_distinct=True`` uses HyperLogLog (the 100 TB path);
-    False uses exact count_distinct (oracle-checkable at test scale).
+    Returns long format: one row per (partition_key, column) —
+    :func:`profile_merge`'s columns plus ``examples``. ``partition_by``
+    groups the profile per partition (the per-topic analog of the
+    reference); None profiles globally. ``approx_distinct=True`` reads
+    distinct counts off the HLL state (the 100 TB path); False counts them
+    exactly with count_distinct (oracle-checkable at test scale).
 
     With ``partition_by`` the example sampling (fixed_k_sample) ranks every
     row by md5 inside its partition — a SECOND full shuffle of the selected
@@ -84,16 +241,7 @@ def profile(
     keeps exact every-partition coverage for moderate tables.
     """
     columns = columns or [c for c in df.columns if c != partition_by]
-    agg_exprs: list = []
-    for col_name in columns:
-        agg_exprs.extend(_stat_exprs(df, col_name, approx_distinct, n_examples))
-
-    # classify each string column ONCE per row (type_code_proj docstring)
-    code_cols = [
-        type_code_proj(c) for c in columns if isinstance(df.schema[c].dataType, StringType)
-    ]
-    prep = df.select("*", *code_cols) if code_cols else df
-    wide = prep.groupBy(partition_by).agg(*agg_exprs) if partition_by else prep.agg(*agg_exprs)
+    wide = _state(df, columns, partition_by, exact_distinct=not approx_distinct)
 
     # Bounded examples (reference keeps the first ≤5 seen, inference.py:248-250):
     # a collect_set over the full column would buffer every distinct value of a
@@ -139,65 +287,88 @@ def profile(
             for c in columns
         ]
         wide = wide.crossJoin(sample.agg(*ex_exprs))
+    return _resolve(wide, columns, partition_by, run_id)
 
-    # Stack wide → long. The wide frame has one row per partition_key (tiny);
-    # build one struct per column then explode — pure projection, no shuffle.
-    structs = []
-    for col_name in columns:
-        is_string = isinstance(df.schema[col_name].dataType, StringType)
-        total = F.col(f"{col_name}__total")
-        nulls = F.col(f"{col_name}__nulls")
-        if is_string:
-            cnts = {t: F.col(f"{col_name}__cnt_{t}") for t in TYPE_NAMES}
-            resolved = resolve_profile(cnts["boolean"], cnts["int"], cnts["float"], cnts["string"], total, nulls)
-            hist = F.map_from_arrays(
-                F.array(*[F.lit(t) for t in TYPE_NAMES]),
-                F.array(*[cnts[t] for t in TYPE_NAMES]),
-            )
-        else:
-            spark_type = df.schema[col_name].dataType.simpleString()
-            resolved = {
-                "inferred_type": F.lit(spark_type),
-                "confidence": F.lit(1.0),
-                "nullable": nulls > 0,
-                "required": (nulls == 0) | ((nulls / total) < 0.1),
-            }
-            hist = F.map_from_arrays(
-                F.array(F.lit(spark_type), F.lit("null")),
-                F.array((total - nulls).cast("long"), nulls.cast("long")),
-            )
-        structs.append(
-            F.struct(
-                F.lit(col_name).alias("column"),
-                resolved["inferred_type"].alias("inferred_type"),
-                hist.alias("type_histogram"),
-                total.alias("total_count"),
-                nulls.alias("null_count"),
-                (nulls / total).alias("null_rate"),
-                resolved["required"].alias("required"),
-                resolved["nullable"].alias("nullable"),
-                resolved["confidence"].cast("double").alias("confidence"),
-                F.col(f"{col_name}__distinct").alias("distinct_approx"),
-                F.col(f"{col_name}__min").alias("min_val"),
-                F.col(f"{col_name}__max").alias("max_val"),
-                F.col(f"{col_name}__quantiles").alias("quantiles"),
-                F.array_sort(
-                    F.coalesce(
-                        F.col(f"{col_name}__examples"), F.array().cast("array<string>")
-                    )
-                ).alias("examples"),
-            )
+
+def profile_partial(
+    df: DataFrame,
+    columns: list[str] | None = None,
+    run_id: str = "run0",
+    lg_k: int = 12,
+    partition_by: str | None = None,
+) -> DataFrame:
+    """Mergeable profile state for ``columns`` (default all): ONE wide row
+    globally, or one row per ``partition_by`` value (the reference's
+    per-topic analog, incremental — artifact size ∝ partition cardinality,
+    never input).
+
+    The rows are the artifact: write them with ``.write.parquet(...)`` and
+    feed any union of such rows (same column set, same ``lg_k``, same
+    partitioning) to :func:`profile_merge`. One scan, map-side combined —
+    the shuffle is a handful of bytes per column per partition. Examples
+    are deliberately absent: they are a bounded sample, not an accumulator.
+    """
+    columns = columns or [c for c in df.columns if c != partition_by]
+    if partition_by in columns:
+        raise ValueError("profile_partial: partition_by cannot also be profiled")
+    # "__" is the state-column marker profile_merge keys off — a partition
+    # column containing it would be misread as state and silently collapse
+    # every partition into one global row at merge time
+    if partition_by is not None and "__" in partition_by:
+        raise ValueError(
+            "profile_partial: partition_by name must not contain '__' "
+            "(reserved for artifact state columns)"
         )
+    return _state(df, columns, partition_by, lg_k).select(F.lit(run_id).alias("run_id"), "*")
 
-    part_key = (
-        F.col(partition_by).cast("string") if partition_by else F.lit("_global_")
-    )
-    long_df = wide.select(
-        F.lit(run_id).alias("run_id"),
-        part_key.alias("partition_key"),
-        F.explode(F.array(*structs)).alias("p"),
-    ).select("run_id", "partition_key", "p.*")
-    return long_df
+
+def profile_merge(parts: DataFrame, run_id: str = "merged") -> DataFrame:
+    """Merge partial-profile rows into one long-format profile.
+
+    Accepts any union of :func:`profile_partial` outputs over the SAME
+    column set (mismatched partials raise — merging profiles of different
+    tables is a caller bug, not a coercion opportunity); parquet round-trips
+    preserve the sketch binary. Partition-keyed partials (``partition_by=``)
+    merge per key — the key column is recognized as the non-state column
+    riding the artifact. Output: :func:`profile`'s columns minus examples.
+    """
+    columns = [c[: -len("__total")] for c in parts.columns if c.endswith("__total")]
+    if not columns:
+        raise ValueError("profile_merge: input has no __total state columns")
+    missing = [
+        f"{c}{s}" for c in columns for s in _STATE_SUFFIXES if f"{c}{s}" not in parts.columns
+    ]
+    if missing:
+        raise ValueError(f"profile_merge: partial state columns missing: {missing}")
+    # state columns all carry a "__" suffix; whatever else rides the artifact
+    # beside run_id is the partition key (at most one, as in profile())
+    keys = [c for c in parts.columns if c != "run_id" and "__" not in c]
+    if len(keys) > 1:
+        raise ValueError(f"profile_merge: at most one partition column, got {keys}")
+
+    agg_exprs: list = []
+    for c in columns:
+        agg_exprs.extend(
+            [
+                F.sum(f"{c}__total").alias(f"{c}__total"),
+                F.sum(f"{c}__nulls").alias(f"{c}__nulls"),
+                F.min(f"{c}__min").alias(f"{c}__min"),
+                F.max(f"{c}__max").alias(f"{c}__max"),
+                # strict lgK: partials built with a different lg_k raise at
+                # merge (a mis-configured pipeline must not silently degrade
+                # the estimate — same posture as the mismatched-column guard)
+                F.hll_union_agg(f"{c}__hll", False).alias(f"{c}__hll"),
+            ]
+        )
+        if f"{c}__kll" in parts.columns:
+            agg_exprs.append(F.kll_merge_agg_double(f"{c}__kll").alias(f"{c}__kll"))
+        agg_exprs.extend(
+            F.sum(f"{c}__cnt_{t}").alias(f"{c}__cnt_{t}")
+            for t in TYPE_NAMES
+            if f"{c}__cnt_{t}" in parts.columns
+        )
+    wide = parts.groupBy(*keys).agg(*agg_exprs) if keys else parts.agg(*agg_exprs)
+    return _resolve(wide, columns, keys[0] if keys else None, run_id)
 
 
 def type_profile(

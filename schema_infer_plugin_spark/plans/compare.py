@@ -131,7 +131,7 @@ def quantile_drift_verdicts(
     shift_threshold: float = 0.25,
     eps: float = 1e-12,
 ) -> DataFrame:
-    """Numeric-SHIFT verdicts from two :func:`~..operators.profile_partial.
+    """Numeric-SHIFT verdicts from two :func:`~..operators.profile.
     profile_merge` outputs — the quantile companion to :func:`profile_compare`,
     and the last leg of the artifacts-only drift composition: period-over-
     period numeric drift ("did turn lengths shift this week?") answered from

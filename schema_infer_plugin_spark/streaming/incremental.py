@@ -397,7 +397,7 @@ def profile_partial_sink(
     columns: list[str] | None = None,
 ) -> DataStreamWriter:
     """Incremental profiling over a stream: every micro-batch folds into ONE
-    mergeable partial-profile row (operators/profile_partial) appended to
+    mergeable partial-profile row (operators/profile.profile_partial) appended to
     ``out_dir`` — the streaming producer of the same artifact the batch CLI
     ``profile-partial`` writes, so "profile of everything ingested so far"
     is ``profile_merge(spark.read.parquet(f"{out_dir}/*"))`` at any moment,
@@ -412,7 +412,7 @@ def profile_partial_sink(
     """
     import os
 
-    from ..operators.profile_partial import profile_partial
+    from ..operators.profile import profile_partial
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         (

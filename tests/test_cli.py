@@ -309,7 +309,7 @@ def test_profile_diff_cli(spark, tmp_path):
     quantile-shift gate."""
     from pyspark.sql import functions as F
 
-    from schema_infer_plugin_spark.operators.profile_partial import profile_partial
+    from schema_infer_plugin_spark.operators.profile import profile_partial
 
     base_df = spark.range(2_000).select(
         (F.col("id") % 100).cast("double").alias("x"),

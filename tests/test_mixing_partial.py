@@ -1,5 +1,5 @@
 """Token-budget mixing (datapipe/mixing.py) and mergeable partial profiles
-(operators/profile_partial.py): DuckDB value parity, merge==direct identity,
+(operators/profile.py): DuckDB value parity, merge==direct identity,
 determinism under repartitioning, and artifact round-trips."""
 
 from __future__ import annotations
@@ -8,7 +8,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from schema_infer_plugin_spark.datapipe.mixing import mix_token_budget
-from schema_infer_plugin_spark.operators.profile_partial import (
+from schema_infer_plugin_spark.operators.profile import (
+    profile,
     profile_merge,
     profile_partial,
 )
@@ -119,6 +120,31 @@ def test_partial_merge_equals_direct_profile_state(spark, duck):
     assert abs(q["distinct_approx"] - exp[1]) <= max(1, 0.05 * exp[1])
     assert merged["l_returnflag"]["distinct_approx"] == exp[4]
     assert merged["l_shipdate"]["min_val"] == exp[5]
+    # one state definition, one answer: profile() resolves the same state
+    # without the merge — exact fields equal, estimates within sketch error
+    direct = {r["column"]: r for r in profile(li, cols).collect()}
+    exact = (
+        "total_count", "null_count", "null_rate", "min_val", "max_val",
+        "type_histogram", "inferred_type", "confidence", "required", "nullable",
+    )
+    for c in cols:
+        for k in exact:
+            assert direct[c][k] == merged[c][k], (c, k)
+        assert abs(direct[c]["distinct_approx"] - merged[c]["distinct_approx"]) <= max(
+            1, 0.02 * merged[c]["distinct_approx"]
+        )
+        dq, mq = direct[c]["quantiles"], merged[c]["quantiles"]
+        assert (dq is None) == (mq is None) == (c != "l_quantity")
+    # KLL bounds RANK error: each estimate's true rank interval in the data
+    # must cover the requested rank within 5%
+    for qs in (direct["l_quantity"]["quantiles"], merged["l_quantity"]["quantiles"]):
+        for p, est in zip((0.25, 0.5, 0.75), qs):
+            lo, hi = duck.execute(
+                "SELECT avg(CAST(l_quantity < ? AS INT)), avg(CAST(l_quantity <= ? AS INT))"
+                " FROM lineitem",
+                [est, est],
+            ).fetchone()
+            assert lo - 0.05 <= p <= hi + 0.05, (p, est, lo, hi)
 
 
 def test_partial_parquet_roundtrip_and_incremental_merge(spark, tmp_path):

@@ -46,12 +46,35 @@ def test_profile_single_pass_plan(spark):
     nested-loop join. No shuffle joins, no per-row Python, no unbounded
     collect over the full table (FIXTURES.md §5 plan gate)."""
     li = spark.read.parquet(f"{SF_CORRECT}/lineitem.parquet")
-    p = profile(li, columns=list(li.columns), approx_distinct=True)
-    plan = p._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("FileScan parquet") <= 2  # full scan + limited examples scan
-    assert "Limit" in plan  # the examples scan is bounded
-    assert "BatchEvalPython" not in plan
-    assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
+    for approx in (True, False):
+        p = profile(li, columns=list(li.columns), approx_distinct=approx)
+        plan = p._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("FileScan parquet") <= 2  # full scan + limited examples scan
+        assert "Limit" in plan  # the examples scan is bounded
+        assert "BatchEvalPython" not in plan
+        assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
+        # the state aggregation resolves straight to long form: no second
+        # (merge) aggregation over its own partial — only the examples agg
+        analyzed = p._jdf.queryExecution().analyzed().toString().splitlines()
+        aggs = [ln for ln in analyzed if ln.lstrip(" :+-").startswith("Aggregate ")]
+        assert len(aggs) == 2, (approx, aggs)
+
+
+def test_profile_empty_input(spark):
+    """Zero input rows: the global profile still has one fully defined row
+    per column (0 counts, 0.0 null_rate, no quantiles, no examples); a
+    partitioned profile has no partitions, hence no rows."""
+    li = spark.read.parquet(f"{SF_CORRECT}/lineitem.parquet").filter(F.lit(False))
+    cols = ["l_quantity", "l_returnflag", "l_shipdate"]
+    rows = {r["column"]: r for r in profile(li, cols).collect()}
+    assert sorted(rows) == sorted(cols)
+    for r in rows.values():
+        assert r["partition_key"] == "_global_"
+        assert r["total_count"] == 0 and r["null_count"] == 0
+        assert r["null_rate"] == 0.0 and r["distinct_approx"] == 0
+        assert r["quantiles"] is None and r["examples"] == []
+        assert r["required"] is True and r["nullable"] is False
+    assert profile(li, cols, partition_by="l_linestatus").collect() == []
 
 
 def test_approx_distinct_close(spark):

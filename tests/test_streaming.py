@@ -283,7 +283,7 @@ def test_profile_partial_stream_merges_to_batch_profile(spark, tmp_path):
     micro-batch (maxFilesPerTrigger=1 forces several), merged WITHOUT
     rescanning input — exact-state equality with a direct batch partial
     (counts/min/max/ladder), estimate-close on the HLL distinct."""
-    from schema_infer_plugin_spark.operators.profile_partial import (
+    from schema_infer_plugin_spark.operators.profile import (
         profile_merge,
         profile_partial,
     )
