@@ -12,6 +12,10 @@ Format-agnostic: plain parquet append in-sandbox; the same rows land in a
 Delta/Iceberg table in production (append is the only write mode used, so any
 atomic-append table format works). Bucket counts are bounded (10^3–10^5 even at
 10^12 rows), so collecting completed keys to the driver is a few MB at worst.
+
+A Pass-B row also carries the bucket's per-check violation counts
+(``check_counts``), so the ledger is the one record of each bucket's outcome:
+a run builds its verdict grid from it once, at the end.
 """
 
 from __future__ import annotations
@@ -38,15 +42,22 @@ def read_ledger(spark: SparkSession, out_dir: str) -> DataFrame:
         return local_frame(spark, [], LEDGER_SCHEMA)
 
 
-def completed_keys(spark: SparkSession, out_dir: str, run_id: str, pass_name: str) -> set[str]:
-    led = read_ledger(spark, out_dir)
+def completed_check_counts(
+    spark: SparkSession, out_dir: str, run_id: str, pass_name: str
+) -> dict[str, dict[str, int] | None]:
+    """Each completed bucket of ``run_id``'s ``pass_name`` → its per-check
+    violation counts (None where the row carries none), in one read."""
     rows = (
-        led.filter((F.col("run_id") == run_id) & (F.col("pass_name") == pass_name))
-        .select("partition_key")
-        .distinct()
+        read_ledger(spark, out_dir)
+        .filter((F.col("run_id") == run_id) & (F.col("pass_name") == pass_name))
+        .select("partition_key", "check_counts")
         .collect()
     )
-    return {r["partition_key"] for r in rows}
+    return {r["partition_key"]: r["check_counts"] for r in rows}
+
+
+def completed_keys(spark: SparkSession, out_dir: str, run_id: str, pass_name: str) -> set[str]:
+    return set(completed_check_counts(spark, out_dir, run_id, pass_name))
 
 
 def append_ledger(
@@ -55,11 +66,15 @@ def append_ledger(
     run_id: str,
     pass_name: str,
     bucket_metrics: list[tuple[str, int, int, float]],
+    check_counts: dict[str, dict[str, int]] | None = None,
 ) -> None:
-    """Append one row per completed bucket: (key, rows, violations, wall_sec)."""
+    """Append one row per completed bucket: (key, rows, violations, wall_sec),
+    plus the bucket's per-check violation counts from ``check_counts`` (keyed
+    by bucket; Pass B only, NULL for every other pass)."""
     now = datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None)
+    counts = check_counts or {}
     rows = [
-        (run_id, key, pass_name, int(nrows), int(nviol), float(wall), now)
+        (run_id, key, pass_name, int(nrows), int(nviol), float(wall), now, counts.get(key))
         for key, nrows, nviol, wall in bucket_metrics
     ]
     local_frame(spark, rows, LEDGER_SCHEMA).coalesce(1).write.mode("append").parquet(

@@ -23,11 +23,13 @@ Murmur3 (Iceberg spec) and never agrees with this engine's
 live buckets; the runner verifies the scheme and refuses to prune when it
 can't (sources/metadata.py sidecar + table-property checks).
 
-Resume: completed buckets are read from the ledger and skipped; outputs are
-written partitioned by ``partition_key`` with per-bucket overwrite-by-filter
-semantics approximated as append-once (a bucket only ever completes once — the
-ledger row and the data files for a bucket are written in that order, so a
-crash between them re-runs the bucket and overwrites its directory).
+Resume: completed buckets are read from the ledger once, at the start, and
+skipped. Violations are written partitioned by ``partition_key`` with
+per-bucket dynamic overwrite, then the bucket's ledger row is appended (a
+crash between the two re-runs the bucket and replaces its directory). The
+ledger row carries the bucket's per-check violation counts, so it is the one
+record of the bucket's outcome: the verdict grid is written once, when the
+run finishes, from those counts — a crashed run leaves no verdicts behind.
 
 CLI (spark-submit --py-files engine.zip -m runner style)::
 
@@ -39,20 +41,24 @@ CLI (spark-submit --py-files engine.zip -m runner style)::
 from __future__ import annotations
 
 import argparse
-import itertools
 import os
 import time
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from schema_infer_plugin_spark.checks.alternation import transition_rules
 from schema_infer_plugin_spark.checks.boundaries import boundary_rules
 from schema_infer_plugin_spark.checks.custom import as_rules
 from schema_infer_plugin_spark.operators.profile import profile
-from schema_infer_plugin_spark.plans.ledger import append_ledger, completed_keys
+from schema_infer_plugin_spark.plans.ledger import (
+    append_ledger,
+    completed_check_counts,
+    completed_keys,
+)
 from schema_infer_plugin_spark.plans.validate import default_rules, validate_transcripts
-from schema_infer_plugin_spark.schema import VERDICT_SCHEMA
+from schema_infer_plugin_spark.schema import TRANSCRIPTS_SCHEMA, VERDICT_SCHEMA
 from schema_infer_plugin_spark.session import local_frame
 
 PASS_B = "validate"
@@ -122,24 +128,40 @@ def _write_verdicts(
     verd_dir: str,
     run_id: str,
     keys: list[str],
-    check_names: list[str],
-    counts: list[int],
+    counts: dict[str, dict[str, int]],
 ) -> None:
-    """One verdict row per (bucket, check), built on the driver from
-    ``counts`` (violations per cell, bucket-major over ``keys ×
-    check_names``) and written over those buckets' verdict partitions."""
+    """The run's whole verdict grid, one row per (bucket, check) built on the
+    driver from ``counts`` (bucket → check → violations) and written once,
+    over any earlier grid, as one unpartitioned file."""
     rows = [
         (run_id, k, c, n == 0, n, {"violation_count": float(n)})
-        for (k, c), n in zip(itertools.product(keys, check_names), counts, strict=True)
+        for k in keys
+        for c, n in counts[k].items()
     ]
-    (
-        local_frame(spark, rows, VERDICT_SCHEMA)
-        .coalesce(1)  # one file per partition dir
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("partition_key")
-        .parquet(verd_dir)
+    local_frame(spark, rows, VERDICT_SCHEMA).coalesce(1).write.mode("overwrite").parquet(
+        verd_dir
     )
+
+
+def _check_resumable(
+    run_id: str, done: dict[str, dict[str, int] | None], check_names: list[str]
+) -> None:
+    """Raise unless every finished bucket in ``done`` (the ledger's per-check
+    counts of this run) ran exactly ``check_names``. A row without counts
+    (written before the ledger carried them) or with other checks (the rule
+    list changed between crash and resume) would mix two verdict grids."""
+    for k, counts in sorted(done.items()):
+        if counts is None:
+            raise RuntimeError(
+                f"cannot resume run {run_id!r}: the ledger row of bucket {k} has no"
+                f" per-check counts, so its checks {sorted(check_names)} cannot be"
+                " confirmed; start a new run_id"
+            )
+        if set(counts) != set(check_names):
+            raise RuntimeError(
+                f"cannot resume run {run_id!r}: bucket {k} ran other checks; differing"
+                f" checks: {sorted(set(counts) ^ set(check_names))}; start a new run_id"
+            )
 
 
 def _write_observed(df: DataFrame, name: str, path: str, *metrics: Column) -> dict:
@@ -192,15 +214,19 @@ def run_validation(
 
     A batch is one scan of its buckets (pruned to them when ``bucket_rows``
     is given and ``transcripts`` carries the layout's stored
-    ``partition_key``), one violations write, and two driver-built
-    writes. The verdict rows and the ledger's ``rows_processed`` /
-    ``violation_count`` come from Observations on the violations write
-    (input rows per bucket, violations per (bucket, check)); the written
-    violations are never read back.
+    ``partition_key``), one violations write and one ledger append. The
+    ledger's ``rows_processed`` / ``violation_count`` / ``check_counts`` come
+    from Observations on the violations write (input rows per bucket,
+    violations per (bucket, check)); the written violations are never read
+    back. The ledger is read once, at the start, and the verdict grid is
+    written once, at the end, as one file: finished buckets from their ledger
+    counts, pruned buckets as zeros, this run's batches from their
+    observations. A resume whose ledger rows lack counts or name other checks
+    raises.
 
     ``bucket_rows``: metadata-derived row count per partition_key. Buckets
-    whose metadata count is 0 — or absent — are metadata-pruned: their PASS
-    verdicts and ledger rows are emitted from the driver without EVER
+    whose metadata count is 0 — or absent — are metadata-pruned: their
+    all-zero ledger rows and PASS verdicts come from the driver without EVER
     scheduling a scan of the input (reference empty-topic skip,
     plugin/optimistic.py:387-510). PRECONDITION: the counts must describe
     partition values produced by ``with_partition_key`` at the SAME
@@ -223,25 +249,24 @@ def run_validation(
     else:
         keyed = with_partition_key(transcripts, n_buckets)
     all_keys = [str(i) for i in range(n_buckets)]
-    done = completed_keys(spark, out_dir, run_id, PASS_B)
+    done = completed_check_counts(spark, out_dir, run_id, PASS_B)
+    _check_resumable(run_id, done, check_names)
+    counts = dict(done)  # bucket → check → violations, completed below
     pending = [k for k in all_keys if k not in done]
 
     viol_dir = os.path.join(out_dir, "violations")
-    verd_dir = os.path.join(out_dir, "verdicts")
 
     pruned: list[str] = []
     if bucket_rows is not None:
         pruned = [k for k in pending if bucket_rows.get(k, 0) == 0]
         pending = [k for k in pending if k not in set(pruned)]
         if pruned:
-            t0 = time.time()
-            # every pruned (bucket, check) gets an explicit PASS verdict built
-            # on the driver — the input table is not read
-            zeros = [0] * (len(pruned) * n_checks)
-            _write_verdicts(spark, verd_dir, run_id, pruned, check_names, zeros)
-            wall = (time.time() - t0) / len(pruned)
+            # every pruned bucket completes with all-zero counts built on the
+            # driver — the input table is not read
+            zeros = {k: dict.fromkeys(check_names, 0) for k in pruned}
+            counts.update(zeros)
             append_ledger(
-                spark, out_dir, run_id, PASS_B, [(k, 0, 0, wall) for k in pruned]
+                spark, out_dir, run_id, PASS_B, [(k, 0, 0, 0.0) for k in pruned], zeros
             )
     batches = [
         pending[i : i + batch_buckets] for i in range(0, len(pending), batch_buckets)
@@ -252,9 +277,9 @@ def run_validation(
         t0 = time.time()
         # Every count rides the write job as an Observation (CollectMetrics):
         # input rows per bucket, and violations per (bucket, check) —
-        # bounded by batch_buckets × |rules|. The verdicts and the ledger
-        # are built from them on the driver, so a batch neither re-scans its
-        # input nor reads back what it wrote.
+        # bounded by batch_buckets × |rules|. The ledger rows are built from
+        # them on the driver, so a batch neither re-scans its input nor
+        # reads back what it wrote.
         part, obs_rows = _observe_cells(
             keyed.filter(F.col("partition_key").isin(batch)),
             f"rows_b{b_i}",
@@ -288,24 +313,24 @@ def run_validation(
         # .get blocks on the completed write action — no extra job
         row_counts = _cell_counts(obs_rows.get)
         viol_counts = _cell_counts(obs_viol.get)
-        _write_verdicts(spark, verd_dir, run_id, batch, check_names, viol_counts)
+        batch_counts = {
+            k: dict(zip(check_names, viol_counts[i * n_checks : (i + 1) * n_checks]))
+            for i, k in enumerate(batch)
+        }
+        counts.update(batch_counts)
         wall = time.time() - t0
         metrics = [
-            (
-                k,
-                row_counts[i],
-                sum(viol_counts[i * n_checks : (i + 1) * n_checks]),
-                wall / len(batch),
-            )
+            (k, row_counts[i], sum(batch_counts[k].values()), wall / len(batch))
             for i, k in enumerate(batch)
         ]
-        append_ledger(spark, out_dir, run_id, PASS_B, metrics)
+        append_ledger(spark, out_dir, run_id, PASS_B, metrics, batch_counts)
         total_rows += sum(m[1] for m in metrics)
         total_viol += sum(m[2] for m in metrics)
         if on_batch is not None:
             on_batch(batch)
         if fail_after_batches is not None and b_i + 1 >= fail_after_batches:
             raise RuntimeError(f"injected failure after batch {b_i + 1}")
+    _write_verdicts(spark, os.path.join(out_dir, "verdicts"), run_id, all_keys, counts)
     return {
         "run_id": run_id,
         "buckets": n_buckets,
@@ -763,7 +788,15 @@ def resolve_transcripts_input(
         bdir = input_str.split(":", 1)[1]
         if n_buckets is not None:
             bucket_rows = verified_partition_counts(bdir, n_buckets)
-        t = spark.read.parquet(bdir)
+        if os.path.isdir(bdir) and not any(
+            f.endswith(".parquet") for _, _, files in os.walk(bdir) for f in files
+        ):
+            # a bucketed write of no rows leaves no data file to infer a
+            # schema from: the table is empty, in the declared schema
+            key = StructField("partition_key", IntegerType())
+            t = local_frame(spark, [], StructType([*TRANSCRIPTS_SCHEMA, key]))
+        else:
+            t = spark.read.parquet(bdir)
         if bucket_rows is None:
             t = t.drop("partition_key")
     elif input_str.startswith("iceberg:"):

@@ -83,7 +83,9 @@ VIOLATION_SCHEMA = StructType(
     ]
 )
 
-#: Pass-B per-partition verdicts. The nullability is what the verdict files
+#: Pass-B verdicts: one row per (partition_key, check), written once per run
+#: as ONE unpartitioned file (``partition_key`` a plain string column) from
+#: the ledger's per-check counts. The nullability is what the verdict files
 #: have always carried (``operators/violations.verdicts`` output): only
 #: ``check_name`` is nullable.
 VERDICT_SCHEMA = StructType(
@@ -102,6 +104,9 @@ VERDICT_SCHEMA = StructType(
 )
 
 #: Checkpoint-resume ledger: one row per completed (run, partition, pass).
+#: ``check_counts`` (Pass B only, NULL for every other pass) is the bucket's
+#: violation count per check — the record the run's verdict grid is built
+#: from, so a resumed run needs no other trace of its finished buckets.
 LEDGER_SCHEMA = StructType(
     [
         StructField("run_id", StringType()),
@@ -111,6 +116,7 @@ LEDGER_SCHEMA = StructType(
         StructField("violation_count", LongType()),
         StructField("wall_sec", DoubleType()),
         StructField("completed_ts", TimestampType()),
+        StructField("check_counts", MapType(StringType(), LongType())),
     ]
 )
 

@@ -16,8 +16,11 @@ from schema_infer_plugin_spark.session import local_frame
 PACKAGE = Path(__file__).resolve().parent.parent / "schema_infer_plugin_spark"
 
 LEDGER_ROWS = [
-    ("r1", "0", "validate", 12, 3, 0.25, dt.datetime(2026, 3, 29, 1, 30, 0, 123456)),
-    ("r1", "1", "validate", 0, 0, 0.5, None),
+    (
+        "r1", "0", "validate", 12, 3, 0.25, dt.datetime(2026, 3, 29, 1, 30, 0, 123456),
+        {"uniqueness": 1, "domain_role": 2},
+    ),
+    ("r1", "1", "profile", 0, 0, 0.5, None, None),
 ]
 VERDICT_ROWS = [
     ("r1", "0", "uniqueness", True, 0, {"violation_count": 0.0}),

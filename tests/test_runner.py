@@ -20,6 +20,22 @@ def _violations(spark, out):
     return spark.read.parquet(os.path.join(out, "violations"))
 
 
+def _verdict_files(out):
+    """The parquet files under ``out``'s verdicts dir, at any depth."""
+    return [
+        os.path.join(d, f)
+        for d, _, files in os.walk(os.path.join(out, "verdicts"))
+        for f in files
+        if f.endswith(".parquet")
+    ]
+
+
+def _verdict_rows(spark, out):
+    cols = ["partition_key", "check_name", "pass", "violation_count"]
+    verd = spark.read.parquet(os.path.join(out, "verdicts"))
+    return sorted(map(tuple, verd.select(cols).collect()))
+
+
 def test_resume_after_injected_crash_matches_single_shot(spark, tmp_path):
     t = synth_transcripts(spark, 3_000).persist()
     try:
@@ -36,6 +52,7 @@ def test_resume_after_injected_crash_matches_single_shot(spark, tmp_path):
             )
         done_mid = completed_keys(spark, resumed, "run0", PASS_B)
         assert len(done_mid) == 2 * BATCH  # partial progress is durable
+        assert _verdict_files(resumed) == []  # verdicts exist only for a finished run
 
         r = run_validation(spark, t, resumed, n_buckets=N_BUCKETS, batch_buckets=BATCH)
         assert r["skipped"] == 2 * BATCH
@@ -44,6 +61,9 @@ def test_resume_after_injected_crash_matches_single_shot(spark, tmp_path):
         a = _violations(spark, single).drop("partition_key")
         b = _violations(spark, resumed).drop("partition_key")
         assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+        # the resumed grid: half from the ledger, half from this run's batches
+        assert _verdict_rows(spark, resumed) == _verdict_rows(spark, single)
+        assert len(_verdict_rows(spark, single)) == N_BUCKETS * len(CHECK_NAMES)
 
         # and the runner's output matches the fused plan run directly
         direct = validate_transcripts(t)
@@ -497,8 +517,10 @@ def test_observed_verdicts_and_ledger_match_read_back(spark, tmp_path):
     # batches [0,1,2] [3,4,6] [7] after pruning 5; crash after the first
     with pytest.raises(RuntimeError, match="injected failure"):
         run_validation(spark, t, out, fail_after_batches=1, **options)
+    assert _verdict_files(out) == []  # a crashed run leaves no half grid
     resumed = run_validation(spark, t, out, **options)
     assert (resumed["skipped"], resumed["processed"]) == (4, 4)  # [3,4,6] [7]
+    assert len(_verdict_files(out)) == 1
 
     names = [
         r.name
@@ -524,6 +546,9 @@ def test_observed_verdicts_and_ledger_match_read_back(spark, tmp_path):
         (r["partition_key"], r["rows_processed"], r["violation_count"]) for r in ledger
     ) == sorted((str(k), rows.get(str(k), 0), viols.get(str(k), 0)) for k in range(n))
     assert sum(rows.values()) == source.filter(F.col("partition_key") != "5").count()
+    for r in ledger:
+        assert sorted(r["check_counts"]) == sorted(names)
+        assert sum(r["check_counts"].values()) == r["violation_count"]
 
 
 def test_cell_count_guard_fails_loudly(spark):
@@ -540,3 +565,68 @@ def test_cell_count_guard_fails_loudly(spark):
     lossy.collect()
     with pytest.raises(RuntimeError, match="outside every cell"):
         _cell_counts(obs.get)
+
+
+def test_resume_refuses_ledger_rows_it_cannot_trust(spark, tmp_path):
+    """A resume raises, naming the run and the checks, when a finished
+    bucket's ledger row has no per-check counts (written before the ledger
+    carried them) or counts for other checks than this run's rules: its
+    verdicts would otherwise mix two grids."""
+    from schema_infer_plugin_spark.plans.ledger import ledger_path
+    from schema_infer_plugin_spark.session import local_frame
+
+    t = synth_transcripts(spark, 300)
+    options = dict(n_buckets=4, batch_buckets=2)
+
+    # (a) a finished bucket recorded in the ledger's older, count-less shape
+    old = str(tmp_path / "old")
+    local_frame(
+        spark,
+        [("r_old", "0", PASS_B, 10, 0, 0.1, None)],
+        "run_id string, partition_key string, pass_name string, rows_processed long,"
+        " violation_count long, wall_sec double, completed_ts timestamp",
+    ).write.parquet(ledger_path(old))
+    with pytest.raises(RuntimeError, match=r"'r_old'.*bucket 0.*per-check counts.*uniqueness"):
+        run_validation(spark, t, old, run_id="r_old", **options)
+
+    # (b) the rule list changed between a crash and its resume
+    changed = str(tmp_path / "changed")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_validation(spark, t, changed, run_id="r_chg", fail_after_batches=1, **options)
+    rule = ("turn_cap_3", "turn_idx <= 3", "turn_idx", "turn_idx", "<= 3")
+    with pytest.raises(RuntimeError, match=r"'r_chg'.*differing checks: \['turn_cap_3'\]"):
+        run_validation(spark, t, changed, run_id="r_chg", custom_rules=[rule], **options)
+    assert _verdict_files(changed) == []
+    # the unchanged rule list still resumes
+    assert run_validation(spark, t, changed, run_id="r_chg", **options)["skipped"] == 2
+
+
+def test_empty_verified_input_results(spark, tmp_path):
+    """A verified ``bucketed:`` dir whose buckets are all empty completes
+    without a scan, with the whole PASS grid in one verdict file and
+    all-zero per-check counts in every ledger row."""
+    from schema_infer_plugin_spark.plans.runner import resolve_transcripts_input, write_bucketed
+
+    n = 4
+    bdir = str(tmp_path / "bucketed")
+    write_bucketed(synth_transcripts(spark, 50).limit(0), bdir, n)
+    src, bucket_rows = resolve_transcripts_input(spark, f"bucketed:{bdir}", n)
+    assert bucket_rows == {str(i): 0 for i in range(n)}
+    out = str(tmp_path / "run")
+    scanned = _instrumented_run(
+        spark, src, out, deterministic=True, n_buckets=n, batch_buckets=2,
+        bucket_rows=bucket_rows,
+    )
+    assert scanned == 0
+
+    assert len(_verdict_files(out)) == 1
+    verd = spark.read.parquet(os.path.join(out, "verdicts")).collect()
+    assert sorted((r["partition_key"], r["check_name"]) for r in verd) == sorted(
+        (str(k), c) for k in range(n) for c in CHECK_NAMES
+    )
+    assert all(r["pass"] and r["violation_count"] == 0 for r in verd)
+
+    ledger = read_ledger(spark, out).filter(F.col("pass_name") == PASS_B).collect()
+    assert sorted(r["partition_key"] for r in ledger) == [str(k) for k in range(n)]
+    assert all(r["check_counts"] == dict.fromkeys(CHECK_NAMES, 0) for r in ledger)
+    assert all(r["rows_processed"] == r["violation_count"] == 0 for r in ledger)
