@@ -14,7 +14,6 @@ from .alternation import (  # noqa: F401
     role_transition_matrix,
     transition_buckets,
     transition_chi2,
-    transition_histogram,
     transition_rules,
     transition_self_drift,
 )

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 from schema_infer_plugin_spark.schema import conv_order, well_keyed
 
 from .custom import Rule, unless
+from .drift import with_transition
 
 
 def role_transition_matrix(df: DataFrame) -> DataFrame:
@@ -67,45 +68,25 @@ def role_transition_matrix(df: DataFrame) -> DataFrame:
 def transition_buckets(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     """One row per adjacent-turn transition: (bucket = 'prev->role', _ts_us).
 
-    The shared core of :func:`transition_self_drift` and the persisted
-    transition drift baseline (plans/runner.write_histograms): openers
-    (no previous turn) are excluded — they carry no transition information;
+    The shared core of :func:`transition_self_drift` and
+    :func:`transition_chi2`; which turns count and their bucket are
+    checks/drift.with_transition, the rule the ``__transitions__`` drift
+    series (checks/drift.drift_counts) counts by. Openers (no previous turn)
+    and NULL-key rows are excluded — they carry no transition information;
     a NULL ts maps to −inf epoch, consistent with the NULLS FIRST turn
     order. One lag window over the conv_id exchange (zero on a bucketed
     table)."""
-    w = Window.partitionBy("conv_id").orderBy(*conv_order(ts_col))
     neg_inf = -(1 << 62)
-    # NULL-key rows form no adjacency (same posture as role_transition_matrix)
-    df = well_keyed(df)
     return (
-        df.select(
-            F.row_number().over(w).alias("_rn"),
-            F.lag("role").over(w).alias("_prev"),
-            F.col("role").alias("_role"),
+        with_transition(df, ts_col)
+        .filter(F.col("_transition").isNotNull())
+        .select(
+            F.col("_transition").alias("bucket"),
             F.coalesce(
                 F.unix_micros(F.col(ts_col).cast("timestamp")), F.lit(neg_inf)
             ).alias("_ts_us"),
         )
-        .filter(F.col("_rn") > 1)
-        .select(
-            F.concat(
-                F.coalesce(F.col("_prev"), F.lit("<null>")),
-                F.lit("->"),
-                F.coalesce(F.col("_role"), F.lit("<null>")),
-            ).alias("bucket"),
-            "_ts_us",
-        )
     )
-
-
-def transition_histogram(df: DataFrame, ts_col: str = "ts") -> DataFrame:
-    """Relative-frequency histogram of the transition distribution —
-    (bucket, freq), the persistable drift BASELINE form (what
-    write_histograms stores as the pseudo-column ``__transitions__`` and
-    run_drift compares against with PSI/KL/JS)."""
-    from .drift import histogram
-
-    return histogram(transition_buckets(df, ts_col), "bucket")
 
 
 def transition_self_drift(

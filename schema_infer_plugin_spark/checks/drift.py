@@ -5,6 +5,9 @@ generalization for continuous validation: histogram the column in the current
 run, join to the persisted baseline histogram on (bucket), and compute PSI/KL
 as plain column math — no UDF (SURVEY.md §4.4: "plain DataFrame math").
 
+:func:`drift_counts` is the ONE definition of the runner's drift series:
+write_histograms persists its slices, run_drift recounts through it.
+
 Scale: the histogram is a groupBy over a *bounded* bucket domain (categorical
 values or floor-bucketed numerics), so the shuffle carries one row per bucket
 per map partition; the drift join runs on two tiny histogram frames and is
@@ -13,8 +16,43 @@ always broadcast-able.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.sql.functions import broadcast
+
+from schema_infer_plugin_spark.schema import conv_order, null_key_salt, well_keyed_predicate
+
+from .ksdrift import grid_quantize
+
+#: the (prev_role -> role) series of :func:`drift_counts` (and its baseline dir)
+TRANSITIONS = "__transitions__"
+
+
+def category_bucket(c: Column) -> Column:
+    """A categorical value as its histogram bucket; NULL is ``'<null>'``."""
+    return F.coalesce(c.cast("string"), F.lit("<null>"))
+
+
+def with_transition(df: DataFrame, ts_col: str = "ts") -> DataFrame:
+    """``df`` plus ``_transition``: the ``'prev->role'`` bucket on a turn that
+    completes a transition, NULL on every other row — the ONE rule for which
+    turns count (alternation.transition_buckets, :func:`drift_counts`). A
+    transition is a well-keyed turn that is not its conversation's opener in
+    schema.conv_order(ts_col). One lag window partitioned on (conv_id,
+    schema.null_key_salt) like the fused Pass B: keyless rows sit in their
+    own salted partitions, so they never enter a real conversation's lag
+    chain, and a conv_id-bucketed scan needs no exchange."""
+    w = Window.partitionBy("conv_id", "_ksalt").orderBy(*conv_order(ts_col))
+    # turn_idx is non-NULL on well-keyed rows, so a NULL lag of it marks
+    # exactly the conversation's opener
+    counts = well_keyed_predicate() & F.lag("turn_idx").over(w).isNotNull()
+    bucket = F.concat(
+        category_bucket(F.lag("role").over(w)), F.lit("->"), category_bucket(F.col("role"))
+    )
+    return (
+        df.select("*", null_key_salt().alias("_ksalt"))
+        .select("*", F.when(counts, bucket).alias("_transition"))
+        .drop("_ksalt")
+    )
 
 
 def histogram(df: DataFrame, column: str, n_buckets: int | None = None) -> DataFrame:
@@ -24,8 +62,7 @@ def histogram(df: DataFrame, column: str, n_buckets: int | None = None) -> DataF
     ``n_buckets`` to floor-bucket into equal-width bins over [min, max].
     """
     if n_buckets is None:
-        bucket = F.coalesce(F.col(column).cast("string"), F.lit("<null>"))
-        bucketed = df.select(bucket.alias("bucket"))
+        bucketed = df.select(category_bucket(F.col(column)).alias("bucket"))
     else:
         stats = df.agg(
             F.min(F.col(column).cast("double")).alias("lo"),
@@ -87,12 +124,61 @@ def bucket_counts(df: DataFrame, column: str) -> DataFrame:
     statistic's magnitude scales with sample size — frequencies alone can't
     express it. NULL → '<null>'. One hash agg over the bounded bucket domain.
     """
-    bucket = F.coalesce(F.col(column).cast("string"), F.lit("<null>"))
     return (
-        df.select(bucket.alias("bucket"))
+        df.select(category_bucket(F.col(column)).alias("bucket"))
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
+
+
+def drift_counts(
+    df: DataFrame,
+    columns: list[str],
+    grids: dict[str, tuple[float, float, int]] | None = None,
+) -> DataFrame:
+    """Every drift series of ``df`` from ONE scan, one explode and one
+    groupBy → (column, bucket, v, cnt), a row per occupied cell. A name in
+    ``columns`` is categorical (``bucket`` = :func:`category_bucket`, ``v``
+    NULL); :data:`TRANSITIONS` is the 'prev->role' series of
+    :func:`with_transition`; ``grids`` maps a numeric column to ``(lo, hi,
+    n_buckets)`` (``v`` = ksdrift.grid_quantize of non-NULL values,
+    ``bucket`` NULL). The transition window runs on a slim projection, so
+    ``text`` never shuffles."""
+    grids = grids or {}
+    cats = [c for c in dict.fromkeys(columns) if c != TRANSITIONS]
+    null_v, null_bucket = F.lit(None).cast("double"), F.lit(None).cast("string")
+
+    def cell(name: str, bucket: Column, v: Column) -> Column:
+        return F.struct(F.lit(name).alias("column"), bucket.alias("bucket"), v.alias("v"))
+
+    series = [cell(c, category_bucket(F.col(c)), null_v) for c in cats]
+    for c, (lo, hi, n) in grids.items():
+        raw = F.col(c).cast("double")
+        series.append(F.when(raw.isNotNull(), cell(c, null_bucket, grid_quantize(raw, lo, hi, n))))
+    keys = ["conv_id", "turn_idx", "role", "ts"] if TRANSITIONS in columns else []
+    slim = df.select(*dict.fromkeys([*cats, *grids, *keys]))
+    if TRANSITIONS in columns:
+        slim = with_transition(slim)
+        series.append(
+            F.when(F.col("_transition").isNotNull(), cell(TRANSITIONS, F.col("_transition"), null_v))
+        )
+    typed = "array<struct<column:string,bucket:string,v:double>>"  # no series: no rows
+    cells = F.array(*series) if series else F.array().cast(typed)
+    return (
+        slim.select(F.explode(cells).alias("_s"))
+        .filter(F.col("_s").isNotNull())
+        .groupBy("_s.column", "_s.bucket", "_s.v")
+        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+    )
+
+
+def drift_series(counts: DataFrame, column: str, numeric: bool = False) -> DataFrame:
+    """One series' rows of a :func:`drift_counts` frame (extra columns kept):
+    categorical rows have a bucket, numeric rows do not."""
+    one = counts.filter((F.col("column") == column) & (F.col("bucket").isNull() == numeric))
+    # category_bucket is a no-op here: it declares bucket non-NULL, as the
+    # persisted artifact has it (a filter leaves nullability as is)
+    return one if numeric else one.withColumn("bucket", category_bucket(F.col("bucket")))
 
 
 def chi2_terms(current: DataFrame, baseline: DataFrame) -> DataFrame:
@@ -173,21 +259,6 @@ def _chi2_expr(
     if not guard_totals:
         return term
     return F.when((F.col(n_cur) > 0) & (F.col(n_base) > 0), term)
-
-
-def histogram_with_counts(df: DataFrame, column: str) -> DataFrame:
-    """(bucket, freq, cnt) — the richer persistable drift-baseline form:
-    ``freq`` is the same cnt/Σcnt division :func:`histogram` computes (so
-    PSI/KL/JS against old frequency-only baselines are unchanged), and
-    ``cnt`` lets a future run compute the sample-size-aware chi-square
-    against the artifact (:func:`chi2_terms` needs counts)."""
-    counts = bucket_counts(df, column)
-    total = Window.partitionBy()
-    return counts.select(
-        "bucket",
-        (F.col("cnt") / F.sum("cnt").over(total)).alias("freq"),
-        "cnt",
-    )
 
 
 def drift_and_chi2_terms(

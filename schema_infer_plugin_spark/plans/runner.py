@@ -45,7 +45,8 @@ import os
 import time
 from collections.abc import Callable
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
+from pyspark.errors import AnalysisException
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window, functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
 from schema_infer_plugin_spark.checks.alternation import transition_rules
@@ -376,53 +377,45 @@ def write_histograms(
     columns: list[str] | None = None,
     numeric_columns: list[str] | None = None,
 ) -> None:
-    """Persist the drift baselines for future runs: per-column value
-    histograms (categorical → PSI/KL/JS) and fixed-grid numeric counts
-    (→ two-sample KS). The numeric grid is [min, max] of THIS run's data —
-    future runs clamp onto it (checks/ksdrift.py fixed-grid notes)."""
-    from schema_infer_plugin_spark.checks.drift import histogram_with_counts
-    from schema_infer_plugin_spark.checks.ksdrift import grid_counts
+    """Persist the drift baselines for future runs: ``histograms/<col>`` and
+    ``histograms/__transitions__`` (bucket, freq, cnt, column → PSI/KL/JS/
+    chi2) and ``histograms_numeric/<col>`` (v, cnt, lo, hi, n_buckets → KS)
+    on a grid over [min, max] of THIS run's data (checks/ksdrift.py
+    fixed-grid notes). Two reads: one min/max probe for every grid, then ONE
+    checks/drift.drift_counts, persisted with ``freq = cnt / Σcnt``."""
+    from schema_infer_plugin_spark.checks.drift import TRANSITIONS, drift_counts, drift_series
 
-    hist_dir = os.path.join(out_dir, "histograms")
-    # (bucket, freq, cnt): freq is the same division histogram() computes
-    # (PSI/KL/JS unchanged); cnt makes the artifact chi-square-capable
-    # (run_drift's sample-size-aware leg). Old freq-only baselines still read.
-    for c in columns or DRIFT_COLUMNS:
-        (
-            histogram_with_counts(transcripts, c)
-            .withColumn("column", F.lit(c))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(os.path.join(hist_dir, c))
-        )
-    # sequence-structure baseline: the (prev_role -> role) transition
-    # distribution as a pseudo-column — run_drift diffs it with the same
-    # PSI/KL/JS machinery (checks/alternation.transition_histogram)
-    from schema_infer_plugin_spark.checks.alternation import transition_buckets
-
-    (
-        histogram_with_counts(transition_buckets(transcripts), "bucket")
-        .withColumn("column", F.lit("__transitions__"))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(os.path.join(hist_dir, "__transitions__"))
-    )
-    num_dir = os.path.join(out_dir, "histograms_numeric")
     # explicit [] means "no numeric baselines" — only None takes the default
-    for c in NUMERIC_DRIFT_COLUMNS if numeric_columns is None else numeric_columns:
-        # bounded 2-value collect: baseline/index construction, not a per-row
-        # probe — same posture as ivf_centroids
-        lo, hi = transcripts.agg(
-            F.min(F.col(c).cast("double")), F.max(F.col(c).cast("double"))
-        ).first()
-        if lo is None:
-            continue  # all-null column: no numeric baseline to persist
-        (
-            grid_counts(transcripts, c, float(lo), float(hi), KS_GRID_BUCKETS)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(os.path.join(num_dir, c))
+    num_cols = NUMERIC_DRIFT_COLUMNS if numeric_columns is None else numeric_columns
+    # bounded 2-values-per-column collect: baseline/index construction, not a
+    # per-row probe — same posture as ivf_centroids
+    x = [F.col(c).cast("double") for c in num_cols]
+    bounds = transcripts.agg(*map(F.min, x), *map(F.max, x)).first() if num_cols else []
+    grids = {
+        c: (float(lo), float(hi), KS_GRID_BUCKETS)
+        for c, lo, hi in zip(num_cols, bounds[: len(x)], bounds[len(x) :])
+        if lo is not None  # all-null column: no numeric baseline to persist
+    }
+    names = dict.fromkeys([*(columns or DRIFT_COLUMNS), TRANSITIONS])
+    per_series = Window.partitionBy("column", F.col("bucket").isNull())
+    hist = drift_counts(transcripts, list(names), grids)
+    hist = hist.select("*", (F.col("cnt") / F.sum("cnt").over(per_series)).alias("freq")).persist()
+    artifacts = {
+        os.path.join("histograms", c): drift_series(hist, c).select(
+            "bucket", "freq", "cnt", F.lit(c).alias("column")
         )
+        for c in names
+    }
+    for c, (lo, hi, n) in grids.items():
+        grid = [F.lit(lo).alias("lo"), F.lit(hi).alias("hi"), F.lit(n).alias("n_buckets")]
+        artifacts[os.path.join("histograms_numeric", c)] = drift_series(
+            hist, c, numeric=True
+        ).select("v", "cnt", *grid)
+    try:
+        for sub, frame in artifacts.items():
+            frame.coalesce(1).write.mode("overwrite").parquet(os.path.join(out_dir, sub))
+    finally:
+        hist.unpersist()
 
 
 def run_drift(
@@ -442,18 +435,23 @@ def run_drift(
     metrics carry psi/kl/js), numeric columns get ``ks_<col>`` (two-sample KS
     on the baseline's fixed grid; pass iff ks_stat <= ks_threshold, metrics
     carry ks/ks_at/w1 — Wasserstein-1 rides the same single-job plan, see
-    checks/ksdrift.ks_w1_from_counts). Columns with no persisted numeric
-    baseline are skipped.
+    checks/ksdrift.ks_w1_from_counts).
 
     Thresholds follow the conventional readings: PSI <0.1 stable, 0.1-0.2
     moderate, >0.2 drifted (default 0.2); KS two-sample flags at ~0.1 for
-    large same-source samples (default 0.1)."""
+    large same-source samples (default 0.1).
+
+    One checks/drift.drift_counts scan counts every current series, on the
+    baselines' grids. A MISSING transition or numeric baseline is skipped (a
+    baseline run that predates it); one that does not read raises."""
     from schema_infer_plugin_spark.checks.drift import (
-        bucket_counts,
+        TRANSITIONS,
         drift_and_chi2_terms,
+        drift_counts,
+        drift_series,
         drift_stats,
     )
-    from schema_infer_plugin_spark.checks.ksdrift import grid_counts, ks_w1_from_counts
+    from schema_infer_plugin_spark.checks.ksdrift import ks_w1_from_counts
 
     done = completed_keys(spark, out_dir, run_id, PASS_DRIFT)
     verd_dir = os.path.join(out_dir, "drift_verdicts")
@@ -500,55 +498,64 @@ def run_drift(
                 m["chi2_z"] = _chi2_z(m["chi2"], m["dof"])
         return m
 
-    # (check_name, pass, metrics) — one row per column either way
-    rows: list[tuple[str, bool, dict[str, float]]] = []
-    for c in cols:
-        base = spark.read.parquet(os.path.join(baseline_dir, "histograms", c)).drop(
-            "column"
-        )
-        m = _cat_metrics(bucket_counts(transcripts, c), base)
-        rows.append((f"drift_{c}", m["psi"] <= psi_threshold, m))
-    # sequence-structure drift: the persisted transition distribution vs the
-    # current one (lenient like the numeric leg — a baseline run that
-    # predates transition baselines is skipped, never failed)
-    tpath = os.path.join(baseline_dir, "histograms", "__transitions__")
-    try:
-        tbase = spark.read.parquet(tpath).drop("column")
-    except Exception:
-        tbase = None
-    if tbase is not None:
-        from schema_infer_plugin_spark.checks.alternation import transition_buckets
-
-        m = _cat_metrics(
-            bucket_counts(transition_buckets(transcripts), "bucket"), tbase
-        )
-        rows.append(("drift_transitions", m["psi"] <= psi_threshold, m))
-    for c in num_cols:
-        path = os.path.join(baseline_dir, "histograms_numeric", c)
+    def _read_baseline(path: str) -> DataFrame | None:
+        """The lenient legs' read: None only when nothing is at ``path`` (a
+        baseline run that predates the leg); a baseline that exists but does
+        not read raises. Spark's own error, so any Hadoop filesystem URI
+        (file://, hdfs://, s3a://) answers the same as a local path."""
         try:
-            base = spark.read.parquet(path)
-        except Exception:
+            return spark.read.parquet(path)
+        except AnalysisException as e:
+            if e.getCondition() == "PATH_NOT_FOUND":
+                return None
+            raise
+
+    hist_dir = os.path.join(baseline_dir, "histograms")
+    bases = {c: spark.read.parquet(os.path.join(hist_dir, c)).drop("column") for c in cols}
+    # sequence-structure drift (lenient like the numeric leg — a baseline run
+    # that predates transition baselines is skipped, never failed)
+    tbase = _read_baseline(os.path.join(hist_dir, TRANSITIONS))
+    if tbase is not None:
+        bases[TRANSITIONS] = tbase.drop("column")
+    num_bases, grids = {}, {}
+    for c in num_cols:
+        base = _read_baseline(os.path.join(baseline_dir, "histograms_numeric", c))
+        if base is None:
             continue  # baseline run predates numeric baselines: skip, don't fail
+        num_bases[c] = base
         # grid metadata rides every baseline row (≤ KS_GRID_BUCKETS rows)
         meta = base.select("lo", "hi", "n_buckets").first()
-        cur = grid_counts(
-            transcripts, c, float(meta["lo"]), float(meta["hi"]), int(meta["n_buckets"])
-        )
-        # KS + Wasserstein-1 from the SAME single-job plan (ks_w1_from_counts)
-        # — the current run's grid_counts scan feeds both statistics at once
-        ks = ks_w1_from_counts(base.select("v", "cnt"), cur, with_chi2=True).collect()[0]
-        stat = float(ks["ks_stat"]) if ks["ks_stat"] is not None else 1.0
-        m = {
-            "ks": stat,
-            "ks_at": float(ks["ks_at"]) if ks["ks_at"] is not None else 0.0,
-            "w1": float(ks["w1"]) if ks["w1"] is not None else 0.0,
-        }
-        # binned chi2 rides the SAME single job (pass criterion stays KS)
-        if ks["chi2"] is not None and ks["dof"] is not None and ks["dof"] > 0:
-            m["chi2"] = float(ks["chi2"])
-            m["dof"] = float(ks["dof"])
-            m["chi2_z"] = _chi2_z(m["chi2"], m["dof"])
-        rows.append((f"ks_{c}", stat <= ks_threshold, m))
+        grids[c] = (float(meta["lo"]), float(meta["hi"]), int(meta["n_buckets"]))
+
+    # (check_name, pass, metrics) — one row per column either way
+    rows: list[tuple[str, bool, dict[str, float]]] = []
+    cur = drift_counts(transcripts, list(bases), grids).persist()
+    try:
+        for c, base in bases.items():
+            m = _cat_metrics(drift_series(cur, c).select("bucket", "cnt"), base)
+            name = "drift_transitions" if c == TRANSITIONS else f"drift_{c}"
+            rows.append((name, m["psi"] <= psi_threshold, m))
+        for c, base in num_bases.items():
+            # KS + Wasserstein-1 from the SAME single-job plan (ks_w1_from_counts)
+            ks = ks_w1_from_counts(
+                base.select("v", "cnt"),
+                drift_series(cur, c, numeric=True).select("v", "cnt"),
+                with_chi2=True,
+            ).collect()[0]
+            stat = float(ks["ks_stat"]) if ks["ks_stat"] is not None else 1.0
+            m = {
+                "ks": stat,
+                "ks_at": float(ks["ks_at"]) if ks["ks_at"] is not None else 0.0,
+                "w1": float(ks["w1"]) if ks["w1"] is not None else 0.0,
+            }
+            # binned chi2 rides the SAME single job (pass criterion stays KS)
+            if ks["chi2"] is not None and ks["dof"] is not None and ks["dof"] > 0:
+                m["chi2"] = float(ks["chi2"])
+                m["dof"] = float(ks["dof"])
+                m["chi2_z"] = _chi2_z(m["chi2"], m["dof"])
+            rows.append((f"ks_{c}", stat <= ks_threshold, m))
+    finally:
+        cur.unpersist()
     verd = local_frame(
         spark,
         [(run_id, "__all__", name, ok, 0, metrics) for name, ok, metrics in rows],

@@ -36,9 +36,8 @@ distinct + lag, with no distinct needed.
 NULL-key posture: rows missing ``conv_id`` or ``turn_idx`` raise
 ``not_null_conv_id`` / ``not_null_turn_idx`` violations and are excluded from
 every conversation rule (no well-formed conversation to assert against); in
-the window exchange they are salted across ``_NULL_KEY_SALT`` partitions
-instead of collapsing onto the single NULL hash key — conversation rules
-are guarded for them, so the salt can be any deterministic spread.
+the window exchange ``schema.null_key_salt`` spreads them instead of
+collapsing them onto the single NULL hash key.
 
 Skew: the only partition-heavy key is ``conv_id``; conversations are bounded
 (≤ thousands of turns) while the table is not, so hash partitioning stays
@@ -82,6 +81,7 @@ from schema_infer_plugin_spark.schema import (
     ROLE_DOMAIN,
     TOOL_DOMAIN,
     conv_order,
+    null_key_salt,
     well_keyed_predicate,
 )
 from schema_infer_plugin_spark.session import local_frame
@@ -99,12 +99,6 @@ CHECK_NAMES = [
     "not_null_conv_id",
     "not_null_turn_idx",
 ]
-
-#: salt modulus for NULL-key rows in the window exchange (see
-#: validate_transcripts docstring — any deterministic per-row spread works
-#: because conversation rules are guarded for those rows, never emitted)
-_NULL_KEY_SALT = 64
-
 
 def default_rules(
     role_domain: list[str] | None = None,
@@ -184,15 +178,10 @@ def validate_transcripts(df: DataFrame, rules: list[Rule] | None = None) -> Data
     # well-formed conversation, so (a) it raises a not_null_conv_id /
     # not_null_turn_idx violation, (b) it is EXCLUDED from every
     # conversation rule (asserting contiguity among unrelated keyless rows
-    # would fabricate violations), and (c) it must not collapse into one hot
-    # window partition: hashing all NULL conv_ids to a single reducer would
-    # recreate the irreducible-skew problem for rows that don't even need
-    # window semantics. The salt spreads ONLY NULL-key rows across
-    # _NULL_KEY_SALT partitions on the exchange path; well-keyed rows keep
-    # salt 0, so their window results are bit-identical, and
-    # HashPartitioning(conv_id) from a bucketed scan still satisfies both
-    # clusterings ({conv_id} ⊆ {conv_id, _ksalt[, …]}) — the zero-exchange
-    # bucketed plan survives.
+    # would fabricate violations), and (c) schema.null_key_salt spreads it
+    # over the window exchange instead of one hot NULL-hash partition, while
+    # a bucketed scan's HashPartitioning(conv_id) still satisfies both
+    # clusterings ({conv_id} ⊆ {conv_id, _ksalt[, …]}): zero exchanges.
     key_ok = well_keyed_predicate()
     # NULL on clean rows, so the shuffle carries one null bit for them
     any_failed = reduce(Column.__or__, map(failed, row_rules), F.lit(False))
@@ -203,21 +192,7 @@ def validate_transcripts(df: DataFrame, rules: list[Rule] | None = None) -> Data
         "role",
         "ts",
         *row_v,
-        # 1 + pmod: the NULL-key salt range (1.._NULL_KEY_SALT) is DISJOINT
-        # from the well-keyed 0 — a colliding salt would put a keyless row
-        # back into a real conversation's window partition and shift its
-        # neighbors' lag chains even though the keyless row's own emissions
-        # are guarded (caught by the fixture's injected NULL keys)
-        F.when(key_ok, F.lit(0))
-        .otherwise(
-            F.lit(1)
-            + F.pmod(
-                F.xxhash64(F.col("turn_idx"), F.col("role"), F.col("ts")),
-                F.lit(_NULL_KEY_SALT),
-            )
-        )
-        .cast("int")
-        .alias("_ksalt"),
+        null_key_salt().alias("_ksalt"),
     )
 
     w_conv = Window.partitionBy("conv_id", "_ksalt").orderBy(*conv_order())

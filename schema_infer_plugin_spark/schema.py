@@ -151,6 +151,24 @@ def conv_order(ts_col: str = "ts") -> list[Column]:
     ]
 
 
+#: salt modulus for NULL-key rows in a conv_id window exchange (null_key_salt)
+NULL_KEY_SALT = 64
+
+
+def null_key_salt() -> Column:
+    """The ``_ksalt`` of a ``partitionBy(conv_id, _ksalt)`` window (fused
+    Pass B, drift.drift_counts): 0 on well-keyed rows, so a conv_id-bucketed
+    scan still satisfies it; ``1 + pmod(xxhash64, N)`` spreads keyless rows.
+    The ranges are DISJOINT, or a keyless row would shift a real
+    conversation's lag chain."""
+    spread = F.xxhash64(F.col("turn_idx"), F.col("role"), F.col("ts"))
+    return (
+        F.when(well_keyed_predicate(), F.lit(0))
+        .otherwise(F.lit(1) + F.pmod(spread, F.lit(NULL_KEY_SALT)))
+        .cast("int")
+    )
+
+
 def violation(check: str, column: str, observed: Column, expected: Column) -> Column:
     """One violation as a struct (check_name, column, observed, expected) —
     the single builder behind every Pass-B check. Both values are rendered

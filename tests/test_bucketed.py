@@ -169,3 +169,31 @@ def test_every_option_rides_one_scan_and_one_exchange(bucketed, spark, tmp_path)
                 out = node.output()
                 cols = {out.apply(i).name() for i in range(out.size())}
                 assert "text" not in cols, cols
+
+
+def test_drift_counts_plan_gate(bucketed, spark, tmp_path):
+    """Plan gate for checks/drift.drift_counts with every series on: one
+    FileScan, no row-at-a-time Python, ``text`` in no Exchange's output, and
+    exactly one window Exchange (on conv_id) over unbucketed input — none on
+    the bucketed table, whose scan already clusters by conv_id. The other
+    Exchange is the groupBy over the bounded cell domain."""
+    from schema_infer_plugin_spark.checks.drift import TRANSITIONS, drift_counts
+
+    bt, t = bucketed
+    t.write.parquet(str(tmp_path / "flat"))
+    flat = spark.read.parquet(str(tmp_path / "flat"))
+    for df, n_window in ((flat, 1), (bt, 0)):
+        counts = drift_counts(df, ["role", "tool", TRANSITIONS], {"turn_idx": (0.0, 50.0, 1000)})
+        plan = counts._jdf.queryExecution().executedPlan()
+        text = plan.toString()
+        assert text.count("FileScan") == 1, text
+        assert "BatchEvalPython" not in text
+        windows = 0
+        for node in _plan_nodes(plan):
+            if "Exchange" in node.nodeName():
+                out = node.output()
+                cols = {out.apply(i).name() for i in range(out.size())}
+                assert "text" not in cols, cols
+                windows += "conv_id" in cols
+        assert windows == n_window, text
+        assert text.count("Exchange") == n_window + 1, text
