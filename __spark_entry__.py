@@ -16,7 +16,12 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from schema_infer_plugin_spark.checks import drift_stats, histogram
+from schema_infer_plugin_spark.checks import (
+    drift_compare,
+    drift_counts,
+    drift_terms,
+    windowed_counts,
+)
 from schema_infer_plugin_spark.operators.profile import profile, type_profile
 from schema_infer_plugin_spark.operators.violations import union_violations
 from schema_infer_plugin_spark.schema import ROLE_DOMAIN, TOOL_DOMAIN
@@ -37,6 +42,25 @@ SF0001 = "/root/testdata/sf0.001"
 
 def _transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return transcripts_from_events(spark, load_table(spark, sf_dir, "events"))
+
+
+def _psi_terms(d: DataFrame, *keys, tail=()) -> DataFrame:
+    """checks/drift.drift_terms' bucket, frequency and PSI/KL/JS columns as
+    every drift oracle rounds them, between ``keys`` and ``tail``. ``+ 0.0``
+    after rounding: IEEE says 0.0 * ln(x) = -0.0, and the two engines
+    disagree on whether round() keeps the sign; adding +0.0 canonicalizes
+    negative zero on BOTH sides (the float-oracle invariant)."""
+    z = F.lit(0.0)
+    return d.select(
+        *keys,
+        "bucket",
+        F.round("freq_base", 6).cast("double").alias("freq_base"),
+        F.round("freq_cur", 6).cast("double").alias("freq_cur"),
+        (F.round("psi_term", 6) + z).cast("double").alias("psi_term"),
+        (F.round("kl_term", 6) + z).cast("double").alias("kl_term"),
+        (F.round("js_term", 6) + z).cast("double").alias("js_term"),
+        *tail,
+    )
 
 
 def _viol(df: DataFrame) -> DataFrame:
@@ -382,16 +406,7 @@ def q_role_transition_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle; production default is the sketch."""
     from schema_infer_plugin_spark.checks import transition_self_drift
 
-    d = transition_self_drift(_transcripts(spark, sf_dir), approx=False)
-    z = F.lit(0.0)
-    return d.select(
-        "bucket",
-        F.round("freq_base", 6).cast("double").alias("freq_base"),
-        F.round("freq_cur", 6).cast("double").alias("freq_cur"),
-        (F.round("psi_term", 6) + z).cast("double").alias("psi_term"),
-        (F.round("kl_term", 6) + z).cast("double").alias("kl_term"),
-        (F.round("js_term", 6) + z).cast("double").alias("js_term"),
-    )
+    return _psi_terms(transition_self_drift(_transcripts(spark, sf_dir), approx=False))
 
 
 ORACLE_TRANSITION_DRIFT = oracle_cte(
@@ -436,7 +451,7 @@ FROM j
 def q_transition_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chi-square homogeneity of the transition distribution between the
     data's earlier and later half (checks/alternation.transition_chi2 →
-    checks/drift.chi2_terms): per-bucket Pearson terms whose sum is
+    checks/drift.drift_terms): per-bucket Pearson terms whose sum is
     asymptotically χ²(k−1) under "no protocol shift" — the calibrated
     companion to role_transition_drift's PSI/KL/JS. Exact DECIMAL(19,0)
     cross products, one fixed double formula per bounded row; exact median
@@ -763,21 +778,10 @@ def q_drift_role(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("conv_id") >= "conv_000075", "cur"
         ),
     )
-    base = histogram(t.filter("half = 'base'"), "role")
-    cur = histogram(t.filter("half = 'cur'"), "role")
-    d = drift_stats(cur, base)
-    # + 0.0 after rounding: IEEE says 0.0 * ln(x) = -0.0, and the two engines
-    # disagree on whether round() keeps the sign; adding +0.0 canonicalizes
-    # negative zero on BOTH sides (CLAUDE.md float-oracle rule)
-    z = F.lit(0.0)
-    return d.select(
-        "bucket",
-        F.round("freq_base", 6).cast("double").alias("freq_base"),
-        F.round("freq_cur", 6).cast("double").alias("freq_cur"),
-        (F.round("psi_term", 6) + z).cast("double").alias("psi_term"),
-        (F.round("kl_term", 6) + z).cast("double").alias("kl_term"),
-        (F.round("js_term", 6) + z).cast("double").alias("js_term"),
-    )
+    # both halves from one count keyed by the half
+    counts = drift_counts(t, ["role"], by=["half"])
+    half = lambda h: counts.filter(F.col("half") == h).drop("half")  # noqa: E731
+    return _psi_terms(drift_terms(half("cur"), half("base")))
 
 
 ORACLE_DRIFT_ROLE = oracle_cte(
@@ -817,16 +821,7 @@ def q_temporal_self_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from schema_infer_plugin_spark.checks import temporal_self_drift
 
     ev = load_table(spark, sf_dir, "events").select("event_type", "ts")
-    d = temporal_self_drift(ev, "event_type", "ts", approx=False)
-    z = F.lit(0.0)
-    return d.select(
-        "bucket",
-        F.round("freq_base", 6).cast("double").alias("freq_base"),
-        F.round("freq_cur", 6).cast("double").alias("freq_cur"),
-        (F.round("psi_term", 6) + z).cast("double").alias("psi_term"),
-        (F.round("kl_term", 6) + z).cast("double").alias("kl_term"),
-        (F.round("js_term", 6) + z).cast("double").alias("js_term"),
-    )
+    return _psi_terms(temporal_self_drift(ev, "event_type", "ts", approx=False))
 
 
 ORACLE_TEMPORAL_DRIFT = """
@@ -2901,8 +2896,8 @@ def q_windowed_drift_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuous drift monitoring, streaming half + batch half: Structured
     Streaming maintains per-day role counts (streaming/incremental.
     windowed_histogram_stream — watermark-bounded state, counts emitted on
-    window close), then checks/drift.windowed_drift_report joins the emitted
-    rows against the full-corpus baseline for per-window PSI/KL/JS AND the
+    window close), then checks/drift.drift_terms compares the emitted rows,
+    per window, with the full-corpus baseline for PSI/KL/JS AND the
     sample-size-aware chi-square — "which day drifted" without re-scanning
     the stream. Far-future NULL-role sentinel advances the global watermark
     so every real window closes (single-file staging, the
@@ -2911,10 +2906,6 @@ def q_windowed_drift_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
 
-    from schema_infer_plugin_spark.checks.drift import (
-        bucket_counts,
-        windowed_drift_report,
-    )
     from schema_infer_plugin_spark.streaming.incremental import (
         windowed_histogram_stream,
     )
@@ -2946,23 +2937,18 @@ def q_windowed_drift_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitted = spark.read.parquet(out_dir).filter(
         F.col("window_start") < F.to_timestamp(F.lit("2099-01-01 00:00:00"))
     )
-    base = bucket_counts(_transcripts(spark, sf_dir), "role")
-    rep = windowed_drift_report(emitted, base)
-    z = F.lit(0.0)
-    return rep.select(
+    base = drift_counts(_transcripts(spark, sf_dir), ["role"])
+    return _psi_terms(
+        drift_terms(emitted, base, by=("window_start", "window_end")),
         F.unix_micros("window_start").alias("window_start_us"),
         F.unix_micros("window_end").alias("window_end_us"),
-        "bucket",
-        F.round("freq_base", 6).cast("double").alias("freq_base"),
-        F.round("freq_cur", 6).cast("double").alias("freq_cur"),
-        (F.round("psi_term", 6) + z).cast("double").alias("psi_term"),
-        (F.round("kl_term", 6) + z).cast("double").alias("kl_term"),
-        (F.round("js_term", 6) + z).cast("double").alias("js_term"),
-        "o_base",
-        "o_cur",
-        "n_base",
-        "n_cur",
-        F.round("chi2_term", 6).cast("double").alias("chi2_term"),
+        tail=(
+            "o_base",
+            "o_cur",
+            "n_base",
+            "n_cur",
+            F.round("chi2_term", 6).cast("double").alias("chi2_term"),
+        ),
     )
 
 
@@ -3030,8 +3016,8 @@ FROM d
 
 
 def q_windowed_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-window NUMERIC drift (checks/ksdrift.windowed_grid_counts +
-    windowed_ks_report): each day's turn_idx distribution two-sample-KS-
+    """Per-window NUMERIC drift (checks/drift.windowed_counts +
+    drift_compare): each day's turn_idx distribution two-sample-KS-
     tested against the full-corpus fixed-grid baseline — the numeric half of
     continuous drift monitoring ("which day's conversation-length
     distribution shifted"), completing the matrix whose categorical half is
@@ -3043,18 +3029,11 @@ def q_windowed_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     report's w1/chi2 columns stay engine-side evidence — double SUMS whose
     accumulation order is engine-dependent (the ks_drift_turn_idx posture
     of omitting w1 from the compared row)."""
-    from schema_infer_plugin_spark.checks.ksdrift import (
-        grid_counts,
-        windowed_grid_counts,
-        windowed_ks_report,
-    )
-
     t = _transcripts(spark, sf_dir)
-    base = grid_counts(t, "turn_idx", 0.0, 64.0, 16)
-    cur = windowed_grid_counts(
-        t, "turn_idx", 0.0, 64.0, 16, ts_col="ts", window_duration="1 day"
-    )
-    rep = windowed_ks_report(cur, base.select("v", "cnt"))
+    grid = {"turn_idx": (0.0, 64.0, 16)}
+    base = drift_counts(t, [], grid)
+    cur = windowed_counts(t, [], grid, ts_col="ts", window_duration="1 day")
+    rep = drift_compare(cur, base, by=("window_start", "window_end"))
     return rep.select(
         F.unix_micros("window_start").alias("window_start_us"),
         F.unix_micros("window_end").alias("window_end_us"),
@@ -3074,17 +3053,13 @@ def q_windowed_ks_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the session_stats_stream guard — here the sentinel carries turn_idx 0,
     NOT NULL, because the grid stream drops NULL values BEFORE the watermark
     operator and a dropped sentinel would advance nothing); then checks/
-    ksdrift.windowed_ks_report joins the EMITTED rows against the same
+    drift.drift_compare compares the EMITTED rows with the same
     full-corpus baseline as q_windowed_ks_drift. Per-window exact counts ⇒
     the report is row-identical to the batch face, so the SAME oracle text
     verifies the whole stream→report path end to end."""
     import os
     import tempfile
 
-    from schema_infer_plugin_spark.checks.ksdrift import (
-        grid_counts,
-        windowed_ks_report,
-    )
     from schema_infer_plugin_spark.streaming.incremental import (
         windowed_grid_counts_stream,
     )
@@ -3119,8 +3094,8 @@ def q_windowed_ks_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitted = spark.read.parquet(out_dir).filter(
         F.col("window_start") < F.to_timestamp(F.lit("2099-01-01 00:00:00"))
     )
-    base = grid_counts(full, "turn_idx", 0.0, 64.0, 16)
-    rep = windowed_ks_report(emitted, base.select("v", "cnt"))
+    base = drift_counts(full, [], {"turn_idx": (0.0, 64.0, 16)})
+    rep = drift_compare(emitted, base, by=("window_start", "window_end"))
     return rep.select(
         F.unix_micros("window_start").alias("window_start_us"),
         F.unix_micros("window_end").alias("window_end_us"),
@@ -5467,81 +5442,67 @@ def entry(spark: SparkSession) -> DataFrame:
     )
 
 
-# Round-5 driver window (VERDICT r4 #2): the driver checks the FIRST 50
-# queries() entries. Front-load (a) the 12 round-5-new queries, (b) the 13
-# whose last driver row is r2 (judge re-verified green locally in r4, but
-# they need hard driver rows), (c) the 12 whose BEHAVIOR round 5 touched
-# (type ladder regex, arrow IVF/PQ impls, profile_partial quantiles, stream
-# staging, mixing module), then pad to 50 with the oldest (r3-last)
-# canaries. The r3-last queries left outside are exactly 2 rounds old
-# after this round — they are the next window's priority block.
-_R5_WINDOW = [
-    # (a) new in round 5
-    "shared_prefixes",
-    "dedup_impact",
-    "vector_sanity",
-    "transcripts_corr",
-    "conv_boundary_roles",
+# Round-6 check window: a round's correctness run (CORRECTNESS_rNN.json)
+# checks the FIRST 50 queries() entries.
+# Front-load (a) the drift queries whose comparison now runs through the one
+# term projection and aggregation (checks/drift.drift_terms/drift_compare),
+# (b) the two r3-green queries the round-5 window rotated out, then (c) the
+# remaining queries whose last correctness row is r3 — 42 entries in all.
+_R6_WINDOW = [
+    # (a) drift comparisons re-routed through drift_terms / drift_compare
+    "transcripts_drift_role",
     "role_transition_drift",
-    "role_transition_domain",
     "transition_chi2",
-    "sampled_validation_estimate",
+    "temporal_self_drift",
+    "ks_drift_turn_idx",
+    "wasserstein_value_drift",
     "windowed_drift_stream",
     "windowed_ks_drift",
     "windowed_ks_stream",
-    "dup_ngram_rate",
-    "role_transition_matrix",
-    "tfidf_top_terms",
-    "split_leakage",
-    "expr_suite",
-    "expr_suite_stream",
-    "mix_temperature_sample",
-    "quality_funnel",
-    "quality_funnel_by_lang",
-    # (b) last driver row r2
-    "ann_lsh_topk",
-    "ann_ivf_topk",
-    "ann_lsh_multitable",
-    "contamination_pairs",
-    "dedup_embedding_cosine",
-    "language_id",
-    "multimodal_features",
-    "multimodal_resize",
-    "pii_stats",
-    "pii_redact",
-    "repetition_stats",
-    "split_assign",
-    "unigram_logprob",
-    # (c) behavior touched in round 5
-    "kv_parse",
-    "type_ladder_profile",
-    "transcripts_profile",
-    "transcripts_profile_by_role",
-    "schema_evolution_verdicts",
-    "profile_partial_merge",
-    "windowed_rates_stream",
-    "session_stats_stream",
-    "ann_ivfpq_topk",
-    "ann_pq_topk",
-    "dedup_semantic",
-    "mix_token_budget",
-    # (d) oldest canaries (last row r3)
-    "sessionize_events",
-    "sft_examples",
-    "transcripts_fd_role",
-    "transcripts_role_domain",
-    # transcripts_tool_domain and infer_role_domain (both r3-green) rotate
-    # out to keep the window at 50 with shared_prefixes + dedup_impact in —
-    # they head the next window's priority block
+    # (b) rotated out of the round-5 window
+    "transcripts_tool_domain",
+    "infer_role_domain",
+    # (c) last correctness row r3
+    "ann_bruteforce_topk",
+    "transcripts_tool_without_role",
+    "transcripts_null_text",
+    "transcripts_role_alternation",
+    "violations_triage",
+    "transcripts_ts_monotonic",
+    "transcripts_text_ordered",
+    "transcripts_verdicts",
+    "hash_sample_stratified",
+    "mixture_sample_roles",
+    "fixed_k_sample_lang",
+    "clean_corpus",
+    "conv_stats_salted",
+    "conversation_features",
+    "dedup_conversations",
+    "value_outliers",
+    "value_histogram_equidepth",
+    "daily_volume_anomalies",
+    "csv_parse",
+    "raw_text_parse",
+    "pricing_summary",
+    "top_revenue_orders",
+    "nation_revenue",
+    "dedup_exact_turns",
+    "dedup_components",
+    "dedup_canonical",
+    "boilerplate_ngrams",
+    "contamination_matrix",
+    "ngram_containment",
+    "simhash_documents",
+    "dedup_ngram_jaccard_guarded",
 ]
 
 
 def _rotated(reg: dict) -> dict:
-    missing = [n for n in _R5_WINDOW if n not in reg]
+    missing = [n for n in _R6_WINDOW if n not in reg]
     if missing:
-        raise KeyError(f"_R5_WINDOW names not in registry: {missing}")
-    window = set(_R5_WINDOW)
-    return {n: reg[n] for n in [*_R5_WINDOW, *(x for x in reg if x not in window)]}
+        raise KeyError(f"_R6_WINDOW names not in registry: {missing}")
+    window = set(_R6_WINDOW)
+    return {n: reg[n] for n in [*_R6_WINDOW, *(x for x in reg if x not in window)]}
 
 
 _REGISTRY = _rotated(_REGISTRY)

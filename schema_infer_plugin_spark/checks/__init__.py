@@ -26,18 +26,15 @@ from .temporal import conv_latency_stats, ts_monotonic_violations_us  # noqa: F4
 from .skew import group_size_stats, hot_key_report  # noqa: F401
 from .drift import (  # noqa: F401
     bucket_counts,
-    chi2_terms,
-    drift_stats,
+    drift_compare,
+    drift_counts,
+    drift_terms,
     histogram,
     histogram_equidepth,
     temporal_self_drift,
+    windowed_counts,
 )
-from .ksdrift import (  # noqa: F401
-    ks_statistic,
-    wasserstein_statistic,
-    windowed_grid_counts,
-    windowed_ks_report,
-)
+from .ksdrift import ks_statistic, wasserstein_statistic  # noqa: F401
 from .salting import conv_stats, salted_two_phase, with_salt  # noqa: F401
 from .referential import fk_orphans, fk_verdict  # noqa: F401
 from .snapshot_diff import snapshot_diff  # noqa: F401

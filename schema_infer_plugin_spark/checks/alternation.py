@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 from schema_infer_plugin_spark.schema import conv_order, well_keyed
 
 from .custom import Rule, unless
-from .drift import with_transition
+from .drift import drift_terms, median_halves, with_transition
 
 
 def role_transition_matrix(df: DataFrame) -> DataFrame:
@@ -68,13 +68,12 @@ def role_transition_matrix(df: DataFrame) -> DataFrame:
 def transition_buckets(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     """One row per adjacent-turn transition: (bucket = 'prev->role', _ts_us).
 
-    The shared core of :func:`transition_self_drift` and
-    :func:`transition_chi2`; which turns count and their bucket are
-    checks/drift.with_transition, the rule the ``__transitions__`` drift
-    series (checks/drift.drift_counts) counts by. Openers (no previous turn)
-    and NULL-key rows are excluded — they carry no transition information;
-    a NULL ts maps to −inf epoch, consistent with the NULLS FIRST turn
-    order. One lag window over the conv_id exchange (zero on a bucketed
+    The count side of :func:`transition_self_drift`; which turns count and
+    their bucket are checks/drift.with_transition, the rule the
+    ``__transitions__`` drift series (checks/drift.drift_counts) counts by.
+    Openers (no previous turn) and NULL-key rows are excluded — they carry
+    no transition information; a NULL ts maps to −inf epoch, consistent
+    with the NULLS FIRST turn order. One lag window over the conv_id exchange (zero on a bucketed
     table)."""
     neg_inf = -(1 << 62)
     return (
@@ -110,23 +109,14 @@ def transition_self_drift(
     (epoch treated as −inf, consistent with the NULLS FIRST turn order).
 
     Plan: ONE lag window over the conv_id exchange (zero on a bucketed
-    table) → median agg broadcast as one row → per-half hash agg over the
-    ≤|roles|²-bounded transition buckets → drift terms on the joined tiny
-    frames. Output: drift_stats rows with bucket = 'prev->role'.
+    table) → median agg broadcast as one row → one hash agg over the
+    half × ≤|roles|²-bounded transition buckets (checks/drift.median_halves)
+    → checks/drift.drift_terms. Output: drift_terms rows, bucket =
+    'prev->role' — PSI/KL/JS terms and the Pearson chi-square terms
+    (:func:`transition_chi2`) side by side.
     """
-    from .drift import drift_stats, histogram
-
-    trans = transition_buckets(df, ts_col)
-    med_expr = (
-        F.percentile_approx("_ts_us", F.lit(0.5))
-        if approx
-        else F.percentile("_ts_us", F.lit(0.5))
-    )
-    med = trans.agg(med_expr.alias("_med"))
-    with_med = trans.crossJoin(F.broadcast(med))
-    base = histogram(with_med.filter(F.col("_ts_us") < F.col("_med")), "bucket")
-    cur = histogram(with_med.filter(F.col("_ts_us") >= F.col("_med")), "bucket")
-    return drift_stats(cur, base)
+    trans = transition_buckets(df, ts_col).withColumnRenamed("bucket", "transition")
+    return drift_terms(*median_halves(trans, "_ts_us", ["transition"], approx))
 
 
 def transition_rules(allowed: "list[str] | tuple[str, ...]") -> list[Rule]:
@@ -175,32 +165,11 @@ def transition_chi2(
     ts_col: str = "ts",
     approx: bool = True,
 ) -> DataFrame:
-    """Chi-square flavor of :func:`transition_self_drift`: per-bucket Pearson
-    homogeneity terms (checks/drift.chi2_terms) of the (prev_role → role)
-    transition COUNTS between the data's earlier and later half, split at the
-    median transition time. Σ chi2_term is asymptotically χ²(k−1) under "no
-    protocol shift" — the calibrated significance test the PSI/KL/JS terms
-    (folklore thresholds) can't provide, and it needs counts, not
-    frequencies, which is why it isn't a drift_stats column.
-
-    Same plan shape as transition_self_drift: ONE lag window over the conv_id
-    exchange → one-row median broadcast → per-half hash aggs over the
-    |roles|²-bounded buckets → per-row fixed double formula on exact
-    DECIMAL(19,0) cross products (bit-identical across engines).
-    """
-    from .drift import chi2_terms
-
-    trans = transition_buckets(df, ts_col)
-    med_expr = (
-        F.percentile_approx("_ts_us", F.lit(0.5))
-        if approx
-        else F.percentile("_ts_us", F.lit(0.5))
-    )
-    med = trans.agg(med_expr.alias("_med"))
-    with_med = trans.crossJoin(F.broadcast(med))
-    counts = lambda d: d.groupBy("bucket").agg(  # noqa: E731
-        F.count(F.lit(1)).cast("long").alias("cnt")
-    )
-    base = counts(with_med.filter(F.col("_ts_us") < F.col("_med")))
-    cur = counts(with_med.filter(F.col("_ts_us") >= F.col("_med")))
-    return chi2_terms(cur, base)
+    """Chi-square flavor of :func:`transition_self_drift` — the same
+    drift_terms rows, read for their Pearson homogeneity columns (o_base,
+    o_cur, n_base, n_cur, chi2_term) of the (prev_role → role) transition
+    COUNTS between the data's earlier and later half. Σ chi2_term is
+    asymptotically χ²(k−1) under "no protocol shift" — the calibrated
+    significance test the PSI/KL/JS terms (folklore thresholds) can't
+    provide, and it needs counts, not frequencies."""
+    return transition_self_drift(df, ts_col, approx)

@@ -1,20 +1,29 @@
-"""Distribution drift: KL divergence / PSI of a column vs a baseline profile.
+"""Distribution drift between a current run and a baseline: PSI / KL / JS
+and chi-square for categorical series, two-sample KS and Wasserstein-1 for
+numeric grid series.
 
 The reference has no drift notion (it sees one sample); this is the engine's
-generalization for continuous validation: histogram the column in the current
-run, join to the persisted baseline histogram on (bucket), and compute PSI/KL
-as plain column math — no UDF (SURVEY.md §4.4: "plain DataFrame math").
+generalization for continuous validation, as plain column math — no UDF
+(SURVEY.md §4.4: "plain DataFrame math"). Two definitions carry every drift
+check, in the shape of mergeable partial counts finished in one aggregation:
 
-:func:`drift_counts` is the ONE definition of the runner's drift series:
-write_histograms persists its slices, run_drift recounts through it.
+* :func:`drift_counts` counts every series of a frame — categorical
+  columns, the ``prev->role`` transitions, numeric columns on a fixed grid,
+  optionally per group key such as an event-time window — as ONE stacked
+  ``(by…, column, bucket, v, cnt)`` frame. write_histograms persists its
+  slices, run_drift and the windowed faces recount through it.
+* :func:`drift_terms` pairs two such frames per cell and projects every
+  per-cell term; :func:`drift_compare` is ONE grouped aggregation over those
+  terms giving every statistic of every series.
 
-Scale: the histogram is a groupBy over a *bounded* bucket domain (categorical
-values or floor-bucketed numerics), so the shuffle carries one row per bucket
-per map partition; the drift join runs on two tiny histogram frames and is
-always broadcast-able.
+Scale: counts are a groupBy over *bounded* bucket domains (categorical
+values or grid points), so the comparison only ever sees series × buckets
+rows, never the table.
 """
 
 from __future__ import annotations
+
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.sql.functions import broadcast
@@ -86,41 +95,11 @@ def histogram(df: DataFrame, column: str, n_buckets: int | None = None) -> DataF
     )
 
 
-def drift_stats(current: DataFrame, baseline: DataFrame, eps: float = 1e-6) -> DataFrame:
-    """Per-bucket drift terms between two histograms → one summable row each.
-
-    Output: (bucket, freq_base, freq_cur, psi_term, kl_term, js_term); total
-    PSI/KL/JS are sums over the buckets. Laplace-eps keeps empty buckets
-    finite. JS (Jensen–Shannon, natural log) is the bounded symmetric
-    companion — ≤ ln 2 even when a bucket exists on only one side, where
-    PSI/KL blow up toward the eps ceiling.
-    """
-    cur = current.withColumnRenamed("freq", "freq_cur")
-    base = baseline.withColumnRenamed("freq", "freq_base")
-    joined = cur.join(base, on="bucket", how="full_outer").select(
-        "bucket",
-        F.coalesce("freq_base", F.lit(0.0)).alias("freq_base"),
-        F.coalesce("freq_cur", F.lit(0.0)).alias("freq_cur"),
-    )
-    p = F.col("freq_cur") + eps
-    q = F.col("freq_base") + eps
-    m = (p + q) / 2
-    ratio = F.log(p / q)
-    return joined.select(
-        "bucket",
-        "freq_base",
-        "freq_cur",
-        ((F.col("freq_cur") - F.col("freq_base")) * ratio).alias("psi_term"),
-        (F.col("freq_cur") * ratio).alias("kl_term"),
-        (0.5 * p * F.log(p / m) + 0.5 * q * F.log(q / m)).alias("js_term"),
-    )
-
-
 def bucket_counts(df: DataFrame, column: str) -> DataFrame:
     """Exact categorical count frame of ``column`` → (bucket string, cnt long).
 
     The COUNT-preserving sibling of :func:`histogram` (which normalizes to
-    frequencies): :func:`chi2_terms` needs raw counts because the chi-square
+    frequencies): the chi-square term needs raw counts because the chi-square
     statistic's magnitude scales with sample size — frequencies alone can't
     express it. NULL → '<null>'. One hash agg over the bounded bucket domain.
     """
@@ -135,9 +114,12 @@ def drift_counts(
     df: DataFrame,
     columns: list[str],
     grids: dict[str, tuple[float, float, int]] | None = None,
+    by: Sequence[str] = (),
 ) -> DataFrame:
     """Every drift series of ``df`` from ONE scan, one explode and one
-    groupBy → (column, bucket, v, cnt), a row per occupied cell. A name in
+    groupBy → (by…, column, bucket, v, cnt), a row per occupied cell; ``by``
+    names columns of ``df`` that lead the group key (an event-time window,
+    a half — :func:`windowed_counts`, :func:`median_halves`). A name in
     ``columns`` is categorical (``bucket`` = :func:`category_bucket`, ``v``
     NULL); :data:`TRANSITIONS` is the 'prev->role' series of
     :func:`with_transition`; ``grids`` maps a numeric column to ``(lo, hi,
@@ -156,7 +138,7 @@ def drift_counts(
         raw = F.col(c).cast("double")
         series.append(F.when(raw.isNotNull(), cell(c, null_bucket, grid_quantize(raw, lo, hi, n))))
     keys = ["conv_id", "turn_idx", "role", "ts"] if TRANSITIONS in columns else []
-    slim = df.select(*dict.fromkeys([*cats, *grids, *keys]))
+    slim = df.select(*dict.fromkeys([*by, *cats, *grids, *keys]))
     if TRANSITIONS in columns:
         slim = with_transition(slim)
         series.append(
@@ -165,9 +147,9 @@ def drift_counts(
     typed = "array<struct<column:string,bucket:string,v:double>>"  # no series: no rows
     cells = F.array(*series) if series else F.array().cast(typed)
     return (
-        slim.select(F.explode(cells).alias("_s"))
+        slim.select(*by, F.explode(cells).alias("_s"))
         .filter(F.col("_s").isNotNull())
-        .groupBy("_s.column", "_s.bucket", "_s.v")
+        .groupBy(*by, "_s.column", "_s.bucket", "_s.v")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
 
@@ -181,198 +163,191 @@ def drift_series(counts: DataFrame, column: str, numeric: bool = False) -> DataF
     return one if numeric else one.withColumn("bucket", category_bucket(F.col("bucket")))
 
 
-def chi2_terms(current: DataFrame, baseline: DataFrame) -> DataFrame:
-    """Per-bucket Pearson chi-square homogeneity terms between two exact
-    count frames (bucket, cnt) — the classical frequentist companion to the
-    PSI/KL/JS terms of :func:`drift_stats`: the total Σ chi2_term is the
-    2×k homogeneity statistic, asymptotically χ²(k−1) under "same
-    distribution", so it carries an actual significance calibration where
-    PSI thresholds are folklore. Because the statistic scales with sample
-    size, inputs are COUNTS (``bucket_counts``), not frequencies.
-
-    Per-bucket algebraic form (no expected-count intermediates):
-    term_k = (o_cur·n_base − o_base·n_cur)² / (n_cur·n_base·(o_cur+o_base)).
-    The cross products are exact DECIMAL(19,0)×DECIMAL(19,0) integer
-    arithmetic (the grouped_int_corr posture — order-independent, safe to
-    ~10^12 totals), then ONE fixed double formula per row, so every term is
-    bit-identical across engines and partitionings; the total is a sum the
-    caller does over k bounded rows. Output NULL term when either side is
-    empty (n=0 — no homogeneity question to ask), never NaN/Inf.
-
-    Plan: full-outer join of two bounded count frames + totals as a window
-    over the joined k-row frame (inside the "bounded rows" exception to the
-    no-unpartitioned-window invariant). Output: (bucket, o_base, o_cur,
-    n_base, n_cur, chi2_term); dof = k−1 with k = output row count.
-    """
-    cur = current.select("bucket", F.col("cnt").alias("o_cur"))
-    base = baseline.select("bucket", F.col("cnt").alias("o_base"))
-    joined = (
-        cur.join(base, on="bucket", how="full_outer")
-        .select(
-            "bucket",
-            F.coalesce("o_base", F.lit(0)).cast("long").alias("o_base"),
-            F.coalesce("o_cur", F.lit(0)).cast("long").alias("o_cur"),
-        )
-        # bucket_counts never emits 0-count rows, but a caller-built frame
-        # might: a both-zero row would make the term 0/0 — drop it (it
-        # carries no information and must not count toward dof either)
-        .filter((F.col("o_base") > 0) | (F.col("o_cur") > 0))
-    )
-    tot = Window.partitionBy()
-    with_tot = joined.select(
-        "bucket",
-        "o_base",
-        "o_cur",
-        F.sum("o_base").over(tot).alias("n_base"),
-        F.sum("o_cur").over(tot).alias("n_cur"),
-    )
-    return with_tot.select(
-        "bucket", "o_base", "o_cur", "n_base", "n_cur", _chi2_expr().alias("chi2_term")
-    )
-
-
-def _chi2_expr(
-    o_cur: str = "o_cur",
-    o_base: str = "o_base",
-    n_cur: str = "n_cur",
-    n_base: str = "n_base",
-    guard_totals: bool = True,
-) -> "F.Column":
-    """Per-bucket chi-square term from two (observed, total) count column
-    pairs. Exact DECIMAL(19,0)×DECIMAL(19,0) cross products (fit
+def _chi2_expr() -> Column:
+    """Per-cell Pearson chi-square homogeneity term,
+    (o_cur·n_base − o_base·n_cur)² / (n_cur·n_base·(o_cur+o_base)); its sum
+    over a series is asymptotically χ²(k−1) under "same distribution", so it
+    is calibrated where PSI thresholds are folklore, and it needs counts, not
+    frequencies. Exact DECIMAL(19,0)×DECIMAL(19,0) cross products (fit
     DECIMAL(38,0)), each cast to double BEFORE the subtraction — a decimal
     subtraction would need precision 39; the double subtraction is the same
-    fixed IEEE op in both engines (the grouped_int_corr oracle posture).
-    The ONE definition of this shape — ksdrift's grid/windowed forms reuse
-    it with their own column names (``guard_totals=False`` when the caller
-    already gates on both totals in its aggregate)."""
+    fixed IEEE op in both engines (the grouped_int_corr oracle posture), so
+    every term is bit-identical across engines and partitionings. NULL when
+    either side is empty (no homogeneity question to ask), never NaN/Inf."""
     dec = lambda c: F.col(c).cast("decimal(19,0)")  # noqa: E731
-    diff = (dec(o_cur) * dec(n_base)).cast("double") - (
-        dec(o_base) * dec(n_cur)
+    diff = (dec("o_cur") * dec("n_base")).cast("double") - (
+        dec("o_base") * dec("n_cur")
     ).cast("double")
     denom = (
-        F.col(n_cur).cast("double")
-        * F.col(n_base).cast("double")
-        * (F.col(o_cur) + F.col(o_base)).cast("double")
+        F.col("n_cur").cast("double")
+        * F.col("n_base").cast("double")
+        * (F.col("o_cur") + F.col("o_base")).cast("double")
     )
-    term = diff * diff / denom
-    if not guard_totals:
-        return term
-    return F.when((F.col(n_cur) > 0) & (F.col(n_base) > 0), term)
+    return F.when((F.col("n_cur") > 0) & (F.col("n_base") > 0), diff * diff / denom)
 
 
-def drift_and_chi2_terms(
-    current_counts: DataFrame, baseline_counts: DataFrame, eps: float = 1e-6
+def drift_terms(
+    cur: DataFrame, base: DataFrame, by: Sequence[str] = (), eps: float = 1e-6
 ) -> DataFrame:
-    """Per-bucket PSI/KL/JS terms AND chi-square terms from two exact count
-    frames in ONE plan (one scan of the current side): frequencies derive as
-    o/n — the same division :func:`histogram` persists — so the PSI/KL/JS
-    totals are bit-identical to :func:`drift_stats` over the equivalent
-    frequency frames (parity-tested), while the chi2 column adds the
-    calibrated homogeneity statistic the frequency form cannot express.
+    """Per-cell drift terms between two stacked count frames in the
+    :func:`drift_counts` shape ``(by…, column, bucket, v, cnt)`` — the ONE
+    definition of every drift formula (PSI/KL/JS, chi-square, the KS CDF gap
+    and the Wasserstein-1 interval).
 
-    Output: drift_stats columns + (o_base, o_cur, n_base, n_cur, chi2_term).
-    An empty side yields freq 0.0 (drift terms stay finite via eps) and NULL
-    chi2 terms — same posture as :func:`chi2_terms`.
+    Cells pair up on ``(by…, column, bucket, v)`` — a full outer join
+    spelled as union + groupBy, so the NULL ``bucket``/``v`` halves of a key
+    match. A ``base`` without the ``by`` columns is crossed with ``cur``'s
+    distinct groups (a bounded broadcast), so every group — an event-time
+    window, say — is compared with one baseline. Cells zero on both sides
+    are dropped: they carry no information, their chi-square term would be
+    0/0, and they must not count toward dof. A series is ``(by…, column,
+    grid)``, ``grid`` marking a numeric grid series (``bucket`` NULL).
+
+    Output, one row per occupied cell: ``by…, column, grid, bucket, v,
+    o_cur, o_base`` (the cell's counts), ``n_cur, n_base`` (the series
+    totals), ``freq_cur, freq_base`` (o/n, 0.0 on an empty side, so the
+    Laplace-eps terms stay finite), ``psi_term, kl_term, js_term`` (summed
+    per series: PSI/KL/JS — JS, natural log, is the bounded symmetric
+    companion, ≤ ln 2 even for a bucket on one side only), ``chi2_term``
+    (:func:`_chi2_expr`) and, on grid cells, ``d`` = |CDF_cur − CDF_base| at
+    ``v`` (NULL when a side is empty) and ``w1_term`` = (next v − v)·d — the
+    last grid point's open tail, where both CDFs are 1, has none.
+
+    Plan: both inputs are bounded (series × buckets or grid points) and meet
+    in ONE exchange on ``(by…, column)``; the cell merge, then the totals,
+    CDFs and next grid point (ONE window sort per series — the bounded-rows
+    window exception) run on it without another shuffle.
     """
-    j = chi2_terms(current_counts, baseline_counts)
-    return _terms_from_counts(j, eps=eps)
-
-
-def _terms_from_counts(
-    j: DataFrame, extra: tuple[str, ...] = (), eps: float = 1e-6
-) -> DataFrame:
-    """Project the full drift-term row from a joined count frame carrying
-    (bucket, o_base, o_cur, n_base, n_cur [, chi2_term]) — the shared tail
-    of :func:`drift_and_chi2_terms` and :func:`windowed_drift_report`.
-    ``extra`` columns (e.g. window bounds) lead the output."""
-    fb = F.when(
-        F.col("n_base") > 0, F.col("o_base") / F.col("n_base")
+    by = list(by)
+    if not set(by) <= set(base.columns):
+        base = base.crossJoin(broadcast(cur.select(*by).distinct()))
+    cell = [*by, "column", "bucket", "v"]
+    zero = F.lit(0).cast("long")
+    j = (
+        cur.select(*cell, F.col("cnt").alias("o_cur"), zero.alias("o_base"))
+        .unionByName(base.select(*cell, zero.alias("o_cur"), F.col("cnt").alias("o_base")))
+        # the comparison's ONE exchange: the cell merge, the series window
+        # and drift_compare's aggregation all cluster on (by…, column)
+        .repartition(*by, "column")
+        .groupBy(*cell)
+        .agg(*(F.sum(o).cast("long").alias(o) for o in ("o_cur", "o_base")))
+        .filter((F.col("o_cur") > 0) | (F.col("o_base") > 0))
+        .withColumn("grid", F.col("bucket").isNull())
+    )
+    order = Window.partitionBy(*by, "column", "grid").orderBy("v", "bucket")
+    upto = order.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    whole = order.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    j = j.select(
+        "*",
+        *(F.sum(f"o_{s}").over(whole).alias(f"n_{s}") for s in ("cur", "base")),
+        # try_divide: an empty side has total 0 → NULL CDF → NULL KS
+        *(
+            F.try_divide(F.sum(f"o_{s}").over(upto), F.sum(f"o_{s}").over(whole)).alias(f"cdf_{s}")
+            for s in ("cur", "base")
+        ),
+        F.lead("v").over(order).alias("v_next"),
+    )
+    freq = lambda s: F.when(  # noqa: E731
+        F.col(f"n_{s}") > 0, F.col(f"o_{s}") / F.col(f"n_{s}")
     ).otherwise(F.lit(0.0))
-    fc = F.when(
-        F.col("n_cur") > 0, F.col("o_cur") / F.col("n_cur")
-    ).otherwise(F.lit(0.0))
-    if "chi2_term" not in j.columns:
-        j = j.select("*", _chi2_expr().alias("chi2_term"))
-    j = j.select("*", fb.alias("freq_base"), fc.alias("freq_cur"))
+    j = j.select("*", freq("cur").alias("freq_cur"), freq("base").alias("freq_base"))
     p = F.col("freq_cur") + eps
     q = F.col("freq_base") + eps
     m = (p + q) / 2
     ratio = F.log(p / q)
+    d = F.when(F.col("grid"), F.abs(F.col("cdf_cur") - F.col("cdf_base")))
     return j.select(
-        *extra,
+        *by,
+        "column",
+        "grid",
         "bucket",
-        "freq_base",
+        "v",
+        "o_cur",
+        "o_base",
+        "n_cur",
+        "n_base",
         "freq_cur",
+        "freq_base",
         ((F.col("freq_cur") - F.col("freq_base")) * ratio).alias("psi_term"),
         (F.col("freq_cur") * ratio).alias("kl_term"),
         (0.5 * p * F.log(p / m) + 0.5 * q * F.log(q / m)).alias("js_term"),
-        "o_base",
-        "o_cur",
-        "n_base",
-        "n_cur",
-        "chi2_term",
+        _chi2_expr().alias("chi2_term"),
+        d.alias("d"),
+        ((F.col("v_next") - F.col("v")) * d).alias("w1_term"),
     )
 
 
-def windowed_drift_report(
-    window_counts: DataFrame, baseline_counts: DataFrame, eps: float = 1e-6
+def drift_compare(
+    cur: DataFrame, base: DataFrame, by: Sequence[str] = (), eps: float = 1e-6
 ) -> DataFrame:
-    """Per-WINDOW drift terms vs one baseline count frame — the batch half of
-    continuous drift monitoring: a stream maintains the windowed categorical
-    counts (streaming/incremental.windowed_histogram_stream — watermark-
-    bounded state, counts are mergeable), and this report joins the emitted
-    (window_start, window_end, bucket, cnt) rows against a persisted
-    baseline, yielding drift_and_chi2_terms rows PER WINDOW. Summing
-    psi_term/chi2_term within a window gives that window's drift verdict —
-    "which day drifted", not just "did the batch drift".
+    """Every drift statistic of every series in ONE grouped aggregation over
+    :func:`drift_terms` → a row per ``(by…, column, grid)``: ``psi, kl, js``
+    (read for categorical series; binned PSI on a grid), ``chi2`` (NULL when
+    a side is empty) and ``dof`` = occupied cells − 1, ``ks_stat`` (the sup
+    of the CDF gap, rounded to 6),
+    ``ks_at`` (the smallest grid point attaining it — a deterministic
+    tie-break) and ``w1`` (Σ w1_term, rounded to 6; 0.0 for a one-point
+    grid, where identical point masses are distance 0) for grid series —
+    KS/W1 NULL when a side is empty, never a misleading 0 — and the totals
+    ``n_cur, n_base``. A series empty on both sides has no cells, hence no
+    row.
 
-    Plan: both inputs are bounded (windows × |bucket domain|); the bucket
-    grid is windows ⨯ (baseline ∪ observed buckets) via a broadcast cross of
-    two bounded frames, totals are windows-partitioned sums over the grid
-    (bounded-rows window exception). A bucket absent from a window counts 0
-    there; a window with no rows never appears (streams emit only non-empty
-    windows).
-    """
-    wins = window_counts.select("window_start", "window_end").distinct()
-    buckets = (
-        baseline_counts.select("bucket")
-        .union(window_counts.select("bucket"))
-        .distinct()
-    )
-    grid = (
-        wins.crossJoin(broadcast(buckets))
-        .join(
-            baseline_counts.select("bucket", F.col("cnt").alias("o_base")),
-            on="bucket",
-            how="left",
+    ks_stat/ks_at/dof and the totals derive from exact-count arithmetic
+    (hash-comparable across engines); psi/kl/js/chi2/w1 are double SUMS —
+    metrics, never exact comparisons. The aggregation groups on the
+    terms' own partitioning, so it adds no exchange and sums each series in
+    (v, bucket) order."""
+    t = drift_terms(cur, base, by, eps)
+    # the sup and its location in one aggregate: the max of (d, −v) is the
+    # largest gap, ties broken to the smallest v
+    sup = F.max(F.struct("d", (-F.col("v")).alias("neg_v")))
+    both = (F.max("n_cur") > 0) & (F.max("n_base") > 0)
+    return t.groupBy(*by, "column", "grid").agg(
+        F.sum("psi_term").alias("psi"),
+        F.sum("kl_term").alias("kl"),
+        F.sum("js_term").alias("js"),
+        F.sum("chi2_term").alias("chi2"),
+        (F.count(F.lit(1)) - 1).cast("long").alias("dof"),
+        F.round(sup["d"], 6).cast("double").alias("ks_stat"),
+        F.when(sup["d"].isNotNull(), -sup["neg_v"]).cast("double").alias("ks_at"),
+        F.when(
+            F.col("grid") & both,
+            F.coalesce(F.round(F.sum("w1_term"), 6) + F.lit(0.0), F.lit(0.0)),
         )
-        .join(
-            window_counts.select(
-                "window_start", "window_end", "bucket", F.col("cnt").alias("o_cur")
-            ),
-            on=["window_start", "window_end", "bucket"],
-            how="left",
-        )
-        .select(
-            "window_start",
-            "window_end",
-            "bucket",
-            F.coalesce("o_base", F.lit(0)).cast("long").alias("o_base"),
-            F.coalesce("o_cur", F.lit(0)).cast("long").alias("o_cur"),
-        )
-        # a bucket observed only in OTHER windows is a phantom here: both
-        # sides 0 would make the chi2 term 0/0; dropping the row restores
-        # exactly chi2_terms' full-outer-join semantics per window
-        .filter((F.col("o_base") > 0) | (F.col("o_cur") > 0))
+        .cast("double")
+        .alias("w1"),
+        F.max("n_cur").alias("n_cur"),
+        F.max("n_base").alias("n_base"),
     )
-    per_win = Window.partitionBy("window_start", "window_end")
-    with_tot = grid.select(
-        "*",
-        F.sum("o_base").over(per_win).alias("n_base"),
-        F.sum("o_cur").over(per_win).alias("n_cur"),
+
+
+def windowed_counts(
+    df: DataFrame,
+    columns: list[str],
+    grids: dict[str, tuple[float, float, int]] | None = None,
+    ts_col: str = "ts",
+    window_duration: str = "1 day",
+) -> DataFrame:
+    """:func:`drift_counts` per tumbling event-time window →
+    ``(window_start, window_end, column, bucket, v, cnt)``; rows without an
+    event time are not counted (a windowed count is a statement about
+    timestamped values). The one window key of the batch face (CLI
+    ``window-drift``) and the streaming faces (streaming/incremental.
+    windowed_*_stream, which set the watermark on ``ts_col`` first): the
+    window is taken on the ``ts_col`` attribute itself when it already is a
+    TIMESTAMP, so the watermark's event-time marker reaches the group key."""
+    ts = F.col(ts_col)
+    if dict(df.dtypes)[ts_col] != "timestamp":
+        ts = ts.cast("timestamp")
+    keyed = df.filter(ts.isNotNull()).withColumn("window", F.window(ts, window_duration))
+    return drift_counts(keyed, columns, grids, by=["window"]).select(
+        F.col("window.start").alias("window_start"),
+        F.col("window.end").alias("window_end"),
+        "column",
+        "bucket",
+        "v",
+        "cnt",
     )
-    return _terms_from_counts(with_tot, extra=("window_start", "window_end"), eps=eps)
 
 
 def histogram_equidepth(
@@ -438,6 +413,24 @@ def histogram_equidepth(
     )
 
 
+def median_halves(
+    df: DataFrame, ts_us: str, columns: list[str], approx: bool = True
+) -> tuple[DataFrame, DataFrame]:
+    """(later, earlier) :func:`drift_counts` of ``columns`` in ``df``, split
+    at the median of the epoch-µs column ``ts_us`` — the count side of the
+    zero-config self-drift checks. The median is one aggregation broadcast
+    as a single row; both halves come from ONE count keyed by the half, and
+    a row with a NULL ``ts_us`` is in neither. ``approx=True`` uses the
+    percentile_approx sketch; ``approx=False`` is the exact opt-in matching
+    DuckDB ``quantile_cont`` for the oracle."""
+    x = F.col(ts_us)
+    med = F.percentile_approx(x, F.lit(0.5)) if approx else F.percentile(x, F.lit(0.5))
+    halves = df.crossJoin(broadcast(df.agg(med.alias("_med"))))
+    counts = drift_counts(halves.withColumn("_late", x >= F.col("_med")), columns, by=["_late"])
+    half = lambda late: counts.filter(F.col("_late") == late).drop("_late")  # noqa: E731
+    return half(True), half(False)
+
+
 def temporal_self_drift(
     df: DataFrame,
     column: str,
@@ -450,21 +443,8 @@ def temporal_self_drift(
     can run on any fresh table to spot mid-stream schema/behavior shifts
     (a producer redeploy halfway through the ingest window).
 
-    The median is one aggregation broadcast as a single row; each half's
-    histogram and the PSI/KL/JS terms reuse :func:`histogram` /
-    :func:`drift_stats`. ``approx=True`` (default) uses the
-    percentile_approx sketch; ``approx=False`` is the exact opt-in matching
-    DuckDB ``quantile_cont`` for the oracle.
-
-    Output: drift_stats rows (bucket, freq_base, freq_cur, psi/kl/js terms);
-    total drift = sum over buckets.
+    Output: :func:`drift_terms` rows of the later half (cur) against the
+    earlier one (base), a row per bucket; total drift = sum over buckets.
     """
     ts_us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    med_expr = (
-        F.percentile_approx(ts_us, F.lit(0.5)) if approx else F.percentile(ts_us, F.lit(0.5))
-    )
-    med = df.agg(med_expr.alias("_med"))
-    with_med = df.withColumn("_ts_us", ts_us).crossJoin(broadcast(med))
-    base = histogram(with_med.filter(F.col("_ts_us") < F.col("_med")), column)
-    cur = histogram(with_med.filter(F.col("_ts_us") >= F.col("_med")), column)
-    return drift_stats(cur, base)
+    return drift_terms(*median_halves(df.withColumn("_ts_us", ts_us), "_ts_us", [column], approx))

@@ -1,76 +1,74 @@
 """Two-sample Kolmogorov–Smirnov and Wasserstein-1 drift statistics for
 numeric columns.
 
-Complements checks/drift.py (PSI/KL/JS over histograms): KS is the classic
+Complements the PSI/KL/JS of categorical series: KS is the classic
 distribution-shift test for *numeric* columns — the supremum of the absolute
 difference between the two empirical CDFs; Wasserstein-1 integrates the same
 gap (``∫|CDF_a − CDF_b| dv``), catching small-but-everywhere shifts the sup
-saturates on. The engine computes it as plain
-DataFrame math (no UDF), in the same two modes the rest of the repo uses:
+saturates on. This module only builds the counts: both statistics come from
+checks/drift.drift_terms / drift_compare, the one definition of the CDF gap,
+its location and the W1 interval term. Two count modes, as in the rest of
+the repo:
 
 * default ``n_buckets=1000``: values are equal-width-quantized first, so the
-  CDF domain is bounded — the single-partition ordered window that the
-  cumulative sums need runs over ≤ n_buckets rows no matter the table size
-  (the discretized KS is exact for the quantized distributions and a lower
-  bound for the raw ones; bucket count trades resolution for boundedness);
+  CDF domain is bounded — the ordered window the cumulative sums need runs
+  over ≤ n_buckets rows per series no matter the table size (the
+  discretized KS is exact for the quantized distributions and a lower bound
+  for the raw ones; bucket count trades resolution for boundedness);
 * ``n_buckets=None``: exact KS over the raw distinct values — an explicit
   test-scale opt-in (the repo invariant: unbounded modes are never defaults),
   since a continuous column could have |table| distinct values and the final
   window would see all of them.
 
-Plan shape: map-side projection → union → groupBy(value) (map-side
-combinable, one row per distinct value/bucket) → one ordered window over the
-bounded value domain → global max. The only all-to-one step operates on the
-bounded domain, not on rows.
+Plan shape: map-side projection → groupBy(value) per side (map-side
+combinable, one row per distinct value/bucket) → drift_compare's one window
+sort and one aggregation over the bounded value domain.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import broadcast
 
 
-def _two_sample_counts(
-    a: DataFrame,
-    b: DataFrame,
-    column: str,
-    n_buckets: int | None,
+def _two_sample(
+    a: DataFrame, b: DataFrame, column: str, n_buckets: int | None, *stats: str
 ) -> DataFrame:
-    """Shared front half of the two-sample statistics: per-value (or
-    per-quantized-bucket-edge) counts ``(v, ca, cb)`` of both sides."""
-    va = a.select(F.col(column).cast("double").alias("v")).filter(F.col("v").isNotNull())
-    vb = b.select(F.col(column).cast("double").alias("v")).filter(F.col("v").isNotNull())
+    """``stats`` of drift_compare and the side totals (n_a, n_b) in ONE row:
+    side *a* is the base, *b* the current, each counted per value (or per
+    quantized bucket edge) in the drift_counts shape, on ONE equal-width
+    grid over the union's range so both sides quantize identically (lo/hi
+    are a 2-value broadcast, not a driver collect). NULLs are excluded (KS
+    is a statement about values, not missingness — pair with the profile's
+    null_rate for that)."""
+    from .drift import drift_compare
 
+    va, vb = (
+        d.select(F.col(column).cast("double").alias("v")).filter(F.col("v").isNotNull())
+        for d in (a, b)
+    )
     if n_buckets is not None:
-        # one equal-width grid over the UNION's range so both sides quantize
-        # identically; lo/hi are a 2-value broadcast, not a driver collect
-        bounds = va.unionAll(vb).agg(
-            F.min("v").alias("lo"), F.max("v").alias("hi")
+        bounds = va.unionAll(vb).agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
+        lo, hi = F.col("lo"), F.col("hi")
+        bkt = F.when(hi == lo, F.lit(0)).otherwise(
+            F.least(F.floor((F.col("v") - lo) / ((hi - lo) / n_buckets)), F.lit(n_buckets - 1))
+        )
+        va, vb = (
+            d.crossJoin(broadcast(bounds)).select((lo + bkt * (hi - lo) / n_buckets).alias("v"))
+            for d in (va, vb)
         )
 
-        def quantize(df: DataFrame) -> DataFrame:
-            bkt = F.when(
-                F.col("hi") == F.col("lo"), F.lit(0)
-            ).otherwise(
-                F.least(
-                    F.floor(
-                        (F.col("v") - F.col("lo"))
-                        / ((F.col("hi") - F.col("lo")) / n_buckets)
-                    ),
-                    F.lit(n_buckets - 1),
-                )
-            )
-            return df.crossJoin(broadcast(bounds)).select(
-                (F.col("lo") + bkt * (F.col("hi") - F.col("lo")) / n_buckets).alias("v")
-            )
+    def counts(vals: DataFrame) -> DataFrame:
+        return vals.groupBy("v").agg(F.count(F.lit(1)).cast("long").alias("cnt")).select(
+            F.lit(column).alias("column"), F.lit(None).cast("string").alias("bucket"), "v", "cnt"
+        )
 
-        va, vb = quantize(va), quantize(vb)
-
-    return (
-        va.select("v", F.lit(1).alias("ca"), F.lit(0).alias("cb"))
-        .unionAll(vb.select("v", F.lit(0).alias("ca"), F.lit(1).alias("cb")))
-        .groupBy("v")
-        .agg(F.sum("ca").alias("ca"), F.sum("cb").alias("cb"))
+    # a global aggregate over the ≤ 1 series row: one row even when both
+    # sides are empty (and compare nothing), NULL stats then
+    return drift_compare(counts(vb), counts(va)).agg(
+        *(F.max(c).alias(c) for c in stats),
+        F.max("n_base").alias("n_a"),
+        F.max("n_cur").alias("n_b"),
     )
 
 
@@ -84,12 +82,10 @@ def ks_statistic(
 
     Returns one row: (ks_stat double, ks_at double, n_a long, n_b long) —
     ``ks_at`` is the smallest value/bucket-edge where the supremum is attained
-    (deterministic tie-break). NULLs are excluded on both sides (KS is a
-    statement about values, not missingness — pair with the profile's
-    null_rate for that). Empty sides yield ks_stat NULL rather than a
+    (deterministic tie-break). Empty sides yield ks_stat NULL rather than a
     misleading 0.
     """
-    return _ks_over_counts(_two_sample_counts(a, b, column, n_buckets))
+    return _two_sample(a, b, column, n_buckets, "ks_stat", "ks_at")
 
 
 def wasserstein_statistic(
@@ -104,68 +100,13 @@ def wasserstein_statistic(
     to how WIDE the gap is; W1 integrates it (``∫ |CDF_a − CDF_b| dv``), so a
     small-but-everywhere shift (e.g. a unit conversion bug nudging every
     value 2%) scores proportionally to the shift magnitude where KS
-    saturates. Same quantized-grid machinery and boundedness argument as KS;
+    saturates. Same quantized-grid counts and boundedness argument as KS;
     the discretized W1 is exact for the quantized distributions.
 
     Returns one row: (w1 double, n_a long, n_b long) — ``w1`` in the
     column's own units. Empty sides yield NULL.
     """
-    counts = _two_sample_counts(a, b, column, n_buckets)
-    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    tot = Window.partitionBy()
-    o = Window.orderBy("v")
-    cdf = counts.select(
-        "v",
-        F.try_divide(F.sum("ca").over(w), F.sum("ca").over(tot)).alias("cdf_a"),
-        F.try_divide(F.sum("cb").over(w), F.sum("cb").over(tot)).alias("cdf_b"),
-        F.sum("ca").over(tot).alias("n_a"),
-        F.sum("cb").over(tot).alias("n_b"),
-        F.lead("v", 1).over(o).alias("nxt"),
-    )
-    # last grid point has no right neighbor — its term is the open tail where
-    # both CDFs are 1, contributing 0 by construction
-    term = (F.col("nxt") - F.col("v")) * F.abs(F.col("cdf_a") - F.col("cdf_b"))
-    # coalesce: a single-point grid (hi == lo, or n_buckets=None over a
-    # constant column) has no terms — identical point masses are distance 0,
-    # not NULL; the when() keeps genuinely-empty sides NULL per the contract
-    return cdf.agg(
-        F.when(
-            (F.max("n_a") > 0) & (F.max("n_b") > 0),
-            F.coalesce(F.round(F.sum(term), 6) + F.lit(0.0), F.lit(0.0)),
-        )
-        .cast("double")
-        .alias("w1"),
-        F.max("n_a").cast("long").alias("n_a"),
-        F.max("n_b").cast("long").alias("n_b"),
-    )
-
-
-def _ks_over_counts(counts: DataFrame) -> DataFrame:
-    """KS from a (v, ca, cb) per-value count frame — the shared tail of the
-    two-frame and baseline-counts entry points."""
-    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    tot = Window.partitionBy()
-    cdf = counts.select(
-        "v",
-        # try_divide: an empty side has total 0 → NULL CDF → NULL ks_stat,
-        # honoring the documented contract instead of an ANSI divide error
-        F.try_divide(F.sum("ca").over(w), F.sum("ca").over(tot)).alias("cdf_a"),
-        F.try_divide(F.sum("cb").over(w), F.sum("cb").over(tot)).alias("cdf_b"),
-        F.sum("ca").over(tot).alias("n_a"),
-        F.sum("cb").over(tot).alias("n_b"),
-    ).withColumn("d", F.abs(F.col("cdf_a") - F.col("cdf_b")))
-    # the sup and its location in one pass: tag the global max via a window,
-    # then take the smallest v attaining it (both engines break the tie the
-    # same way because d is the same rational arithmetic on the same counts)
-    tagged = cdf.withColumn("dmx", F.max("d").over(tot))
-    return tagged.agg(
-        F.round(F.max("d"), 6).cast("double").alias("ks_stat"),
-        F.min(F.when(F.col("d") == F.col("dmx"), F.col("v")))
-        .cast("double")
-        .alias("ks_at"),
-        F.max("n_a").cast("long").alias("n_a"),
-        F.max("n_b").cast("long").alias("n_b"),
-    )
+    return _two_sample(a, b, column, n_buckets, "w1")
 
 
 # ---------------------------------------------------------------------------
@@ -211,237 +152,4 @@ def grid_counts(
             F.lit(float(hi)).alias("hi"),
             F.lit(n_buckets).alias("n_buckets"),
         )
-    )
-
-
-def windowed_grid_counts(
-    df: DataFrame,
-    column: str,
-    lo: float,
-    hi: float,
-    n_buckets: int = 1000,
-    ts_col: str = "ts",
-    window_duration: str = "1 day",
-) -> DataFrame:
-    """Per-event-time-window fixed-grid counts — the NUMERIC twin of the
-    windowed categorical histogram (streaming/incremental.
-    windowed_histogram_stream): each tumbling window's values quantized onto
-    a grid fixed at BASELINE time (``grid_quantize`` clamp semantics — see
-    the fixed-grid notes above), one (window, v) counter per occupied cell.
-
-    Output: (window_start timestamp, window_end timestamp, v double,
-    cnt long). NULL values and NULL timestamps are excluded (a windowed
-    count is a statement about timestamped values; missingness is the
-    profile's job). Batch form — the streaming face with identical output
-    is streaming/incremental.windowed_grid_counts_stream.
-
-    Plan: one map-side projection (window + quantize are both per-row
-    expressions) and one hash agg bounded by windows × n_buckets.
-    """
-    vals = df.select(
-        F.col(ts_col).cast("timestamp").alias("_wts"),
-        F.col(column).cast("double").alias("raw"),
-    ).filter(F.col("raw").isNotNull() & F.col("_wts").isNotNull())
-    return (
-        vals.select(
-            F.window("_wts", window_duration).alias("w"),
-            grid_quantize(F.col("raw"), lo, hi, n_buckets).alias("v"),
-        )
-        .groupBy("w", "v")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "v",
-            "cnt",
-        )
-    )
-
-
-def windowed_ks_report(
-    window_counts: DataFrame, baseline_counts: DataFrame
-) -> DataFrame:
-    """Per-WINDOW KS / Wasserstein-1 / chi-square vs ONE same-grid baseline —
-    the numeric half of continuous drift monitoring ("which day's length
-    distribution shifted"), completing the matrix whose categorical half is
-    checks/drift.windowed_drift_report: each window's empirical distribution
-    is two-sample-tested against the persisted ``grid_counts`` artifact
-    without re-scanning history.
-
-    Output, one row per window: (window_start, window_end, ks_stat, ks_at,
-    w1, chi2, dof, n_cur, n_base) — KS/W1 fields exactly as
-    :func:`ks_w1_from_counts` with the baseline as side *a* and the window
-    as side *b*; empty sides yield NULL stats per the module contract.
-    ks_stat/ks_at/dof/counts derive from order-independent exact-count
-    arithmetic (hash-comparable cross-engine); w1 and chi2 are double SUMS
-    whose accumulation order is engine-dependent — report them as metrics,
-    never in exact comparisons (the ks_drift_turn_idx posture).
-
-    Plan: windows ⨯ (baseline ∪ observed grid points) via a broadcast cross
-    of two bounded frames; a grid point unoccupied on both sides in a window
-    is dropped — the CDFs don't move there, its W1 interval merges into the
-    neighbor's constant-d term, and its chi-square term would be 0/0 — so
-    the per-window statistics equal the unwindowed ones on the same counts
-    (parity-tested). CDFs are windows-partitioned cumulative sums over the
-    bounded grid (the bounded-rows window exception).
-    """
-    wins = window_counts.select("window_start", "window_end").distinct()
-    vs = baseline_counts.select("v").union(window_counts.select("v")).distinct()
-    grid = (
-        wins.crossJoin(broadcast(vs))
-        .join(
-            baseline_counts.select("v", F.col("cnt").alias("cb")),
-            on="v",
-            how="left",
-        )
-        .join(
-            window_counts.select(
-                "window_start", "window_end", "v", F.col("cnt").alias("ca")
-            ),
-            on=["window_start", "window_end", "v"],
-            how="left",
-        )
-        .select(
-            "window_start",
-            "window_end",
-            "v",
-            F.coalesce("ca", F.lit(0)).cast("long").alias("ca"),
-            F.coalesce("cb", F.lit(0)).cast("long").alias("cb"),
-        )
-        .filter((F.col("ca") > 0) | (F.col("cb") > 0))
-    )
-    pw = Window.partitionBy("window_start", "window_end")
-    cum = pw.orderBy("v").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    o = Window.partitionBy("window_start", "window_end").orderBy("v")
-    cdf = grid.select(
-        "window_start",
-        "window_end",
-        "v",
-        "ca",
-        "cb",
-        F.try_divide(F.sum("ca").over(cum), F.sum("ca").over(pw)).alias("cdf_cur"),
-        F.try_divide(F.sum("cb").over(cum), F.sum("cb").over(pw)).alias("cdf_base"),
-        F.sum("ca").over(pw).alias("n_cur"),
-        F.sum("cb").over(pw).alias("n_base"),
-        F.lead("v", 1).over(o).alias("nxt"),
-    ).withColumn("d", F.abs(F.col("cdf_cur") - F.col("cdf_base")))
-    tagged = cdf.withColumn("dmx", F.max("d").over(pw))
-    term = (F.col("nxt") - F.col("v")) * F.col("d")
-    # chi2: the one definition of the decimal-cross-product shape
-    # (drift._chi2_expr); the per-window `when(max(n)>0)` aggregate guard
-    # replaces its per-row totals guard
-    from schema_infer_plugin_spark.checks.drift import _chi2_expr
-
-    term_chi2 = _chi2_expr(
-        o_cur="ca", o_base="cb", n_cur="n_cur", n_base="n_base",
-        guard_totals=False,
-    )
-    occupied = (F.col("ca") + F.col("cb")) > 0
-    both = (F.max("n_cur") > 0) & (F.max("n_base") > 0)
-    return tagged.groupBy("window_start", "window_end").agg(
-        F.round(F.max("d"), 6).cast("double").alias("ks_stat"),
-        F.min(F.when(F.col("d") == F.col("dmx"), F.col("v")))
-        .cast("double")
-        .alias("ks_at"),
-        F.when(both, F.coalesce(F.round(F.sum(term), 6) + F.lit(0.0), F.lit(0.0)))
-        .cast("double")
-        .alias("w1"),
-        F.when(both, F.sum(F.when(occupied, term_chi2)))
-        .cast("double")
-        .alias("chi2"),
-        (F.sum(occupied.cast("long")) - 1).cast("long").alias("dof"),
-        F.max("n_cur").cast("long").alias("n_cur"),
-        F.max("n_base").cast("long").alias("n_base"),
-    )
-
-
-def _merge_counts(a_counts: DataFrame, b_counts: DataFrame) -> DataFrame:
-    return (
-        a_counts.select("v", F.col("cnt").alias("ca"), F.lit(0).cast("long").alias("cb"))
-        .unionAll(
-            b_counts.select("v", F.lit(0).cast("long").alias("ca"), F.col("cnt").alias("cb"))
-        )
-        .groupBy("v")
-        .agg(F.sum("ca").alias("ca"), F.sum("cb").alias("cb"))
-    )
-
-
-def ks_from_counts(a_counts: DataFrame, b_counts: DataFrame) -> DataFrame:
-    """KS between two ``grid_counts`` frames sharing the same grid — e.g. a
-    persisted baseline vs the current run quantized onto the baseline's grid.
-    Same output row as :func:`ks_statistic`."""
-    return _ks_over_counts(_merge_counts(a_counts, b_counts))
-
-
-def ks_w1_from_counts(
-    a_counts: DataFrame, b_counts: DataFrame, with_chi2: bool = False
-) -> DataFrame:
-    """KS *and* Wasserstein-1 between two same-grid ``grid_counts`` frames in
-    ONE plan — the runner's drift pass uses this so the current run's counts
-    (a full table scan) feed both statistics from a single job instead of
-    scanning once per metric.
-
-    Output, one row: (ks_stat, ks_at, w1, n_a, n_b) — KS fields as
-    :func:`ks_statistic`, ``w1`` as :func:`wasserstein_statistic`.
-
-    ``with_chi2=True`` appends (chi2, dof): the Pearson homogeneity
-    statistic over the SAME binned grid counts (the drift.chi2_terms
-    formula per grid point, summed) — still the one job, zero extra scans.
-    Opt-in so the default output schema (which driver-query oracles pin)
-    never changes; the chi2 total is a double sum over grid points, a drift
-    METRIC (reported evidence), not a hash-compared value.
-    """
-    counts = _merge_counts(a_counts, b_counts)
-    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    tot = Window.partitionBy()
-    o = Window.orderBy("v")
-    cdf = counts.select(
-        "v",
-        "ca",
-        "cb",
-        F.try_divide(F.sum("ca").over(w), F.sum("ca").over(tot)).alias("cdf_a"),
-        F.try_divide(F.sum("cb").over(w), F.sum("cb").over(tot)).alias("cdf_b"),
-        F.sum("ca").over(tot).alias("n_a"),
-        F.sum("cb").over(tot).alias("n_b"),
-        F.lead("v", 1).over(o).alias("nxt"),
-    ).withColumn("d", F.abs(F.col("cdf_a") - F.col("cdf_b")))
-    tagged = cdf.withColumn("dmx", F.max("d").over(tot))
-    term = (F.col("nxt") - F.col("v")) * F.col("d")
-    chi2_cols = []
-    if with_chi2:
-        # the one definition of the decimal-cross-product chi2 shape lives
-        # in drift._chi2_expr; the aggregate's `when(max(n)>0)` replaces its
-        # per-row totals guard (chi2 is NULL when either side is empty, and
-        # the squared diff is sign-symmetric so the a/b → cur/base column
-        # mapping is bit-irrelevant)
-        from schema_infer_plugin_spark.checks.drift import _chi2_expr
-
-        term_chi2 = _chi2_expr(
-            o_cur="ca", o_base="cb", n_cur="n_a", n_base="n_b",
-            guard_totals=False,
-        )
-        occupied = (F.col("ca") + F.col("cb")) > 0
-        chi2_cols = [
-            F.when(
-                (F.max("n_a") > 0) & (F.max("n_b") > 0),
-                F.sum(F.when(occupied, term_chi2)),
-            )
-            .cast("double")
-            .alias("chi2"),
-            (F.sum(occupied.cast("long")) - 1).cast("long").alias("dof"),
-        ]
-    return tagged.agg(
-        F.round(F.max("d"), 6).cast("double").alias("ks_stat"),
-        F.min(F.when(F.col("d") == F.col("dmx"), F.col("v")))
-        .cast("double")
-        .alias("ks_at"),
-        F.when(
-            (F.max("n_a") > 0) & (F.max("n_b") > 0),
-            F.coalesce(F.round(F.sum(term), 6) + F.lit(0.0), F.lit(0.0)),
-        )
-        .cast("double")
-        .alias("w1"),
-        F.max("n_a").cast("long").alias("n_a"),
-        F.max("n_b").cast("long").alias("n_b"),
-        *chi2_cols,
     )

@@ -518,146 +518,73 @@ def cmd_estimate(args: argparse.Namespace) -> int:
 
 def cmd_window_drift(args: argparse.Namespace) -> int:
     """Per-WINDOW drift report ("which day drifted"): event-time windowed
-    categorical counts of --column joined against a validate run's persisted
-    count-bearing histogram baseline (checks/drift.windowed_drift_report —
-    the batch face of the streaming windowed_histogram_stream). Writes
-    ``window_drift/`` under --out, prints one line per window, and exits 1
-    when any window's summed PSI exceeds --psi-threshold. Requires a
-    baseline written by this engine version (freq-only artifacts carry no
-    counts and are rejected here, unlike run_drift's lenient whole-batch
-    path, because the chi-square column is part of this report)."""
-    from schema_infer_plugin_spark.checks.drift import windowed_drift_report
-    from schema_infer_plugin_spark.plans.runner import resolve_transcripts_input
+    counts of --column (or --numeric-column, on the baseline's grid)
+    compared with a validate run's persisted baseline — categorical series
+    by PSI/KL/JS/chi2 against ``histograms/<col>``, numeric ones by KS/W1/
+    chi2 against ``histograms_numeric/<col>`` (checks/drift.windowed_counts
+    + drift_compare, the batch face of the streaming windowed_*_stream).
+    Writes one row per window to ``window_drift/`` (``window_ks/`` for a
+    numeric column) under --out, prints one line per window, and exits 1
+    when any window's PSI (KS) exceeds --psi-threshold (--ks-threshold); W1
+    and chi2 ride as evidence. The baseline is read like run_drift's: a
+    missing one exits with advice, a frequency-only one fails the run (it
+    carries no counts — re-run write_histograms). A numeric grid is fixed at
+    baseline time (clamp semantics), so out-of-range drift collapses
+    conservatively into the edge buckets."""
+    from schema_infer_plugin_spark.checks.drift import drift_compare, windowed_counts
+    from schema_infer_plugin_spark.plans.runner import read_baseline, resolve_transcripts_input
 
     cfg = _load_cfg(args)
     spark = _spark(cfg)
     t, _ = resolve_transcripts_input(spark, args.input)
-    if args.numeric_column is not None:
-        return _window_drift_numeric(spark, t, args)
-    hist_path = os.path.join(args.baseline, "histograms", args.column)
-    # MISSING (no artifact — actionable advice) ≠ INACCESSIBLE (corrupt /
-    # unreadable — surface the real error): same posture as the numeric leg
-    if not os.path.exists(hist_path):
+    numeric = args.numeric_column is not None
+    c = args.numeric_column if numeric else args.column
+    base = read_baseline(spark, args.baseline, c, numeric)
+    if base is None:
+        kind, sub, arg = (
+            ("numeric", "histograms_numeric", "numeric_columns")
+            if numeric
+            else ("histogram", "histograms", "columns")
+        )
         raise SystemExit(
-            f"window-drift: no histogram baseline at {hist_path} — re-run"
-            f" validate / write_histograms with {args.column!r} in columns"
+            f"window-drift: no {kind} baseline at {os.path.join(args.baseline, sub, c)} —"
+            f" re-run validate / write_histograms with {c!r} in {arg}"
         )
-    base = spark.read.parquet(hist_path)
-    if "cnt" not in base.columns:
-        raise SystemExit(
-            "window-drift needs a count-bearing baseline (re-run validate /"
-            " write_histograms with this engine version)"
-        )
-    from pyspark.sql import functions as F
-
-    bucket = F.coalesce(F.col(args.column).cast("string"), F.lit("<null>"))
-    counts = (
-        t.filter(F.col("ts").isNotNull())
-        .groupBy(
-            F.window(F.col("ts").cast("timestamp"), args.window),
-            bucket.alias("bucket"),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "bucket",
-            "cnt",
-        )
+    grids = None
+    if numeric:
+        # bounded driver collect: the artifact is ≤ n_buckets rows, its row
+        # count fixed at BUILD time (index_store posture); one row carries
+        # the grid
+        meta = base.select("lo", "hi", "n_buckets").first()
+        if meta is None:
+            raise SystemExit(f"window-drift: empty numeric baseline for {c!r}")
+        grids = {c: (float(meta["lo"]), float(meta["hi"]), int(meta["n_buckets"]))}
+    counts = windowed_counts(t, [] if numeric else [c], grids, "ts", args.window)
+    rep = drift_compare(
+        counts, base.select("column", "bucket", "v", "cnt"), by=("window_start", "window_end")
     )
-    rep = windowed_drift_report(counts, base.select("bucket", "cnt"))
-    rep.write.mode("overwrite").parquet(os.path.join(args.out, "window_drift"))
-    per_win = (
-        spark.read.parquet(os.path.join(args.out, "window_drift"))
-        .groupBy("window_start", "window_end")
-        .agg(
-            F.sum("psi_term").alias("psi"),
-            F.sum("chi2_term").alias("chi2"),
-            (F.count(F.lit(1)) - 1).alias("dof"),
-        )
-        .orderBy("window_start")
-        .collect()
+    out = os.path.join(args.out, "window_ks" if numeric else "window_drift")
+    rep.write.mode("overwrite").parquet(out)
+    per_win = spark.read.parquet(out).orderBy("window_start").collect()
+    stat, threshold = ("ks_stat", float(args.ks_threshold)) if numeric else (
+        "psi", float(args.psi_threshold)
     )
-    threshold = float(args.psi_threshold)
     drifted = []
     for r in per_win:
-        flag = r["psi"] > threshold
-        print(
-            f"{r['window_start']} .. {r['window_end']}: psi={r['psi']:.6f}"
-            f" chi2={r['chi2']:.3f} dof={r['dof']}{' DRIFTED' if flag else ''}"
+        flag = r[stat] is not None and r[stat] > threshold
+        line = (
+            f"ks={r['ks_stat']} at={r['ks_at']} w1={r['w1']} chi2={r['chi2']}"
+            f" dof={r['dof']} n={r['n_cur']}"
+            if numeric
+            else f"psi={r['psi']:.6f} chi2={r['chi2']:.3f} dof={r['dof']}"
         )
-        if flag:
-            drifted.append(str(r["window_start"]))
-    if drifted:
-        print(f"window-drift: {len(drifted)}/{len(per_win)} windows above"
-              f" psi {threshold}")
-        return 1
-    return 0
-
-
-def _window_drift_numeric(spark, t, args: argparse.Namespace) -> int:
-    """Numeric leg of ``window-drift``: per-window two-sample KS of
-    --numeric-column against the validate run's persisted
-    ``histograms_numeric/<col>`` grid baseline (checks/ksdrift.
-    windowed_grid_counts + windowed_ks_report). The grid (lo/hi/n_buckets)
-    comes from the artifact itself — fixed at baseline time, clamp
-    semantics, so out-of-range drift collapses conservatively into the edge
-    buckets. Writes ``window_ks/`` under --out; exits 1 when any window's
-    KS exceeds --ks-threshold. W1/chi2 ride as evidence (the run_drift
-    posture: pass criterion stays KS)."""
-    from pyspark.sql import functions as F
-
-    from schema_infer_plugin_spark.checks.ksdrift import (
-        windowed_grid_counts,
-        windowed_ks_report,
-    )
-
-    c = args.numeric_column
-    path = os.path.join(args.baseline, "histograms_numeric", c)
-    # MISSING (no artifact — actionable advice) ≠ INACCESSIBLE (corrupt /
-    # unreadable — surface the real error): the validate-tables posture
-    if not os.path.exists(path):
-        raise SystemExit(
-            f"window-drift: no numeric baseline at {path} — re-run validate /"
-            f" write_histograms with {c!r} in numeric_columns"
-        )
-    base = spark.read.parquet(path)
-    # bounded driver collect: the artifact is ≤ n_buckets rows, its row count
-    # fixed at BUILD time (index_store posture); one row carries the grid
-    meta = base.select("lo", "hi", "n_buckets").first()
-    if meta is None:
-        raise SystemExit(f"window-drift: empty numeric baseline for {c!r}")
-    cur = windowed_grid_counts(
-        t,
-        c,
-        float(meta["lo"]),
-        float(meta["hi"]),
-        int(meta["n_buckets"]),
-        ts_col="ts",
-        window_duration=args.window,
-    )
-    rep = windowed_ks_report(cur, base.select("v", "cnt"))
-    rep.write.mode("overwrite").parquet(os.path.join(args.out, "window_ks"))
-    per_win = (
-        spark.read.parquet(os.path.join(args.out, "window_ks"))
-        .orderBy("window_start")
-        .collect()
-    )
-    threshold = float(args.ks_threshold)
-    drifted = []
-    for r in per_win:
-        flag = r["ks_stat"] is not None and r["ks_stat"] > threshold
-        print(
-            f"{r['window_start']} .. {r['window_end']}: ks={r['ks_stat']}"
-            f" at={r['ks_at']} w1={r['w1']} chi2={r['chi2']} dof={r['dof']}"
-            f" n={r['n_cur']}{' DRIFTED' if flag else ''}"
-        )
+        print(f"{r['window_start']} .. {r['window_end']}: {line}{' DRIFTED' if flag else ''}")
         if flag:
             drifted.append(str(r["window_start"]))
     if drifted:
         print(
             f"window-drift: {len(drifted)}/{len(per_win)} windows above"
-            f" ks {threshold} on {c}"
+            f" {'ks' if numeric else 'psi'} {threshold} on {c}"
         )
         return 1
     return 0

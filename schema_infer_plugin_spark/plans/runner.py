@@ -44,6 +44,7 @@ import argparse
 import os
 import time
 from collections.abc import Callable
+from functools import reduce
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window, functions as F
@@ -385,7 +386,7 @@ def write_histograms(
     checks/drift.drift_counts, persisted with ``freq = cnt / Σcnt``."""
     from schema_infer_plugin_spark.checks.drift import TRANSITIONS, drift_counts, drift_series
 
-    # explicit [] means "no numeric baselines" — only None takes the default
+    # an explicit [] means "none", on both sides — only None takes the defaults
     num_cols = NUMERIC_DRIFT_COLUMNS if numeric_columns is None else numeric_columns
     # bounded 2-values-per-column collect: baseline/index construction, not a
     # per-row probe — same posture as ivf_centroids
@@ -396,7 +397,7 @@ def write_histograms(
         for c, lo, hi in zip(num_cols, bounds[: len(x)], bounds[len(x) :])
         if lo is not None  # all-null column: no numeric baseline to persist
     }
-    names = dict.fromkeys([*(columns or DRIFT_COLUMNS), TRANSITIONS])
+    names = dict.fromkeys([*(DRIFT_COLUMNS if columns is None else columns), TRANSITIONS])
     per_series = Window.partitionBy("column", F.col("bucket").isNull())
     hist = drift_counts(transcripts, list(names), grids)
     hist = hist.select("*", (F.col("cnt") / F.sum("cnt").over(per_series)).alias("freq")).persist()
@@ -418,6 +419,41 @@ def write_histograms(
         hist.unpersist()
 
 
+#: the persisted drift baselines' schemas: declared, so a read plans no
+#: schema-inference job
+HISTOGRAM_SCHEMA = "bucket string, freq double, cnt long, column string"
+GRID_SCHEMA = "v double, cnt long, lo double, hi double, n_buckets int"
+
+
+def read_baseline(
+    spark: SparkSession, baseline_dir: str, column: str, numeric: bool = False
+) -> DataFrame | None:
+    """One persisted drift baseline as a checks/drift.drift_counts slice
+    (column, bucket, v, cnt) — a numeric one keeps its grid (lo, hi,
+    n_buckets) — or None when nothing is at its path. "Missing" is Spark's
+    own answer (``PATH_NOT_FOUND``), so any Hadoop filesystem URI (file://,
+    hdfs://, s3a://) answers like a local path; a baseline that exists but
+    does not read raises. A frequency-only artifact (written before counts
+    were persisted) fails the first job that reads it."""
+    sub, schema = (
+        ("histograms_numeric", GRID_SCHEMA) if numeric else ("histograms", HISTOGRAM_SCHEMA)
+    )
+    path = os.path.join(baseline_dir, sub, column)
+    try:
+        df = spark.read.schema(schema).parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() == "PATH_NOT_FOUND":
+            return None
+        raise
+    legacy = f"drift baseline {path} is not count-bearing: re-run write_histograms"
+    cnt = F.coalesce(F.col("cnt"), F.raise_error(F.lit(legacy))).alias("cnt")
+    name = F.lit(column).alias("column")
+    if numeric:
+        bucket = F.lit(None).cast("string").alias("bucket")
+        return df.select(name, bucket, "v", cnt, "lo", "hi", "n_buckets")
+    return df.select(name, "bucket", F.lit(None).cast("double").alias("v"), cnt)
+
+
 def run_drift(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -430,33 +466,34 @@ def run_drift(
     ks_threshold: float = 0.1,
 ) -> DataFrame:
     """Distribution drift of ``transcripts`` vs the baselines persisted under
-    ``baseline_dir`` (a previous run's out_dir). One verdict row per column:
-    categorical columns get ``drift_<col>`` (pass iff total PSI <= threshold;
-    metrics carry psi/kl/js), numeric columns get ``ks_<col>`` (two-sample KS
-    on the baseline's fixed grid; pass iff ks_stat <= ks_threshold, metrics
-    carry ks/ks_at/w1 — Wasserstein-1 rides the same single-job plan, see
-    checks/ksdrift.ks_w1_from_counts).
+    ``baseline_dir`` (a previous run's out_dir). One verdict row per series:
+    categorical columns and the transitions get ``drift_<col>`` /
+    ``drift_transitions`` (pass iff total PSI <= threshold; metrics carry
+    psi/kl/js), numeric columns get ``ks_<col>`` (two-sample KS on the
+    baseline's fixed grid; pass iff ks_stat <= ks_threshold, metrics carry
+    ks/ks_at/w1); both carry the binned chi-square (chi2/dof/chi2_z) as
+    calibrated evidence, never the pass criterion.
 
     Thresholds follow the conventional readings: PSI <0.1 stable, 0.1-0.2
     moderate, >0.2 drifted (default 0.2); KS two-sample flags at ~0.1 for
     large same-source samples (default 0.1).
 
-    One checks/drift.drift_counts scan counts every current series, on the
-    baselines' grids. A MISSING transition or numeric baseline is skipped (a
-    baseline run that predates it); one that does not read raises."""
-    from schema_infer_plugin_spark.checks.drift import (
-        TRANSITIONS,
-        drift_and_chi2_terms,
-        drift_counts,
-        drift_series,
-        drift_stats,
-    )
-    from schema_infer_plugin_spark.checks.ksdrift import ks_w1_from_counts
+    The baselines are stacked as one checks/drift.drift_counts frame; one
+    bounded collect reads the numeric grids, then ONE drift_counts scan of
+    the current data on those grids and ONE checks/drift.drift_compare
+    collect give every verdict. A MISSING transition or numeric baseline is
+    skipped (a baseline run that predates it); one that does not read
+    raises, and so does a frequency-only categorical baseline."""
+    from schema_infer_plugin_spark.checks.drift import TRANSITIONS, drift_compare, drift_counts
 
     done = completed_keys(spark, out_dir, run_id, PASS_DRIFT)
     verd_dir = os.path.join(out_dir, "drift_verdicts")
+    verd_schema = (
+        "run_id string, partition_key string, check_name string, pass boolean,"
+        " violation_count long, metrics map<string, double>"
+    )
     if "__all__" in done:
-        return spark.read.parquet(verd_dir)
+        return spark.read.schema(verd_schema).parquet(verd_dir)
     t0 = time.time()
     cols = DRIFT_COLUMNS if columns is None else columns
     num_cols = NUMERIC_DRIFT_COLUMNS if numeric_columns is None else numeric_columns
@@ -468,105 +505,65 @@ def run_drift(
         k9 = 2.0 / (9.0 * dof)
         return ((chi2 / dof) ** (1.0 / 3.0) - (1.0 - k9)) / (k9**0.5)
 
-    def _cat_metrics(cur_counts, base) -> dict[str, float]:
-        """PSI/KL/JS (+ chi2/dof when the baseline artifact carries counts)
-        in ONE aggregation job. The pass criterion stays PSI — chi2 rides as
-        calibrated evidence (asymptotically χ²(dof) under 'no drift'), only
-        computable against count-bearing (post-r5) baselines; frequency-only
-        baselines take the legacy drift_stats path, never fail."""
-        if "cnt" in base.columns:
-            terms = drift_and_chi2_terms(cur_counts, base.select("bucket", "cnt"))
-            agg = terms.agg(
-                F.sum("psi_term").alias("psi"), F.sum("kl_term").alias("kl"),
-                F.sum("js_term").alias("js"), F.sum("chi2_term").alias("chi2"),
-                F.count(F.lit(1)).alias("k"),
-            ).collect()[0]
-        else:
-            total = cur_counts.agg(F.sum("cnt").alias("_n"))
-            cur = cur_counts.crossJoin(F.broadcast(total)).select(
-                "bucket", (F.col("cnt") / F.col("_n")).alias("freq")
-            )
-            agg = drift_stats(cur, base.select("bucket", "freq")).agg(
-                F.sum("psi_term").alias("psi"), F.sum("kl_term").alias("kl"),
-                F.sum("js_term").alias("js"),
-            ).collect()[0]
-        m = {"psi": float(agg["psi"]), "kl": float(agg["kl"]), "js": float(agg["js"])}
-        if "chi2" in agg.asDict() and agg["chi2"] is not None:
-            m["chi2"] = float(agg["chi2"])
-            m["dof"] = float(agg["k"] - 1)
-            if m["dof"] > 0:
-                m["chi2_z"] = _chi2_z(m["chi2"], m["dof"])
-        return m
-
-    def _read_baseline(path: str) -> DataFrame | None:
-        """The lenient legs' read: None only when nothing is at ``path`` (a
-        baseline run that predates the leg); a baseline that exists but does
-        not read raises. Spark's own error, so any Hadoop filesystem URI
-        (file://, hdfs://, s3a://) answers the same as a local path."""
-        try:
-            return spark.read.parquet(path)
-        except AnalysisException as e:
-            if e.getCondition() == "PATH_NOT_FOUND":
-                return None
-            raise
-
-    hist_dir = os.path.join(baseline_dir, "histograms")
-    bases = {c: spark.read.parquet(os.path.join(hist_dir, c)).drop("column") for c in cols}
-    # sequence-structure drift (lenient like the numeric leg — a baseline run
-    # that predates transition baselines is skipped, never failed)
-    tbase = _read_baseline(os.path.join(hist_dir, TRANSITIONS))
-    if tbase is not None:
-        bases[TRANSITIONS] = tbase.drop("column")
-    num_bases, grids = {}, {}
-    for c in num_cols:
-        base = _read_baseline(os.path.join(baseline_dir, "histograms_numeric", c))
+    # (column, numeric) → its baseline as a drift_counts slice
+    bases = {}
+    for c in cols:
+        base = read_baseline(spark, baseline_dir, c)
         if base is None:
-            continue  # baseline run predates numeric baselines: skip, don't fail
-        num_bases[c] = base
-        # grid metadata rides every baseline row (≤ KS_GRID_BUCKETS rows)
-        meta = base.select("lo", "hi", "n_buckets").first()
-        grids[c] = (float(meta["lo"]), float(meta["hi"]), int(meta["n_buckets"]))
+            raise FileNotFoundError(f"no drift baseline for {c!r} under {baseline_dir}")
+        bases[(c, False)] = base
+    # sequence-structure and numeric drift are lenient: a baseline run that
+    # predates them is skipped, never failed
+    for c, numeric in [(TRANSITIONS, False), *((c, True) for c in num_cols)]:
+        base = read_baseline(spark, baseline_dir, c, numeric)
+        if base is not None:
+            bases[(c, numeric)] = base
+    grids = {}
+    nums = [b.select("column", "lo", "hi", "n_buckets") for (_, n), b in bases.items() if n]
+    if nums:
+        # one bounded collect (≤ n_buckets rows per numeric baseline, fixed
+        # at BUILD time — the index_store posture): every row carries the
+        # grid fixed at baseline time
+        for r in reduce(DataFrame.unionByName, nums).collect():
+            grids[r["column"]] = (float(r["lo"]), float(r["hi"]), int(r["n_buckets"]))
 
-    # (check_name, pass, metrics) — one row per column either way
+    # (check_name, pass, metrics) — one row per series, in the order read
     rows: list[tuple[str, bool, dict[str, float]]] = []
-    cur = drift_counts(transcripts, list(bases), grids).persist()
-    try:
-        for c, base in bases.items():
-            m = _cat_metrics(drift_series(cur, c).select("bucket", "cnt"), base)
-            name = "drift_transitions" if c == TRANSITIONS else f"drift_{c}"
-            rows.append((name, m["psi"] <= psi_threshold, m))
-        for c, base in num_bases.items():
-            # KS + Wasserstein-1 from the SAME single-job plan (ks_w1_from_counts)
-            ks = ks_w1_from_counts(
-                base.select("v", "cnt"),
-                drift_series(cur, c, numeric=True).select("v", "cnt"),
-                with_chi2=True,
-            ).collect()[0]
-            stat = float(ks["ks_stat"]) if ks["ks_stat"] is not None else 1.0
-            m = {
-                "ks": stat,
-                "ks_at": float(ks["ks_at"]) if ks["ks_at"] is not None else 0.0,
-                "w1": float(ks["w1"]) if ks["w1"] is not None else 0.0,
-            }
-            # binned chi2 rides the SAME single job (pass criterion stays KS)
-            if ks["chi2"] is not None and ks["dof"] is not None and ks["dof"] > 0:
-                m["chi2"] = float(ks["chi2"])
-                m["dof"] = float(ks["dof"])
-                m["chi2_z"] = _chi2_z(m["chi2"], m["dof"])
-            rows.append((f"ks_{c}", stat <= ks_threshold, m))
-    finally:
-        cur.unpersist()
+    if bases:
+        slices = [b.select("column", "bucket", "v", "cnt") for b in bases.values()]
+        stacked = reduce(DataFrame.unionByName, slices)
+        cur = drift_counts(transcripts, [c for c, n in bases if not n], grids)
+        got = {(r["column"], r["grid"]): r for r in drift_compare(cur, stacked).collect()}
+        for key in bases:
+            r = got.get(key)
+            if r is None:
+                continue  # empty on both sides: no cells to compare
+            c, numeric = key
+            if numeric:
+                # an empty side has no KS: the worst score, never a pass
+                stat = 1.0 if r["ks_stat"] is None else r["ks_stat"]
+                at, w1 = (0.0 if x is None else x for x in (r["ks_at"], r["w1"]))
+                m = {"ks": stat, "ks_at": at, "w1": w1}
+                name, ok = f"ks_{c}", stat <= ks_threshold
+            else:
+                m = {"psi": r["psi"], "kl": r["kl"], "js": r["js"]}
+                name = "drift_transitions" if c == TRANSITIONS else f"drift_{c}"
+                ok = m["psi"] <= psi_threshold
+            if r["chi2"] is not None:
+                m["chi2"], m["dof"] = r["chi2"], float(r["dof"])
+                if m["dof"] > 0:
+                    m["chi2_z"] = _chi2_z(m["chi2"], m["dof"])
+            rows.append((name, ok, m))
     verd = local_frame(
         spark,
         [(run_id, "__all__", name, ok, 0, metrics) for name, ok, metrics in rows],
-        "run_id string, partition_key string, check_name string, pass boolean,"
-        " violation_count long, metrics map<string, double>",
+        verd_schema,
     )
     verd.coalesce(1).write.mode("overwrite").parquet(verd_dir)
     append_ledger(
         spark, out_dir, run_id, PASS_DRIFT, [("__all__", len(rows), 0, time.time() - t0)]
     )
-    return spark.read.parquet(verd_dir)
+    return verd  # the rows just written; never read back
 
 
 PASS_PROFILE_DIFF = "profile_diff"

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
 from schema_infer_plugin_spark.checks.custom import expr_suite_violations
+from schema_infer_plugin_spark.checks.drift import windowed_counts
 from schema_infer_plugin_spark.plans.validate import default_rules, validate_transcripts
 from schema_infer_plugin_spark.schema import well_keyed
 
@@ -153,35 +154,22 @@ def windowed_histogram_stream(
     continuous drift monitoring: the stream maintains one (window, bucket)
     counter per open window (watermark bounds state to O(open windows ×
     |bucket domain|), never O(stream)), and closed windows emit exact
-    counts in append mode. The batch half
-    (checks/drift.windowed_drift_report) joins the emitted rows against a
-    persisted baseline for per-window PSI/KL/JS/chi2 — "which day drifted",
-    computed without ever re-scanning the stream. Counts (not frequencies)
-    are what's emitted precisely so the chi-square leg stays computable —
-    the same reason write_histograms persists cnt.
+    counts in append mode. The batch half (checks/drift.drift_terms /
+    drift_compare with ``by=("window_start", "window_end")``) compares the
+    emitted rows with a persisted baseline for per-window PSI/KL/JS/chi2 —
+    "which day drifted", computed without ever re-scanning the stream.
+    Counts (not frequencies) are what's emitted precisely so the chi-square
+    leg stays computable — the same reason write_histograms persists cnt.
 
-    Output: (window_start, window_end, bucket, cnt). NULL values bucket as
-    '<null>'; rows later than the watermark are dropped from the MONITORING
-    counts only (same posture as windowed_violation_rates — the validation
-    path never watermarks violations away).
+    Output: checks/drift.windowed_counts rows (window_start, window_end,
+    column, bucket, v, cnt) — the batch face's counts, row for row. NULL
+    values bucket as '<null>'; rows later than the watermark are dropped
+    from the MONITORING counts only (same posture as
+    windowed_violation_rates — the validation path never watermarks
+    violations away).
     """
-    bucket = F.coalesce(F.col(column).cast("string"), F.lit("<null>"))
-    return (
-        # cast like the batch faces so window bounds are the same parquet
-        # type whatever the stream input's timestamp flavor (NTZ vs LTZ)
-        stream_df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-        .withWatermark(ts_col, watermark_delay)
-        .groupBy(
-            F.window(F.col(ts_col), window_duration), bucket.alias("bucket")
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "bucket",
-            "cnt",
-        )
-    )
+    stream = _watermarked(stream_df, ts_col, watermark_delay)
+    return windowed_counts(stream, [column], None, ts_col, window_duration)
 
 
 def windowed_grid_counts_stream(
@@ -200,39 +188,27 @@ def windowed_grid_counts_stream(
     baseline artifact, clamp semantics as documented there). Quantization is
     a pure per-row projection, so the same watermark/append mechanics apply
     unchanged; state is O(open windows × n_buckets). The batch face with
-    identical output is checks/ksdrift.windowed_grid_counts, and
-    checks/ksdrift.windowed_ks_report turns the emitted rows into per-window
+    identical output is checks/drift.windowed_counts, and
+    checks/drift.drift_compare turns the emitted rows into per-window
     KS/W1/chi2 against the baseline — continuous numeric drift monitoring
     with zero stream re-scans.
 
-    Output: (window_start, window_end, v double, cnt long). NULL values are
-    dropped (a grid count is a statement about values); NULL event times are
-    dropped by the watermark operator as in every windowed aggregation here.
-    The event-time column is cast to TIMESTAMP exactly like the batch face,
-    so the two faces' window bounds are the same parquet type (an NTZ stream
-    input would otherwise emit isAdjustedToUTC=false columns that clash with
-    batch-face backfills of the same dataset).
+    Output: (window_start, window_end, column, bucket NULL, v, cnt). NULL
+    values are dropped (a grid count is a statement about values); NULL
+    event times are not counted, as in every windowed aggregation here.
     """
-    from schema_infer_plugin_spark.checks.ksdrift import grid_quantize
+    grids = {column: (lo, hi, n_buckets)}
+    stream = _watermarked(stream_df, ts_col, watermark_delay)
+    return windowed_counts(stream, [], grids, ts_col, window_duration)
 
-    vals = stream_df.select(
-        F.col(ts_col).cast("timestamp").alias(ts_col),
-        F.col(column).cast("double").alias("raw"),
-    ).filter(F.col("raw").isNotNull())
-    return (
-        vals.withWatermark(ts_col, watermark_delay)
-        .groupBy(
-            F.window(F.col(ts_col), window_duration),
-            grid_quantize(F.col("raw"), lo, hi, n_buckets).alias("v"),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "v",
-            "cnt",
-        )
-    )
+
+def _watermarked(stream_df: DataFrame, ts_col: str, delay: str) -> DataFrame:
+    """The watermark on ``ts_col`` cast to TIMESTAMP like the batch face, so
+    window bounds are the same parquet type whatever the stream input's
+    timestamp flavor (an NTZ input would otherwise emit isAdjustedToUTC=false
+    columns that clash with batch-face backfills of the same dataset)."""
+    cast = stream_df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
+    return cast.withWatermark(ts_col, delay)
 
 
 #: Output schema of the stateful cross-batch check.

@@ -6,10 +6,12 @@ from __future__ import annotations
 
 import math
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# this checkout's root, wherever it is cloned — never another copy's package
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"

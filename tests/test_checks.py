@@ -73,7 +73,7 @@ def test_domains_micro(spark):
 
 
 def test_drift_detects_shift(spark):
-    from schema_infer_plugin_spark.checks import drift_stats, histogram
+    from schema_infer_plugin_spark.checks import drift_compare, drift_counts
     from pyspark.sql import functions as F
 
     base = spark.range(1000).select(
@@ -82,18 +82,11 @@ def test_drift_detects_shift(spark):
     cur = spark.range(1000).select(
         F.when(F.col("id") % 10 == 0, "user").otherwise("assistant").alias("role")
     )
-    total_psi = (
-        drift_stats(histogram(cur, "role"), histogram(base, "role"))
-        .agg(F.sum("psi_term").alias("psi"))
-        .collect()[0]["psi"]
-    )
-    assert total_psi > 0.25  # industry "significant drift" threshold
-    none_psi = (
-        drift_stats(histogram(base, "role"), histogram(base, "role"))
-        .agg(F.sum("psi_term").alias("psi"))
-        .collect()[0]["psi"]
-    )
-    assert abs(none_psi) < 1e-9
+    psi = lambda c, b: drift_compare(  # noqa: E731
+        drift_counts(c, ["role"]), drift_counts(b, ["role"])
+    ).first()["psi"]
+    assert psi(cur, base) > 0.25  # industry "significant drift" threshold
+    assert abs(psi(base, base)) < 1e-9
 
 
 def test_entry_smoke(spark):

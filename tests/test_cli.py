@@ -375,7 +375,7 @@ def test_estimate_cli(spark, tmp_path, capsys):
 def test_window_drift_cli(spark, tmp_path, capsys):
     """window-drift: self vs own baseline exits 0 (every window within PSI);
     an assistant-heavy slice drifts every window and exits 1; a freq-only
-    baseline is rejected with a clear error."""
+    baseline fails loudly with advice to re-run write_histograms."""
     import pytest
     from pyspark.sql import functions as F
 
@@ -391,7 +391,7 @@ def test_window_drift_cli(spark, tmp_path, capsys):
                "--out", str(tmp_path / "w1")])
     assert rc == 0
     rep = spark.read.parquet(os.path.join(str(tmp_path / "w1"), "window_drift"))
-    assert rep.count() > 0 and rep.filter(F.col("chi2_term").isNull()).count() == 0
+    assert rep.count() > 0 and rep.filter(F.col("chi2").isNull()).count() == 0
 
     # shifted current: role distribution differs in every window
     shifted_base = str(tmp_path / "shifted_base")
@@ -414,7 +414,7 @@ def test_window_drift_cli(spark, tmp_path, capsys):
     histogram(t, "role").coalesce(1).write.parquet(
         os.path.join(old, "histograms", "role")
     )
-    with pytest.raises(SystemExit, match="count-bearing"):
+    with pytest.raises(Exception, match="count-bearing: re-run write_histograms"):
         main(["window-drift", "--input", "synth:1000", "--baseline", old,
               "--out", str(tmp_path / "w3")])
 
@@ -461,10 +461,31 @@ def test_window_drift_numeric_cli(spark, tmp_path, capsys):
 
 def test_window_drift_numeric_missing_baseline(spark, tmp_path):
     """A baseline dir without the histograms_numeric/<col> artifact exits
-    with a clear SystemExit, not a raw AnalysisException."""
+    with a clear SystemExit, not a raw AnalysisException — so does one
+    without the histograms/<col> artifact, on the categorical leg."""
     import pytest
 
     with pytest.raises(SystemExit, match="no numeric baseline"):
         main(["window-drift", "--input", "synth:200",
               "--baseline", str(tmp_path / "nowhere"),
               "--numeric-column", "turn_idx", "--out", str(tmp_path / "o")])
+    with pytest.raises(SystemExit, match="no histogram baseline"):
+        main(["window-drift", "--input", "synth:200",
+              "--baseline", "file://" + str(tmp_path / "nowhere"),
+              "--out", str(tmp_path / "o")])
+
+
+def test_window_drift_uri_baseline(spark, tmp_path):
+    """A ``file://`` baseline URI is read like the local path on both legs:
+    "missing" is Spark's answer, so any Hadoop filesystem URI works."""
+    from schema_infer_plugin_spark.plans.runner import write_histograms
+    from schema_infer_plugin_spark.sources.synth import synth_transcripts
+
+    base = str(tmp_path / "base")
+    write_histograms(spark, synth_transcripts(spark, 300), base, ["role"], ["turn_idx"])
+    for leg, sub in (([], "window_drift"), (["--numeric-column", "turn_idx"], "window_ks")):
+        out = str(tmp_path / sub)
+        rc = main(["window-drift", "--input", "synth:300", "--baseline", "file://" + base,
+                   "--psi-threshold", "10", "--ks-threshold", "1.0", "--out", out, *leg])
+        assert rc == 0
+        assert spark.read.parquet(os.path.join(out, sub)).count() > 0

@@ -225,23 +225,27 @@ def test_pack_text_col_and_arg_validation(spark):
 
 
 def test_ks_w1_from_counts_matches_separate_stats(spark):
-    """ks_w1_from_counts (the runner's fused drift statistic) must agree with
-    ks_from_counts and wasserstein_statistic computed separately."""
+    """drift_compare over two same-grid grid_counts frames (the runner's
+    fused drift statistic) gives KS and W1 in one row, agreeing with the
+    two-frame ks_statistic / wasserstein_statistic entry points."""
+    from pyspark.sql import functions as F
+
+    from schema_infer_plugin_spark.checks.drift import drift_compare
     from schema_infer_plugin_spark.checks.ksdrift import (
         grid_counts,
-        ks_from_counts,
-        ks_w1_from_counts,
+        ks_statistic,
         wasserstein_statistic,
     )
 
     a = spark.createDataFrame([(float(v),) for v in range(20)], "v double")
     b = spark.createDataFrame([(float(v) + 5.0,) for v in range(20)], "v double")
-    ca = grid_counts(a, "v", 0.0, 24.0, n_buckets=100)
-    cb = grid_counts(b, "v", 0.0, 24.0, n_buckets=100)
-    fused = ks_w1_from_counts(ca, cb).collect()[0]
-    ks = ks_from_counts(ca, cb).collect()[0]
-    assert fused["ks_stat"] == ks["ks_stat"] and fused["ks_at"] == ks["ks_at"]
-    assert fused["n_a"] == ks["n_a"] == 20 and fused["n_b"] == ks["n_b"] == 20
-    # W1 of a +5 shift inside the grid = 5 (quantized onto the same grid)
+    stacked = lambda d: grid_counts(d, "v", 0.0, 24.0, n_buckets=100).select(  # noqa: E731
+        F.lit("v").alias("column"), F.lit(None).cast("string").alias("bucket"), "v", "cnt"
+    )
+    fused = drift_compare(stacked(b), stacked(a)).collect()[0]
+    ks = ks_statistic(a, b, "v", n_buckets=None).collect()[0]
+    assert fused["ks_stat"] == ks["ks_stat"] == 0.25  # 5/20 of mass strictly separated
+    assert fused["n_base"] == ks["n_a"] == 20 and fused["n_cur"] == ks["n_b"] == 20
+    # W1 of a +5 shift = 5 exactly on the raw values, ≈5 on the 0.24-wide grid
+    assert wasserstein_statistic(a, b, "v", n_buckets=None).collect()[0]["w1"] == 5.0
     assert abs(fused["w1"] - 5.0) < 0.25
-    assert fused["ks_stat"] == 0.25  # 5/20 of mass strictly separated

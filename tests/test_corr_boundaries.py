@@ -219,16 +219,29 @@ def test_transition_drift_model(spark):
 
 
 # ---------------------------------------------------------------------------
-# chi2_terms / transition_chi2
+# drift_terms' chi-square column / transition_chi2
 # ---------------------------------------------------------------------------
 
 
-def test_chi2_terms_hand_computed(spark):
-    from schema_infer_plugin_spark.checks import chi2_terms
+def _counts(spark, rows):
+    """(bucket, cnt) pairs as one categorical series in the drift_counts shape."""
+    return spark.createDataFrame(
+        [("c", b, None, n) for b, n in rows], "column: string, bucket: string, v: double, cnt: long"
+    )
 
-    base = spark.createDataFrame([("a", 10), ("b", 30)], "bucket: string, cnt: long")
-    cur = spark.createDataFrame([("a", 20), ("b", 20)], "bucket: string, cnt: long")
-    out = {r["bucket"]: r for r in chi2_terms(cur, base).collect()}
+
+def _chi2_terms(spark, cur, base):
+    """drift_terms rows by bucket for two (bucket, cnt) lists."""
+    from schema_infer_plugin_spark.checks import drift_terms
+
+    got = drift_terms(_counts(spark, cur), _counts(spark, base)).collect()
+    return {r["bucket"]: r for r in got}
+
+
+def test_chi2_terms_hand_computed(spark):
+    base = [("a", 10), ("b", 30)]
+    cur = [("a", 20), ("b", 20)]
+    out = _chi2_terms(spark, cur, base)
     # classic 2x2: chi2 = N(ad-bc)^2/((a+b)(c+d)(a+c)(b+d))
     #            = 80*(10*20-30*20)^2/(40*40*30*50) = 16/3
     assert out["a"]["n_base"] == 40 and out["a"]["n_cur"] == 40
@@ -238,15 +251,13 @@ def test_chi2_terms_hand_computed(spark):
     assert math.isclose(total, 80 * 400.0**2 / (40 * 40 * 30 * 50))
 
     # one-sided bucket contributes a finite term; identical frames -> all 0
-    cur2 = spark.createDataFrame([("a", 10), ("c", 5)], "bucket: string, cnt: long")
-    out2 = {r["bucket"]: r for r in chi2_terms(cur2, base).collect()}
+    out2 = _chi2_terms(spark, [("a", 10), ("c", 5)], base)
     assert out2["c"]["o_base"] == 0 and out2["c"]["chi2_term"] > 0
-    same = {r["bucket"]: r for r in chi2_terms(base, base).collect()}
+    same = _chi2_terms(spark, base, base)
     assert all(r["chi2_term"] == 0.0 for r in same.values())
 
     # an empty side has no homogeneity question: NULL terms, never NaN/Inf
-    empty = spark.createDataFrame([], "bucket: string, cnt: long")
-    for r in chi2_terms(cur, empty).collect():
+    for r in _chi2_terms(spark, cur, []).values():
         assert r["chi2_term"] is None
 
 
@@ -293,17 +304,13 @@ from hypothesis import strategies as st  # noqa: E402
     )
 )
 def test_chi2_terms_matches_python_model(spark, counts):
-    """chi2_terms on arbitrary count frames == a pure-Python model of the
-    per-bucket algebraic form, and the summed statistic equals the textbook
-    expected-count chi-square (algebraic identity)."""
-    from schema_infer_plugin_spark.checks import chi2_terms
-
+    """drift_terms' chi-square column on arbitrary count frames == a
+    pure-Python model of the per-bucket algebraic form, and the summed
+    statistic equals the textbook expected-count chi-square (algebraic
+    identity)."""
     base = {b: v[0] for b, v in counts.items() if v[0] > 0}
     cur = {b: v[1] for b, v in counts.items() if v[1] > 0}
-    mk = lambda d: spark.createDataFrame(  # noqa: E731
-        [(b, c) for b, c in sorted(d.items())], "bucket: string, cnt: long"
-    )
-    got = {r["bucket"]: r for r in chi2_terms(mk(cur), mk(base)).collect()}
+    got = _chi2_terms(spark, sorted(cur.items()), sorted(base.items()))
     n_b, n_c = sum(base.values()), sum(cur.values())
     want_buckets = set(base) | set(cur)
     assert set(got) == want_buckets

@@ -1,7 +1,10 @@
-"""One drift-series definition (checks/drift.drift_counts): the baseline
-artifacts write_histograms persists and the verdicts run_drift computes equal
-the per-series reference helpers, each side reads its input a bounded number
-of times, and a corrupt baseline fails loudly while a missing one is skipped.
+"""One drift-series definition (checks/drift.drift_counts) and one drift
+comparison (checks/drift.drift_compare): the baseline artifacts
+write_histograms persists and the verdicts run_drift computes equal the
+per-series reference count helpers compared by drift_compare, each side
+reads its input a bounded number of times, run_drift runs a bounded number
+of Spark jobs, and a corrupt baseline fails loudly while a missing one is
+skipped.
 """
 
 from __future__ import annotations
@@ -15,8 +18,8 @@ from pyspark.sql import Window, functions as F
 from pyspark.sql.types import StructType
 
 from schema_infer_plugin_spark.checks.alternation import transition_buckets
-from schema_infer_plugin_spark.checks.drift import bucket_counts, drift_and_chi2_terms
-from schema_infer_plugin_spark.checks.ksdrift import grid_counts, ks_w1_from_counts
+from schema_infer_plugin_spark.checks.drift import bucket_counts, drift_compare
+from schema_infer_plugin_spark.checks.ksdrift import grid_counts
 from schema_infer_plugin_spark.plans.runner import (
     KS_GRID_BUCKETS,
     run_drift,
@@ -53,18 +56,17 @@ def _with_freq(counts, name: str):
     )
 
 
-def _cat_reference(cur, base) -> dict[str, float]:
-    """run_drift's categorical metrics from the reference helpers."""
-    a = (
-        drift_and_chi2_terms(cur, base.select("bucket", "cnt"))
-        .agg(
-            F.sum("psi_term").alias("psi"), F.sum("kl_term").alias("kl"),
-            F.sum("js_term").alias("js"), F.sum("chi2_term").alias("chi2"),
-            F.count(F.lit(1)).alias("k"),
-        )
-        .first()
-    )
-    return {"psi": a["psi"], "kl": a["kl"], "js": a["js"], "chi2": a["chi2"], "dof": a["k"] - 1.0}
+def _stacked(counts, name: str):
+    """A reference count frame in the drift_counts shape: a categorical
+    (bucket, cnt) frame gets v NULL, a grid (v, cnt) frame bucket NULL."""
+    bucket = "bucket" if "bucket" in counts.columns else F.lit(None).cast("string").alias("bucket")
+    v = "v" if "v" in counts.columns else F.lit(None).cast("double").alias("v")
+    return counts.select(F.lit(name).alias("column"), bucket, v, "cnt")
+
+
+def _reference(cur, base, name: str):
+    """drift_compare's one row for a series, over reference count frames."""
+    return drift_compare(_stacked(cur, name), _stacked(base, name)).first()
 
 
 def test_drift_artifacts_and_verdicts_match_reference_helpers(spark, tmp_path):
@@ -117,14 +119,15 @@ def test_drift_artifacts_and_verdicts_match_reference_helpers(spark, tmp_path):
             ),
         }
         for name, (cur, ref_base) in current.items():
-            for k, v in _cat_reference(cur, ref_base).items():
-                assert got[name][k] == v, (name, k)
+            ref = _reference(cur, ref_base.select("bucket", "cnt"), "c")
+            for k in ("psi", "kl", "js", "chi2", "dof"):
+                assert got[name][k] == ref[k], (name, k)
         assert got["drift_role"]["psi"] > 0.2  # the shift is real
-        ks = ks_w1_from_counts(
-            want["histograms_numeric/turn_idx"].select("v", "cnt"),
+        ks = _reference(
             grid_counts(s, "turn_idx", float(lo), float(hi), KS_GRID_BUCKETS),
-            with_chi2=True,
-        ).first()
+            want["histograms_numeric/turn_idx"].select("v", "cnt"),
+            "turn_idx",
+        )
         m = got["ks_turn_idx"]
         assert (m["ks"], m["ks_at"], m["w1"]) == (ks["ks_stat"], ks["ks_at"], ks["w1"])
         assert (m["chi2"], m["dof"]) == (ks["chi2"], float(ks["dof"]))
@@ -216,3 +219,44 @@ def test_corrupt_drift_baseline_raises_missing_is_skipped(spark, tmp_path, leg):
             columns=[], numeric_columns=[],
         )
         assert none.count() == 0
+
+
+def test_run_drift_spark_jobs_bounded(spark, tmp_path):
+    """One run_drift call runs at most 7 Spark jobs, whatever the number of
+    series: one bounded collect of the numeric grids, ONE drift_compare
+    collect for every verdict (4 jobs under adaptive execution, one per
+    stage: the transition window's exchange, the count aggregation's, the
+    comparison's one exchange and the result), the verdict write and the
+    ledger append. Baselines are read with declared schemas (no inference
+    job) and the verdicts are never read back. A collect per series made it
+    20 or more."""
+    t = synth_transcripts(spark, 300).withColumn("text_len", F.length("text"))
+    base = str(tmp_path / "base")
+    write_histograms(spark, t, base, numeric_columns=["turn_idx", "text_len"])
+    sc = spark.sparkContext
+    sc.setJobGroup("run-drift-jobs", "run_drift job count")
+    try:
+        v = run_drift(
+            spark, t, str(tmp_path / "cur"), base, run_id="j",
+            numeric_columns=["turn_idx", "text_len"],
+        )
+        jobs = list(sc.statusTracker().getJobIdsForGroup("run-drift-jobs"))
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(jobs) <= 7, jobs
+    assert {r["check_name"] for r in v.collect()} == {
+        "drift_role", "drift_tool", "drift_transitions", "ks_turn_idx", "ks_text_len"
+    }
+
+
+def test_explicit_empty_columns_mean_none(spark, tmp_path):
+    """An explicit ``columns=[]`` writes no categorical baseline (only the
+    transitions series) and run_drift compares none — only None takes the
+    default role/tool columns, on both sides."""
+    t = synth_transcripts(spark, 200)
+    base = str(tmp_path / "base")
+    write_histograms(spark, t, base, columns=[], numeric_columns=[])
+    assert os.listdir(os.path.join(base, "histograms")) == ["__transitions__"]
+    assert not os.path.exists(os.path.join(base, "histograms_numeric"))
+    v = run_drift(spark, t, str(tmp_path / "cur"), base, run_id="e", columns=[], numeric_columns=[])
+    assert [r["check_name"] for r in v.collect()] == ["drift_transitions"]

@@ -55,43 +55,30 @@ def test_drift_pass_self_vs_shifted(spark, tmp_path):
 
 
 def test_drift_legacy_freq_only_baseline(spark, tmp_path):
-    """A pre-r5 baseline artifact (freq column only, no cnt): the drift pass
-    takes the legacy drift_stats path with IDENTICAL psi/kl/js (freqs are the
-    same cnt/Σcnt division) and simply omits the chi2/dof metrics."""
+    """A pre-r5 baseline artifact (freq column only, no cnt) fails the drift
+    pass loudly — it carries no counts, so the chi-square cannot be computed
+    and there is no second frequency-only comparison path — with advice to
+    re-run write_histograms."""
     import os
+
+    import pytest
 
     from schema_infer_plugin_spark.checks.drift import histogram
 
-    t = synth_transcripts(spark, 1_000).persist()
-    try:
-        base_new = str(tmp_path / "new")
-        write_histograms(spark, t, base_new, ["role"], numeric_columns=[])
-        base_old = str(tmp_path / "old")
-        (
-            histogram(t, "role")
-            .withColumn("column", F.lit("role"))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(os.path.join(base_old, "histograms", "role"))
-        )
-        shifted = t.filter(
-            (F.col("role") == "assistant") | (F.pmod(F.xxhash64("conv_id"), 4) == 0)
-        )
-        v_new = run_drift(
-            spark, shifted, str(tmp_path / "rn"), base_new, run_id="rn",
+    t = synth_transcripts(spark, 1_000)
+    base_old = str(tmp_path / "old")
+    (
+        histogram(t, "role")
+        .withColumn("column", F.lit("role"))
+        .coalesce(1)
+        .write.mode("overwrite")
+        .parquet(os.path.join(base_old, "histograms", "role"))
+    )
+    with pytest.raises(Exception, match="re-run write_histograms"):
+        run_drift(
+            spark, t, str(tmp_path / "ro"), base_old, run_id="ro",
             columns=["role"], numeric_columns=[],
-        ).collect()
-        v_old = run_drift(
-            spark, shifted, str(tmp_path / "ro"), base_old, run_id="ro",
-            columns=["role"], numeric_columns=[],
-        ).collect()
-        m_new = dict(v_new[0]["metrics"])
-        m_old = dict(v_old[0]["metrics"])
-        assert "chi2" in m_new and "chi2" not in m_old
-        for k in ("psi", "kl", "js"):
-            assert m_new[k] == m_old[k]  # bit-identical across the two paths
-    finally:
-        t.unpersist()
+        )
 
 
 def test_numeric_ks_drift_pass(spark, tmp_path):
@@ -208,86 +195,69 @@ def test_schema_evolution_pass(spark, tmp_path):
 
 
 def test_windowed_drift_report_matches_per_window(spark):
-    """windowed_drift_report rows for each window are EXACTLY
-    drift_and_chi2_terms(that window's counts, baseline) — the windowed grid
-    (with the phantom-bucket filter) reproduces the per-window full-outer
-    join bit for bit, including buckets unseen in a window (o_cur=0) and
-    window-only buckets (o_base=0)."""
+    """drift_terms keyed by window against ONE baseline (crossed with the
+    windows) gives, for each window, EXACTLY the unwindowed drift_terms of
+    that window's counts alone — including buckets unseen in a window
+    (o_cur=0) and window-only buckets (o_base=0), and never a phantom row
+    for a bucket seen only in another window."""
     import datetime as dt
 
-    from schema_infer_plugin_spark.checks.drift import (
-        drift_and_chi2_terms,
-        windowed_drift_report,
-    )
+    from schema_infer_plugin_spark.checks.drift import drift_terms
 
+    cols = ("freq_base", "freq_cur", "psi_term", "kl_term", "js_term",
+            "o_base", "o_cur", "n_base", "n_cur", "chi2_term")
+    schema = "column: string, bucket: string, v: double, cnt: long"
     base = spark.createDataFrame(
-        [("a", 10), ("b", 30), ("c", 5)], "bucket: string, cnt: long"
+        [("role", b, None, n) for b, n in (("a", 10), ("b", 30), ("c", 5))], schema
     )
     w1 = (dt.datetime(2024, 1, 1), dt.datetime(2024, 1, 2))
     w2 = (dt.datetime(2024, 1, 2), dt.datetime(2024, 1, 3))
+    per_window = {w1: [("a", 5), ("b", 5)], w2: [("b", 2), ("d", 3)]}
     wc = spark.createDataFrame(
-        [(w1[0], w1[1], "a", 5), (w1[0], w1[1], "b", 5),
-         (w2[0], w2[1], "b", 2), (w2[0], w2[1], "d", 3)],
-        "window_start: timestamp, window_end: timestamp, bucket: string, cnt: long",
+        [(*w, "role", b, None, n) for w, rows in per_window.items() for b, n in rows],
+        "window_start: timestamp, window_end: timestamp, " + schema,
     )
-    rep = windowed_drift_report(wc, base).collect()
     got = {}
-    for r in rep:
-        got.setdefault(r["window_start"], {})[r["bucket"]] = tuple(
-            r[c] for c in ("freq_base", "freq_cur", "psi_term", "kl_term",
-                           "js_term", "o_base", "o_cur", "n_base", "n_cur",
-                           "chi2_term")
-        )
-    for win, rows in ((w1, [("a", 5), ("b", 5)]), (w2, [("b", 2), ("d", 3)])):
-        cur = spark.createDataFrame(rows, "bucket: string, cnt: long")
-        want = {
-            r["bucket"]: tuple(
-                r[c] for c in ("freq_base", "freq_cur", "psi_term", "kl_term",
-                               "js_term", "o_base", "o_cur", "n_base", "n_cur",
-                               "chi2_term")
-            )
-            for r in drift_and_chi2_terms(cur, base).collect()
-        }
+    for r in drift_terms(wc, base, by=("window_start", "window_end")).collect():
+        got.setdefault(r["window_start"], {})[r["bucket"]] = tuple(r[c] for c in cols)
+    for win, rows in per_window.items():
+        cur = spark.createDataFrame([("role", b, None, n) for b, n in rows], schema)
+        want = {r["bucket"]: tuple(r[c] for c in cols) for r in drift_terms(cur, base).collect()}
         assert got[win[0]] == want  # bit-identical per window
 
 
 def test_windowed_ks_report_matches_per_window(spark):
-    """windowed_ks_report rows for each window equal ks_w1_from_counts(
-    baseline, that window's counts, with_chi2=True) — the windowed grid with
-    the unoccupied-point filter reproduces the unwindowed statistics per
-    window, including W1 interval merging across dropped grid points and the
-    chi2/dof pair; n_cur/n_base map to the unwindowed n_b/n_a."""
+    """drift_compare keyed by window against ONE grid baseline gives, for
+    each window, the unwindowed drift_compare of that window's counts alone
+    — a grid point occupied only in another window is no cell here, so W1
+    intervals merge across it and the chi2/dof pair is unchanged."""
     import datetime as dt
 
     import pytest
 
-    from schema_infer_plugin_spark.checks.ksdrift import (
-        ks_w1_from_counts,
-        windowed_ks_report,
-    )
+    from schema_infer_plugin_spark.checks.drift import drift_compare
 
+    schema = "column: string, bucket: string, v: double, cnt: long"
     base = spark.createDataFrame(
-        [(0.0, 10), (4.0, 30), (8.0, 5), (12.0, 4)], "v: double, cnt: long"
+        [("x", None, v, n) for v, n in ((0.0, 10), (4.0, 30), (8.0, 5), (12.0, 4))], schema
     )
     wa = (dt.datetime(2024, 1, 1), dt.datetime(2024, 1, 2))
     wb = (dt.datetime(2024, 1, 2), dt.datetime(2024, 1, 3))
+    # 16.0 exists in window wb ONLY
+    per_window = {wa: [(0.0, 5), (8.0, 7)], wb: [(4.0, 2), (16.0, 3)]}
     wc = spark.createDataFrame(
-        [(*wa, 0.0, 5), (*wa, 8.0, 7),
-         # 16.0 exists in this window ONLY: in the other window the
-         # (window, 16.0) grid point is unoccupied on both sides and dropped
-         (*wb, 4.0, 2), (*wb, 16.0, 3)],
-        "window_start: timestamp, window_end: timestamp, v: double, cnt: long",
+        [(*w, "x", None, v, n) for w, rows in per_window.items() for v, n in rows],
+        "window_start: timestamp, window_end: timestamp, " + schema,
     )
-    rep = {r["window_start"]: r for r in windowed_ks_report(wc, base).collect()}
+    rep = drift_compare(wc, base, by=("window_start", "window_end")).collect()
+    rep = {r["window_start"]: r for r in rep}
     assert set(rep) == {wa[0], wb[0]}
-    for win, rows in ((wa, [(0.0, 5), (8.0, 7)]), (wb, [(4.0, 2), (16.0, 3)])):
-        cur = spark.createDataFrame(rows, "v: double, cnt: long")
-        want = ks_w1_from_counts(base, cur, with_chi2=True).collect()[0]
+    for win, rows in per_window.items():
+        cur = spark.createDataFrame([("x", None, v, n) for v, n in rows], schema)
+        want = drift_compare(cur, base).collect()[0]
         got = rep[win[0]]
-        assert got["ks_stat"] == want["ks_stat"]
-        assert got["ks_at"] == want["ks_at"]
-        assert got["dof"] == want["dof"]
-        assert (got["n_cur"], got["n_base"]) == (want["n_b"], want["n_a"])
+        for k in ("ks_stat", "ks_at", "dof", "n_cur", "n_base"):
+            assert got[k] == want[k], k
         # double SUMS: same terms, possibly different accumulation order
         assert got["w1"] == pytest.approx(want["w1"], rel=1e-12)
         assert got["chi2"] == pytest.approx(want["chi2"], rel=1e-12)

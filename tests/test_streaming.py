@@ -413,7 +413,9 @@ def test_windowed_histogram_stream_matches_batch(spark, tmp_path):
         .select(
             F.col("window.start").alias("window_start"),
             F.col("window.end").alias("window_end"),
+            F.lit("role").alias("column"),
             "bucket",
+            F.lit(None).cast("double").alias("v"),
             "cnt",
         )
     )
@@ -426,9 +428,9 @@ def test_windowed_histogram_stream_matches_batch(spark, tmp_path):
 
 def test_windowed_grid_counts_stream_matches_batch(spark, tmp_path):
     """Windowed numeric grid counts (complete mode for determinism) equal the
-    batch windowed_grid_counts on the same grid; the watermark is actually in
-    the plan (bounded state, not a silent no-op)."""
-    from schema_infer_plugin_spark.checks.ksdrift import windowed_grid_counts
+    batch face, checks/drift.windowed_counts, on the same grid; the
+    watermark is actually in the plan (bounded state, not a silent no-op)."""
+    from schema_infer_plugin_spark.checks.drift import windowed_counts
     from schema_infer_plugin_spark.streaming.incremental import (
         windowed_grid_counts_stream,
     )
@@ -446,7 +448,7 @@ def test_windowed_grid_counts_stream_matches_batch(spark, tmp_path):
     )
     q.awaitTermination(120)
     got = spark.table("wingrid")
-    want = windowed_grid_counts(t, "turn_idx", 0.0, 64.0, 16, "ts", "1 minute")
+    want = windowed_counts(t, [], {"turn_idx": (0.0, 64.0, 16)}, "ts", "1 minute")
     assert got.count() > 0
     assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
     plan = (
