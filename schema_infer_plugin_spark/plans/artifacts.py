@@ -1,0 +1,163 @@
+"""The one seam between a run and its artifacts: every table a run writes
+under its out dir, and every read of one, goes through this module.
+
+Each artifact is declared once in :data:`ARTIFACTS`: its path under the out
+dir (its name; ``histograms/<col>`` and ``histograms_numeric/<col>`` are
+families), its schema (declared in schema.py), whether it is partitioned on
+``partition_key`` and whether it is append-only. Every read passes the
+declared schema, so none plans a schema-inference job, and a write whose
+columns differ from the declaration raises, so a declared read never
+silently returns NULL columns. "Missing" has one rule, Spark's own
+``PATH_NOT_FOUND``, so any Hadoop filesystem URI (file://, hdfs://, s3a://)
+answers like a local path; every other read error raises.
+
+The ledger is the checkpoint-resume record: each completed bucket (or
+whole-table pass) appends one row, and a restarted run skips what it
+records. Append is its only write mode, so the rows can land in any
+atomic-append table format (Delta, Iceberg). Bucket counts are bounded
+(10^3–10^5 even at 10^12 rows), so collecting completed keys to the driver
+is a few MB at worst. A Pass-B row carries the bucket's per-check violation
+counts (``check_counts``): the run's verdict grid is built from them.
+"""
+
+from __future__ import annotations
+
+import datetime
+import os
+from typing import NamedTuple
+
+from pyspark.errors import AnalysisException
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.types import StructType
+
+from schema_infer_plugin_spark import schema as S
+from schema_infer_plugin_spark.session import local_frame
+
+PARTITION_KEY = "partition_key"
+
+
+class Artifact(NamedTuple):
+    """An artifact's layout: one file, overwritten, unless ``partitioned``
+    (one file per ``partition_key`` directory, each overwritten on its own,
+    rows ordered by ``order`` within it) or ``append`` (one file per write,
+    added)."""
+
+    schema: StructType
+    partitioned: bool = False
+    append: bool = False
+    order: tuple[str, ...] = ()
+
+
+ARTIFACTS = {
+    "profiles": Artifact(S.PROFILE_SCHEMA),
+    "histograms": Artifact(S.HISTOGRAM_SCHEMA),
+    "histograms_numeric": Artifact(S.GRID_SCHEMA),
+    "violations": Artifact(
+        S.VIOLATION_SCHEMA, partitioned=True, order=("conv_id", "turn_idx", "check_name")
+    ),
+    "verdicts": Artifact(S.VERDICT_SCHEMA),
+    # not "_ledger": Spark's file listing ignores underscore-prefixed paths
+    "ledger": Artifact(S.LEDGER_SCHEMA, append=True),
+    "violations_triage": Artifact(S.TRIAGE_SCHEMA),
+    "scorecard": Artifact(S.SCORECARD_SCHEMA),
+    "drift_verdicts": Artifact(S.DRIFT_VERDICT_SCHEMA),
+    "evolution_verdicts": Artifact(S.EVOLUTION_VERDICT_SCHEMA),
+    "profile_diff_verdicts": Artifact(S.PROFILE_DIFF_SCHEMA),
+    "violations_diff_verdicts": Artifact(S.VIOLATIONS_DIFF_SCHEMA),
+    "violations_new": Artifact(S.VIOLATIONS_NEW_SCHEMA),
+}
+
+
+def declared(name: str) -> Artifact:
+    """The declaration of artifact ``name`` (a family member
+    ``histograms/<col>`` is declared by its family)."""
+    return ARTIFACTS[name.split("/")[0]]
+
+
+def write_artifact(
+    spark: SparkSession, out_dir: str, name: str, frame: DataFrame, *metrics: Column
+) -> dict:
+    """Write ``frame`` as artifact ``name`` under ``out_dir``, in its declared
+    layout, and return the write's Observation: the row count ``n`` plus
+    ``metrics``, observed on the write rather than read back. Raises when the
+    frame's column names or types differ from the declaration."""
+    art = declared(name)
+    got, want = (
+        [(f.name, f.dataType.simpleString()) for f in s] for s in (frame.schema, art.schema)
+    )
+    if got != want:
+        raise ValueError(f"artifact {name!r}: frame columns {got} differ from declared {want}")
+    obs = Observation()
+    frame = frame.observe(obs, F.count(F.lit(1)).alias("n"), *metrics)
+    path = os.path.join(out_dir, name)
+    if art.partitioned:
+        # dynamic overwrite replaces only the partitions written, so a
+        # re-run bucket replaces its directory rather than duplicating it
+        frame.repartition(PARTITION_KEY).sortWithinPartitions(*art.order).write.mode(
+            "overwrite"
+        ).option("partitionOverwriteMode", "dynamic").partitionBy(PARTITION_KEY).parquet(path)
+    else:
+        frame.coalesce(1).write.mode("append" if art.append else "overwrite").parquet(path)
+    return obs.get
+
+
+def read_artifact(
+    spark: SparkSession, out_dir: str, name: str, required: bool = True
+) -> DataFrame | None:
+    """Artifact ``name`` under ``out_dir``, read with its declared schema
+    (lazy: no job until used). When nothing is at its path it raises
+    ``FileNotFoundError`` naming the path, or returns None unless
+    ``required``."""
+    path = os.path.join(out_dir, name)
+    try:
+        return spark.read.schema(declared(name).schema).parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+    if required:
+        raise FileNotFoundError(f"no {name} artifact at {path}")
+    return None
+
+
+def read_ledger(spark: SparkSession, out_dir: str) -> DataFrame:
+    """The run's ledger; empty when there is none yet (no completed work)."""
+    ledger = read_artifact(spark, out_dir, "ledger", required=False)
+    return local_frame(spark, [], S.LEDGER_SCHEMA) if ledger is None else ledger
+
+
+def completed_check_counts(
+    spark: SparkSession, out_dir: str, run_id: str, pass_name: str
+) -> dict[str, dict[str, int] | None]:
+    """Each completed bucket of ``run_id``'s ``pass_name`` → its per-check
+    violation counts (None where the row carries none), in one read."""
+    rows = (
+        read_ledger(spark, out_dir)
+        .filter((F.col("run_id") == run_id) & (F.col("pass_name") == pass_name))
+        .select(PARTITION_KEY, "check_counts")
+        .collect()
+    )
+    return {r[PARTITION_KEY]: r["check_counts"] for r in rows}
+
+
+def completed_keys(spark: SparkSession, out_dir: str, run_id: str, pass_name: str) -> set[str]:
+    return set(completed_check_counts(spark, out_dir, run_id, pass_name))
+
+
+def append_ledger(
+    spark: SparkSession,
+    out_dir: str,
+    run_id: str,
+    pass_name: str,
+    bucket_metrics: list[tuple[str, int, int, float]],
+    check_counts: dict[str, dict[str, int]] | None = None,
+) -> None:
+    """Append one row per completed bucket: (key, rows, violations, wall_sec),
+    plus the bucket's per-check violation counts from ``check_counts`` (keyed
+    by bucket; Pass B only, NULL for every other pass)."""
+    now = datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None)
+    counts = check_counts or {}
+    rows = [
+        (run_id, key, pass_name, int(nrows), int(nviol), float(wall), now, counts.get(key))
+        for key, nrows, nviol, wall in bucket_metrics
+    ]
+    write_artifact(spark, out_dir, "ledger", local_frame(spark, rows, S.LEDGER_SCHEMA))

@@ -23,13 +23,18 @@ Murmur3 (Iceberg spec) and never agrees with this engine's
 live buckets; the runner verifies the scheme and refuses to prune when it
 can't (sources/metadata.py sidecar + table-property checks).
 
-Resume: completed buckets are read from the ledger once, at the start, and
-skipped. Violations are written partitioned by ``partition_key`` with
-per-bucket dynamic overwrite, then the bucket's ledger row is appended (a
-crash between the two re-runs the bucket and replaces its directory). The
-ledger row carries the bucket's per-check violation counts, so it is the one
-record of the bucket's outcome: the verdict grid is written once, when the
-run finishes, from those counts — a crashed run leaves no verdicts behind.
+Resume: every artifact is written and read through plans/artifacts.py,
+which declares each one's path, schema and layout, so every read is declared
+and no step infers a schema. Pass B's completed buckets are read from the
+ledger once, at the start, and skipped. Violations are written partitioned
+by ``partition_key`` with per-bucket dynamic overwrite, then the bucket's
+ledger row is appended (a crash between the two re-runs the bucket and
+replaces its directory). The ledger row carries the bucket's per-check
+violation counts, so it is the one record of the bucket's outcome: the
+verdict grid is written once, when the run finishes, from those counts — a
+crashed run leaves no verdicts behind. Every other pass is whole-table
+(:func:`_whole_pass`): its ``__all__`` ledger row marks it done, and a
+resumed call reads back what the first one wrote.
 
 CLI (spark-submit --py-files engine.zip -m runner style)::
 
@@ -46,21 +51,26 @@ import time
 from collections.abc import Callable
 from functools import reduce
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window, functions as F
-from pyspark.sql.types import IntegerType, StructField, StructType
 
 from schema_infer_plugin_spark.checks.alternation import transition_rules
 from schema_infer_plugin_spark.checks.boundaries import boundary_rules
 from schema_infer_plugin_spark.checks.custom import as_rules
 from schema_infer_plugin_spark.operators.profile import profile
-from schema_infer_plugin_spark.plans.ledger import (
+from schema_infer_plugin_spark.plans.artifacts import (
     append_ledger,
     completed_check_counts,
     completed_keys,
+    read_artifact,
+    write_artifact,
 )
 from schema_infer_plugin_spark.plans.validate import default_rules, validate_transcripts
-from schema_infer_plugin_spark.schema import TRANSCRIPTS_SCHEMA, VERDICT_SCHEMA
+from schema_infer_plugin_spark.schema import (
+    BUCKETED_SCHEMA,
+    DRIFT_VERDICT_SCHEMA,
+    EVOLUTION_VERDICT_SCHEMA,
+    VERDICT_SCHEMA,
+)
 from schema_infer_plugin_spark.session import local_frame
 
 PASS_B = "validate"
@@ -125,26 +135,6 @@ def _cell_counts(metrics: dict) -> list[int]:
     return cells
 
 
-def _write_verdicts(
-    spark: SparkSession,
-    verd_dir: str,
-    run_id: str,
-    keys: list[str],
-    counts: dict[str, dict[str, int]],
-) -> None:
-    """The run's whole verdict grid, one row per (bucket, check) built on the
-    driver from ``counts`` (bucket → check → violations) and written once,
-    over any earlier grid, as one unpartitioned file."""
-    rows = [
-        (run_id, k, c, n == 0, n, {"violation_count": float(n)})
-        for k in keys
-        for c, n in counts[k].items()
-    ]
-    local_frame(spark, rows, VERDICT_SCHEMA).coalesce(1).write.mode("overwrite").parquet(
-        verd_dir
-    )
-
-
 def _check_resumable(
     run_id: str, done: dict[str, dict[str, int] | None], check_names: list[str]
 ) -> None:
@@ -166,14 +156,29 @@ def _check_resumable(
             )
 
 
-def _write_observed(df: DataFrame, name: str, path: str, *metrics: Column) -> dict:
-    """Write ``df`` as one parquet file at ``path`` and return its row count
-    ``n`` plus ``metrics``, observed on that write rather than read back."""
-    obs = Observation(name)
-    df.observe(obs, F.count(F.lit(1)).alias("n"), *metrics).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(path)
-    return obs.get
+def _whole_pass(
+    spark: SparkSession,
+    out_dir: str,
+    run_id: str,
+    pass_name: str,
+    name: str,
+    build: Callable[[], DataFrame],
+    *bad: Column,
+) -> DataFrame:
+    """One whole-table pass (its resume granularity is the pass): unless the
+    ledger records ``run_id``'s ``pass_name`` done, write ``build()`` as
+    artifact ``name`` and append the ledger row ``("__all__", rows, bad,
+    wall)``, where ``bad`` is the write's observed metric of that alias (0
+    when none is given). Returns the artifact read with its declared schema,
+    on the fresh path and the resumed one alike."""
+    if "__all__" not in completed_keys(spark, out_dir, run_id, pass_name):
+        t0 = time.time()
+        m = write_artifact(spark, out_dir, name, build(), *bad)
+        wall = time.time() - t0
+        append_ledger(
+            spark, out_dir, run_id, pass_name, [("__all__", m["n"], m.get("bad") or 0, wall)]
+        )
+    return read_artifact(spark, out_dir, name)
 
 
 def run_validation(
@@ -256,8 +261,6 @@ def run_validation(
     counts = dict(done)  # bucket → check → violations, completed below
     pending = [k for k in all_keys if k not in done]
 
-    viol_dir = os.path.join(out_dir, "violations")
-
     pruned: list[str] = []
     if bucket_rows is not None:
         pruned = [k for k in pending if bucket_rows.get(k, 0) == 0]
@@ -300,18 +303,10 @@ def run_validation(
             F.when((b > 0) & (c > 0), (b - 1) * n_checks + c - 1),
             len(batch) * n_checks,
         )
-        # One job: violations written partitioned + stably ordered within bucket.
-        # Dynamic partition overwrite makes a bucket write idempotent: a crash
-        # between data write and ledger append re-runs the bucket and replaces
-        # (not duplicates) its directory.
-        (
-            viol.repartition("partition_key")
-            .sortWithinPartitions("conv_id", "turn_idx", "check_name")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("partition_key")
-            .parquet(viol_dir)
-        )
+        # One job. Each bucket's directory is replaced on its own, so a
+        # crash between this write and the ledger append re-runs the bucket
+        # and replaces (not duplicates) its directory.
+        write_artifact(spark, out_dir, "violations", viol)
         # .get blocks on the completed write action — no extra job
         row_counts = _cell_counts(obs_rows.get)
         viol_counts = _cell_counts(obs_viol.get)
@@ -332,7 +327,13 @@ def run_validation(
             on_batch(batch)
         if fail_after_batches is not None and b_i + 1 >= fail_after_batches:
             raise RuntimeError(f"injected failure after batch {b_i + 1}")
-    _write_verdicts(spark, os.path.join(out_dir, "verdicts"), run_id, all_keys, counts)
+    # the run's whole verdict grid, one row per (bucket, check), written once
+    grid = [
+        (run_id, k, c, n == 0, n, {"violation_count": float(n)})
+        for k in all_keys
+        for c, n in counts[k].items()
+    ]
+    write_artifact(spark, out_dir, "verdicts", local_frame(spark, grid, VERDICT_SCHEMA))
     return {
         "run_id": run_id,
         "buckets": n_buckets,
@@ -353,15 +354,10 @@ def run_profile(
 ) -> DataFrame:
     """Pass A: single-scan wide profile, written once (not bucketed — the
     profile is one agg over the table; resume granularity is the whole pass)."""
-    prof_dir = os.path.join(out_dir, "profiles")
-    done = completed_keys(spark, out_dir, run_id, PASS_A)
-    if "__all__" in done:
-        return spark.read.parquet(prof_dir)
-    t0 = time.time()
-    prof = profile(transcripts, columns or PROFILE_COLS, run_id=run_id)
-    nrows = _write_observed(prof, "profile_rows", prof_dir)["n"]
-    append_ledger(spark, out_dir, run_id, PASS_A, [("__all__", nrows, 0, time.time() - t0)])
-    return spark.read.parquet(prof_dir)
+    return _whole_pass(
+        spark, out_dir, run_id, PASS_A, "profiles",
+        lambda: profile(transcripts, columns or PROFILE_COLS, run_id=run_id),
+    )
 
 
 PASS_DRIFT = "drift"
@@ -402,27 +398,21 @@ def write_histograms(
     hist = drift_counts(transcripts, list(names), grids)
     hist = hist.select("*", (F.col("cnt") / F.sum("cnt").over(per_series)).alias("freq")).persist()
     artifacts = {
-        os.path.join("histograms", c): drift_series(hist, c).select(
+        f"histograms/{c}": drift_series(hist, c).select(
             "bucket", "freq", "cnt", F.lit(c).alias("column")
         )
         for c in names
     }
     for c, (lo, hi, n) in grids.items():
         grid = [F.lit(lo).alias("lo"), F.lit(hi).alias("hi"), F.lit(n).alias("n_buckets")]
-        artifacts[os.path.join("histograms_numeric", c)] = drift_series(
+        artifacts[f"histograms_numeric/{c}"] = drift_series(
             hist, c, numeric=True
         ).select("v", "cnt", *grid)
     try:
-        for sub, frame in artifacts.items():
-            frame.coalesce(1).write.mode("overwrite").parquet(os.path.join(out_dir, sub))
+        for name, frame in artifacts.items():
+            write_artifact(spark, out_dir, name, frame)
     finally:
         hist.unpersist()
-
-
-#: the persisted drift baselines' schemas: declared, so a read plans no
-#: schema-inference job
-HISTOGRAM_SCHEMA = "bucket string, freq double, cnt long, column string"
-GRID_SCHEMA = "v double, cnt long, lo double, hi double, n_buckets int"
 
 
 def read_baseline(
@@ -430,21 +420,14 @@ def read_baseline(
 ) -> DataFrame | None:
     """One persisted drift baseline as a checks/drift.drift_counts slice
     (column, bucket, v, cnt) — a numeric one keeps its grid (lo, hi,
-    n_buckets) — or None when nothing is at its path. "Missing" is Spark's
-    own answer (``PATH_NOT_FOUND``), so any Hadoop filesystem URI (file://,
-    hdfs://, s3a://) answers like a local path; a baseline that exists but
-    does not read raises. A frequency-only artifact (written before counts
+    n_buckets) — or None when nothing is at its path (artifacts.read_artifact's
+    one "missing" rule). A frequency-only artifact (written before counts
     were persisted) fails the first job that reads it."""
-    sub, schema = (
-        ("histograms_numeric", GRID_SCHEMA) if numeric else ("histograms", HISTOGRAM_SCHEMA)
-    )
-    path = os.path.join(baseline_dir, sub, column)
-    try:
-        df = spark.read.schema(schema).parquet(path)
-    except AnalysisException as e:
-        if e.getCondition() == "PATH_NOT_FOUND":
-            return None
-        raise
+    artifact = f"{'histograms_numeric' if numeric else 'histograms'}/{column}"
+    df = read_artifact(spark, baseline_dir, artifact, required=False)
+    if df is None:
+        return None
+    path = os.path.join(baseline_dir, artifact)
     legacy = f"drift baseline {path} is not count-bearing: re-run write_histograms"
     cnt = F.coalesce(F.col("cnt"), F.raise_error(F.lit(legacy))).alias("cnt")
     name = F.lit(column).alias("column")
@@ -486,15 +469,6 @@ def run_drift(
     raises, and so does a frequency-only categorical baseline."""
     from schema_infer_plugin_spark.checks.drift import TRANSITIONS, drift_compare, drift_counts
 
-    done = completed_keys(spark, out_dir, run_id, PASS_DRIFT)
-    verd_dir = os.path.join(out_dir, "drift_verdicts")
-    verd_schema = (
-        "run_id string, partition_key string, check_name string, pass boolean,"
-        " violation_count long, metrics map<string, double>"
-    )
-    if "__all__" in done:
-        return spark.read.schema(verd_schema).parquet(verd_dir)
-    t0 = time.time()
     cols = DRIFT_COLUMNS if columns is None else columns
     num_cols = NUMERIC_DRIFT_COLUMNS if numeric_columns is None else numeric_columns
 
@@ -505,65 +479,60 @@ def run_drift(
         k9 = 2.0 / (9.0 * dof)
         return ((chi2 / dof) ** (1.0 / 3.0) - (1.0 - k9)) / (k9**0.5)
 
-    # (column, numeric) → its baseline as a drift_counts slice
-    bases = {}
-    for c in cols:
-        base = read_baseline(spark, baseline_dir, c)
-        if base is None:
-            raise FileNotFoundError(f"no drift baseline for {c!r} under {baseline_dir}")
-        bases[(c, False)] = base
-    # sequence-structure and numeric drift are lenient: a baseline run that
-    # predates them is skipped, never failed
-    for c, numeric in [(TRANSITIONS, False), *((c, True) for c in num_cols)]:
-        base = read_baseline(spark, baseline_dir, c, numeric)
-        if base is not None:
-            bases[(c, numeric)] = base
-    grids = {}
-    nums = [b.select("column", "lo", "hi", "n_buckets") for (_, n), b in bases.items() if n]
-    if nums:
-        # one bounded collect (≤ n_buckets rows per numeric baseline, fixed
-        # at BUILD time — the index_store posture): every row carries the
-        # grid fixed at baseline time
-        for r in reduce(DataFrame.unionByName, nums).collect():
-            grids[r["column"]] = (float(r["lo"]), float(r["hi"]), int(r["n_buckets"]))
+    def build() -> DataFrame:
+        # (column, numeric) → its baseline as a drift_counts slice
+        bases = {}
+        for c in cols:
+            base = read_baseline(spark, baseline_dir, c)
+            if base is None:
+                raise FileNotFoundError(f"no drift baseline for {c!r} under {baseline_dir}")
+            bases[(c, False)] = base
+        # sequence-structure and numeric drift are lenient: a baseline run that
+        # predates them is skipped, never failed
+        for c, numeric in [(TRANSITIONS, False), *((c, True) for c in num_cols)]:
+            base = read_baseline(spark, baseline_dir, c, numeric)
+            if base is not None:
+                bases[(c, numeric)] = base
+        grids = {}
+        nums = [b.select("column", "lo", "hi", "n_buckets") for (_, n), b in bases.items() if n]
+        if nums:
+            # one bounded collect (≤ n_buckets rows per numeric baseline, fixed
+            # at BUILD time — the index_store posture): every row carries the
+            # grid fixed at baseline time
+            for r in reduce(DataFrame.unionByName, nums).collect():
+                grids[r["column"]] = (float(r["lo"]), float(r["hi"]), int(r["n_buckets"]))
 
-    # (check_name, pass, metrics) — one row per series, in the order read
-    rows: list[tuple[str, bool, dict[str, float]]] = []
-    if bases:
-        slices = [b.select("column", "bucket", "v", "cnt") for b in bases.values()]
-        stacked = reduce(DataFrame.unionByName, slices)
-        cur = drift_counts(transcripts, [c for c, n in bases if not n], grids)
-        got = {(r["column"], r["grid"]): r for r in drift_compare(cur, stacked).collect()}
-        for key in bases:
-            r = got.get(key)
-            if r is None:
-                continue  # empty on both sides: no cells to compare
-            c, numeric = key
-            if numeric:
-                # an empty side has no KS: the worst score, never a pass
-                stat = 1.0 if r["ks_stat"] is None else r["ks_stat"]
-                at, w1 = (0.0 if x is None else x for x in (r["ks_at"], r["w1"]))
-                m = {"ks": stat, "ks_at": at, "w1": w1}
-                name, ok = f"ks_{c}", stat <= ks_threshold
-            else:
-                m = {"psi": r["psi"], "kl": r["kl"], "js": r["js"]}
-                name = "drift_transitions" if c == TRANSITIONS else f"drift_{c}"
-                ok = m["psi"] <= psi_threshold
-            if r["chi2"] is not None:
-                m["chi2"], m["dof"] = r["chi2"], float(r["dof"])
-                if m["dof"] > 0:
-                    m["chi2_z"] = _chi2_z(m["chi2"], m["dof"])
-            rows.append((name, ok, m))
-    verd = local_frame(
-        spark,
-        [(run_id, "__all__", name, ok, 0, metrics) for name, ok, metrics in rows],
-        verd_schema,
-    )
-    verd.coalesce(1).write.mode("overwrite").parquet(verd_dir)
-    append_ledger(
-        spark, out_dir, run_id, PASS_DRIFT, [("__all__", len(rows), 0, time.time() - t0)]
-    )
-    return verd  # the rows just written; never read back
+        # (check_name, pass, metrics) — one row per series, in the order read
+        rows: list[tuple[str, bool, dict[str, float]]] = []
+        if bases:
+            slices = [b.select("column", "bucket", "v", "cnt") for b in bases.values()]
+            stacked = reduce(DataFrame.unionByName, slices)
+            cur = drift_counts(transcripts, [c for c, n in bases if not n], grids)
+            got = {(r["column"], r["grid"]): r for r in drift_compare(cur, stacked).collect()}
+            for key in bases:
+                r = got.get(key)
+                if r is None:
+                    continue  # empty on both sides: no cells to compare
+                c, numeric = key
+                if numeric:
+                    # an empty side has no KS: the worst score, never a pass
+                    stat = 1.0 if r["ks_stat"] is None else r["ks_stat"]
+                    at, w1 = (0.0 if x is None else x for x in (r["ks_at"], r["w1"]))
+                    m = {"ks": stat, "ks_at": at, "w1": w1}
+                    name, ok = f"ks_{c}", stat <= ks_threshold
+                else:
+                    m = {"psi": r["psi"], "kl": r["kl"], "js": r["js"]}
+                    name = "drift_transitions" if c == TRANSITIONS else f"drift_{c}"
+                    ok = m["psi"] <= psi_threshold
+                if r["chi2"] is not None:
+                    m["chi2"], m["dof"] = r["chi2"], float(r["dof"])
+                    if m["dof"] > 0:
+                        m["chi2_z"] = _chi2_z(m["chi2"], m["dof"])
+                rows.append((name, ok, m))
+        verd = [(run_id, "__all__", name, ok, 0, metrics) for name, ok, metrics in rows]
+        return local_frame(spark, verd, DRIFT_VERDICT_SCHEMA)
+
+    return _whole_pass(spark, out_dir, run_id, PASS_DRIFT, "drift_verdicts", build)
 
 
 PASS_PROFILE_DIFF = "profile_diff"
@@ -583,22 +552,15 @@ def run_profile_compare(
     Ledger-resumable; violation_count = non-OK columns."""
     from schema_infer_plugin_spark.plans.compare import profile_compare
 
-    done = completed_keys(spark, out_dir, run_id, PASS_PROFILE_DIFF)
-    verd_dir = os.path.join(out_dir, "profile_diff_verdicts")
-    if "__all__" in done:
-        return spark.read.parquet(verd_dir)
-    t0 = time.time()
-    base = spark.read.parquet(os.path.join(baseline_dir, "profiles"))
-    cur = spark.read.parquet(os.path.join(out_dir, "profiles"))
-    diff = profile_compare(cur, base).withColumn("run_id", F.lit(run_id))
-    m = _write_observed(
-        diff, "profile_diff_rows", verd_dir, F.count_if(F.col("verdict") != "OK").alias("bad")
+    def build() -> DataFrame:
+        base = read_artifact(spark, baseline_dir, "profiles")
+        cur = read_artifact(spark, out_dir, "profiles")
+        return profile_compare(cur, base).withColumn("run_id", F.lit(run_id))
+
+    return _whole_pass(
+        spark, out_dir, run_id, PASS_PROFILE_DIFF, "profile_diff_verdicts", build,
+        F.count_if(F.col("verdict") != "OK").alias("bad"),
     )
-    append_ledger(
-        spark, out_dir, run_id, PASS_PROFILE_DIFF,
-        [("__all__", m["n"], m["bad"], time.time() - t0)],
-    )
-    return spark.read.parquet(verd_dir)
 
 
 PASS_EVOLUTION = "schema_evolution"
@@ -617,32 +579,22 @@ def run_schema_evolution(
     from schema_infer_plugin_spark.operators.generators import fields_from_profile
     from schema_infer_plugin_spark.operators.registry import evolution_issues
 
-    done = completed_keys(spark, out_dir, run_id, PASS_EVOLUTION)
-    verd_dir = os.path.join(out_dir, "evolution_verdicts")
-    if "__all__" in done:
-        return spark.read.parquet(verd_dir)
-    t0 = time.time()
-
     def _fields(d):
-        rows = [r.asDict() for r in spark.read.parquet(os.path.join(d, "profiles")).collect()]
+        rows = [r.asDict() for r in read_artifact(spark, d, "profiles").collect()]
         return fields_from_profile(rows)
 
-    issues = evolution_issues(_fields(baseline_dir), _fields(out_dir), mode)
-    rows = [
-        (run_id, "__all__", f"evolution_{mode.lower()}", False, i.kind, i.field, i.detail)
-        for i in issues
-    ] or [(run_id, "__all__", f"evolution_{mode.lower()}", True, None, None, None)]
-    verd = local_frame(
-        spark,
-        rows,
-        "run_id string, partition_key string, check_name string, pass boolean,"
-        " kind string, field string, detail string",
+    def build() -> DataFrame:
+        issues = evolution_issues(_fields(baseline_dir), _fields(out_dir), mode)
+        rows = [
+            (run_id, "__all__", f"evolution_{mode.lower()}", False, i.kind, i.field, i.detail)
+            for i in issues
+        ] or [(run_id, "__all__", f"evolution_{mode.lower()}", True, None, None, None)]
+        return local_frame(spark, rows, EVOLUTION_VERDICT_SCHEMA)
+
+    return _whole_pass(
+        spark, out_dir, run_id, PASS_EVOLUTION, "evolution_verdicts", build,
+        F.count_if(~F.col("pass")).alias("bad"),
     )
-    verd.coalesce(1).write.mode("overwrite").parquet(verd_dir)
-    append_ledger(
-        spark, out_dir, run_id, PASS_EVOLUTION, [("__all__", len(rows), len(issues), time.time() - t0)]
-    )
-    return spark.read.parquet(verd_dir)
 
 
 def write_triage(
@@ -656,13 +608,9 @@ def write_triage(
     Returns the triage row count (≤ k × #checks)."""
     from schema_infer_plugin_spark.operators.violations import violations_sample
 
-    viol_dir = os.path.join(out_dir, "violations")
-    triage_dir = os.path.join(out_dir, "violations_triage")
-    viol = spark.read.parquet(viol_dir).withColumn(
-        "partition_key", F.col("partition_key").cast("string")
-    )
+    viol = read_artifact(spark, out_dir, "violations")
     sample = violations_sample(viol, k=k).withColumn("run_id", F.lit(run_id))
-    return _write_observed(sample, "triage_rows", triage_dir)["n"]
+    return write_artifact(spark, out_dir, "violations_triage", sample)["n"]
 
 
 PASS_VIOL_DIFF = "violations_diff"
@@ -695,55 +643,46 @@ def run_violations_diff(
     """
     from schema_infer_plugin_spark.operators.violations import violations_sample
 
-    done = completed_keys(spark, out_dir, run_id, PASS_VIOL_DIFF)
-    verd_dir = os.path.join(out_dir, "violations_diff_verdicts")
-    if "__all__" in done:
-        return spark.read.parquet(verd_dir)
-    t0 = time.time()
-
-    def _load(d):
-        return (
-            spark.read.parquet(os.path.join(d, "violations"))
-            .select(*_VIOL_IDENTITY, "expected")
+    def build() -> DataFrame:
+        cur, base = (
+            read_artifact(spark, d, "violations").select(*_VIOL_IDENTITY, "expected")
+            for d in (out_dir, baseline_dir)
         )
-
-    cur, base = _load(out_dir), _load(baseline_dir)
-    tagged = cur.withColumn("in_cur", F.lit(1)).withColumn("in_base", F.lit(0)).unionByName(
-        base.withColumn("in_cur", F.lit(0)).withColumn("in_base", F.lit(1))
-    )
-    per_identity = tagged.groupBy(*_VIOL_IDENTITY).agg(
-        F.max("in_cur").alias("in_cur"),
-        F.max("in_base").alias("in_base"),
-        F.max("expected").alias("expected"),
-    )
-    verdict = (
-        per_identity.groupBy("check_name")
-        .agg(
-            F.sum("in_cur").cast("long").alias("n_current"),
-            F.sum("in_base").cast("long").alias("n_baseline"),
-            F.sum(((F.col("in_cur") == 1) & (F.col("in_base") == 0)).cast("long"))
-            .cast("long")
-            .alias("n_new"),
-            F.sum(((F.col("in_cur") == 0) & (F.col("in_base") == 1)).cast("long"))
-            .cast("long")
-            .alias("n_resolved"),
+        tagged = cur.withColumn("in_cur", F.lit(1)).withColumn("in_base", F.lit(0)).unionByName(
+            base.withColumn("in_cur", F.lit(0)).withColumn("in_base", F.lit(1))
         )
-        .withColumn("pass", F.col("n_new") == 0)
-        .withColumn("run_id", F.lit(run_id))
+        per_identity = tagged.groupBy(*_VIOL_IDENTITY).agg(
+            F.max("in_cur").alias("in_cur"),
+            F.max("in_base").alias("in_base"),
+            F.max("expected").alias("expected"),
+        )
+        verdict = (
+            per_identity.groupBy("check_name")
+            .agg(
+                F.sum("in_cur").cast("long").alias("n_current"),
+                F.sum("in_base").cast("long").alias("n_baseline"),
+                F.sum(((F.col("in_cur") == 1) & (F.col("in_base") == 0)).cast("long"))
+                .cast("long")
+                .alias("n_new"),
+                F.sum(((F.col("in_cur") == 0) & (F.col("in_base") == 1)).cast("long"))
+                .cast("long")
+                .alias("n_resolved"),
+            )
+            .withColumn("pass", F.col("n_new") == 0)
+            .withColumn("run_id", F.lit(run_id))
+        )
+        # bounded sample of the regressions only — the rows a human triages
+        new_rows = per_identity.filter(
+            (F.col("in_cur") == 1) & (F.col("in_base") == 0)
+        ).select(*_VIOL_IDENTITY, "expected")
+        sample = violations_sample(new_rows, k=k).withColumn("run_id", F.lit(run_id))
+        write_artifact(spark, out_dir, "violations_new", sample)
+        return verdict
+
+    return _whole_pass(
+        spark, out_dir, run_id, PASS_VIOL_DIFF, "violations_diff_verdicts", build,
+        F.sum("n_new").alias("bad"),
     )
-    m = _write_observed(verdict, "violations_diff_rows", verd_dir, F.sum("n_new").alias("n_new"))
-    # bounded sample of the regressions only — the rows a human triages
-    new_rows = per_identity.filter(
-        (F.col("in_cur") == 1) & (F.col("in_base") == 0)
-    ).select(*_VIOL_IDENTITY, "expected")
-    violations_sample(new_rows, k=k).withColumn("run_id", F.lit(run_id)).coalesce(
-        1
-    ).write.mode("overwrite").parquet(os.path.join(out_dir, "violations_new"))
-    append_ledger(
-        spark, out_dir, run_id, PASS_VIOL_DIFF,
-        [("__all__", m["n"], m["n_new"] or 0, time.time() - t0)],
-    )
-    return spark.read.parquet(verd_dir)
 
 
 def write_scorecard(spark: SparkSession, out_dir: str, run_id: str = "run0") -> int:
@@ -755,11 +694,9 @@ def write_scorecard(spark: SparkSession, out_dir: str, run_id: str = "run0") -> 
     re-scanned. Returns the scorecard row count (#checks-that-fired + 1)."""
     from schema_infer_plugin_spark.operators.violations import violations_scorecard
 
-    viol_dir = os.path.join(out_dir, "violations")
-    card_dir = os.path.join(out_dir, "scorecard")
-    viol = spark.read.parquet(viol_dir)
+    viol = read_artifact(spark, out_dir, "violations")
     card = violations_scorecard(viol).withColumn("run_id", F.lit(run_id))
-    return _write_observed(card, "scorecard_rows", card_dir)["n"]
+    return write_artifact(spark, out_dir, "scorecard", card)["n"]
 
 
 def resolve_transcripts_input(
@@ -797,8 +734,7 @@ def resolve_transcripts_input(
         ):
             # a bucketed write of no rows leaves no data file to infer a
             # schema from: the table is empty, in the declared schema
-            key = StructField("partition_key", IntegerType())
-            t = local_frame(spark, [], StructType([*TRANSCRIPTS_SCHEMA, key]))
+            t = local_frame(spark, [], BUCKETED_SCHEMA)
         else:
             t = spark.read.parquet(bdir)
         if bucket_rows is None:

@@ -5,6 +5,9 @@ The reference is schema-on-read — schemas exist only as *output*
 that: the input ``transcripts`` table has a fixed declared schema, and the
 reference's inferred-schema / per-message outcomes become typed output tables
 (column profiles, violations, verdicts) that downstream jobs can join and audit.
+Every run artifact's schema is declared here, once, and plans/artifacts.py
+writes and reads each artifact with it: no step infers a schema to read back
+its own output.
 """
 
 from __future__ import annotations
@@ -41,45 +44,78 @@ TRANSCRIPTS_SCHEMA = StructType(
     ]
 )
 
+#: The bucketed input layout (plans/runner.write_bucketed): the transcripts
+#: plus the partition column its directories carry, read as an int.
+BUCKETED_SCHEMA = StructType([*TRANSCRIPTS_SCHEMA, StructField("partition_key", IntegerType())])
+
 #: Known value domains for the transcripts table (used by the domain checks; the
 #: reference's analog is topic include/exclude filtering, discovery.py:29-61).
 ROLE_DOMAIN = ["user", "assistant", "system", "tool"]
 TOOL_DOMAIN = ["search", "code", "browser", "calc"]
 
-#: Pass-A output: one row per (partition_key, column). Mirrors the reference's
-#: SchemaField (inference.py:50-89) plus the at-scale stats it never computes.
+#: Pass-A output (``profiles/``): one row per (partition_key, column).
+#: Mirrors the reference's SchemaField (inference.py:50-89) plus the
+#: at-scale stats it never computes. The nullability is what
+#: operators/profile.profile's resolution gives each column.
 PROFILE_SCHEMA = StructType(
     [
-        StructField("run_id", StringType()),
-        StructField("partition_key", StringType()),
-        StructField("column", StringType()),
-        StructField("inferred_type", StringType()),
-        StructField("type_histogram", MapType(StringType(), LongType())),
-        StructField("total_count", LongType()),
-        StructField("null_count", LongType()),
+        StructField("run_id", StringType(), nullable=False),
+        StructField("partition_key", StringType(), nullable=False),
+        StructField("column", StringType(), nullable=False),
+        StructField("inferred_type", StringType(), nullable=False),
+        StructField(
+            "type_histogram",
+            MapType(StringType(), LongType(), valueContainsNull=False),
+            nullable=False,
+        ),
+        StructField("total_count", LongType(), nullable=False),
+        StructField("null_count", LongType(), nullable=False),
         StructField("null_rate", DoubleType()),
         StructField("required", BooleanType()),
-        StructField("nullable", BooleanType()),
+        StructField("nullable", BooleanType(), nullable=False),
         StructField("confidence", DoubleType()),
-        StructField("distinct_approx", LongType()),
+        StructField("distinct_approx", LongType(), nullable=False),
         StructField("min_val", StringType()),
         StructField("max_val", StringType()),
         StructField("quantiles", ArrayType(DoubleType())),
-        StructField("examples", ArrayType(StringType())),
+        StructField("examples", ArrayType(StringType()), nullable=False),
     ]
 )
 
-#: Pass-B output: typed violation rows (BASELINE.json north_star).
+#: Pass-B output (``violations/``): typed violation rows (BASELINE.json
+#: north_star), one directory per ``partition_key`` — the partition column,
+#: so it is the last field here and absent from the files themselves. Every
+#: column is nullable, as the fused plan writes it over input read from
+#: parquet.
 VIOLATION_SCHEMA = StructType(
     [
-        StructField("run_id", StringType()),
         StructField("check_name", StringType()),
         StructField("conv_id", StringType()),
         StructField("turn_idx", IntegerType()),
         StructField("column", StringType()),
         StructField("observed", StringType()),
         StructField("expected", StringType()),
-        StructField("detail", StringType()),
+        StructField("partition_key", StringType()),
+    ]
+)
+
+#: the columns operators/violations.violations_sample adds to a violations
+#: frame, plus the run stamp: the triage and new-violation samples' tail
+_SAMPLED = [
+    StructField("sample_rank", IntegerType(), nullable=False),
+    StructField("run_id", StringType(), nullable=False),
+]
+
+#: ``violations_triage/``: the k-per-check sample of a run's violations
+TRIAGE_SCHEMA = StructType([*VIOLATION_SCHEMA, *_SAMPLED])
+
+#: ``scorecard/``: one health row per check plus the ``__all__`` total
+SCORECARD_SCHEMA = StructType(
+    [
+        StructField("check_name", StringType()),
+        StructField("n_violations", LongType()),
+        StructField("n_convs", LongType()),
+        StructField("run_id", StringType(), nullable=False),
     ]
 )
 
@@ -119,6 +155,90 @@ LEDGER_SCHEMA = StructType(
         StructField("check_counts", MapType(StringType(), LongType())),
     ]
 )
+
+#: ``histograms/<col>`` and ``histograms/__transitions__``: one categorical
+#: drift baseline (bucket, freq, cnt)
+HISTOGRAM_SCHEMA = StructType(
+    [
+        StructField("bucket", StringType(), nullable=False),
+        StructField("freq", DoubleType()),
+        StructField("cnt", LongType(), nullable=False),
+        StructField("column", StringType(), nullable=False),
+    ]
+)
+
+#: ``histograms_numeric/<col>``: one numeric drift baseline, its counts on
+#: the fixed grid (lo, hi, n_buckets) every row carries
+GRID_SCHEMA = StructType(
+    [
+        StructField("v", DoubleType()),
+        StructField("cnt", LongType(), nullable=False),
+        StructField("lo", DoubleType(), nullable=False),
+        StructField("hi", DoubleType(), nullable=False),
+        StructField("n_buckets", IntegerType(), nullable=False),
+    ]
+)
+
+#: ``drift_verdicts/``: one row per drift series, in the verdict grid's
+#: columns, every one nullable
+DRIFT_VERDICT_SCHEMA = StructType(
+    [
+        StructField("run_id", StringType()),
+        StructField("partition_key", StringType()),
+        StructField("check_name", StringType()),
+        StructField("pass", BooleanType()),
+        StructField("violation_count", LongType()),
+        StructField("metrics", MapType(StringType(), DoubleType())),
+    ]
+)
+
+#: ``evolution_verdicts/``: one row per schema-evolution issue, or one PASS;
+#: the drift verdicts' (run_id, partition_key, check_name, pass), then the issue
+EVOLUTION_VERDICT_SCHEMA = StructType(
+    [
+        *DRIFT_VERDICT_SCHEMA.fields[:4],
+        StructField("kind", StringType()),
+        StructField("field", StringType()),
+        StructField("detail", StringType()),
+    ]
+)
+
+#: ``profile_diff_verdicts/``: plans/compare.profile_compare's per-column
+#: OK/WARN/BREAKING rows, stamped with the run
+PROFILE_DIFF_SCHEMA = StructType(
+    [
+        StructField("partition_key", StringType()),
+        StructField("col_name", StringType()),
+        StructField("status", StringType(), nullable=False),
+        StructField("type_base", StringType()),
+        StructField("type_cur", StringType()),
+        StructField("type_change", StringType()),
+        StructField("null_rate_base", DoubleType()),
+        StructField("null_rate_cur", DoubleType()),
+        StructField("null_rate_delta", DoubleType()),
+        StructField("distinct_base", LongType()),
+        StructField("distinct_cur", LongType()),
+        StructField("verdict", StringType(), nullable=False),
+        StructField("run_id", StringType(), nullable=False),
+    ]
+)
+
+#: ``violations_diff_verdicts/``: per check, the violations new and
+#: resolved versus the baseline run
+VIOLATIONS_DIFF_SCHEMA = StructType(
+    [
+        StructField("check_name", StringType()),
+        StructField("n_current", LongType()),
+        StructField("n_baseline", LongType()),
+        StructField("n_new", LongType()),
+        StructField("n_resolved", LongType()),
+        StructField("pass", BooleanType()),
+        StructField("run_id", StringType(), nullable=False),
+    ]
+)
+
+#: ``violations_new/``: the k-per-check sample of the new violations
+VIOLATIONS_NEW_SCHEMA = StructType([*VIOLATION_SCHEMA.fields[:-1], *_SAMPLED])
 
 
 def well_keyed_predicate() -> Column:

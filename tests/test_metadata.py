@@ -54,7 +54,7 @@ def test_all_buckets_pruned_schedules_no_scan(spark, tmp_path):
     """VERDICT r1 #4 acceptance: empty/missing buckets complete (ledger + PASS
     verdicts) without the input ever being read — enforced by a poisoned
     input that raises from any scan task."""
-    from schema_infer_plugin_spark.plans.ledger import completed_keys
+    from schema_infer_plugin_spark.plans.artifacts import completed_keys
     from schema_infer_plugin_spark.plans.runner import PASS_B, run_validation
     from schema_infer_plugin_spark.sources.synth import synth_transcripts
 
@@ -111,7 +111,7 @@ def test_mixed_prune_matches_full_run(spark, tmp_path):
 def test_runner_main_bucketed_input_prunes(spark, tmp_path, capsys):
     """The production entrypoint itself (runner main, `bucketed:` input) wires
     footer counts into pruning — not just the run_validation API."""
-    from schema_infer_plugin_spark.plans.ledger import completed_keys
+    from schema_infer_plugin_spark.plans.artifacts import completed_keys
     from schema_infer_plugin_spark.plans.runner import (
         PASS_B,
         main,
@@ -138,7 +138,7 @@ def test_unverified_bucketed_dir_never_prunes(spark, tmp_path, capsys):
     misconfigurations that previously slipped the key-subset guard: a foreign
     dir with no sidecar, and an engine dir written with a SMALLER n_buckets
     (its keys 0..3 are a subset of 0..7, but name different conv sets)."""
-    from schema_infer_plugin_spark.plans.ledger import completed_keys
+    from schema_infer_plugin_spark.plans.artifacts import completed_keys
     from schema_infer_plugin_spark.plans.runner import (
         PASS_B,
         main,

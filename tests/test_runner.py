@@ -7,7 +7,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from schema_infer_plugin_spark.plans.ledger import completed_keys, read_ledger
+from schema_infer_plugin_spark.plans.artifacts import completed_keys, read_ledger
 from schema_infer_plugin_spark.plans.runner import PASS_B, run_profile, run_validation
 from schema_infer_plugin_spark.plans.validate import CHECK_NAMES, validate_transcripts
 from schema_infer_plugin_spark.sources.synth import synth_transcripts
@@ -572,7 +572,6 @@ def test_resume_refuses_ledger_rows_it_cannot_trust(spark, tmp_path):
     bucket's ledger row has no per-check counts (written before the ledger
     carried them) or counts for other checks than this run's rules: its
     verdicts would otherwise mix two grids."""
-    from schema_infer_plugin_spark.plans.ledger import ledger_path
     from schema_infer_plugin_spark.session import local_frame
 
     t = synth_transcripts(spark, 300)
@@ -585,7 +584,7 @@ def test_resume_refuses_ledger_rows_it_cannot_trust(spark, tmp_path):
         [("r_old", "0", PASS_B, 10, 0, 0.1, None)],
         "run_id string, partition_key string, pass_name string, rows_processed long,"
         " violation_count long, wall_sec double, completed_ts timestamp",
-    ).write.parquet(ledger_path(old))
+    ).write.parquet(os.path.join(old, "ledger"))
     with pytest.raises(RuntimeError, match=r"'r_old'.*bucket 0.*per-check counts.*uniqueness"):
         run_validation(spark, t, old, run_id="r_old", **options)
 

@@ -10,8 +10,10 @@ from __future__ import annotations
 
 import math
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+# this checkout's root, wherever it is cloned — never another copy's package
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
 def canon(v):
