@@ -594,21 +594,22 @@ def q_expr_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_expr_suite_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SAME rule suite on Structured Streaming (streaming/incremental.
-    stream_expr_violations): a pure projection needs no state, watermark or
-    sentinel — the transcripts fixture is staged once, replayed with
-    availableNow, and the cumulative append output must satisfy the SAME
-    oracle SQL as the batch query (stateless ⇒ row-identical)."""
+    validation_stream): row rules are a pure projection that needs no
+    state, watermark or sentinel — the transcripts fixture is staged once,
+    replayed with availableNow, and the cumulative append output must
+    satisfy the SAME oracle SQL as the batch query (stateless ⇒
+    row-identical)."""
     import os
     import tempfile
 
-    from schema_infer_plugin_spark.streaming.incremental import stream_expr_violations
+    from schema_infer_plugin_spark.streaming.incremental import validation_stream
 
     t = _transcripts(spark, sf_dir)
     work = tempfile.mkdtemp(prefix="expr_stream_")
     in_dir, out_dir, ckpt = (os.path.join(work, d) for d in ("in", "out", "ckpt"))
     t.write.parquet(in_dir)
     stream = spark.readStream.schema(t.schema).parquet(in_dir)
-    out = _viol(stream_expr_violations(stream, _EXPR_RULES))
+    out = _viol(validation_stream(stream, _EXPR_RULES))
     q = (
         out.writeStream.format("parquet")
         .option("path", out_dir)

@@ -31,6 +31,26 @@ DEFAULT_SF_DIR = "/root/testdata/sf0.1"
 CONVS_PER_SF = 2_000_000
 
 
+#: r4's 14 headline queries, pinned: ``core_subset_sec`` sums them so rounds
+#: compare on one number (the full suite has grown since, so its sum does not)
+CORE_SUBSET = (
+    "validate_fused",
+    "profile",
+    "dedup_minhash_lsh",
+    "ann_bruteforce_topk",
+    "ann_lsh_multitable",
+    "dedup_embedding_lsh",
+    "text_quality",
+    "dedup_simhash_pairs",
+    "winnow_fingerprints",
+    "dedup_semantic",
+    "dedup_incremental_lsh",
+    "ann_ivfpq_topk",
+    "mix_token_budget",
+    "profile_partial_merge",
+)
+
+
 def _sf_of(sf_dir: str) -> float:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     return float(m.group(1)) if m else 0.1
@@ -121,21 +141,7 @@ def run_bench(
 
     q = entry_mod.queries()
     for name in (
-        "dedup_minhash_lsh",
-        "ann_bruteforce_topk",
-        "ann_lsh_multitable",
-        "dedup_embedding_lsh",
-        "text_quality",
-        "dedup_simhash_pairs",
-        "winnow_fingerprints",
-        # round-3 additions (supplementary keys; round-over-round comparison
-        # uses the shared prefix above)
-        "dedup_semantic",
-        "dedup_incremental_lsh",
-        # round-4 additions (supplementary keys)
-        "ann_ivfpq_topk",
-        "mix_token_budget",
-        "profile_partial_merge",
+        *CORE_SUBSET[2:],
         # round-5 additions (supplementary keys)
         "mix_temperature_sample",
         "quality_funnel",
@@ -178,6 +184,8 @@ def run_bench(
         "cpus": cpus,
         "turns_per_sec": int(n_turns / validate_sec) if validate_sec else None,
     }
+    if all(name in queries for name in CORE_SUBSET):
+        result["core_subset_sec"] = round(sum(queries[n] for n in CORE_SUBSET), 3)
     if only is not None:
         result["subset"] = sorted(only)
     t.unpersist()

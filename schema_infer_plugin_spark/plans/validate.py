@@ -164,13 +164,20 @@ def default_rules(
     ]
 
 
+def split_rules(rules: list[Rule] | None = None) -> tuple[list[Rule], list[Rule]]:
+    """(row rules, conversation rules) of ``rules`` (default
+    :func:`default_rules`): the one compilation step the batch plan and the
+    stream (streaming/incremental.validation_stream) share. Rule names must
+    be unique."""
+    rules = as_rules(default_rules() if rules is None else rules)
+    return [r for r in rules if not r.conv], [r for r in rules if r.conv]
+
+
 def validate_transcripts(df: DataFrame, rules: list[Rule] | None = None) -> DataFrame:
     """All violations of ``rules`` (default :func:`default_rules`) over
     ``df`` in one fused plan. Output columns: (check_name, conv_id,
     turn_idx, column, observed, expected). Rule names must be unique."""
-    rules = as_rules(default_rules() if rules is None else rules)
-    row_rules = [r for r in rules if not r.conv]
-    conv_rules = [r for r in rules if r.conv]
+    row_rules, conv_rules = split_rules(rules)
     if not conv_rules:
         return expr_suite_violations(df, row_rules)
 

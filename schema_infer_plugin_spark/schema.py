@@ -257,6 +257,11 @@ def well_keyed(df: DataFrame) -> DataFrame:
     return df.filter(well_keyed_predicate())
 
 
+#: The conversation turn order's columns, each ascending NULLS FIRST
+#: (:func:`conv_order`; the stream's keyed state sorts pandas rows by them).
+CONV_ORDER = ("turn_idx", "ts", "role")
+
+
 def conv_order(ts_col: str = "ts") -> list[Column]:
     """The conversation turn order as ONE definition, for every window
     partitioned by conv_id: ``(turn_idx, ts NULLS FIRST, role NULLS FIRST)``.
@@ -264,11 +269,7 @@ def conv_order(ts_col: str = "ts") -> list[Column]:
     lag/lead/row_number give the same answer whatever the input row order.
     DuckDB oracles must spell the NULLS FIRST explicitly (its ASC default is
     NULLS LAST)."""
-    return [
-        F.col("turn_idx").asc_nulls_first(),
-        F.col(ts_col).asc_nulls_first(),
-        F.col("role").asc_nulls_first(),
-    ]
+    return [F.col(ts_col if c == "ts" else c).asc_nulls_first() for c in CONV_ORDER]
 
 
 #: salt modulus for NULL-key rows in a conv_id window exchange (null_key_salt)

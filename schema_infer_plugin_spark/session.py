@@ -7,8 +7,11 @@ shuffles at runtime (skew-join splitting, partition coalescing), Arrow makes the
 few pandas-UDF paths vectorized, and shuffle partitioning is sized for the target
 parallelism rather than hardcoded.
 
-Python runs in exactly two places: the driver, and Arrow-batched pandas UDFs
-(``mapInPandas`` / ``applyInPandasWithState``). Never row-pickled Python —
+Python runs in exactly two places: the driver, and Arrow-batched pandas UDFs:
+``mapInPandas``, and the stream's one ``applyInPandasWithState``
+(streaming/incremental.validation_stream), which only annotates turns from
+keyed state — every check stays a JVM-side ``Rule`` predicate, as in batch.
+Never row-pickled Python —
 that also covers the small frames the driver builds itself (ledger rows,
 verdict rows, check grids): :func:`local_frame` ships them to the JVM as one
 Arrow table that plans as a ``LocalRelation``, never as a ``PythonRDD``

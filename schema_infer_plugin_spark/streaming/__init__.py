@@ -4,10 +4,8 @@ from schema_infer_plugin_spark.streaming.incremental import (
     dedup_stream,
     row_level_violations_stream,
     session_stats_stream,
-    stateful_contiguity_stream,
-    stream_expr_violations,
-    stream_vector_sanity,
     validation_sink,
+    validation_stream,
     windowed_grid_counts_stream,
     windowed_histogram_stream,
     windowed_violation_rates,
@@ -17,10 +15,8 @@ __all__ = [
     "dedup_stream",
     "row_level_violations_stream",
     "session_stats_stream",
-    "stateful_contiguity_stream",
-    "stream_expr_violations",
-    "stream_vector_sanity",
     "validation_sink",
+    "validation_stream",
     "windowed_grid_counts_stream",
     "windowed_histogram_stream",
     "windowed_violation_rates",

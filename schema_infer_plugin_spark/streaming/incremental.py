@@ -4,35 +4,69 @@ The reference has NO streaming semantics — it bounded-samples a Kafka topic an
 exits (SURVEY.md §2.10; /root/reference/schema_infer/plugin/optimistic.py:512-603)
 — so batch is the engine's primary mode. But the transcripts table the engine
 validates is stream-fed in production (agent transcripts land continuously), so
-two incremental modes are provided:
+the same ``checks/custom.Rule`` list that drives the fused batch plan
+(plans/validate.validate_transcripts) drives the stream:
 
-1. ``row_level_violations_stream``: the stateless subset of Pass B (domain
-   membership, tool-requires-role, not-null) as a pure streaming projection —
-   works with any source/sink in append mode, no state, exact always.
+1. ``validation_stream``: the batch plan's rule list over a stream. Row rules
+   are the stateless projection (``row_level_violations_stream`` for the
+   built-ins); conversation rules judge turns that ONE keyed-state
+   ``applyInPandasWithState`` annotates (no check logic in pandas), its
+   state evicted in event time. Look-ahead rules raise.
+   (``transformWithStateInPandas`` with RocksDB state would need the
+   protobuf package, which the engine does not depend on.)
 
 2. ``validation_sink``: full fused Pass B per micro-batch via ``foreachBatch``
-   reusing the EXACT batch plan (plans/validate.py) — uniqueness/contiguity are
-   exact *within* each micro-batch. Cross-batch duplicates would need keyed
-   state (``applyInPandasWithState``); the production contract instead appends
-   conversations whole (a conversation's turns arrive in one commit), which
-   makes per-batch validation exact. Ingestions that split conversations across
-   commits must run the batch validator over the affected partitions — which is
-   precisely what the checkpoint-resume runner (plans/runner.py) does cheaply.
+   reusing the EXACT batch plan — exact *within* each micro-batch, for
+   ingestion that appends conversations whole.
 
-Late/out-of-order data: violations carry event-time ``ts`` min/max per batch in
-the console metrics; the engine does not drop late rows (validation wants them
-— a late row is a contiguity violation to report, not noise to watermark away).
+Late/out-of-order rows are never dropped (a late row is a violation to
+report, not noise to watermark away); the keyed state's watermark only
+schedules eviction, and ``validation_stream`` states when that eviction
+can change its output.
 """
 
 from __future__ import annotations
 
+import os
+
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming import DataStreamWriter
+from pyspark.sql.streaming.state import GroupStateTimeout
 
-from schema_infer_plugin_spark.checks.custom import expr_suite_violations
+from schema_infer_plugin_spark.checks.custom import (
+    explode_violations,
+    expr_suite_violations,
+    violation_array,
+)
 from schema_infer_plugin_spark.checks.drift import windowed_counts
-from schema_infer_plugin_spark.plans.validate import default_rules, validate_transcripts
-from schema_infer_plugin_spark.schema import well_keyed
+from schema_infer_plugin_spark.plans.validate import (
+    default_rules,
+    split_rules,
+    validate_transcripts,
+)
+from schema_infer_plugin_spark.schema import CONV_ORDER, well_keyed
+
+#: Event-time idle TTL of a conversation's keyed state: once the watermark
+#: passes max(the conversation's latest ``ts``, the watermark when its last
+#: turn arrived) by this much, its state is evicted, and a later turn opens
+#: the conversation afresh. UNVERIFIED against production traffic: no idle
+#: gap or delivery skew of real transcripts has been measured. The only
+#: transcript data here, sources/synth, spans at most 255 turns x 29 s
+#: (about 2 h) per conversation, so 7 days evicts no live conversation of a
+#: replay of it in ts order; the margin beyond that is a judgement.
+STATE_TTL_MS = 7 * 24 * 3600 * 1000
+
+#: The keyed annotation's output: the turn-order columns (``ts`` as epoch
+#: µs) plus the fused plan's annotations that need no look-ahead.
+_ANNOTATED = (
+    "conv_id string, turn_idx int, ts long, role string,"
+    " prev_idx int, prev_ts long, prev_role string, key_count long"
+)
+#: Keyed state: per seen turn index, its occurrence count and the ts/role of
+#: its last row in turn order — parallel arrays (applyInPandasWithState
+#: state is a flat struct), O(conversation length) per key.
+_STATE = "turn_idx array<int>, n array<long>, ts array<long>, role array<string>"
 
 
 def row_level_violations_stream(
@@ -41,46 +75,134 @@ def row_level_violations_stream(
     tool_domain: list[str] | None = None,
     keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Stateless Pass-B subset — the row rules of plans/validate.default_rules
-    — as a streaming-safe projection (no shuffle, no state; valid in append
-    output mode). ``keep_cols`` carries extra source columns (e.g. ``ts`` for
-    downstream event-time windowing)."""
-    rules = [r for r in default_rules(role_domain, tool_domain) if not r.conv]
+    """The row-rule half of :func:`validation_stream` for the built-in row
+    rules of plans/validate.default_rules — a streaming-safe projection (no
+    shuffle, no state; valid in append output mode). ``keep_cols`` carries
+    extra source columns (e.g. ``ts`` for downstream event-time windowing)."""
+    rules, _ = split_rules(default_rules(role_domain, tool_domain))
     return expr_suite_violations(stream_df, rules, keys=("conv_id", "turn_idx", *keep_cols))
 
 
-def stream_expr_violations(
-    stream_df: DataFrame,
-    rules: list,
-    keys: tuple[str, str] = ("conv_id", "turn_idx"),
-) -> DataFrame:
-    """Streaming face of the user-declared constraint suite (checks/custom.
-    expr_suite_violations): the suite is a PURE PROJECTION (per-row CASE
-    struct array → filter → explode), so it applies to a streaming frame
-    unchanged — no state, no watermark, append output mode; each micro-batch
-    emits its violations exactly once and the cumulative stream output is
-    row-identical to the batch run over the same data (driver-checked by the
-    ``expr_suite_stream`` query against the SAME oracle SQL as the batch
-    ``expr_suite``)."""
-    return expr_suite_violations(stream_df, rules, keys=keys)
+def validation_stream(stream_df: DataFrame, rules: list | None = None) -> DataFrame:
+    """Violations of ``rules`` (default plans/validate.default_rules) over a
+    stream, in the batch plan's columns; append output mode.
+
+    Conversation rules judge well-keyed turns annotated by :func:`_annotate`,
+    and a duplicate arriving in a later micro-batch fires ``uniqueness``
+    with its running count. The stream emits exactly the batch plan's
+    violations when it delivers each conversation in turn order, no
+    (conv_id, turn_idx) split across micro-batches, and keeps every
+    conversation's state until its last turn: its state is only evicted in
+    a micro-batch that brings it no turn while the watermark (the largest
+    ``ts`` seen, capped at the batch's clock so a future-dated row cannot
+    push it ahead) is more than STATE_TTL_MS past max(its latest ``ts``,
+    the watermark when its last turn arrived). For a feed in ``ts`` order
+    that means no conversation idles longer than the TTL. An evicted
+    conversation's next turn reads as a new conversation (``is_first``):
+    ``contiguity_start``, ``conv_start_role`` and the like fire on it.
+    A rule that looks ahead (reads ``is_last``) raises ``ValueError``
+    naming it."""
+    row_rules, conv_rules = split_rules(rules)
+    found = [expr_suite_violations(stream_df, row_rules)] if row_rules else []
+    if conv_rules:
+        # the watermark follows ts capped at the batch's clock; ts crosses
+        # pandas as epoch µs; _event is the watermarked column
+        # (EventTimeWatermark.delayKey metadata) EventTimeTimeout requires,
+        # NULL so that Spark's late-row filter drops nothing
+        ts = F.col("ts").cast("timestamp")
+        keyed = (
+            well_keyed(stream_df)
+            .withColumn("_clock", F.when(ts.isNotNull(), F.least(ts, F.current_timestamp())))
+            .withWatermark("_clock", "0 seconds")
+            .select(
+                "conv_id",
+                "turn_idx",
+                "role",
+                F.unix_micros(ts).alias("ts"),
+                F.lit(None)
+                .cast("timestamp")
+                .alias("_event", metadata={"spark.watermarkDelayMs": 0}),
+            )
+        )
+        turns = keyed.groupBy("conv_id").applyInPandasWithState(
+            _annotate,
+            outputStructType=_ANNOTATED,
+            stateStructType=_STATE,
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        )
+        annotated = turns.withColumns(
+            {
+                "ts": F.timestamp_micros("ts"),
+                "prev_ts": F.timestamp_micros("prev_ts"),
+                "is_first": F.col("prev_idx").isNull(),
+            }
+        )
+        for r in conv_rules:
+            try:
+                annotated.select(violation_array([r]))
+            except AnalysisException as e:
+                raise ValueError(
+                    f"rule {r.name!r} cannot run on a stream: it reads a column the"
+                    " keyed state does not annotate (look-ahead rules such as is_last"
+                    " are batch-only)"
+                ) from e
+        found.append(explode_violations(annotated, violation_array(conv_rules)))
+    return found[0] if len(found) == 1 else found[0].unionByName(found[1])
 
 
-def stream_vector_sanity(
-    stream_df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-) -> DataFrame:
-    """Streaming face of the embedding sanity check (checks/vector_sanity.
-    vector_sanity_violations): like the expression suite, the check is a
-    PURE PROJECTION (per-rule CASE structs → filter → explode over built-in
-    higher-order functions), so it applies to a streaming frame unchanged —
-    no state, no watermark, append mode; an embedding ingest pipeline gets
-    per-vector NULL/dim/NaN/Inf/zero-norm violations as they arrive, and the
-    cumulative stream output is row-identical to the batch run."""
-    from ..checks.vector_sanity import vector_sanity_violations
+def _annotate(key, chunks, state):
+    """One conversation's rows of a micro-batch, annotated from keyed state
+    with the fused plan's lag columns — no check logic. The rows (all Arrow
+    chunks) are sorted in schema.CONV_ORDER. A row repeating the previous
+    row's index takes that row as its ``prev_*``; every other row takes the
+    last row, in turn order, at the largest index below its own in state ∪
+    the batch. ``key_count`` is the stored occurrence count plus the
+    batch's. Timed-out state is dropped."""
+    import pandas as pd
 
-    return vector_sanity_violations(stream_df, id_col, vec_col, dim=dim)
+    if state.hasTimedOut:
+        state.remove()
+        return
+    order = list(CONV_ORDER)
+    rows = pd.concat(chunks, ignore_index=True).sort_values(
+        order, na_position="first", ignore_index=True
+    )
+    seen = pd.DataFrame(
+        dict(zip(("turn_idx", "n", "ts", "role"), state.get if state.exists else [[]] * 4))
+    ).astype({"turn_idx": "int64", "n": "int64", "ts": "float64"})
+    # last row per index, in turn order, over state then batch
+    last = (
+        pd.concat([seen[order], rows[order]], ignore_index=True)
+        .sort_values(order, na_position="first")
+        .drop_duplicates("turn_idx", keep="last")
+        .reset_index(drop=True)
+    )
+    n = seen.set_index("turn_idx")["n"].add(rows.groupby("turn_idx").size(), fill_value=0)
+    below = last["turn_idx"].searchsorted(rows["turn_idx"]) - 1
+    prev = last.reindex(below).set_axis(rows.index)
+    again = rows["turn_idx"].eq(rows["turn_idx"].shift())
+    prev.loc[again] = rows[order].shift().loc[again]
+
+    state.update(
+        (
+            last["turn_idx"].tolist(),
+            n.loc[last["turn_idx"]].astype("int64").tolist(),
+            [None if pd.isna(v) else int(v) for v in last["ts"]],
+            last["role"].tolist(),
+        )
+    )
+    # a timeout below the watermark raises INVALID_TIMEOUT_TIMESTAMP
+    horizon, latest = state.getCurrentWatermarkMs(), last["ts"].max()
+    if pd.notna(latest):
+        horizon = max(horizon, int(latest) // 1000)
+    state.setTimeoutTimestamp(horizon + STATE_TTL_MS)
+    yield rows[["conv_id", *order]].assign(
+        prev_idx=prev["turn_idx"],
+        prev_ts=prev["ts"],
+        prev_role=prev["role"],
+        key_count=n.loc[rows["turn_idx"]].to_numpy(),
+    )
 
 
 def validation_sink(
@@ -89,23 +211,13 @@ def validation_sink(
     checkpoint_dir: str,
 ) -> DataStreamWriter:
     """Full fused Pass B per micro-batch (foreachBatch → the batch plan),
-    violations appended to ``out_dir`` stamped with the micro-batch epoch.
-
-    The stream's checkpoint gives exactly-once batch replay; parquet append +
-    epoch column keeps replays idempotent to downstream readers (dedupe on
-    epoch). Start with ``.trigger(availableNow=True)`` for catch-up runs or a
-    processing-time trigger for continuous ingestion."""
-
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            validate_transcripts(batch_df)
-            .withColumn("epoch", F.lit(epoch_id))
-            .write.mode("append")
-            .parquet(out_dir)
-        )
-
-    return stream_df.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
+    each epoch's violations written to ``out_dir/epoch=<id>``, so
+    ``spark.read.parquet(out_dir)`` carries an ``epoch`` column and a
+    replayed epoch never duplicates rows (:func:`_epoch_sink`). Start with
+    ``.trigger(availableNow=True)`` for catch-up runs or a processing-time
+    trigger for continuous ingestion."""
+    return _epoch_sink(
+        stream_df, lambda df, _: validate_transcripts(df), out_dir, "epoch={}", checkpoint_dir
     )
 
 
@@ -211,100 +323,6 @@ def _watermarked(stream_df: DataFrame, ts_col: str, delay: str) -> DataFrame:
     return cast.withWatermark(ts_col, delay)
 
 
-#: Output schema of the stateful cross-batch check.
-_STATEFUL_OUT = (
-    "check_name string, conv_id string, turn_idx int, column string,"
-    " observed string, expected string"
-)
-#: Keyed state: (turn_idx, occurrence count) for every index seen so far —
-#: parallel arrays (applyInPandasWithState state is a flat struct). A repeat
-#: arrival bumps its counter instead of growing the array, so state stays
-#: O(distinct turn indexes) = O(conv length) per key no matter how many
-#: duplicates arrive — the canonical bounded-state shape.
-_STATEFUL_STATE = "idxs array<int>, counts array<int>"
-
-
-def stateful_contiguity_stream(stream_df: DataFrame) -> DataFrame:
-    """Cross-micro-batch uniqueness + contiguity via ``applyInPandasWithState``
-    — the keyed-state operator the foreachBatch mode's docstring defers to.
-
-    Per conversation the state is the set of turn indexes seen so far (any
-    micro-batch). On each arriving row, in (turn_idx, arrival) order:
-
-    * index already seen            → ``uniqueness`` violation (observed = the
-      occurrence count including this arrival);
-    * index beyond max(seen) + 1    → ``contiguity`` violation (expected
-      max(seen) + 1);
-    * first row of a conversation with index != 0 → ``contiguity_start``.
-
-    NULL-key rows (conv_id or turn_idx NULL) are filtered before the
-    stateful operator — the engine-wide posture (plans/validate.py):
-    sequence state for keyless rows is meaningless (all NULL conv_ids would
-    share ONE state key, fabricating uniqueness among unrelated rows — and
-    one ever-growing hot state partition), and a NaN turn_idx would crash
-    the int conversion in the worker. Their violations come from the
-    row-level stream face (not_null_conv_id / not_null_turn_idx).
-
-    Semantics are PROVISIONAL-ONLINE by design: a late row that fills an
-    earlier gap is accepted silently (no retraction of the already-emitted gap
-    violation). The exact batch pass (plans/runner.py) over the affected
-    partitions remains the source of truth; this operator is the low-latency
-    alert signal. Arrow-batched via pandas — no per-row Python rows cross the
-    JVM boundary (§2.11 posture).
-    """
-    import pandas as pd  # noqa: F401 (imported for the worker closure)
-
-    stream_df = well_keyed(stream_df)
-
-    def check(key, pdfs, state):
-        import pandas as pd
-
-        if state.exists:
-            idxs, counts = state.get
-            occ: dict[int, int] = dict(zip(idxs, counts))
-        else:
-            occ = {}
-        conv_id = key[0]
-        out_rows: list[tuple] = []
-        for pdf in pdfs:
-            for idx in sorted(int(i) for i in pdf["turn_idx"]):
-                n_prior = occ.get(idx, 0)
-                if n_prior > 0:
-                    # true cross-batch occurrence count, carried in state
-                    out_rows.append(
-                        ("uniqueness", conv_id, idx, "conv_id,turn_idx", str(n_prior + 1), "1")
-                    )
-                elif not occ:
-                    if idx != 0:
-                        out_rows.append(
-                            ("contiguity_start", conv_id, idx, "turn_idx", str(idx), "0")
-                        )
-                elif idx > max(occ) + 1:
-                    out_rows.append(
-                        ("contiguity", conv_id, idx, "turn_idx", str(idx), str(max(occ) + 1))
-                    )
-                occ[idx] = n_prior + 1
-        ordered = sorted(occ)
-        state.update((ordered, [occ[i] for i in ordered]))
-        if out_rows:
-            yield pd.DataFrame(
-                out_rows,
-                columns=[
-                    "check_name", "conv_id", "turn_idx", "column", "observed", "expected",
-                ],
-            )
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return stream_df.groupBy("conv_id").applyInPandasWithState(
-        check,
-        outputStructType=_STATEFUL_OUT,
-        stateStructType=_STATEFUL_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 def dedup_stream(
     stream_df: DataFrame,
     id_cols: list[str],
@@ -373,29 +391,32 @@ def profile_partial_sink(
     columns: list[str] | None = None,
 ) -> DataStreamWriter:
     """Incremental profiling over a stream: every micro-batch folds into ONE
-    mergeable partial-profile row (operators/profile.profile_partial) appended to
-    ``out_dir`` — the streaming producer of the same artifact the batch CLI
-    ``profile-partial`` writes, so "profile of everything ingested so far"
-    is ``profile_merge(spark.read.parquet(f"{out_dir}/*"))`` at any moment,
-    reading #batches rows and rescanning nothing.
-
-    State is the aggregation's own partial buffers (bounded by #columns, not
-    input). foreachBatch is at-least-once: a crash between the artifact
-    write and the checkpoint commit replays the epoch, so each epoch writes
-    its OWN subdirectory with overwrite — the replay lands on the same path
-    and the merged profile never double-counts (idempotent by construction,
-    not by downstream dedupe).
+    mergeable partial-profile row (operators/profile.profile_partial) written
+    to ``out_dir/epoch<id>`` — the streaming producer of the same artifact the
+    batch CLI ``profile-partial`` writes, so "profile of everything ingested
+    so far" is ``profile_merge(spark.read.parquet(f"{out_dir}/*"))`` at any
+    moment, reading #batches rows and rescanning nothing. State is the
+    aggregation's own partial buffers (bounded by #columns, not input); a
+    replayed epoch never double-counts (:func:`_epoch_sink`).
     """
-    import os
-
     from ..operators.profile import profile_partial
 
+    def partial(batch_df: DataFrame, epoch_id: int) -> DataFrame:
+        return profile_partial(batch_df, columns, run_id=f"epoch{epoch_id}")
+
+    return _epoch_sink(stream_df, partial, out_dir, "epoch{}", checkpoint_dir)
+
+
+def _epoch_sink(stream_df, frame, out_dir: str, subdir: str, checkpoint_dir: str):
+    """foreachBatch writing ``frame(batch_df, epoch_id)`` with overwrite to
+    its epoch's OWN ``out_dir/subdir.format(epoch_id)``. foreachBatch is
+    at-least-once: a crash between the write and the checkpoint commit
+    replays the epoch, and the replay lands on the same path — idempotent
+    by construction, not by downstream dedupe."""
+
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            profile_partial(batch_df, columns, run_id=f"epoch{epoch_id}")
-            .write.mode("overwrite")
-            .parquet(os.path.join(out_dir, f"epoch{epoch_id}"))
-        )
+        path = os.path.join(out_dir, subdir.format(epoch_id))
+        frame(batch_df, epoch_id).write.mode("overwrite").parquet(path)
 
     return stream_df.writeStream.foreachBatch(_process).option(
         "checkpointLocation", checkpoint_dir
