@@ -69,6 +69,38 @@ def _viol(df: DataFrame) -> DataFrame:
     return df.withColumnRenamed("column", "col_name")
 
 
+def _replay_stream(
+    spark: SparkSession, staged: DataFrame, build: Callable[[DataFrame], DataFrame]
+) -> DataFrame:
+    """``build``'s append output over ``staged`` replayed as a Structured
+    Streaming source (one availableNow run over parquet). The staged input,
+    the sink's output and its checkpoint share one temp dir, removed before
+    this returns: the output is read into an eager local checkpoint first,
+    so the returned frame (and any frame derived from it) needs no file."""
+    import os
+    import shutil
+    import tempfile
+
+    work = tempfile.mkdtemp(prefix="stream_replay_")
+    try:
+        in_dir, out_dir, ckpt = (os.path.join(work, d) for d in ("in", "out", "ckpt"))
+        staged.write.parquet(in_dir)
+        stream = spark.readStream.schema(staged.schema).parquet(in_dir)
+        q = (
+            build(stream)
+            .writeStream.format("parquet")
+            .option("path", out_dir)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return spark.read.parquet(out_dir).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
 def _fused(spark: SparkSession, sf_dir: str, *checks: str, rules=None) -> DataFrame:
     """The fused validation plan's rows for ``checks`` (plans/validate.py;
     ``rules`` default to the built-ins) — every per-check violation query
@@ -599,27 +631,11 @@ def q_expr_suite_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     replayed with availableNow, and the cumulative append output must
     satisfy the SAME oracle SQL as the batch query (stateless ⇒
     row-identical)."""
-    import os
-    import tempfile
-
     from schema_infer_plugin_spark.streaming.incremental import validation_stream
 
-    t = _transcripts(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="expr_stream_")
-    in_dir, out_dir, ckpt = (os.path.join(work, d) for d in ("in", "out", "ckpt"))
-    t.write.parquet(in_dir)
-    stream = spark.readStream.schema(t.schema).parquet(in_dir)
-    out = _viol(validation_stream(stream, _EXPR_RULES))
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return _replay_stream(
+        spark, _transcripts(spark, sf_dir), lambda s: _viol(validation_stream(s, _EXPR_RULES))
     )
-    q.awaitTermination()
-    return spark.read.parquet(out_dir)
 
 
 ORACLE_EXPR_SUITE = oracle_cte(
@@ -2823,24 +2839,17 @@ def q_session_stats_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     far-future sentinel row appended so the GLOBAL watermark passes every
     real session's end — append mode then finalizes and emits ALL of them,
     giving exact batch parity without wall-clock waits. Closed windows land
-    in parquet via the stream sink; the returned frame reads them back.
+    in parquet via the stream sink and are read back (``_replay_stream``).
 
     Session semantics are Spark's session_window (an event exactly ``gap``
     after the previous one STARTS a new session, i.e. new-session on
     diff >= gap; session_end = last event + gap) — the oracle mirrors that,
-    deliberately distinct from the batch ``sessionize`` query's diff > gap.
-    The staging/out dirs are per-invocation tempdirs; they stay on disk until
-    the returned (lazy) frame is collected."""
-    import os
-    import tempfile
-
+    deliberately distinct from the batch ``sessionize`` query's diff > gap."""
     from schema_infer_plugin_spark.streaming.incremental import session_stats_stream
 
     ev = load_table(spark, sf_dir, "events").withColumn(
         "ts", F.col("ts").cast("timestamp")
     )
-    work = tempfile.mkdtemp(prefix="sess_stream_")
-    in_dir, out_dir, ckpt = (os.path.join(work, d) for d in ("in", "out", "ckpt"))
     # watermark is GLOBAL max event time − delay: one sentinel row (user −1,
     # year 2100) closes every real session; it is filtered from the result.
     # Stage events + sentinel as ONE file: a multi-file source could split
@@ -2852,19 +2861,12 @@ def q_session_stats_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("user_id", F.lit(-1).cast("long"))
         .withColumn("ts", F.to_timestamp(F.lit("2100-01-01 00:00:00")))
     )
-    ev.unionByName(sentinel).coalesce(1).write.parquet(in_dir)
-    stream = spark.readStream.schema(ev.schema).parquet(in_dir)
-    out = session_stats_stream(stream, "user_id", "ts", gap="1 hour", delay="1 second")
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    out = _replay_stream(
+        spark,
+        ev.unionByName(sentinel).coalesce(1),
+        lambda s: session_stats_stream(s, "user_id", "ts", gap="1 hour", delay="1 second"),
     )
-    q.awaitTermination()
-    return spark.read.parquet(out_dir).filter(F.col("user_id") >= 0).select(
+    return out.filter(F.col("user_id") >= 0).select(
         "user_id",
         F.unix_micros("session_start").alias("session_start_us"),
         F.unix_micros("session_end").alias("session_end_us"),
@@ -2904,9 +2906,6 @@ def q_windowed_drift_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     so every real window closes (single-file staging, the
     session_stats_stream guard); its own window never closes and a
     2099 filter belts-and-braces it out."""
-    import os
-    import tempfile
-
     from schema_infer_plugin_spark.streaming.incremental import (
         windowed_histogram_stream,
     )
@@ -2914,28 +2913,19 @@ def q_windowed_drift_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _transcripts(spark, sf_dir).select(
         "role", F.col("ts").cast("timestamp").alias("ts")
     )
-    work = tempfile.mkdtemp(prefix="wdrift_stream_")
-    in_dir, out_dir, ckpt = (os.path.join(work, d) for d in ("in", "out", "ckpt"))
     sentinel = (
         t.limit(1)
         .withColumn("role", F.lit(None).cast("string"))
         .withColumn("ts", F.to_timestamp(F.lit("2100-01-01 00:00:00")))
     )
-    t.unionByName(sentinel).coalesce(1).write.parquet(in_dir)
-    stream = spark.readStream.schema(t.schema).parquet(in_dir)
-    counts = windowed_histogram_stream(
-        stream, "role", "ts", window_duration="1 day", watermark_delay="1 second"
+    counts = _replay_stream(
+        spark,
+        t.unionByName(sentinel).coalesce(1),
+        lambda s: windowed_histogram_stream(
+            s, "role", "ts", window_duration="1 day", watermark_delay="1 second"
+        ),
     )
-    q = (
-        counts.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    emitted = spark.read.parquet(out_dir).filter(
+    emitted = counts.filter(
         F.col("window_start") < F.to_timestamp(F.lit("2099-01-01 00:00:00"))
     )
     base = drift_counts(_transcripts(spark, sf_dir), ["role"])
@@ -3058,9 +3048,6 @@ def q_windowed_ks_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-corpus baseline as q_windowed_ks_drift. Per-window exact counts ⇒
     the report is row-identical to the batch face, so the SAME oracle text
     verifies the whole stream→report path end to end."""
-    import os
-    import tempfile
-
     from schema_infer_plugin_spark.streaming.incremental import (
         windowed_grid_counts_stream,
     )
@@ -3070,29 +3057,20 @@ def q_windowed_ks_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("turn_idx").cast("int").alias("turn_idx"),
         F.col("ts").cast("timestamp").alias("ts"),
     )
-    work = tempfile.mkdtemp(prefix="wks_stream_")
-    in_dir, out_dir, ckpt = (os.path.join(work, d) for d in ("in", "out", "ckpt"))
     sentinel = (
         t.limit(1)
         .withColumn("turn_idx", F.lit(0).cast("int"))
         .withColumn("ts", F.to_timestamp(F.lit("2100-01-01 00:00:00")))
     )
-    t.unionByName(sentinel).coalesce(1).write.parquet(in_dir)
-    stream = spark.readStream.schema(t.schema).parquet(in_dir)
-    counts = windowed_grid_counts_stream(
-        stream, "turn_idx", 0.0, 64.0, 16,
-        ts_col="ts", window_duration="1 day", watermark_delay="1 second",
+    counts = _replay_stream(
+        spark,
+        t.unionByName(sentinel).coalesce(1),
+        lambda s: windowed_grid_counts_stream(
+            s, "turn_idx", 0.0, 64.0, 16,
+            ts_col="ts", window_duration="1 day", watermark_delay="1 second",
+        ),
     )
-    q = (
-        counts.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    emitted = spark.read.parquet(out_dir).filter(
+    emitted = counts.filter(
         F.col("window_start") < F.to_timestamp(F.lit("2099-01-01 00:00:00"))
     )
     base = drift_counts(full, [], {"turn_idx": (0.0, 64.0, 16)})
@@ -3172,16 +3150,11 @@ def q_windowed_rates_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rows with NULL ts are dropped by the event-time aggregation — the oracle
     mirrors with WHERE ts IS NOT NULL; the validation path itself never
     watermarks violations away (incremental.py module docstring)."""
-    import os
-    import tempfile
-
     from schema_infer_plugin_spark.streaming.incremental import (
         windowed_violation_rates,
     )
 
     t = _transcripts(spark, sf_dir).withColumn("ts", F.col("ts").cast("timestamp"))
-    work = tempfile.mkdtemp(prefix="wrates_stream_")
-    in_dir, out_dir, ckpt = (os.path.join(work, d) for d in ("in", "out", "ckpt"))
     # one staged file INCLUDING the sentinel: a multi-file source could split
     # into micro-batches, and if the sentinel's file formed its own batch the
     # watermark would advance to 2100 and drop every later real-data file as
@@ -3197,23 +3170,15 @@ def q_windowed_rates_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("tool", F.lit(None).cast("string"))
         .withColumn("ts", F.to_timestamp(F.lit("2100-01-01 00:00:00")))
     )
-    t.unionByName(sentinel).coalesce(1).write.parquet(in_dir)
-    stream = spark.readStream.schema(t.schema).parquet(in_dir)
-    rates = windowed_violation_rates(
-        stream, window_duration="1 minute", watermark_delay="1 second"
+    rates = _replay_stream(
+        spark,
+        t.unionByName(sentinel).coalesce(1),
+        lambda s: windowed_violation_rates(
+            s, window_duration="1 minute", watermark_delay="1 second"
+        ),
     )
-    q = (
-        rates.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return (
-        spark.read.parquet(out_dir)
-        .filter(F.col("window_start") < F.to_timestamp(F.lit("2099-01-01 00:00:00")))
+        rates.filter(F.col("window_start") < F.to_timestamp(F.lit("2099-01-01 00:00:00")))
         .select(
             F.unix_micros("window_start").alias("window_start_us"),
             F.unix_micros("window_end").alias("window_end_us"),
@@ -3261,9 +3226,6 @@ def q_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     order, so only the content columns are returned). The generous delay
     keeps the single-batch replay exact; watermark state EVICTION semantics
     are pytest-covered (tests/test_streaming.py)."""
-    import os
-    import tempfile
-
     from schema_infer_plugin_spark.streaming.incremental import dedup_stream
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -3278,23 +3240,12 @@ def q_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         "text",
         (F.col("ts") + F.expr("INTERVAL 1000 SECONDS")).alias("ts"),
     )
-    work = tempfile.mkdtemp(prefix="dedup_stream_")
-    in_dir, out_dir, ckpt = (os.path.join(work, d) for d in ("in", "out", "ckpt"))
-    docs.unionByName(reposts).coalesce(1).write.parquet(in_dir)
-    stream = spark.readStream.schema(docs.schema).parquet(in_dir)
-    kept = dedup_stream(
-        stream, id_cols=[], ts_col="ts", delay="3650 days", content_col="text"
+    kept = _replay_stream(
+        spark,
+        docs.unionByName(reposts).coalesce(1),
+        lambda s: dedup_stream(s, id_cols=[], ts_col="ts", delay="3650 days", content_col="text"),
     )
-    q = (
-        kept.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out_dir).select("text_hash", "text")
+    return kept.select("text_hash", "text")
 
 
 #: the re-posted slice adds no new content, so distinct texts of the base

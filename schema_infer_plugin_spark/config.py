@@ -184,7 +184,9 @@ class ValidationConfig:
     role_domain: list[str] = field(default_factory=list)
     tool_domain: list[str] = field(default_factory=list)
     n_buckets: int = 64
-    batch_buckets: int = 16
+    #: buckets per Pass-B batch over input without verified row counts;
+    #: unset, it resolves to min(16, n_buckets) in validate()
+    batch_buckets: int | None = None
     psi_threshold: float = 0.2
     #: user-declared constraints (checks/custom.Rule, row rules): each
     #: entry is [name, predicate_sql, column, observed_sql, expected_desc].
@@ -204,6 +206,8 @@ class ValidationConfig:
     def validate(self) -> None:
         if self.n_buckets < 1:
             raise ConfigError(f"validation.n_buckets must be >= 1: {self.n_buckets}")
+        if self.batch_buckets is None:
+            self.batch_buckets = min(16, self.n_buckets)
         if not 1 <= self.batch_buckets <= self.n_buckets:
             raise ConfigError(
                 f"validation.batch_buckets must be in 1..n_buckets: {self.batch_buckets}"
@@ -267,7 +271,8 @@ ENV_PREFIX = "SCHEMA_INFER_"
 
 def _coerce(raw: str, target_type) -> object:
     """Coerce an env-var string to the dataclass field's type."""
-    t = str(target_type)
+    # an optional field's value coerces to the field's own type
+    t = str(target_type).removesuffix(" | None")
     if target_type is bool or "bool" in t:
         return raw.strip().lower() in ("1", "true", "yes", "on")
     if target_type is int or t in ("int", "<class 'int'>"):

@@ -26,6 +26,7 @@ import datetime
 import os
 from typing import NamedTuple
 
+from py4j.protocol import Py4JError
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.types import StructType
@@ -34,6 +35,19 @@ from schema_infer_plugin_spark import schema as S
 from schema_infer_plugin_spark.session import local_frame
 
 PARTITION_KEY = "partition_key"
+
+#: AQE replaces a shuffle stage that produced no rows with an empty relation,
+#: and every Observation computed below that stage goes with it: its ``get``
+#: then fails although the stage ran. A partitioned write's repartition is
+#: such a stage (a Pass-B batch with no violations), so it runs without
+#: that rule. SQL conf is per session and a DataFrame stays bound to the
+#: session that built it, so no narrower scope exists: the exclusion holds
+#: for the whole session while the write runs, and is restored after it.
+#: A query run meanwhile on the same session from another thread also runs
+#: without the rule, and a value it sets for the key is overwritten by the
+#: restore, so the runner must not share its session with concurrent queries.
+_AQE_EXCLUDED_RULES = "spark.sql.adaptive.optimizer.excludedRules"
+_AQE_EMPTY_RELATION = "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
 
 
 class Artifact(NamedTuple):
@@ -74,28 +88,66 @@ def declared(name: str) -> Artifact:
     return ARTIFACTS[name.split("/")[0]]
 
 
+def _known_nullable(spark: SparkSession, name: str) -> Column:
+    """Column ``name`` typed nullable, its values unchanged: Catalyst's
+    ``KnownNullable`` tag, which no optimizer rule removes. No public
+    function widens nullability: ``DataFrame.to`` keeps a non-null column
+    non-null, and the optimizer folds a ``when``/``coalesce`` guard (or a
+    union with an empty frame) back to the non-null child.
+
+    Both JVM classes are Spark internals (Spark 4's
+    ``org.apache.spark.sql.classic.ExpressionUtils``), reached through py4j;
+    a Spark without them raises naming its version. Only in-process frames
+    reach this: parquet-read input is nullable already."""
+    jvm = spark._jvm
+    try:
+        expr = jvm.org.apache.spark.sql.catalyst.expressions.KnownNullable(
+            jvm.org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute.quoted(name)
+        )
+        jcol = jvm.org.apache.spark.sql.classic.ExpressionUtils.column(expr)
+    except (Py4JError, TypeError) as e:  # py4j resolves a missing class to a package
+        raise RuntimeError(
+            f"cannot write column {name!r} nullable: Catalyst's KnownNullable or"
+            f" classic.ExpressionUtils is not available in Spark {spark.version}"
+        ) from e
+    return Column(jcol).alias(name)
+
+
 def write_artifact(
     spark: SparkSession, out_dir: str, name: str, frame: DataFrame, *metrics: Column
 ) -> dict:
     """Write ``frame`` as artifact ``name`` under ``out_dir``, in its declared
     layout, and return the write's Observation: the row count ``n`` plus
-    ``metrics``, observed on the write rather than read back. Raises when the
-    frame's column names or types differ from the declaration."""
+    ``metrics``, observed on the write rather than read back. A field the
+    declaration marks nullable is written nullable, whatever Catalyst proved
+    of the frame. Raises when the frame's column names or types differ from
+    the declaration."""
     art = declared(name)
     got, want = (
         [(f.name, f.dataType.simpleString()) for f in s] for s in (frame.schema, art.schema)
     )
     if got != want:
         raise ValueError(f"artifact {name!r}: frame columns {got} differ from declared {want}")
+    widen = {f.name for f, d in zip(frame.schema, art.schema) if d.nullable and not f.nullable}
+    if widen:
+        frame = frame.select(*(_known_nullable(spark, c) if c in widen else c for c in frame.columns))
     obs = Observation()
     frame = frame.observe(obs, F.count(F.lit(1)).alias("n"), *metrics)
     path = os.path.join(out_dir, name)
     if art.partitioned:
-        # dynamic overwrite replaces only the partitions written, so a
-        # re-run bucket replaces its directory rather than duplicating it
-        frame.repartition(PARTITION_KEY).sortWithinPartitions(*art.order).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy(PARTITION_KEY).parquet(path)
+        excluded = spark.conf.get(_AQE_EXCLUDED_RULES, None)
+        spark.conf.set(_AQE_EXCLUDED_RULES, ",".join(filter(None, [excluded, _AQE_EMPTY_RELATION])))
+        try:
+            # dynamic overwrite replaces only the partitions written, so a
+            # re-run bucket replaces its directory rather than duplicating it
+            frame.repartition(PARTITION_KEY).sortWithinPartitions(*art.order).write.mode(
+                "overwrite"
+            ).option("partitionOverwriteMode", "dynamic").partitionBy(PARTITION_KEY).parquet(path)
+        finally:
+            if excluded is None:
+                spark.conf.unset(_AQE_EXCLUDED_RULES)
+            else:
+                spark.conf.set(_AQE_EXCLUDED_RULES, excluded)
     else:
         frame.coalesce(1).write.mode("append" if art.append else "overwrite").parquet(path)
     return obs.get

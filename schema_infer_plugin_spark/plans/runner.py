@@ -12,13 +12,18 @@ and lineage. A batch selects its buckets with a filter on ``partition_key``.
 On a verified ``bucketed:`` layout (written by ``write_bucketed``, its
 sidecar matching ``n_buckets``) that filter runs on the table's STORED
 partition column, so it prunes partition directories and a batch reads only
-its own buckets. Any other input recomputes the key from conv_id, and every
-batch scans the whole table (``n_buckets / batch_buckets`` reads in all).
-``iceberg:`` input is in that second group today: an IDENTITY partition on a
-precomputed ``partition_key`` column would prune at the manifest level the
-same way, but the runner does not filter on the stored column there yet.
-Do NOT partition by Iceberg's own ``bucket(N, conv_id)`` — that transform is
-Murmur3 (Iceberg spec) and never agrees with this engine's
+its own buckets. That layout's metadata also gives every bucket's row count,
+so its batches are planned from them: buckets are packed in order up to
+:data:`BATCH_CELL_ROWS` input rows × buckets (a bucket above that is a batch
+of its own) and at most :data:`MAX_BATCH_CELLS` (bucket, check) cells. Any
+other input recomputes the key from conv_id, batches ``batch_buckets``
+buckets at a time, and every batch scans the whole table (``n_buckets /
+batch_buckets`` reads in all), so packing by rows there would only add
+reads. ``iceberg:`` input is in that second group today, verified counts or
+not: an IDENTITY partition on a precomputed ``partition_key`` column would
+prune at the manifest level the same way, but the runner does not filter on
+the stored column there yet. Do NOT partition by Iceberg's own ``bucket(N, conv_id)`` —
+that transform is Murmur3 (Iceberg spec) and never agrees with this engine's
 ``pmod(xxhash64(conv_id), N)`` keys, so metadata pruning against it would skip
 live buckets; the runner verifies the scheme and refuses to prune when it
 can't (sources/metadata.py sidecar + table-property checks).
@@ -78,6 +83,24 @@ PASS_A = "profile"
 
 PROFILE_COLS = ["conv_id", "turn_idx", "role", "text", "tool"]
 
+#: the input rows × buckets one packed Pass-B batch may hold. Its rows
+#: Observation evaluates one ``count_if`` per bucket of the batch for every
+#: input row, about 20-30 ns each, while a batch has about 0.8 s of fixed
+#: cost (driver planning, three AQE stage jobs, a ledger append), so one
+#: more bucket in a batch pays only while rows × buckets stays near
+#: 0.8 s / 25 ns. Measured with local[2] on a 4-vCPU host; more executors
+#: shrink the per-row cost in wall time, so a cluster wants a larger value.
+#: ``run_validation``'s ``batch_cell_rows`` overrides it for tests.
+BATCH_CELL_ROWS = 32_000_000
+
+#: the most exact ``count_if`` cells, across (bucket, check), that one Pass-B
+#: batch's violations Observation may hold, so a packed batch holds at most
+#: ``MAX_BATCH_CELLS // |rules|`` buckets (at least one). An Observation's
+#: driver cost is about 1 ms per cell on every run, and its first run adds
+#: a compile cost that grows faster than its cells: 0.3 s at 256, 0.8 s at
+#: 1,024 and 2.3 s at 2,048 (same host). 1,024 keeps that under a second.
+MAX_BATCH_CELLS = 1024
+
 
 def with_partition_key(df: DataFrame, n_buckets: int) -> DataFrame:
     return df.withColumn(
@@ -135,6 +158,26 @@ def _cell_counts(metrics: dict) -> list[int]:
     return cells
 
 
+def _row_batches(
+    keys: list[str], bucket_rows: dict[str, int], cell_rows: int, max_buckets: int
+) -> list[list[str]]:
+    """``keys`` packed, in their order, into batches whose rows (by their
+    ``bucket_rows`` counts) times buckets is at most ``cell_rows``, of at
+    most ``max_buckets`` buckets. A bucket above ``cell_rows`` is a batch of
+    its own."""
+    batches: list[list[str]] = []
+    rows = 0
+    for k in keys:
+        n = len(batches[-1]) + 1 if batches else 0  # buckets with k added
+        if n and n <= max_buckets and (rows + bucket_rows[k]) * n <= cell_rows:
+            batches[-1].append(k)
+            rows += bucket_rows[k]
+        else:
+            batches.append([k])
+            rows = bucket_rows[k]
+    return batches
+
+
 def _check_resumable(
     run_id: str, done: dict[str, dict[str, int] | None], check_names: list[str]
 ) -> None:
@@ -188,6 +231,7 @@ def run_validation(
     run_id: str = "run0",
     n_buckets: int = 64,
     batch_buckets: int = 16,
+    batch_cell_rows: int = BATCH_CELL_ROWS,
     fail_after_batches: int | None = None,
     on_batch: Callable[[list[str]], None] | None = None,
     role_domain: list[str] | None = None,
@@ -221,7 +265,13 @@ def run_validation(
 
     A batch is one scan of its buckets (pruned to them when ``bucket_rows``
     is given and ``transcripts`` carries the layout's stored
-    ``partition_key``), one violations write and one ledger append. The
+    ``partition_key``), one violations write and one ledger append. There
+    the pending buckets are packed by their row counts, in bucket order,
+    into batches of at most ``batch_cell_rows`` input rows × buckets
+    (default :data:`BATCH_CELL_ROWS`; a bucket above that is a batch of its
+    own) and at most ``MAX_BATCH_CELLS // |rules|`` buckets. Otherwise each
+    batch scans the whole table and is the next ``batch_buckets`` pending
+    buckets. A resume plans only the buckets the ledger does not record. The
     ledger's ``rows_processed`` / ``violation_count`` / ``check_counts`` come
     from Observations on the violations write (input rows per bucket,
     violations per (bucket, check)); the written violations are never read
@@ -249,7 +299,8 @@ def run_validation(
     rules = as_rules(rules + list(custom_rules or []))
     check_names = [r.name for r in rules]
     n_checks = len(check_names)
-    if bucket_rows is not None and "partition_key" in transcripts.columns:
+    prunes = bucket_rows is not None and "partition_key" in transcripts.columns
+    if prunes:
         # a verified layout's stored key IS with_partition_key's value (read
         # back as an int): filtering on it prunes partition directories
         keyed = transcripts.withColumn("partition_key", F.col("partition_key").cast("string"))
@@ -273,18 +324,22 @@ def run_validation(
             append_ledger(
                 spark, out_dir, run_id, PASS_B, [(k, 0, 0, 0.0) for k in pruned], zeros
             )
-    batches = [
-        pending[i : i + batch_buckets] for i in range(0, len(pending), batch_buckets)
-    ]
+    if prunes:
+        cap = max(1, MAX_BATCH_CELLS // n_checks)
+        batches = _row_batches(pending, bucket_rows, batch_cell_rows, cap)
+    else:
+        batches = [
+            pending[i : i + batch_buckets] for i in range(0, len(pending), batch_buckets)
+        ]
     total_rows = 0
     total_viol = 0
     for b_i, batch in enumerate(batches):
         t0 = time.time()
         # Every count rides the write job as an Observation (CollectMetrics):
-        # input rows per bucket, and violations per (bucket, check) —
-        # bounded by batch_buckets × |rules|. The ledger rows are built from
-        # them on the driver, so a batch neither re-scans its input nor
-        # reads back what it wrote.
+        # input rows per bucket, and violations per (bucket, check), bounded
+        # by MAX_BATCH_CELLS on a pruning layout and by batch_buckets × |rules|
+        # otherwise. The ledger rows are built from them on the driver, so a
+        # batch neither re-scans its input nor reads back what it wrote.
         part, obs_rows = _observe_cells(
             keyed.filter(F.col("partition_key").isin(batch)),
             f"rows_b{b_i}",
@@ -772,7 +827,15 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--out", required=True)
     ap.add_argument("--run-id", default="run0")
     ap.add_argument("--n-buckets", type=int, default=None)
-    ap.add_argument("--batch-buckets", type=int, default=None)
+    ap.add_argument(
+        "--batch-buckets",
+        type=int,
+        default=None,
+        help="buckets per Pass-B batch, each of which scans the whole table, over"
+        " any input but a verified bucketed: layout (default: config, min(16,"
+        " n_buckets)); a verified bucketed: batch reads only its buckets and is"
+        f" packed by their row counts up to {BATCH_CELL_ROWS:,} rows × buckets",
+    )
     ap.add_argument(
         "--baseline",
         default=None,

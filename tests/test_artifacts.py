@@ -122,13 +122,13 @@ def flow(spark, tmp_path_factory):
     """A day-1 validate run (``base``) and a day-2 revalidate run (``cur``)
     against it, every option on, each over a bucketed synth table resolved
     as main() resolves its input; ``cur`` skips the steps whose artifacts
-    ``base`` already shows. Returns the two out dirs and the Spark jobs each
+    ``base`` already shows. Returns the out dirs and the Spark jobs each
     step ran (the step's call only, its returned frame unused).
 
     Read from parquet, the input's columns are nullable, as in production.
-    (A frame Catalyst knows has non-null keys, such as a ``synth:`` input
-    built in-process, writes violations whose footer marks conv_id and
-    turn_idx non-null; a declared read is nullable either way.)"""
+    A third run (``synth``) validates an unbucketed in-process synth frame,
+    whose keys Catalyst knows are non-null: its violations must still carry
+    the declared (nullable) footer."""
     root = tmp_path_factory.mktemp("flow")
     sc = spark.sparkContext
     jobs = {}
@@ -166,7 +166,9 @@ def flow(spark, tmp_path_factory):
     step("cur.run_drift", runner.run_drift, spark, t, cur, base, run_id="cur")
     for name in ("run_schema_evolution", "run_profile_compare", "run_violations_diff"):
         step(f"cur.{name}", getattr(runner, name), spark, cur, base, run_id="cur")
-    return {"base": base, "cur": cur, "jobs": jobs}
+    synth = str(root / "synth")
+    runner.run_validation(spark, synth_transcripts(spark, 120, seed=3), synth, run_id="synth", **OPTIONS)
+    return {"base": base, "cur": cur, "synth": synth, "jobs": jobs}
 
 
 def test_steps_run_bounded_spark_jobs(flow):
@@ -179,10 +181,11 @@ def test_artifact_footers_match_declarations(flow):
     """Every parquet file of every artifact carries exactly its declared
     schema: names, types and nullability, nested ones included (the Spark
     schema in the footer), and the same names and nullability as the
-    footer's own parquet schema gives them. A partitioned artifact's files
+    footer's own parquet schema gives them, whatever nullability the
+    written frame had (the ``synth`` run). A partitioned artifact's files
     hold every declared column but the partition column."""
     seen = set()
-    for day in ("base", "cur"):
+    for day in ("base", "cur", "synth"):
         for root, _, files in os.walk(flow[day]):
             parquet = [f for f in files if f.endswith(".parquet")]
             if not parquet:

@@ -210,6 +210,18 @@ def test_invalid_values_rejected(tmp_path, section, body, msg):
         load_config(str(p), env={})
 
 
+def test_unset_batch_buckets_follows_n_buckets(tmp_path):
+    """An unset batch_buckets resolves to min(16, n_buckets), so a config
+    that sets only a small n_buckets loads; the env overlay still sets it
+    as an int."""
+    p = tmp_path / "small.yaml"
+    p.write_text("validation:\n  n_buckets: 8\n")
+    assert load_config(str(p), env={}).validation.batch_buckets == 8
+    assert load_config(None, env={}).validation.batch_buckets == 16
+    env = {"SCHEMA_INFER_VALIDATION_BATCH_BUCKETS": "4"}
+    assert load_config(None, env=env).validation.batch_buckets == 4
+
+
 def test_unknown_keys_rejected(tmp_path):
     p = tmp_path / "bad.yaml"
     p.write_text("inference:\n  max_messagez: 5\n")

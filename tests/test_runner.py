@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import math
 import os
 
 import pytest
@@ -439,11 +440,11 @@ def _as_string_key(df):
 
 def test_verified_bucketed_batches_read_only_their_buckets(spark, tmp_path):
     """A verified ``bucketed:`` layout keeps its stored partition_key, so a
-    batch's filter prunes partition directories: over 8 buckets in batches
-    of 2 the table is read once in all, not once per batch. A dir whose
-    sidecar is absent or names another bucket count recomputes the key and
-    scans the whole table per batch, with identical violations and
-    verdicts."""
+    batch's filter prunes partition directories: over 8 buckets in several
+    row-packed batches the table is read once in all, not once per batch. A
+    dir whose sidecar is absent or names another bucket count recomputes the
+    key and scans the whole table per batch (batches of 2 buckets), with
+    identical violations and verdicts."""
     from schema_infer_plugin_spark.plans.runner import resolve_transcripts_input, write_bucketed
     from schema_infer_plugin_spark.sources.metadata import (
         BUCKET_SCHEME_FILE,
@@ -453,7 +454,8 @@ def test_verified_bucketed_batches_read_only_their_buckets(spark, tmp_path):
     t = synth_transcripts(spark, 300)
     n_rows = t.count()
     scanned, violations, verdict_rows = {}, {}, {}
-    for layout in ("verified", "absent", "mismatched"):
+    batches = {layout: [] for layout in ("verified", "absent", "mismatched")}
+    for layout in batches:
         bdir = str(tmp_path / layout)
         write_bucketed(t, bdir, 8)
         if layout == "absent":
@@ -467,14 +469,17 @@ def test_verified_bucketed_batches_read_only_their_buckets(spark, tmp_path):
         out = str(tmp_path / f"out_{layout}")
         scanned[layout] = _instrumented_run(
             spark, src, out, deterministic=verified,
-            n_buckets=8, batch_buckets=2, bucket_rows=bucket_rows,
+            n_buckets=8, batch_buckets=2, batch_cell_rows=n_rows, bucket_rows=bucket_rows,
+            on_batch=batches[layout].append,
         )
         violations[layout] = _rows(_as_string_key(_violations(spark, out)))
         verdict_rows[layout] = _rows(
             _as_string_key(spark.read.parquet(os.path.join(out, "verdicts")))
         )
     # 8 buckets in batches of 2: an unpruned layout is read once per batch
+    assert len(batches["verified"]) > 1
     assert scanned["verified"] == n_rows
+    assert [len(b) for b in batches["absent"]] == [2, 2, 2, 2]
     assert scanned["absent"] == scanned["mismatched"] == 4 * n_rows
     assert violations["verified"]  # the synth corpus injects violations
     assert violations["absent"] == violations["mismatched"] == violations["verified"]
@@ -485,8 +490,8 @@ def test_verified_bucketed_batches_read_only_their_buckets(spark, tmp_path):
 def test_observed_verdicts_and_ledger_match_read_back(spark, tmp_path):
     """The verdicts and ledger counts a run builds on the driver from its
     write's Observations are row-identical to ``verdicts()`` and per-bucket
-    counts over what it wrote: shared fixture, every option on, an uneven
-    last batch, one metadata-pruned bucket and a crash-and-resume."""
+    counts over what it wrote: shared fixture, every option on, row-packed
+    batches, one metadata-pruned bucket and a crash-and-resume."""
     import __spark_entry__ as entrymod
     from schema_infer_plugin_spark.checks import boundary_rules, transition_rules
     from schema_infer_plugin_spark.checks.custom import as_rules
@@ -508,18 +513,23 @@ def test_observed_verdicts_and_ledger_match_read_back(spark, tmp_path):
     t, bucket_rows = resolve_transcripts_input(spark, f"bucketed:{bdir}", n)
     assert bucket_rows["5"] == 0
     out = str(tmp_path / "run")
+    batches = []
     options = dict(
-        n_buckets=n, batch_buckets=3, bucket_rows=bucket_rows,
+        n_buckets=n, bucket_rows=bucket_rows, on_batch=batches.append,
+        # the first batch's budget holds buckets 0-2 and no more
+        batch_cell_rows=3 * sum(bucket_rows[k] for k in "012"),
         custom_rules=list(entrymod._EXPR_RULES),
         boundary_roles=(first, last),
         allowed_transitions=entrymod._ALLOWED_TRANSITIONS,
     )
-    # batches [0,1,2] [3,4,6] [7] after pruning 5; crash after the first
+    # 5 is pruned, the first batch is [0,1,2]; crash after it
     with pytest.raises(RuntimeError, match="injected failure"):
         run_validation(spark, t, out, fail_after_batches=1, **options)
+    assert batches == [["0", "1", "2"]]
     assert _verdict_files(out) == []  # a crashed run leaves no half grid
     resumed = run_validation(spark, t, out, **options)
-    assert (resumed["skipped"], resumed["processed"]) == (4, 4)  # [3,4,6] [7]
+    assert (resumed["skipped"], resumed["processed"]) == (4, 4)  # 3, 4, 6, 7
+    assert sorted(sum(batches[1:], [])) == ["3", "4", "6", "7"]
     assert len(_verdict_files(out)) == 1
 
     names = [
@@ -629,3 +639,189 @@ def test_empty_verified_input_results(spark, tmp_path):
     assert sorted(r["partition_key"] for r in ledger) == [str(k) for k in range(n)]
     assert all(r["check_counts"] == dict.fromkeys(CHECK_NAMES, 0) for r in ledger)
     assert all(r["rows_processed"] == r["violation_count"] == 0 for r in ledger)
+
+
+def _bucketed_input(spark, tmp_path, frame, n):
+    """``frame`` written in the verified bucketed layout at ``n`` buckets and
+    resolved as main() resolves it: (transcripts, bucket_rows)."""
+    from schema_infer_plugin_spark.plans.runner import resolve_transcripts_input, write_bucketed
+
+    bdir = str(tmp_path / "bucketed")
+    write_bucketed(frame, bdir, n)
+    t, bucket_rows = resolve_transcripts_input(spark, f"bucketed:{bdir}", n)
+    assert bucket_rows is not None
+    return t, bucket_rows
+
+
+def test_row_batches_pack_by_rows_in_order():
+    """Buckets pack in their order while the batch's rows × buckets stays
+    within the budget and its buckets within the cap; a bucket above the
+    budget is a batch of its own."""
+    from schema_infer_plugin_spark.plans.runner import _row_batches
+
+    rows = {"0": 4, "1": 3, "2": 50, "3": 2, "4": 2, "5": 2, "6": 9}
+    keys = list(rows)
+    # [0, 1]: 7 rows × 2 = 14; [3, 4, 5]: 6 × 3 = 18; adding 6 makes 15 × 4
+    assert _row_batches(keys, rows, 20, 64) == [["0", "1"], ["2"], ["3", "4", "5"], ["6"]]
+    assert _row_batches(keys, rows, 20, 2) == [["0", "1"], ["2"], ["3", "4"], ["5"], ["6"]]
+    assert _row_batches(keys, rows, 10**9, 64) == [keys]
+    assert _row_batches([], rows, 10, 64) == []
+
+
+def test_hot_bucket_is_its_own_batch(spark, tmp_path):
+    """On a verified layout a bucket holding more rows than
+    ``batch_cell_rows`` runs as a batch of its own; the buckets on either
+    side of it pack together, in bucket order, within the budget."""
+    n = 4
+    hot = spark.range(3_000).selectExpr(
+        "'conv_hot' AS conv_id", "CAST(id AS INT) AS turn_idx", "'user' AS role",
+        "'hello there' AS text", "CAST(NULL AS STRING) AS tool",
+        "CAST(1704067200 + id AS TIMESTAMP) AS ts",
+    )
+    frame = synth_transcripts(spark, 100).unionByName(hot)
+    t, bucket_rows = _bucketed_input(spark, tmp_path, frame, n)
+    hot_key = max(bucket_rows, key=bucket_rows.get)
+    budget = bucket_rows[hot_key] - 1
+    rest = [str(k) for k in range(n) if str(k) != hot_key]
+    assert all(bucket_rows[k] > 0 for k in rest)
+    assert 3 * sum(bucket_rows[k] for k in rest) <= budget  # the rest pack together
+    batches = []
+    out = str(tmp_path / "run")
+    run_validation(
+        spark, t, out, n_buckets=n, batch_cell_rows=budget, bucket_rows=bucket_rows,
+        on_batch=batches.append,
+    )
+    before, after = [k for k in rest if k < hot_key], [k for k in rest if k > hot_key]
+    assert batches == [b for b in (before, [hot_key], after) if b]
+    led = read_ledger(spark, out).filter(F.col("pass_name") == PASS_B).collect()
+    assert sum(r["rows_processed"] for r in led) == frame.count()
+
+
+def test_recomputed_key_keeps_batch_buckets(spark, tmp_path):
+    """Verified counts over input without the stored key (as ``iceberg:``
+    input arrives): every batch scans the whole table, so the buckets are
+    not packed by rows, whatever ``batch_cell_rows`` is; at most
+    ceil(n_buckets / batch_buckets) batches, one table read each."""
+    from schema_infer_plugin_spark.plans.runner import with_partition_key
+
+    n, per_batch = 8, 2
+    t = synth_transcripts(spark, 300)
+    n_rows = t.count()
+    bucket_rows = dict(with_partition_key(t, n).groupBy("partition_key").count().collect())
+    assert "partition_key" not in t.columns and len(bucket_rows) == n
+    batches = []
+    scanned = _instrumented_run(
+        spark, t, str(tmp_path / "run"), n_buckets=n, batch_buckets=per_batch,
+        batch_cell_rows=1, bucket_rows=bucket_rows, on_batch=batches.append,
+    )
+    assert len(batches) <= math.ceil(n / per_batch)
+    assert [len(b) for b in batches] == [per_batch] * (n // per_batch)
+    assert scanned == len(batches) * n_rows
+
+
+def test_batch_without_violations_completes(spark, tmp_path):
+    """A batch that writes no violation row still yields its observed
+    counts: the empty write keeps its Observations (AQE would otherwise
+    drop the empty stage that carries them) and the run completes."""
+    clean = spark.range(200).selectExpr(
+        "CONCAT('conv_', CAST(id % 20 AS STRING)) AS conv_id",
+        "CAST(id DIV 20 AS INT) AS turn_idx", "'user' AS role", "'hello there' AS text",
+        "CAST(NULL AS STRING) AS tool", "CAST(1704067200 + id AS TIMESTAMP) AS ts",
+    )
+    t, bucket_rows = _bucketed_input(spark, tmp_path, clean, 4)
+    out = str(tmp_path / "run")
+    s = run_validation(spark, t, out, n_buckets=4, batch_cell_rows=1, bucket_rows=bucket_rows)
+    assert (s["rows"], s["violations"]) == (200, 0)
+    assert all(r[2] and r[3] == 0 for r in _verdict_rows(spark, out))
+    led = read_ledger(spark, out).filter(F.col("pass_name") == PASS_B).collect()
+    assert sorted((r["partition_key"], r["rows_processed"]) for r in led) == sorted(
+        (k, n) for k, n in bucket_rows.items()
+    )
+
+
+def test_batches_hold_at_most_the_cell_bound(spark, tmp_path):
+    """A verified layout with more buckets than ``MAX_BATCH_CELLS // |rules|``
+    splits into several batches, each within the cell bound, although the
+    whole table fits the default budget."""
+    from schema_infer_plugin_spark.plans.runner import MAX_BATCH_CELLS
+
+    n = 128
+    t, bucket_rows = _bucketed_input(spark, tmp_path, synth_transcripts(spark, 1_500), n)
+    cap = MAX_BATCH_CELLS // len(CHECK_NAMES)
+    live = [str(k) for k in range(n) if bucket_rows[str(k)] > 0]
+    assert len(live) > cap
+    batches = []
+    out = str(tmp_path / "run")
+    run_validation(spark, t, out, n_buckets=n, bucket_rows=bucket_rows, on_batch=batches.append)
+    assert [len(b) for b in batches] == [cap] * (len(live) // cap) + [len(live) % cap]
+    assert sum(batches, []) == live
+    led = read_ledger(spark, out).filter(F.col("pass_name") == PASS_B).collect()
+    assert len(led) == n
+    assert sum(r["rows_processed"] for r in led) == sum(bucket_rows.values())
+
+
+def test_row_packed_resume_matches_single_shot(spark, tmp_path):
+    """A crash and resume over row-packed batches writes the violations,
+    verdicts and ledger rows (apart from wall time and timestamp) of a
+    single-shot run, and the resume plans only the buckets the ledger does
+    not record."""
+    n = 8
+    t, bucket_rows = _bucketed_input(spark, tmp_path, synth_transcripts(spark, 400), n)
+    options = dict(n_buckets=n, bucket_rows=bucket_rows, batch_cell_rows=sum(bucket_rows.values()))
+    single, resumed = str(tmp_path / "single"), str(tmp_path / "resumed")
+    run_validation(spark, t, single, **options)
+    first, second = [], []
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_validation(spark, t, resumed, fail_after_batches=2, on_batch=first.append, **options)
+    r = run_validation(spark, t, resumed, on_batch=second.append, **options)
+    done = sum(first, [])
+    assert len(first) == 2 and second and r["skipped"] == len(done)
+    assert sum(second, []) == [str(k) for k in range(n) if str(k) not in done]
+
+    assert _rows(_violations(spark, resumed)) == _rows(_violations(spark, single))
+    assert _verdict_rows(spark, resumed) == _verdict_rows(spark, single)
+    ledger = lambda out: _rows(read_ledger(spark, out).drop("wall_sec", "completed_ts"))  # noqa: E731
+    assert ledger(resumed) == ledger(single)
+    assert len(ledger(single)) == n
+
+
+def _write_plans(spark, since: int, path: str) -> list[str]:
+    """The physical plan texts (Spark's formatted explain) of the SQL
+    executions after id ``since`` that write files to ``path``."""
+    listed = spark._jsparkSession.sharedState().statusStore().executionsList()
+    execs = [listed.apply(i) for i in range(listed.size())]
+    return [
+        e.physicalPlanDescription()
+        for e in execs
+        if e.executionId() > since and f"Arguments: file:{path}, " in e.physicalPlanDescription()
+    ]
+
+
+def test_packed_batch_plan_gate(spark, tmp_path):
+    """A row-packed batch over a verified layout, every option on, writes
+    from one plan with one parquet scan, pruned by a partition filter on
+    ``partition_key``; no row-at-a-time Python, and ``text`` in no
+    exchange's input."""
+    import re
+
+    import __spark_entry__ as entrymod
+
+    n = 8
+    t, bucket_rows = _bucketed_input(spark, tmp_path, synth_transcripts(spark, 300), n)
+    listed = spark._jsparkSession.sharedState().statusStore().executionsList()
+    since = max((listed.apply(i).executionId() for i in range(listed.size())), default=-1)
+    batches = []
+    out = str(tmp_path / "run")
+    run_validation(
+        spark, t, out, n_buckets=n, bucket_rows=bucket_rows, on_batch=batches.append,
+        custom_rules=list(entrymod._EXPR_RULES),  # text_min_len reads text
+        boundary_roles=(["user", "system"], ["assistant", "tool"]),
+        allowed_transitions=entrymod._ALLOWED_TRANSITIONS,
+    )
+    assert len(batches) == 1 and len(batches[0]) == n  # one batch: every bucket
+    (plan,) = _write_plans(spark, since, os.path.join(out, "violations"))
+    assert len(set(re.findall(r"^\((\d+)\) Scan parquet", plan, re.M))) == 1, plan
+    assert re.search(r"^PartitionFilters: \[.*partition_key", plan, re.M), plan
+    assert "BatchEvalPython" not in plan
+    exchanged = re.findall(r"^\(\d+\) Exchange\nInput \[\d+\]: \[(.*)\]$", plan, re.M)
+    assert exchanged and not any(re.search(r"\btext#", cols) for cols in exchanged), plan

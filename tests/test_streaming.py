@@ -613,3 +613,20 @@ def test_windowed_grid_counts_stream_matches_batch(spark, tmp_path):
         .toString()
     )
     assert "EventTimeWatermark" in plan
+
+
+def test_stream_replay_queries_leave_nothing_behind(spark, tmp_path, monkeypatch):
+    """A driver query replayed through Structured Streaming removes its
+    staged input, output and checkpoint before it returns, and the frame it
+    returns still reads: repeated calls leave the temp dir empty."""
+    import tempfile
+    from collections import Counter
+
+    import __spark_entry__ as entrymod
+    from tests.conftest import SF_SMOKE
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    frames = [entrymod.q_expr_suite_stream(spark, SF_SMOKE) for _ in range(2)]
+    assert os.listdir(tmp_path) == []
+    first, second = (Counter(map(tuple, f.collect())) for f in frames)
+    assert first == second and first
