@@ -10,8 +10,9 @@ check, in the shape of mergeable partial counts finished in one aggregation:
 * :func:`drift_counts` counts every series of a frame — categorical
   columns, the ``prev->role`` transitions, numeric columns on a fixed grid,
   optionally per group key such as an event-time window — as ONE stacked
-  ``(by…, column, bucket, v, cnt)`` frame. write_histograms persists its
-  slices, run_drift and the windowed faces recount through it.
+  ``(by…, column, bucket, v, cnt)`` frame. write_histograms persists it
+  whole, as one baseline file; run_drift and the windowed faces recount
+  through it and compare against that file.
 * :func:`drift_terms` pairs two such frames per cell and projects every
   per-cell term; :func:`drift_compare` is ONE grouped aggregation over those
   terms giving every statistic of every series.
@@ -32,7 +33,7 @@ from schema_infer_plugin_spark.schema import conv_order, null_key_salt, well_key
 
 from .ksdrift import grid_quantize
 
-#: the (prev_role -> role) series of :func:`drift_counts` (and its baseline dir)
+#: the (prev_role -> role) series of :func:`drift_counts`, by this column name
 TRANSITIONS = "__transitions__"
 
 
@@ -152,15 +153,6 @@ def drift_counts(
         .groupBy(*by, "_s.column", "_s.bucket", "_s.v")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
-
-
-def drift_series(counts: DataFrame, column: str, numeric: bool = False) -> DataFrame:
-    """One series' rows of a :func:`drift_counts` frame (extra columns kept):
-    categorical rows have a bucket, numeric rows do not."""
-    one = counts.filter((F.col("column") == column) & (F.col("bucket").isNull() == numeric))
-    # category_bucket is a no-op here: it declares bucket non-NULL, as the
-    # persisted artifact has it (a filter leaves nullability as is)
-    return one if numeric else one.withColumn("bucket", category_bucket(F.col("bucket")))
 
 
 def _chi2_expr() -> Column:

@@ -519,16 +519,16 @@ def cmd_estimate(args: argparse.Namespace) -> int:
 def cmd_window_drift(args: argparse.Namespace) -> int:
     """Per-WINDOW drift report ("which day drifted"): event-time windowed
     counts of --column (or --numeric-column, on the baseline's grid)
-    compared with a validate run's persisted baseline — categorical series
-    by PSI/KL/JS/chi2 against ``histograms/<col>``, numeric ones by KS/W1/
-    chi2 against ``histograms_numeric/<col>`` (checks/drift.windowed_counts
-    + drift_compare, the batch face of the streaming windowed_*_stream).
-    Writes one row per window to ``window_drift/`` (``window_ks/`` for a
-    numeric column) under --out, prints one line per window, and exits 1
-    when any window's PSI (KS) exceeds --psi-threshold (--ks-threshold); W1
-    and chi2 ride as evidence. The baseline is read like run_drift's: a
-    missing one exits with advice, a frequency-only one fails the run (it
-    carries no counts — re-run write_histograms). A numeric grid is fixed at
+    compared with that series of a validate run's persisted baseline,
+    ``histograms/`` — categorical series by PSI/KL/JS/chi2, numeric ones by
+    KS/W1/chi2 (checks/drift.windowed_counts + drift_compare, the batch face
+    of the streaming windowed_*_stream). Writes one row per window to
+    ``window_drift/`` (``window_ks/`` for a numeric column) under --out,
+    prints one line per window, and exits 1 when any window's PSI (KS)
+    exceeds --psi-threshold (--ks-threshold); W1 and chi2 ride as evidence.
+    The baseline is read like run_drift's (runner.read_baseline): a series
+    it lacks exits with advice, a baseline in an older per-series layout
+    fails the run (re-run write_histograms). A numeric grid is fixed at
     baseline time (clamp semantics), so out-of-range drift collapses
     conservatively into the edge buckets."""
     from schema_infer_plugin_spark.checks.drift import drift_compare, windowed_counts
@@ -539,33 +539,24 @@ def cmd_window_drift(args: argparse.Namespace) -> int:
     t, _ = resolve_transcripts_input(spark, args.input)
     numeric = args.numeric_column is not None
     c = args.numeric_column if numeric else args.column
-    base = read_baseline(spark, args.baseline, c, numeric)
-    if base is None:
-        kind, sub, arg = (
-            ("numeric", "histograms_numeric", "numeric_columns")
-            if numeric
-            else ("histogram", "histograms", "columns")
-        )
+    cats, nums = ([], [c]) if numeric else ([c], [])
+    try:
+        base, series = read_baseline(spark, args.baseline, cats, nums)
+    except FileNotFoundError:
+        series = {}
+    if (c, numeric) not in series:
+        kind, arg = ("numeric", "numeric_columns") if numeric else ("histogram", "columns")
         raise SystemExit(
-            f"window-drift: no {kind} baseline at {os.path.join(args.baseline, sub, c)} —"
-            f" re-run validate / write_histograms with {c!r} in {arg}"
+            f"window-drift: no {kind} baseline for {c!r} under"
+            f" {os.path.join(args.baseline, 'histograms')} — re-run validate /"
+            f" write_histograms with {c!r} in {arg}"
         )
-    grids = None
-    if numeric:
-        # bounded driver collect: the artifact is ≤ n_buckets rows, its row
-        # count fixed at BUILD time (index_store posture); one row carries
-        # the grid
-        meta = base.select("lo", "hi", "n_buckets").first()
-        if meta is None:
-            raise SystemExit(f"window-drift: empty numeric baseline for {c!r}")
-        grids = {c: (float(meta["lo"]), float(meta["hi"]), int(meta["n_buckets"]))}
-    counts = windowed_counts(t, [] if numeric else [c], grids, "ts", args.window)
-    rep = drift_compare(
-        counts, base.select("column", "bucket", "v", "cnt"), by=("window_start", "window_end")
-    )
+    grids = {c: series[(c, True)]} if numeric else None
+    counts = windowed_counts(t, cats, grids, "ts", args.window)
+    rep = drift_compare(counts, base, by=("window_start", "window_end"))
     out = os.path.join(args.out, "window_ks" if numeric else "window_drift")
     rep.write.mode("overwrite").parquet(out)
-    per_win = spark.read.parquet(out).orderBy("window_start").collect()
+    per_win = spark.read.schema(rep.schema).parquet(out).orderBy("window_start").collect()
     stat, threshold = ("ks_stat", float(args.ks_threshold)) if numeric else (
         "psi", float(args.psi_threshold)
     )
@@ -913,11 +904,11 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--input", required=True,
                    help="sf dir, iceberg:ns, synth:N, or bucketed:DIR")
     p.add_argument("--baseline", required=True,
-                   help="a validate run's --out dir (histograms/<column> with counts)")
+                   help="a validate run's --out dir (its histograms/ drift baseline)")
     p.add_argument("--column", default="role")
     p.add_argument("--numeric-column", default=None,
                    help="numeric mode: per-window KS vs the validate run's "
-                   "histograms_numeric/<col> grid baseline (overrides --column)")
+                   "grid baseline of that column (overrides --column)")
     p.add_argument("--window", default="1 day", help="event-time window duration")
     p.add_argument("--psi-threshold", default="0.2")
     p.add_argument("--ks-threshold", default="0.2",

@@ -2,14 +2,15 @@
 under its out dir, and every read of one, goes through this module.
 
 Each artifact is declared once in :data:`ARTIFACTS`: its path under the out
-dir (its name; ``histograms/<col>`` and ``histograms_numeric/<col>`` are
-families), its schema (declared in schema.py), whether it is partitioned on
-``partition_key`` and whether it is append-only. Every read passes the
-declared schema, so none plans a schema-inference job, and a write whose
-columns differ from the declaration raises, so a declared read never
-silently returns NULL columns. "Missing" has one rule, Spark's own
-``PATH_NOT_FOUND``, so any Hadoop filesystem URI (file://, hdfs://, s3a://)
-answers like a local path; every other read error raises.
+dir (its name), its schema (declared in schema.py), whether it is
+partitioned on ``partition_key`` and whether it is append-only. Every read
+passes the declared schema, so none plans a schema-inference job, and a
+write whose columns differ from the declaration raises, so a declared read
+never silently returns NULL columns. "Missing" has one rule: the path's own
+Hadoop ``FileSystem.exists``, asked before any read, so any Hadoop
+filesystem URI (file://, hdfs://, s3a://) answers like a local path and a
+missing path is never handed to Spark's reader (which logs a stack trace
+for it); every read error raises.
 
 The ledger is the checkpoint-resume record: each completed bucket (or
 whole-table pass) appends one row, and a restarted run skips what it
@@ -27,7 +28,6 @@ import os
 from typing import NamedTuple
 
 from py4j.protocol import Py4JError
-from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
@@ -64,8 +64,7 @@ class Artifact(NamedTuple):
 
 ARTIFACTS = {
     "profiles": Artifact(S.PROFILE_SCHEMA),
-    "histograms": Artifact(S.HISTOGRAM_SCHEMA),
-    "histograms_numeric": Artifact(S.GRID_SCHEMA),
+    "histograms": Artifact(S.DRIFT_BASELINE_SCHEMA),
     "violations": Artifact(
         S.VIOLATION_SCHEMA, partitioned=True, order=("conv_id", "turn_idx", "check_name")
     ),
@@ -80,12 +79,6 @@ ARTIFACTS = {
     "violations_diff_verdicts": Artifact(S.VIOLATIONS_DIFF_SCHEMA),
     "violations_new": Artifact(S.VIOLATIONS_NEW_SCHEMA),
 }
-
-
-def declared(name: str) -> Artifact:
-    """The declaration of artifact ``name`` (a family member
-    ``histograms/<col>`` is declared by its family)."""
-    return ARTIFACTS[name.split("/")[0]]
 
 
 def _known_nullable(spark: SparkSession, name: str) -> Column:
@@ -122,7 +115,7 @@ def write_artifact(
     declaration marks nullable is written nullable, whatever Catalyst proved
     of the frame. Raises when the frame's column names or types differ from
     the declaration."""
-    art = declared(name)
+    art = ARTIFACTS[name]
     got, want = (
         [(f.name, f.dataType.simpleString()) for f in s] for s in (frame.schema, art.schema)
     )
@@ -161,11 +154,13 @@ def read_artifact(
     ``FileNotFoundError`` naming the path, or returns None unless
     ``required``."""
     path = os.path.join(out_dir, name)
-    try:
-        return spark.read.schema(declared(name).schema).parquet(path)
-    except AnalysisException as e:
-        if e.getCondition() != "PATH_NOT_FOUND":
-            raise
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    # the filesystem the read would use, with the session's Hadoop options
+    # (sessionState is Spark-internal, reached through py4j, like
+    # _known_nullable's classes)
+    hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+    if jpath.getFileSystem(hadoop_conf).exists(jpath):
+        return spark.read.schema(ARTIFACTS[name].schema).parquet(path)
     if required:
         raise FileNotFoundError(f"no {name} artifact at {path}")
     return None

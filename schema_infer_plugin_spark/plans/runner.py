@@ -54,9 +54,8 @@ import argparse
 import os
 import time
 from collections.abc import Callable
-from functools import reduce
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window, functions as F
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 
 from schema_infer_plugin_spark.checks.alternation import transition_rules
 from schema_infer_plugin_spark.checks.boundaries import boundary_rules
@@ -429,13 +428,14 @@ def write_histograms(
     columns: list[str] | None = None,
     numeric_columns: list[str] | None = None,
 ) -> None:
-    """Persist the drift baselines for future runs: ``histograms/<col>`` and
-    ``histograms/__transitions__`` (bucket, freq, cnt, column → PSI/KL/JS/
-    chi2) and ``histograms_numeric/<col>`` (v, cnt, lo, hi, n_buckets → KS)
-    on a grid over [min, max] of THIS run's data (checks/ksdrift.py
-    fixed-grid notes). Two reads: one min/max probe for every grid, then ONE
-    checks/drift.drift_counts, persisted with ``freq = cnt / Σcnt``."""
-    from schema_infer_plugin_spark.checks.drift import TRANSITIONS, drift_counts, drift_series
+    """Persist the drift baseline for future runs: ``histograms/``, ONE
+    checks/drift.drift_counts frame of every series, written once, in one
+    file — the categorical ``columns`` and ``__transitions__`` (bucket, cnt
+    → PSI/KL/JS/chi2) and each numeric column's counts on a grid over [min,
+    max] of THIS run's data (v, cnt, and the grid lo, hi, n_buckets on
+    every row → KS; checks/ksdrift.py fixed-grid notes). Two reads: one
+    min/max probe for every grid, then the one drift_counts."""
+    from schema_infer_plugin_spark.checks.drift import TRANSITIONS, drift_counts
 
     # an explicit [] means "none", on both sides — only None takes the defaults
     num_cols = NUMERIC_DRIFT_COLUMNS if numeric_columns is None else numeric_columns
@@ -448,48 +448,68 @@ def write_histograms(
         for c, lo, hi in zip(num_cols, bounds[: len(x)], bounds[len(x) :])
         if lo is not None  # all-null column: no numeric baseline to persist
     }
-    names = dict.fromkeys([*(DRIFT_COLUMNS if columns is None else columns), TRANSITIONS])
-    per_series = Window.partitionBy("column", F.col("bucket").isNull())
-    hist = drift_counts(transcripts, list(names), grids)
-    hist = hist.select("*", (F.col("cnt") / F.sum("cnt").over(per_series)).alias("freq")).persist()
-    artifacts = {
-        f"histograms/{c}": drift_series(hist, c).select(
-            "bucket", "freq", "cnt", F.lit(c).alias("column")
-        )
-        for c in names
-    }
+    names = [*(DRIFT_COLUMNS if columns is None else columns), TRANSITIONS]
+    # each grid row carries its grid; a categorical row carries NULLs
+    grid = F.lit(None).cast("struct<lo:double,hi:double,n_buckets:int>")
     for c, (lo, hi, n) in grids.items():
-        grid = [F.lit(lo).alias("lo"), F.lit(hi).alias("hi"), F.lit(n).alias("n_buckets")]
-        artifacts[f"histograms_numeric/{c}"] = drift_series(
-            hist, c, numeric=True
-        ).select("v", "cnt", *grid)
-    try:
-        for name, frame in artifacts.items():
-            write_artifact(spark, out_dir, name, frame)
-    finally:
-        hist.unpersist()
+        on = F.col("bucket").isNull() & (F.col("column") == c)
+        at = F.struct(F.lit(lo).alias("lo"), F.lit(hi).alias("hi"), F.lit(n).alias("n_buckets"))
+        grid = F.when(on, at).otherwise(grid)
+    hist = drift_counts(transcripts, names, grids).select("*", grid.alias("_grid"))
+    hist = hist.select("column", "bucket", "v", "cnt", "_grid.*")
+    write_artifact(spark, out_dir, "histograms", hist)
 
 
 def read_baseline(
-    spark: SparkSession, baseline_dir: str, column: str, numeric: bool = False
-) -> DataFrame | None:
-    """One persisted drift baseline as a checks/drift.drift_counts slice
-    (column, bucket, v, cnt) — a numeric one keeps its grid (lo, hi,
-    n_buckets) — or None when nothing is at its path (artifacts.read_artifact's
-    one "missing" rule). A frequency-only artifact (written before counts
-    were persisted) fails the first job that reads it."""
-    artifact = f"{'histograms_numeric' if numeric else 'histograms'}/{column}"
-    df = read_artifact(spark, baseline_dir, artifact, required=False)
-    if df is None:
-        return None
-    path = os.path.join(baseline_dir, artifact)
-    legacy = f"drift baseline {path} is not count-bearing: re-run write_histograms"
-    cnt = F.coalesce(F.col("cnt"), F.raise_error(F.lit(legacy))).alias("cnt")
-    name = F.lit(column).alias("column")
-    if numeric:
-        bucket = F.lit(None).cast("string").alias("bucket")
-        return df.select(name, bucket, "v", cnt, "lo", "hi", "n_buckets")
-    return df.select(name, "bucket", F.lit(None).cast("double").alias("v"), cnt)
+    spark: SparkSession, baseline_dir: str, columns: list[str], numeric_columns: list[str]
+) -> tuple[DataFrame | None, dict[tuple[str, bool], tuple[float, float, int] | None]]:
+    """The requested series of the drift baseline under ``baseline_dir``:
+    their stacked checks/drift.drift_counts rows (column, bucket, v, cnt),
+    and each series to compare, in request order: ``(column, numeric)`` →
+    its grid (lo, hi, n_buckets), None for a categorical one. One declared
+    read and one bounded collect of every row's series and grid (≤
+    n_buckets rows per grid plus each categorical series' bucket domain,
+    fixed at BUILD time — the index_store posture).
+
+    Every requested categorical series (``columns``, the transitions
+    included) is compared when a baseline exists: write_histograms counted
+    it, and a series without rows counted none. A requested column other
+    than the transitions raises ``FileNotFoundError`` when there is no
+    baseline, or a non-empty one lacks it (an empty table's baseline holds
+    no row). A numeric column is compared where the baseline holds its
+    grid and skipped elsewhere. A ``histograms/`` dir with no file of its
+    own is the older per-series layout, which a non-recursive read sees as
+    empty: it raises ``ValueError``."""
+    from schema_infer_plugin_spark.checks.drift import TRANSITIONS
+
+    base = read_artifact(spark, baseline_dir, "histograms", required=False)
+    required = [c for c in columns if c != TRANSITIONS]
+    if base is None and required:
+        raise FileNotFoundError(f"no drift baseline for {required[0]!r} under {baseline_dir}")
+    if base is None:
+        return None, {}
+    if not base.inputFiles():
+        raise ValueError(
+            f"drift baseline {os.path.join(baseline_dir, 'histograms')} holds no file of its"
+            " own (the per-series layout of an older write_histograms): re-run write_histograms"
+        )
+    numeric = F.col("bucket").isNull()
+    rows = base.select("column", numeric.alias("numeric"), "lo", "hi", "n_buckets").collect()
+    held = {r["column"] for r in rows if not r["numeric"]}
+    missing = [c for c in required if rows and c not in held]
+    if missing:
+        raise FileNotFoundError(f"no drift baseline for {missing[0]!r} under {baseline_dir}")
+    grids = {
+        r["column"]: (float(r["lo"]), float(r["hi"]), int(r["n_buckets"]))
+        for r in rows
+        if r["numeric"]
+    }
+    series = {(c, False): None for c in columns}
+    series.update({(c, True): grids[c] for c in numeric_columns if c in grids})
+    requested = F.when(numeric, F.col("column").isin(numeric_columns)).otherwise(
+        F.col("column").isin(columns)
+    )
+    return base.filter(requested).select("column", "bucket", "v", "cnt"), series
 
 
 def run_drift(
@@ -503,7 +523,7 @@ def run_drift(
     psi_threshold: float = 0.2,
     ks_threshold: float = 0.1,
 ) -> DataFrame:
-    """Distribution drift of ``transcripts`` vs the baselines persisted under
+    """Distribution drift of ``transcripts`` vs the baseline persisted under
     ``baseline_dir`` (a previous run's out_dir). One verdict row per series:
     categorical columns and the transitions get ``drift_<col>`` /
     ``drift_transitions`` (pass iff total PSI <= threshold; metrics carry
@@ -516,12 +536,11 @@ def run_drift(
     moderate, >0.2 drifted (default 0.2); KS two-sample flags at ~0.1 for
     large same-source samples (default 0.1).
 
-    The baselines are stacked as one checks/drift.drift_counts frame; one
-    bounded collect reads the numeric grids, then ONE drift_counts scan of
-    the current data on those grids and ONE checks/drift.drift_compare
-    collect give every verdict. A MISSING transition or numeric baseline is
-    skipped (a baseline run that predates it); one that does not read
-    raises, and so does a frequency-only categorical baseline."""
+    :func:`read_baseline` reads the one baseline file and collects its
+    series and numeric grids once; then ONE drift_counts scan of the
+    current data on those grids and ONE checks/drift.drift_compare collect
+    give every verdict. Which series are compared, skipped or raise is
+    read_baseline's rule; a corrupt baseline raises."""
     from schema_infer_plugin_spark.checks.drift import TRANSITIONS, drift_compare, drift_counts
 
     cols = DRIFT_COLUMNS if columns is None else columns
@@ -535,36 +554,15 @@ def run_drift(
         return ((chi2 / dof) ** (1.0 / 3.0) - (1.0 - k9)) / (k9**0.5)
 
     def build() -> DataFrame:
-        # (column, numeric) → its baseline as a drift_counts slice
-        bases = {}
-        for c in cols:
-            base = read_baseline(spark, baseline_dir, c)
-            if base is None:
-                raise FileNotFoundError(f"no drift baseline for {c!r} under {baseline_dir}")
-            bases[(c, False)] = base
-        # sequence-structure and numeric drift are lenient: a baseline run that
-        # predates them is skipped, never failed
-        for c, numeric in [(TRANSITIONS, False), *((c, True) for c in num_cols)]:
-            base = read_baseline(spark, baseline_dir, c, numeric)
-            if base is not None:
-                bases[(c, numeric)] = base
-        grids = {}
-        nums = [b.select("column", "lo", "hi", "n_buckets") for (_, n), b in bases.items() if n]
-        if nums:
-            # one bounded collect (≤ n_buckets rows per numeric baseline, fixed
-            # at BUILD time — the index_store posture): every row carries the
-            # grid fixed at baseline time
-            for r in reduce(DataFrame.unionByName, nums).collect():
-                grids[r["column"]] = (float(r["lo"]), float(r["hi"]), int(r["n_buckets"]))
+        stacked, series = read_baseline(spark, baseline_dir, [*cols, TRANSITIONS], num_cols)
+        grids = {c: grid for (c, numeric), grid in series.items() if numeric}
 
         # (check_name, pass, metrics) — one row per series, in the order read
         rows: list[tuple[str, bool, dict[str, float]]] = []
-        if bases:
-            slices = [b.select("column", "bucket", "v", "cnt") for b in bases.values()]
-            stacked = reduce(DataFrame.unionByName, slices)
-            cur = drift_counts(transcripts, [c for c, n in bases if not n], grids)
+        if series:
+            cur = drift_counts(transcripts, [c for c, n in series if not n], grids)
             got = {(r["column"], r["grid"]): r for r in drift_compare(cur, stacked).collect()}
-            for key in bases:
+            for key in series:
                 r = got.get(key)
                 if r is None:
                     continue  # empty on both sides: no cells to compare

@@ -156,26 +156,19 @@ LEDGER_SCHEMA = StructType(
     ]
 )
 
-#: ``histograms/<col>`` and ``histograms/__transitions__``: one categorical
-#: drift baseline (bucket, freq, cnt)
-HISTOGRAM_SCHEMA = StructType(
+#: ``histograms/``: the drift baseline, one checks/drift.drift_counts frame
+#: of every series in one file. A categorical or ``__transitions__`` row has
+#: a bucket (``v`` NULL); a numeric row has ``v`` (bucket NULL) and carries
+#: the grid (lo, hi, n_buckets) it was counted on
+DRIFT_BASELINE_SCHEMA = StructType(
     [
-        StructField("bucket", StringType(), nullable=False),
-        StructField("freq", DoubleType()),
-        StructField("cnt", LongType(), nullable=False),
-        StructField("column", StringType(), nullable=False),
-    ]
-)
-
-#: ``histograms_numeric/<col>``: one numeric drift baseline, its counts on
-#: the fixed grid (lo, hi, n_buckets) every row carries
-GRID_SCHEMA = StructType(
-    [
+        StructField("column", StringType()),
+        StructField("bucket", StringType()),
         StructField("v", DoubleType()),
         StructField("cnt", LongType(), nullable=False),
-        StructField("lo", DoubleType(), nullable=False),
-        StructField("hi", DoubleType(), nullable=False),
-        StructField("n_buckets", IntegerType(), nullable=False),
+        StructField("lo", DoubleType()),
+        StructField("hi", DoubleType()),
+        StructField("n_buckets", IntegerType()),
     ]
 )
 

@@ -23,7 +23,6 @@ from schema_infer_plugin_spark.plans.artifacts import (
     ARTIFACTS,
     PARTITION_KEY,
     completed_keys,
-    declared,
     write_artifact,
 )
 from schema_infer_plugin_spark.session import local_frame
@@ -82,6 +81,47 @@ def _chain(node: ast.AST) -> list[str]:
             names.append(node.attr)
         node = node.func if isinstance(node, ast.Call) else node.value
     return names
+
+
+#: the seam's functions → the position of their artifact-name argument
+NAME_ARG = {"write_artifact": 2, "read_artifact": 2, "_whole_pass": 4}
+
+
+def _name_sites(path: Path) -> dict[str, bool]:
+    """Each call in ``path`` that names an artifact → whether it names it by
+    a literal key of ARTIFACTS (a seam function may pass its own name
+    parameter on)."""
+    tree = ast.parse(path.read_text())
+    sites = {}
+    for fn in ast.walk(tree):
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        params = [a.arg for a in fn.args.args]
+        own = params[NAME_ARG[fn.name]] if fn.name in NAME_ARG else None
+        for node in ast.walk(fn):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Name)
+                and node.func.id in NAME_ARG
+            ):
+                continue
+            i = NAME_ARG[node.func.id]
+            arg = node.args[i] if len(node.args) > i else None
+            literal = isinstance(arg, ast.Constant) and arg.value in ARTIFACTS
+            forwarded = isinstance(arg, ast.Name) and arg.id == own
+            sites[f"{path.name}:{node.lineno} {node.func.id}"] = literal or forwarded
+    return sites
+
+
+def test_artifact_names_are_declared_keys():
+    """Every artifact a module of the package reads or writes is named by a
+    literal key of ARTIFACTS, so each artifact is one declared path — no
+    family of paths built at run time."""
+    sites = {}
+    for path in sorted(PLANS.parent.rglob("*.py")):
+        sites.update(_name_sites(path))
+    assert len(sites) >= 15, sites  # the gate sees the seam's calls
+    assert [site for site, ok in sites.items() if not ok] == []
 
 
 def test_artifact_io_is_spelled_once():
@@ -190,10 +230,8 @@ def test_artifact_footers_match_declarations(flow):
             parquet = [f for f in files if f.endswith(".parquet")]
             if not parquet:
                 continue
-            rel = os.path.relpath(root, flow[day]).split(os.sep)
-            family = rel[0] in ("histograms", "histograms_numeric")
-            name = "/".join(rel[:2]) if family else rel[0]
-            art = declared(name)
+            name = os.path.relpath(root, flow[day]).split(os.sep)[0]
+            art = ARTIFACTS[name]
             # a partitioned artifact's partition column lives in its paths
             want = StructType(
                 [f for f in art.schema if not (art.partitioned and f.name == PARTITION_KEY)]
@@ -207,7 +245,7 @@ def test_artifact_footers_match_declarations(flow):
                 assert [(x.name, x.nullable) for x in schema] == [
                     (x.name, x.nullable) for x in want
                 ], (name, f)
-            seen.add(name.split("/")[0])
+            seen.add(name)
     assert seen == set(ARTIFACTS)
 
 

@@ -375,7 +375,8 @@ def test_estimate_cli(spark, tmp_path, capsys):
 def test_window_drift_cli(spark, tmp_path, capsys):
     """window-drift: self vs own baseline exits 0 (every window within PSI);
     an assistant-heavy slice drifts every window and exits 1; a freq-only
-    baseline fails loudly with advice to re-run write_histograms."""
+    baseline (written in the older per-series layout) fails loudly with
+    advice to re-run write_histograms."""
     import pytest
     from pyspark.sql import functions as F
 
@@ -414,7 +415,7 @@ def test_window_drift_cli(spark, tmp_path, capsys):
     histogram(t, "role").coalesce(1).write.parquet(
         os.path.join(old, "histograms", "role")
     )
-    with pytest.raises(Exception, match="count-bearing: re-run write_histograms"):
+    with pytest.raises(ValueError, match="per-series layout .*: re-run write_histograms"):
         main(["window-drift", "--input", "synth:1000", "--baseline", old,
               "--out", str(tmp_path / "w3")])
 
@@ -460,9 +461,9 @@ def test_window_drift_numeric_cli(spark, tmp_path, capsys):
 
 
 def test_window_drift_numeric_missing_baseline(spark, tmp_path):
-    """A baseline dir without the histograms_numeric/<col> artifact exits
-    with a clear SystemExit, not a raw AnalysisException — so does one
-    without the histograms/<col> artifact, on the categorical leg."""
+    """A baseline dir without a drift baseline exits with a clear
+    SystemExit on the numeric leg, not a raw AnalysisException — and so on
+    the categorical leg."""
     import pytest
 
     with pytest.raises(SystemExit, match="no numeric baseline"):
