@@ -130,26 +130,3 @@ def grid_quantize(v: F.Column, lo: float, hi: float, n_buckets: int) -> F.Column
         F.floor((clamped - lo) / ((hi - lo) / n_buckets)), F.lit(n_buckets - 1)
     )
     return F.lit(float(lo)) + bkt * (hi - lo) / n_buckets
-
-
-def grid_counts(
-    df: DataFrame, column: str, lo: float, hi: float, n_buckets: int = 1000
-) -> DataFrame:
-    """Per-grid-value counts of ``column`` — the persistable numeric-drift
-    baseline: (v double, cnt long, lo double, hi double, n_buckets int).
-    One groupBy over ≤ n_buckets values; NULLs excluded (see ks_statistic)."""
-    vals = df.select(F.col(column).cast("double").alias("raw")).filter(
-        F.col("raw").isNotNull()
-    )
-    return (
-        vals.select(grid_quantize(F.col("raw"), lo, hi, n_buckets).alias("v"))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(
-            "v",
-            "cnt",
-            F.lit(float(lo)).alias("lo"),
-            F.lit(float(hi)).alias("hi"),
-            F.lit(n_buckets).alias("n_buckets"),
-        )
-    )

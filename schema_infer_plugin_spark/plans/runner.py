@@ -13,10 +13,10 @@ On a verified ``bucketed:`` layout (written by ``write_bucketed``, its
 sidecar matching ``n_buckets``) that filter runs on the table's STORED
 partition column, so it prunes partition directories and a batch reads only
 its own buckets. That layout's metadata also gives every bucket's row count,
-so its batches are planned from them: buckets are packed in order up to
-:data:`BATCH_CELL_ROWS` input rows × buckets (a bucket above that is a batch
-of its own) and at most :data:`MAX_BATCH_CELLS` (bucket, check) cells. Any
-other input recomputes the key from conv_id, batches ``batch_buckets``
+so its batches are packed from them, in order, up to :data:`BATCH_ROWS`
+input rows (a bucket above that is a batch of its own), and its ledger rows
+trust them, checked by one observed ``count(1)`` per batch. Any other input
+recomputes the key from conv_id, batches ``batch_buckets``
 buckets at a time, and every batch scans the whole table (``n_buckets /
 batch_buckets`` reads in all), so packing by rows there would only add
 reads. ``iceberg:`` input is in that second group today, verified counts or
@@ -35,7 +35,8 @@ ledger once, at the start, and skipped. Violations are written partitioned
 by ``partition_key`` with per-bucket dynamic overwrite, then the bucket's
 ledger row is appended (a crash between the two re-runs the bucket and
 replaces its directory). The ledger row carries the bucket's per-check
-violation counts, so it is the one record of the bucket's outcome: the
+violation counts, read back once per batch from the directories it wrote
+(work ∝ the errors), so it is the one record of the bucket's outcome: the
 verdict grid is written once, when the run finishes, from those counts — a
 crashed run leaves no verdicts behind. Every other pass is whole-table
 (:func:`_whole_pass`): its ``__all__`` ledger row marks it done, and a
@@ -82,23 +83,16 @@ PASS_A = "profile"
 
 PROFILE_COLS = ["conv_id", "turn_idx", "role", "text", "tool"]
 
-#: the input rows × buckets one packed Pass-B batch may hold. Its rows
-#: Observation evaluates one ``count_if`` per bucket of the batch for every
-#: input row, about 20-30 ns each, while a batch has about 0.8 s of fixed
-#: cost (driver planning, three AQE stage jobs, a ledger append), so one
-#: more bucket in a batch pays only while rows × buckets stays near
-#: 0.8 s / 25 ns. Measured with local[2] on a 4-vCPU host; more executors
+#: the input rows one packed Pass-B batch may hold on a verified layout. A
+#: batch is the unit of resume. Its fixed cost (driver planning, the write's
+#: stage jobs, the violations read-back, the ledger append) is about 0.7 s,
+#: and the fused plan costs about 14 µs per input row (warm, local[3] on a
+#: 4-vCPU host, 10 rules, 64 one-bucket batches against one 64-bucket
+#: batch of 100,714 rows), so a full batch runs about a minute: its fixed
+#: cost is ~1% of it, and a crash loses at most that minute. More executors
 #: shrink the per-row cost in wall time, so a cluster wants a larger value.
-#: ``run_validation``'s ``batch_cell_rows`` overrides it for tests.
-BATCH_CELL_ROWS = 32_000_000
-
-#: the most exact ``count_if`` cells, across (bucket, check), that one Pass-B
-#: batch's violations Observation may hold, so a packed batch holds at most
-#: ``MAX_BATCH_CELLS // |rules|`` buckets (at least one). An Observation's
-#: driver cost is about 1 ms per cell on every run, and its first run adds
-#: a compile cost that grows faster than its cells: 0.3 s at 256, 0.8 s at
-#: 1,024 and 2.3 s at 2,048 (same host). 1,024 keeps that under a second.
-MAX_BATCH_CELLS = 1024
+#: ``run_validation``'s ``batch_rows`` overrides it for tests.
+BATCH_ROWS = 4_000_000
 
 
 def with_partition_key(df: DataFrame, n_buckets: int) -> DataFrame:
@@ -118,11 +112,6 @@ def write_bucketed(df: DataFrame, path: str, n_buckets: int) -> None:
     keyed = df if "partition_key" in df.columns else with_partition_key(df, n_buckets)
     keyed.write.mode("overwrite").partitionBy("partition_key").parquet(path)
     write_bucket_scheme(path, n_buckets)
-
-
-def _position(values: list[str], col: str) -> Column:
-    """1-based position of ``col``'s value in ``values``; 0 when absent."""
-    return F.array_position(F.array(*map(F.lit, values)), F.col(col))
 
 
 def _observe_cells(
@@ -157,24 +146,43 @@ def _cell_counts(metrics: dict) -> list[int]:
     return cells
 
 
-def _row_batches(
-    keys: list[str], bucket_rows: dict[str, int], cell_rows: int, max_buckets: int
-) -> list[list[str]]:
-    """``keys`` packed, in their order, into batches whose rows (by their
-    ``bucket_rows`` counts) times buckets is at most ``cell_rows``, of at
-    most ``max_buckets`` buckets. A bucket above ``cell_rows`` is a batch of
-    its own."""
+def _row_batches(keys: list[str], bucket_rows: dict[str, int], max_rows: int) -> list[list[str]]:
+    """``keys`` packed, in their order, into batches of at most ``max_rows``
+    rows by their ``bucket_rows`` counts. A bucket above ``max_rows`` is a
+    batch of its own."""
     batches: list[list[str]] = []
     rows = 0
     for k in keys:
-        n = len(batches[-1]) + 1 if batches else 0  # buckets with k added
-        if n and n <= max_buckets and (rows + bucket_rows[k]) * n <= cell_rows:
+        if batches and rows + bucket_rows[k] <= max_rows:
             batches[-1].append(k)
             rows += bucket_rows[k]
         else:
             batches.append([k])
             rows = bucket_rows[k]
     return batches
+
+
+def _written_counts(
+    spark: SparkSession, out_dir: str, batch: list[str], check_names: list[str], n: int
+) -> dict[str, dict[str, int]]:
+    """Each bucket of ``batch`` → check → violations, from ONE grouped read of
+    its violation directories (≤ |batch| × |rules| rows). Raises, naming them,
+    unless they hold the ``n`` rows the write wrote: dynamic overwrite keeps a
+    directory the write left empty, so rows of an earlier write that crashed
+    before its ledger append (resumed with other rules) would be counted."""
+    viol = read_artifact(spark, out_dir, "violations").filter(F.col("partition_key").isin(batch))
+    got = viol.groupBy("partition_key", "check_name").count().collect()
+    held = sum(r["count"] for r in got)
+    if held != n:
+        dirs = sorted({f"partition_key={r['partition_key']}" for r in got})
+        raise RuntimeError(
+            f"violations of buckets {batch}: the write wrote {n} rows, but {held} are"
+            f" under {dirs}: one holds an earlier write's rows; remove it and resume"
+        )
+    counts = {k: dict.fromkeys(check_names, 0) for k in batch}
+    for k, c, cnt in got:
+        counts[k][c] = cnt
+    return counts
 
 
 def _check_resumable(
@@ -230,7 +238,7 @@ def run_validation(
     run_id: str = "run0",
     n_buckets: int = 64,
     batch_buckets: int = 16,
-    batch_cell_rows: int = BATCH_CELL_ROWS,
+    batch_rows: int = BATCH_ROWS,
     fail_after_batches: int | None = None,
     on_batch: Callable[[list[str]], None] | None = None,
     role_domain: list[str] | None = None,
@@ -264,21 +272,20 @@ def run_validation(
 
     A batch is one scan of its buckets (pruned to them when ``bucket_rows``
     is given and ``transcripts`` carries the layout's stored
-    ``partition_key``), one violations write and one ledger append. There
-    the pending buckets are packed by their row counts, in bucket order,
-    into batches of at most ``batch_cell_rows`` input rows × buckets
-    (default :data:`BATCH_CELL_ROWS`; a bucket above that is a batch of its
-    own) and at most ``MAX_BATCH_CELLS // |rules|`` buckets. Otherwise each
-    batch scans the whole table and is the next ``batch_buckets`` pending
-    buckets. A resume plans only the buckets the ledger does not record. The
-    ledger's ``rows_processed`` / ``violation_count`` / ``check_counts`` come
-    from Observations on the violations write (input rows per bucket,
-    violations per (bucket, check)); the written violations are never read
-    back. The ledger is read once, at the start, and the verdict grid is
-    written once, at the end, as one file: finished buckets from their ledger
-    counts, pruned buckets as zeros, this run's batches from their
-    observations. A resume whose ledger rows lack counts or name other checks
-    raises.
+    ``partition_key``), one violations write, one grouped read-back of it
+    and one ledger append. There the pending buckets are packed by their
+    row counts, in bucket order, into batches of at most ``batch_rows`` input
+    rows (default :data:`BATCH_ROWS`; a bucket above that is a batch of its
+    own), and each bucket's ``rows_processed`` is its verified count: the
+    batch's observed ``count(1)`` raises when it differs from their sum.
+    Otherwise each batch scans the whole table, is the next ``batch_buckets``
+    pending buckets, and observes its rows per bucket. A resume plans only
+    the buckets the ledger does not record. The ledger's ``violation_count``
+    / ``check_counts`` come from the read-back (:func:`_written_counts`). The
+    ledger is read once, at the start, and the verdict grid is written once,
+    at the end, as one file: finished buckets from their ledger counts,
+    pruned buckets as zeros, this run's batches from their read-back. A
+    resume whose ledger rows lack counts or name other checks raises.
 
     ``bucket_rows``: metadata-derived row count per partition_key. Buckets
     whose metadata count is 0 — or absent — are metadata-pruned: their
@@ -297,7 +304,6 @@ def run_validation(
         rules += transition_rules(allowed_transitions)
     rules = as_rules(rules + list(custom_rules or []))
     check_names = [r.name for r in rules]
-    n_checks = len(check_names)
     prunes = bucket_rows is not None and "partition_key" in transcripts.columns
     if prunes:
         # a verified layout's stored key IS with_partition_key's value (read
@@ -324,8 +330,7 @@ def run_validation(
                 spark, out_dir, run_id, PASS_B, [(k, 0, 0, 0.0) for k in pruned], zeros
             )
     if prunes:
-        cap = max(1, MAX_BATCH_CELLS // n_checks)
-        batches = _row_batches(pending, bucket_rows, batch_cell_rows, cap)
+        batches = _row_batches(pending, bucket_rows, batch_rows)
     else:
         batches = [
             pending[i : i + batch_buckets] for i in range(0, len(pending), batch_buckets)
@@ -334,40 +339,34 @@ def run_validation(
     total_viol = 0
     for b_i, batch in enumerate(batches):
         t0 = time.time()
-        # Every count rides the write job as an Observation (CollectMetrics):
-        # input rows per bucket, and violations per (bucket, check), bounded
-        # by MAX_BATCH_CELLS on a pruning layout and by batch_buckets × |rules|
-        # otherwise. The ledger rows are built from them on the driver, so a
-        # batch neither re-scans its input nor reads back what it wrote.
-        part, obs_rows = _observe_cells(
-            keyed.filter(F.col("partition_key").isin(batch)),
-            f"rows_b{b_i}",
-            _position(batch, "partition_key") - 1,
-            len(batch),
-        )
+        # Input rows ride the write job as an Observation (CollectMetrics): a
+        # verified layout's footer counts ARE its buckets' rows, so one
+        # count(1) checks their sum; other input counts each bucket, exactly.
+        part = keyed.filter(F.col("partition_key").isin(batch))
+        if prunes:
+            obs_rows = Observation(f"rows_b{b_i}")
+            part = part.observe(obs_rows, F.count(F.lit(1)).alias("n"))
+        else:
+            key = F.array_position(F.array(*map(F.lit, batch)), F.col("partition_key"))
+            part, obs_rows = _observe_cells(part, f"rows_b{b_i}", key - 1, len(batch))
         # partition_key is a pure function of conv_id — recompute, don't join.
         viol = validate_transcripts(part, rules).withColumn(
             "partition_key",
             F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("string"),
         )
-        b, c = _position(batch, "partition_key"), _position(check_names, "check_name")
-        viol, obs_viol = _observe_cells(
-            viol,
-            f"viol_b{b_i}",
-            F.when((b > 0) & (c > 0), (b - 1) * n_checks + c - 1),
-            len(batch) * n_checks,
-        )
         # One job. Each bucket's directory is replaced on its own, so a
         # crash between this write and the ledger append re-runs the bucket
         # and replaces (not duplicates) its directory.
-        write_artifact(spark, out_dir, "violations", viol)
+        n_written = write_artifact(spark, out_dir, "violations", viol)["n"]
         # .get blocks on the completed write action — no extra job
-        row_counts = _cell_counts(obs_rows.get)
-        viol_counts = _cell_counts(obs_viol.get)
-        batch_counts = {
-            k: dict(zip(check_names, viol_counts[i * n_checks : (i + 1) * n_checks]))
-            for i, k in enumerate(batch)
-        }
+        seen = obs_rows.get
+        row_counts = [bucket_rows[k] for k in batch] if prunes else _cell_counts(seen)
+        if sum(row_counts) != seen["n"]:  # cells always sum to n: a verified count differs
+            raise RuntimeError(
+                f"buckets {batch} read {seen['n']} input rows, but their verified counts"
+                f" sum to {sum(row_counts)}: the input files changed after verification"
+            )
+        batch_counts = _written_counts(spark, out_dir, batch, check_names, n_written)
         counts.update(batch_counts)
         wall = time.time() - t0
         metrics = [
@@ -832,7 +831,7 @@ def main(argv: list[str] | None = None) -> None:
         help="buckets per Pass-B batch, each of which scans the whole table, over"
         " any input but a verified bucketed: layout (default: config, min(16,"
         " n_buckets)); a verified bucketed: batch reads only its buckets and is"
-        f" packed by their row counts up to {BATCH_CELL_ROWS:,} rows × buckets",
+        f" packed by their row counts up to {BATCH_ROWS:,} rows",
     )
     ap.add_argument(
         "--baseline",

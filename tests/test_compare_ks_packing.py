@@ -231,11 +231,8 @@ def test_ks_w1_from_counts_matches_separate_stats(spark):
     from pyspark.sql import functions as F
 
     from schema_infer_plugin_spark.checks.drift import drift_compare
-    from schema_infer_plugin_spark.checks.ksdrift import (
-        grid_counts,
-        ks_statistic,
-        wasserstein_statistic,
-    )
+    from schema_infer_plugin_spark.checks.ksdrift import ks_statistic, wasserstein_statistic
+    from tests.test_drift_counts import grid_counts
 
     a = spark.createDataFrame([(float(v),) for v in range(20)], "v double")
     b = spark.createDataFrame([(float(v) + 5.0,) for v in range(20)], "v double")

@@ -21,7 +21,7 @@ from pyspark.sql.types import StructType
 
 from schema_infer_plugin_spark.checks.alternation import transition_buckets
 from schema_infer_plugin_spark.checks.drift import bucket_counts, drift_compare
-from schema_infer_plugin_spark.checks.ksdrift import grid_counts
+from schema_infer_plugin_spark.checks.ksdrift import grid_quantize
 from schema_infer_plugin_spark.plans.runner import (
     KS_GRID_BUCKETS,
     run_drift,
@@ -32,6 +32,28 @@ from schema_infer_plugin_spark.sources.io import load_table
 from schema_infer_plugin_spark.sources.synth import synth_transcripts
 from schema_infer_plugin_spark.sources.views import transcripts_from_events
 from tests.conftest import SF_CORRECT
+
+
+def grid_counts(df, column: str, lo: float, hi: float, n_buckets: int = 1000):
+    """Reference per-grid-value counts of ``column``: (v double, cnt long,
+    lo double, hi double, n_buckets int), one groupBy over the
+    ``grid_quantize``d non-NULL values — the numeric series the stacked
+    baseline must hold."""
+    vals = df.select(F.col(column).cast("double").alias("raw")).filter(
+        F.col("raw").isNotNull()
+    )
+    return (
+        vals.select(grid_quantize(F.col("raw"), lo, hi, n_buckets).alias("v"))
+        .groupBy("v")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .select(
+            "v",
+            "cnt",
+            F.lit(float(lo)).alias("lo"),
+            F.lit(float(hi)).alias("hi"),
+            F.lit(n_buckets).alias("n_buckets"),
+        )
+    )
 
 
 def _shifted(t):

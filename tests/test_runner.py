@@ -469,7 +469,7 @@ def test_verified_bucketed_batches_read_only_their_buckets(spark, tmp_path):
         out = str(tmp_path / f"out_{layout}")
         scanned[layout] = _instrumented_run(
             spark, src, out, deterministic=verified,
-            n_buckets=8, batch_buckets=2, batch_cell_rows=n_rows, bucket_rows=bucket_rows,
+            n_buckets=8, batch_buckets=2, batch_rows=n_rows // 4, bucket_rows=bucket_rows,
             on_batch=batches[layout].append,
         )
         violations[layout] = _rows(_as_string_key(_violations(spark, out)))
@@ -488,10 +488,11 @@ def test_verified_bucketed_batches_read_only_their_buckets(spark, tmp_path):
 
 
 def test_observed_verdicts_and_ledger_match_read_back(spark, tmp_path):
-    """The verdicts and ledger counts a run builds on the driver from its
-    write's Observations are row-identical to ``verdicts()`` and per-bucket
-    counts over what it wrote: shared fixture, every option on, row-packed
-    batches, one metadata-pruned bucket and a crash-and-resume."""
+    """The verdicts and ledger counts a run builds on the driver, from its
+    write's Observations and one grouped read-back per batch, are
+    row-identical to ``verdicts()`` and per-bucket counts over what it
+    wrote: shared fixture, every option on, row-packed batches, one
+    metadata-pruned bucket and a crash-and-resume."""
     import __spark_entry__ as entrymod
     from schema_infer_plugin_spark.checks import boundary_rules, transition_rules
     from schema_infer_plugin_spark.checks.custom import as_rules
@@ -517,7 +518,7 @@ def test_observed_verdicts_and_ledger_match_read_back(spark, tmp_path):
     options = dict(
         n_buckets=n, bucket_rows=bucket_rows, on_batch=batches.append,
         # the first batch's budget holds buckets 0-2 and no more
-        batch_cell_rows=3 * sum(bucket_rows[k] for k in "012"),
+        batch_rows=sum(bucket_rows[k] for k in "012"),
         custom_rules=list(entrymod._EXPR_RULES),
         boundary_roles=(first, last),
         allowed_transitions=entrymod._ALLOWED_TRANSITIONS,
@@ -654,23 +655,23 @@ def _bucketed_input(spark, tmp_path, frame, n):
 
 
 def test_row_batches_pack_by_rows_in_order():
-    """Buckets pack in their order while the batch's rows × buckets stays
-    within the budget and its buckets within the cap; a bucket above the
-    budget is a batch of its own."""
+    """Buckets pack in their order while the batch's rows stay within the
+    budget, however many buckets that takes; a bucket above the budget is a
+    batch of its own."""
     from schema_infer_plugin_spark.plans.runner import _row_batches
 
     rows = {"0": 4, "1": 3, "2": 50, "3": 2, "4": 2, "5": 2, "6": 9}
     keys = list(rows)
-    # [0, 1]: 7 rows × 2 = 14; [3, 4, 5]: 6 × 3 = 18; adding 6 makes 15 × 4
-    assert _row_batches(keys, rows, 20, 64) == [["0", "1"], ["2"], ["3", "4", "5"], ["6"]]
-    assert _row_batches(keys, rows, 20, 2) == [["0", "1"], ["2"], ["3", "4"], ["5"], ["6"]]
-    assert _row_batches(keys, rows, 10**9, 64) == [keys]
-    assert _row_batches([], rows, 10, 64) == []
+    # [0, 1]: 7 rows; [3, 4, 5]: 6 rows; adding 6 makes 15
+    assert _row_batches(keys, rows, 10) == [["0", "1"], ["2"], ["3", "4", "5"], ["6"]]
+    assert _row_batches(keys, rows, 5) == [["0"], ["1"], ["2"], ["3", "4"], ["5"], ["6"]]
+    assert _row_batches(keys, rows, 10**9) == [keys]
+    assert _row_batches([], rows, 10) == []
 
 
 def test_hot_bucket_is_its_own_batch(spark, tmp_path):
     """On a verified layout a bucket holding more rows than
-    ``batch_cell_rows`` runs as a batch of its own; the buckets on either
+    ``batch_rows`` runs as a batch of its own; the buckets on either
     side of it pack together, in bucket order, within the budget."""
     n = 4
     hot = spark.range(3_000).selectExpr(
@@ -688,7 +689,7 @@ def test_hot_bucket_is_its_own_batch(spark, tmp_path):
     batches = []
     out = str(tmp_path / "run")
     run_validation(
-        spark, t, out, n_buckets=n, batch_cell_rows=budget, bucket_rows=bucket_rows,
+        spark, t, out, n_buckets=n, batch_rows=budget, bucket_rows=bucket_rows,
         on_batch=batches.append,
     )
     before, after = [k for k in rest if k < hot_key], [k for k in rest if k > hot_key]
@@ -700,7 +701,7 @@ def test_hot_bucket_is_its_own_batch(spark, tmp_path):
 def test_recomputed_key_keeps_batch_buckets(spark, tmp_path):
     """Verified counts over input without the stored key (as ``iceberg:``
     input arrives): every batch scans the whole table, so the buckets are
-    not packed by rows, whatever ``batch_cell_rows`` is; at most
+    not packed by rows, whatever ``batch_rows`` is; at most
     ceil(n_buckets / batch_buckets) batches, one table read each."""
     from schema_infer_plugin_spark.plans.runner import with_partition_key
 
@@ -712,25 +713,29 @@ def test_recomputed_key_keeps_batch_buckets(spark, tmp_path):
     batches = []
     scanned = _instrumented_run(
         spark, t, str(tmp_path / "run"), n_buckets=n, batch_buckets=per_batch,
-        batch_cell_rows=1, bucket_rows=bucket_rows, on_batch=batches.append,
+        batch_rows=1, bucket_rows=bucket_rows, on_batch=batches.append,
     )
     assert len(batches) <= math.ceil(n / per_batch)
     assert [len(b) for b in batches] == [per_batch] * (n // per_batch)
     assert scanned == len(batches) * n_rows
 
 
-def test_batch_without_violations_completes(spark, tmp_path):
-    """A batch that writes no violation row still yields its observed
-    counts: the empty write keeps its Observations (AQE would otherwise
-    drop the empty stage that carries them) and the run completes."""
-    clean = spark.range(200).selectExpr(
+def _clean(spark):
+    """200 rows, 20 conversations, that break no built-in rule."""
+    return spark.range(200).selectExpr(
         "CONCAT('conv_', CAST(id % 20 AS STRING)) AS conv_id",
         "CAST(id DIV 20 AS INT) AS turn_idx", "'user' AS role", "'hello there' AS text",
         "CAST(NULL AS STRING) AS tool", "CAST(1704067200 + id AS TIMESTAMP) AS ts",
     )
-    t, bucket_rows = _bucketed_input(spark, tmp_path, clean, 4)
+
+
+def test_batch_without_violations_completes(spark, tmp_path):
+    """A batch that writes no violation row still yields its observed
+    counts: the empty write keeps its Observations (AQE would otherwise
+    drop the empty stage that carries them) and the run completes."""
+    t, bucket_rows = _bucketed_input(spark, tmp_path, _clean(spark), 4)
     out = str(tmp_path / "run")
-    s = run_validation(spark, t, out, n_buckets=4, batch_cell_rows=1, bucket_rows=bucket_rows)
+    s = run_validation(spark, t, out, n_buckets=4, batch_rows=1, bucket_rows=bucket_rows)
     assert (s["rows"], s["violations"]) == (200, 0)
     assert all(r[2] and r[3] == 0 for r in _verdict_rows(spark, out))
     led = read_ledger(spark, out).filter(F.col("pass_name") == PASS_B).collect()
@@ -739,25 +744,86 @@ def test_batch_without_violations_completes(spark, tmp_path):
     )
 
 
-def test_batches_hold_at_most_the_cell_bound(spark, tmp_path):
-    """A verified layout with more buckets than ``MAX_BATCH_CELLS // |rules|``
-    splits into several batches, each within the cell bound, although the
-    whole table fits the default budget."""
-    from schema_infer_plugin_spark.plans.runner import MAX_BATCH_CELLS
+def test_verified_count_off_by_one_raises(spark, tmp_path):
+    """On a verified layout each bucket's ``rows_processed`` is its footer
+    count, so the batch's one observed ``count(1)`` must equal their sum: a
+    count off by one (the input files changed after verification) raises,
+    naming the batch's buckets and both totals, and records no bucket."""
+    import re
 
-    n = 128
-    t, bucket_rows = _bucketed_input(spark, tmp_path, synth_transcripts(spark, 1_500), n)
-    cap = MAX_BATCH_CELLS // len(CHECK_NAMES)
-    live = [str(k) for k in range(n) if bucket_rows[str(k)] > 0]
-    assert len(live) > cap
-    batches = []
+    n = 4
+    t, bucket_rows = _bucketed_input(spark, tmp_path, synth_transcripts(spark, 200), n)
+    assert all(bucket_rows[str(k)] > 0 for k in range(n))
+    total = sum(bucket_rows.values())
+    off = {**bucket_rows, "2": bucket_rows["2"] + 1}
     out = str(tmp_path / "run")
-    run_validation(spark, t, out, n_buckets=n, bucket_rows=bucket_rows, on_batch=batches.append)
-    assert [len(b) for b in batches] == [cap] * (len(live) // cap) + [len(live) % cap]
-    assert sum(batches, []) == live
-    led = read_ledger(spark, out).filter(F.col("pass_name") == PASS_B).collect()
-    assert len(led) == n
-    assert sum(r["rows_processed"] for r in led) == sum(bucket_rows.values())
+    named = re.escape(f"{['0', '1', '2', '3']} read {total} input rows")
+    with pytest.raises(RuntimeError, match=rf"{named}.*sum to {total + 1}"):
+        run_validation(spark, t, out, n_buckets=n, bucket_rows=off)
+    assert completed_keys(spark, out, "run0", PASS_B) == set()
+    assert _verdict_files(out) == []
+
+
+def test_stale_bucket_directory_raises(spark, tmp_path):
+    """Dynamic overwrite replaces only the bucket directories a write
+    touches. Rows an earlier write left in a pending bucket's directory (a
+    crash before its ledger append, resumed with another rule list) that
+    this write does not replace make the batch's read-back exceed what the
+    write wrote: the run raises naming that directory, and writes no
+    verdicts beside the old rows."""
+    from schema_infer_plugin_spark.plans.artifacts import write_artifact
+    from schema_infer_plugin_spark.schema import VIOLATION_SCHEMA
+    from schema_infer_plugin_spark.session import local_frame
+
+    out = str(tmp_path / "run")
+    stale = [("turn_cap_0", "conv_3", 3, "turn_idx", "3", "<= 0", "2")]
+    write_artifact(spark, out, "violations", local_frame(spark, stale, VIOLATION_SCHEMA))
+    with pytest.raises(RuntimeError, match=r"wrote 0 rows, but 1 are under \['partition_key=2'\]"):
+        run_validation(spark, _clean(spark), out, n_buckets=4, batch_buckets=4)
+    assert completed_keys(spark, out, "run0", PASS_B) == set()
+    assert _verdict_files(out) == []
+
+
+def test_crash_between_write_and_ledger_append_matches_single_shot(
+    spark, tmp_path, monkeypatch
+):
+    """A crash after a batch's violations write and before its ledger
+    append: the resume re-runs that batch, replaces the directories it
+    wrote, and ends with the violations, verdicts and ledger rows (apart
+    from wall time and timestamp) of a single-shot run."""
+    from schema_infer_plugin_spark.plans import runner
+
+    n = 8
+    t, bucket_rows = _bucketed_input(spark, tmp_path, synth_transcripts(spark, 400), n)
+    options = dict(n_buckets=n, bucket_rows=bucket_rows, batch_rows=sum(bucket_rows.values()) // 4)
+    single, resumed = str(tmp_path / "single"), str(tmp_path / "resumed")
+    run_validation(spark, t, single, **options)
+
+    append, appends = runner.append_ledger, []
+
+    def crash_on_second_batch(spark, out_dir, run_id, pass_name, metrics, *rest):
+        if pass_name == PASS_B:
+            appends.append([m[0] for m in metrics])
+            if len(appends) == 2:
+                raise RuntimeError("crash before the ledger append")
+        return append(spark, out_dir, run_id, pass_name, metrics, *rest)
+
+    monkeypatch.setattr(runner, "append_ledger", crash_on_second_batch)
+    with pytest.raises(RuntimeError, match="crash before the ledger append"):
+        run_validation(spark, t, resumed, **options)
+    monkeypatch.undo()
+    lost = appends[1]  # written, not recorded
+    assert completed_keys(spark, resumed, "run0", PASS_B) == set(appends[0])
+    assert any(
+        os.path.isdir(os.path.join(resumed, "violations", f"partition_key={k}")) for k in lost
+    )
+    r = run_validation(spark, t, resumed, **options)
+    assert r["skipped"] == len(appends[0])
+
+    assert _rows(_violations(spark, resumed)) == _rows(_violations(spark, single))
+    assert _verdict_rows(spark, resumed) == _verdict_rows(spark, single)
+    ledger = lambda out: _rows(read_ledger(spark, out).drop("wall_sec", "completed_ts"))  # noqa: E731
+    assert ledger(resumed) == ledger(single)
 
 
 def test_row_packed_resume_matches_single_shot(spark, tmp_path):
@@ -767,7 +833,7 @@ def test_row_packed_resume_matches_single_shot(spark, tmp_path):
     not record."""
     n = 8
     t, bucket_rows = _bucketed_input(spark, tmp_path, synth_transcripts(spark, 400), n)
-    options = dict(n_buckets=n, bucket_rows=bucket_rows, batch_cell_rows=sum(bucket_rows.values()))
+    options = dict(n_buckets=n, bucket_rows=bucket_rows, batch_rows=sum(bucket_rows.values()) // 4)
     single, resumed = str(tmp_path / "single"), str(tmp_path / "resumed")
     run_validation(spark, t, single, **options)
     first, second = [], []
