@@ -146,21 +146,42 @@ def write_artifact(
     return obs.get
 
 
+def observe_scan(frame: DataFrame, *metrics: Column) -> dict:
+    """``metrics`` (aliased aggregates) over ``frame``, observed on ONE job
+    that reads it and writes nothing (Spark's ``noop`` sink, no artifact):
+    unlike ``agg(...).first()`` it has no exchange, so no second adaptive
+    stage job."""
+    obs = Observation()
+    frame.observe(obs, *metrics).write.format("noop").mode("overwrite").save()
+    return obs.get
+
+
 def read_artifact(
-    spark: SparkSession, out_dir: str, name: str, required: bool = True
+    spark: SparkSession, out_dir: str, name: str, required: bool = True,
+    partitions: list[str] | None = None,
 ) -> DataFrame | None:
     """Artifact ``name`` under ``out_dir``, read with its declared schema
     (lazy: no job until used). When nothing is at its path it raises
     ``FileNotFoundError`` naming the path, or returns None unless
-    ``required``."""
+    ``required``. ``partitions`` reads only those ``partition_key``
+    directories of a partitioned artifact, listing no other (the column
+    kept, through ``basePath``); an absent one holds no rows."""
     path = os.path.join(out_dir, name)
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    schema = ARTIFACTS[name].schema
+    hadoop_path = spark._jvm.org.apache.hadoop.fs.Path
+    jpath = hadoop_path(path)
     # the filesystem the read would use, with the session's Hadoop options
     # (sessionState is Spark-internal, reached through py4j, like
     # _known_nullable's classes)
-    hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
-    if jpath.getFileSystem(hadoop_conf).exists(jpath):
-        return spark.read.schema(ARTIFACTS[name].schema).parquet(path)
+    fs = jpath.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+    if partitions is not None:
+        glob = hadoop_path(f"{path}/{PARTITION_KEY}={{{','.join(partitions)}}}")
+        dirs = [st.getPath().toString() for st in fs.globStatus(glob) or []]
+        if not dirs:
+            return local_frame(spark, [], schema)
+        return spark.read.schema(schema).option("basePath", path).parquet(*dirs)
+    if fs.exists(jpath):
+        return spark.read.schema(schema).parquet(path)
     if required:
         raise FileNotFoundError(f"no {name} artifact at {path}")
     return None

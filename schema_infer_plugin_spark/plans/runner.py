@@ -28,19 +28,18 @@ that transform is Murmur3 (Iceberg spec) and never agrees with this engine's
 live buckets; the runner verifies the scheme and refuses to prune when it
 can't (sources/metadata.py sidecar + table-property checks).
 
-Resume: every artifact is written and read through plans/artifacts.py,
-which declares each one's path, schema and layout, so every read is declared
-and no step infers a schema. Pass B's completed buckets are read from the
-ledger once, at the start, and skipped. Violations are written partitioned
-by ``partition_key`` with per-bucket dynamic overwrite, then the bucket's
-ledger row is appended (a crash between the two re-runs the bucket and
-replaces its directory). The ledger row carries the bucket's per-check
-violation counts, read back once per batch from the directories it wrote
-(work ∝ the errors), so it is the one record of the bucket's outcome: the
-verdict grid is written once, when the run finishes, from those counts — a
-crashed run leaves no verdicts behind. Every other pass is whole-table
-(:func:`_whole_pass`): its ``__all__`` ledger row marks it done, and a
-resumed call reads back what the first one wrote.
+Resume: a run is a list of steps (:func:`plan`); :func:`run_plan` reads the
+ledger once and skips each step whose pass has an ``__all__`` row for the
+run. Every artifact is written and read through plans/artifacts.py, which
+declares its path, schema and layout, so no step infers a schema. A
+whole-table pass (:func:`_whole_pass`) writes its artifact, then appends its
+``__all__`` row. Pass B resumes per bucket: it skips the buckets the ledger
+records. It writes violations partitioned by ``partition_key`` with
+per-bucket dynamic overwrite, then appends the bucket's ledger row (a crash
+between the two re-runs the bucket and replaces its directory) with its
+per-check violation counts, read back once per batch from the directories
+it wrote (work ∝ the errors): the verdict grid is written once, when the
+run finishes, from those counts, so a crashed run leaves no verdicts.
 
 CLI (spark-submit --py-files engine.zip -m runner style)::
 
@@ -55,18 +54,21 @@ import argparse
 import os
 import time
 from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 
 from schema_infer_plugin_spark.checks.alternation import transition_rules
 from schema_infer_plugin_spark.checks.boundaries import boundary_rules
 from schema_infer_plugin_spark.checks.custom import as_rules
+from schema_infer_plugin_spark.config import ConfigError, ValidationConfig, load_config
 from schema_infer_plugin_spark.operators.profile import profile
 from schema_infer_plugin_spark.plans.artifacts import (
     append_ledger,
     completed_check_counts,
-    completed_keys,
+    observe_scan,
     read_artifact,
+    read_ledger,
     write_artifact,
 )
 from schema_infer_plugin_spark.plans.validate import default_rules, validate_transcripts
@@ -76,7 +78,7 @@ from schema_infer_plugin_spark.schema import (
     EVOLUTION_VERDICT_SCHEMA,
     VERDICT_SCHEMA,
 )
-from schema_infer_plugin_spark.session import local_frame
+from schema_infer_plugin_spark.session import get_spark, local_frame
 
 PASS_B = "validate"
 PASS_A = "profile"
@@ -166,11 +168,12 @@ def _written_counts(
     spark: SparkSession, out_dir: str, batch: list[str], check_names: list[str], n: int
 ) -> dict[str, dict[str, int]]:
     """Each bucket of ``batch`` → check → violations, from ONE grouped read of
-    its violation directories (≤ |batch| × |rules| rows). Raises, naming them,
-    unless they hold the ``n`` rows the write wrote: dynamic overwrite keeps a
-    directory the write left empty, so rows of an earlier write that crashed
-    before its ledger append (resumed with other rules) would be counted."""
-    viol = read_artifact(spark, out_dir, "violations").filter(F.col("partition_key").isin(batch))
+    its own violation directories (≤ |batch| × |rules| rows; no other
+    bucket's directory is listed). Raises, naming them, unless they hold the
+    ``n`` rows the write wrote: dynamic overwrite keeps a directory the write
+    left empty, so rows of an earlier write that crashed before its ledger
+    append (resumed with other rules) would be counted."""
+    viol = read_artifact(spark, out_dir, "violations", partitions=batch)
     got = viol.groupBy("partition_key", "check_name").count().collect()
     held = sum(r["count"] for r in got)
     if held != n:
@@ -194,16 +197,13 @@ def _check_resumable(
     list changed between crash and resume) would mix two verdict grids."""
     for k, counts in sorted(done.items()):
         if counts is None:
-            raise RuntimeError(
-                f"cannot resume run {run_id!r}: the ledger row of bucket {k} has no"
-                f" per-check counts, so its checks {sorted(check_names)} cannot be"
-                " confirmed; start a new run_id"
-            )
-        if set(counts) != set(check_names):
-            raise RuntimeError(
-                f"cannot resume run {run_id!r}: bucket {k} ran other checks; differing"
-                f" checks: {sorted(set(counts) ^ set(check_names))}; start a new run_id"
-            )
+            why = f"has no per-check counts, so its checks {sorted(check_names)} are unconfirmed"
+        elif set(counts) != set(check_names):
+            why = f"names other checks; differing checks: {sorted(set(counts) ^ set(check_names))}"
+        else:
+            continue
+        raise RuntimeError(f"cannot resume run {run_id!r}: the ledger row of bucket {k} {why};"
+                           " start a new run_id")
 
 
 def _whole_pass(
@@ -215,19 +215,15 @@ def _whole_pass(
     build: Callable[[], DataFrame],
     *bad: Column,
 ) -> DataFrame:
-    """One whole-table pass (its resume granularity is the pass): unless the
-    ledger records ``run_id``'s ``pass_name`` done, write ``build()`` as
-    artifact ``name`` and append the ledger row ``("__all__", rows, bad,
-    wall)``, where ``bad`` is the write's observed metric of that alias (0
-    when none is given). Returns the artifact read with its declared schema,
-    on the fresh path and the resumed one alike."""
-    if "__all__" not in completed_keys(spark, out_dir, run_id, pass_name):
-        t0 = time.time()
-        m = write_artifact(spark, out_dir, name, build(), *bad)
-        wall = time.time() - t0
-        append_ledger(
-            spark, out_dir, run_id, pass_name, [("__all__", m["n"], m.get("bad") or 0, wall)]
-        )
+    """One whole-table pass: write ``build()`` as artifact ``name``, then
+    append the ledger row ``("__all__", rows, bad, wall)`` that marks
+    ``run_id``'s ``pass_name`` done (``bad``: the write's observed metric of
+    that alias, else 0), and return the artifact's declared read. Whether
+    the pass runs at all is :func:`run_plan`'s decision."""
+    t0 = time.time()
+    m = write_artifact(spark, out_dir, name, build(), *bad)
+    wall = time.time() - t0
+    append_ledger(spark, out_dir, run_id, pass_name, [("__all__", m["n"], m.get("bad") or 0, wall)])
     return read_artifact(spark, out_dir, name)
 
 
@@ -239,7 +235,6 @@ def run_validation(
     n_buckets: int = 64,
     batch_buckets: int = 16,
     batch_rows: int = BATCH_ROWS,
-    fail_after_batches: int | None = None,
     on_batch: Callable[[list[str]], None] | None = None,
     role_domain: list[str] | None = None,
     tool_domain: list[str] | None = None,
@@ -266,37 +261,30 @@ def run_validation(
       so the columns they read (``text``) never shuffle. Rule names must not
       collide (raises).
 
-    Returns summary metrics. ``fail_after_batches`` injects a crash after that
-    many completed batches (tests prove resumability with it). Domains default
-    to the schema constants; a config file overrides them (config.py).
+    Returns summary metrics; ``on_batch(batch)`` runs after each batch's
+    ledger append. Domains default to the schema constants.
 
-    A batch is one scan of its buckets (pruned to them when ``bucket_rows``
-    is given and ``transcripts`` carries the layout's stored
-    ``partition_key``), one violations write, one grouped read-back of it
-    and one ledger append. There the pending buckets are packed by their
-    row counts, in bucket order, into batches of at most ``batch_rows`` input
-    rows (default :data:`BATCH_ROWS`; a bucket above that is a batch of its
-    own), and each bucket's ``rows_processed`` is its verified count: the
-    batch's observed ``count(1)`` raises when it differs from their sum.
-    Otherwise each batch scans the whole table, is the next ``batch_buckets``
-    pending buckets, and observes its rows per bucket. A resume plans only
-    the buckets the ledger does not record. The ledger's ``violation_count``
-    / ``check_counts`` come from the read-back (:func:`_written_counts`). The
-    ledger is read once, at the start, and the verdict grid is written once,
-    at the end, as one file: finished buckets from their ledger counts,
-    pruned buckets as zeros, this run's batches from their read-back. A
-    resume whose ledger rows lack counts or name other checks raises.
+    A batch (formed as the module docstring says, with ``batch_rows`` for
+    :data:`BATCH_ROWS`) is one scan of its buckets, one violations write,
+    one grouped read-back of it for the ledger's ``violation_count`` /
+    ``check_counts`` (:func:`_written_counts`) and one ledger append. On a
+    verified layout its observed ``count(1)`` raises when it differs from
+    its buckets' verified counts; other input observes its rows per bucket.
+    The ledger is read once, at the start: a resume plans only the buckets
+    it does not record, and raises when their rows lack counts or name other
+    checks. The verdict grid is written once, at the end, as one file:
+    finished buckets from their ledger counts, pruned buckets as zeros, this
+    run's batches from their read-back.
 
     ``bucket_rows``: metadata-derived row count per partition_key. Buckets
-    whose metadata count is 0 — or absent — are metadata-pruned: their
-    all-zero ledger rows and PASS verdicts come from the driver without EVER
+    whose count is 0 — or absent — are metadata-pruned: their all-zero
+    ledger rows and PASS verdicts come from the driver without EVER
     scheduling a scan of the input (reference empty-topic skip,
-    plugin/optimistic.py:387-510). PRECONDITION: the counts must describe
-    partition values produced by ``with_partition_key`` at the SAME
-    ``n_buckets`` — use sources/metadata.verified_partition_counts /
-    iceberg_verified_counts (as ``main`` does), which verify the persisted
-    scheme and return None when they can't; counts keyed by any other hash
-    (e.g. Iceberg ``bucket(N, conv_id)`` Murmur3) would prune live buckets."""
+    plugin/optimistic.py:387-510). PRECONDITION: the counts describe the
+    values ``with_partition_key`` gives at the SAME ``n_buckets``: take them
+    from :func:`resolve_transcripts_input`, which verifies the persisted
+    scheme; counts keyed by any other hash (e.g. Iceberg ``bucket(N,
+    conv_id)`` Murmur3) would prune live buckets."""
     rules = default_rules(role_domain, tool_domain)
     if boundary_roles:
         rules += boundary_rules(tuple(boundary_roles[0]), tuple(boundary_roles[1]))
@@ -326,17 +314,12 @@ def run_validation(
             # driver — the input table is not read
             zeros = {k: dict.fromkeys(check_names, 0) for k in pruned}
             counts.update(zeros)
-            append_ledger(
-                spark, out_dir, run_id, PASS_B, [(k, 0, 0, 0.0) for k in pruned], zeros
-            )
+            append_ledger(spark, out_dir, run_id, PASS_B, [(k, 0, 0, 0.0) for k in pruned], zeros)
     if prunes:
         batches = _row_batches(pending, bucket_rows, batch_rows)
     else:
-        batches = [
-            pending[i : i + batch_buckets] for i in range(0, len(pending), batch_buckets)
-        ]
-    total_rows = 0
-    total_viol = 0
+        batches = [pending[i : i + batch_buckets] for i in range(0, len(pending), batch_buckets)]
+    total_rows = total_viol = 0
     for b_i, batch in enumerate(batches):
         t0 = time.time()
         # Input rows ride the write job as an Observation (CollectMetrics): a
@@ -350,10 +333,7 @@ def run_validation(
             key = F.array_position(F.array(*map(F.lit, batch)), F.col("partition_key"))
             part, obs_rows = _observe_cells(part, f"rows_b{b_i}", key - 1, len(batch))
         # partition_key is a pure function of conv_id — recompute, don't join.
-        viol = validate_transcripts(part, rules).withColumn(
-            "partition_key",
-            F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("string"),
-        )
+        viol = with_partition_key(validate_transcripts(part, rules), n_buckets)
         # One job. Each bucket's directory is replaced on its own, so a
         # crash between this write and the ledger append re-runs the bucket
         # and replaces (not duplicates) its directory.
@@ -378,31 +358,20 @@ def run_validation(
         total_viol += sum(m[2] for m in metrics)
         if on_batch is not None:
             on_batch(batch)
-        if fail_after_batches is not None and b_i + 1 >= fail_after_batches:
-            raise RuntimeError(f"injected failure after batch {b_i + 1}")
     # the run's whole verdict grid, one row per (bucket, check), written once
     grid = [
         (run_id, k, c, n == 0, n, {"violation_count": float(n)})
-        for k in all_keys
-        for c, n in counts[k].items()
+        for k in all_keys for c, n in counts[k].items()
     ]
     write_artifact(spark, out_dir, "verdicts", local_frame(spark, grid, VERDICT_SCHEMA))
     return {
-        "run_id": run_id,
-        "buckets": n_buckets,
-        "skipped": len(done),
-        "pruned": len(pruned),
-        "processed": len(pending),
-        "rows": total_rows,
-        "violations": total_viol,
+        "run_id": run_id, "buckets": n_buckets, "skipped": len(done), "pruned": len(pruned),
+        "processed": len(pending), "rows": total_rows, "violations": total_viol,
     }
 
 
 def run_profile(
-    spark: SparkSession,
-    transcripts: DataFrame,
-    out_dir: str,
-    run_id: str = "run0",
+    spark: SparkSession, transcripts: DataFrame, out_dir: str, run_id: str = "run0",
     columns: list[str] | None = None,
 ) -> DataFrame:
     """Pass A: single-scan wide profile, written once (not bucketed — the
@@ -413,6 +382,7 @@ def run_profile(
     )
 
 
+PASS_HISTOGRAMS = "histograms"
 PASS_DRIFT = "drift"
 
 DRIFT_COLUMNS = ["role", "tool"]
@@ -421,42 +391,45 @@ KS_GRID_BUCKETS = 1000
 
 
 def write_histograms(
-    spark: SparkSession,
-    transcripts: DataFrame,
-    out_dir: str,
-    columns: list[str] | None = None,
-    numeric_columns: list[str] | None = None,
-) -> None:
+    spark: SparkSession, transcripts: DataFrame, out_dir: str,
+    columns: list[str] | None = None, numeric_columns: list[str] | None = None,
+    run_id: str = "run0",
+) -> DataFrame:
     """Persist the drift baseline for future runs: ``histograms/``, ONE
     checks/drift.drift_counts frame of every series, written once, in one
     file — the categorical ``columns`` and ``__transitions__`` (bucket, cnt
     → PSI/KL/JS/chi2) and each numeric column's counts on a grid over [min,
     max] of THIS run's data (v, cnt, and the grid lo, hi, n_buckets on
     every row → KS; checks/ksdrift.py fixed-grid notes). Two reads: one
-    min/max probe for every grid, then the one drift_counts."""
+    min/max probe for every grid, then the one drift_counts. A whole-table
+    pass: its ledger row makes it resumable."""
     from schema_infer_plugin_spark.checks.drift import TRANSITIONS, drift_counts
 
-    # an explicit [] means "none", on both sides — only None takes the defaults
-    num_cols = NUMERIC_DRIFT_COLUMNS if numeric_columns is None else numeric_columns
-    # bounded 2-values-per-column collect: baseline/index construction, not a
-    # per-row probe — same posture as ivf_centroids
-    x = [F.col(c).cast("double") for c in num_cols]
-    bounds = transcripts.agg(*map(F.min, x), *map(F.max, x)).first() if num_cols else []
-    grids = {
-        c: (float(lo), float(hi), KS_GRID_BUCKETS)
-        for c, lo, hi in zip(num_cols, bounds[: len(x)], bounds[len(x) :])
-        if lo is not None  # all-null column: no numeric baseline to persist
-    }
-    names = [*(DRIFT_COLUMNS if columns is None else columns), TRANSITIONS]
-    # each grid row carries its grid; a categorical row carries NULLs
-    grid = F.lit(None).cast("struct<lo:double,hi:double,n_buckets:int>")
-    for c, (lo, hi, n) in grids.items():
-        on = F.col("bucket").isNull() & (F.col("column") == c)
-        at = F.struct(F.lit(lo).alias("lo"), F.lit(hi).alias("hi"), F.lit(n).alias("n_buckets"))
-        grid = F.when(on, at).otherwise(grid)
-    hist = drift_counts(transcripts, names, grids).select("*", grid.alias("_grid"))
-    hist = hist.select("column", "bucket", "v", "cnt", "_grid.*")
-    write_artifact(spark, out_dir, "histograms", hist)
+    def build() -> DataFrame:
+        # an explicit [] means "none", on both sides — only None takes the defaults
+        num_cols = NUMERIC_DRIFT_COLUMNS if numeric_columns is None else numeric_columns
+        # 2 values per column, observed on one scan: baseline construction,
+        # not a per-row probe — same posture as ivf_centroids
+        x = [F.col(c).cast("double") for c in num_cols]
+        aggs = [F.min(v).alias(f"lo{i}") for i, v in enumerate(x)]
+        aggs += [F.max(v).alias(f"hi{i}") for i, v in enumerate(x)]
+        b = observe_scan(transcripts, *aggs) if aggs else {}
+        grids = {
+            c: (float(b[f"lo{i}"]), float(b[f"hi{i}"]), KS_GRID_BUCKETS)
+            for i, c in enumerate(num_cols)
+            if b[f"lo{i}"] is not None  # all-null column: no numeric baseline to persist
+        }
+        names = [*(DRIFT_COLUMNS if columns is None else columns), TRANSITIONS]
+        # each grid row carries its grid; a categorical row carries NULLs
+        grid = F.lit(None).cast("struct<lo:double,hi:double,n_buckets:int>")
+        for c, (lo, hi, n) in grids.items():
+            on = F.col("bucket").isNull() & (F.col("column") == c)
+            g = F.struct(F.lit(lo).alias("lo"), F.lit(hi).alias("hi"), F.lit(n).alias("n_buckets"))
+            grid = F.when(on, g).otherwise(grid)
+        hist = drift_counts(transcripts, names, grids).select("*", grid.alias("_grid"))
+        return hist.select("column", "bucket", "v", "cnt", "_grid.*")
+
+    return _whole_pass(spark, out_dir, run_id, PASS_HISTOGRAMS, "histograms", build)
 
 
 def read_baseline(
@@ -591,10 +564,7 @@ PASS_PROFILE_DIFF = "profile_diff"
 
 
 def run_profile_compare(
-    spark: SparkSession,
-    out_dir: str,
-    baseline_dir: str,
-    run_id: str = "run0",
+    spark: SparkSession, out_dir: str, baseline_dir: str, run_id: str = "run0"
 ) -> DataFrame:
     """Data-profile diff gate (plans/compare.py): OK/WARN/BREAKING verdicts
     per column between this run's persisted profile and the baseline run's.
@@ -619,10 +589,7 @@ PASS_EVOLUTION = "schema_evolution"
 
 
 def run_schema_evolution(
-    spark: SparkSession,
-    out_dir: str,
-    baseline_dir: str,
-    run_id: str = "run0",
+    spark: SparkSession, out_dir: str, baseline_dir: str, run_id: str = "run0",
     mode: str = "BACKWARD",
 ) -> DataFrame:
     """Schema-drift gate: the current run's inferred column profile must stay
@@ -708,25 +675,15 @@ def run_violations_diff(
             F.max("in_base").alias("in_base"),
             F.max("expected").alias("expected"),
         )
-        verdict = (
-            per_identity.groupBy("check_name")
-            .agg(
-                F.sum("in_cur").cast("long").alias("n_current"),
-                F.sum("in_base").cast("long").alias("n_baseline"),
-                F.sum(((F.col("in_cur") == 1) & (F.col("in_base") == 0)).cast("long"))
-                .cast("long")
-                .alias("n_new"),
-                F.sum(((F.col("in_cur") == 0) & (F.col("in_base") == 1)).cast("long"))
-                .cast("long")
-                .alias("n_resolved"),
-            )
-            .withColumn("pass", F.col("n_new") == 0)
-            .withColumn("run_id", F.lit(run_id))
-        )
+        new = (F.col("in_cur") == 1) & (F.col("in_base") == 0)
+        verdict = per_identity.groupBy("check_name").agg(
+            F.sum("in_cur").cast("long").alias("n_current"),
+            F.sum("in_base").cast("long").alias("n_baseline"),
+            F.count_if(new).alias("n_new"),
+            F.count_if((F.col("in_cur") == 0) & (F.col("in_base") == 1)).alias("n_resolved"),
+        ).withColumn("pass", F.col("n_new") == 0).withColumn("run_id", F.lit(run_id))
         # bounded sample of the regressions only — the rows a human triages
-        new_rows = per_identity.filter(
-            (F.col("in_cur") == 1) & (F.col("in_base") == 0)
-        ).select(*_VIOL_IDENTITY, "expected")
+        new_rows = per_identity.filter(new).select(*_VIOL_IDENTITY, "expected")
         sample = violations_sample(new_rows, k=k).withColumn("run_id", F.lit(run_id))
         write_artifact(spark, out_dir, "violations_new", sample)
         return verdict
@@ -759,7 +716,8 @@ def resolve_transcripts_input(
     (transcripts DataFrame, bucket_rows). bucket_rows (metadata-verified
     per-partition counts for empty-bucket pruning) is only non-None for
     bucketed:/iceberg: inputs whose persisted scheme verifies against
-    ``n_buckets`` — any other dir scans in full."""
+    ``n_buckets`` and that count EVERY bucket of it — any other dir scans in
+    full."""
     from schema_infer_plugin_spark.sources.io import load_table
     from schema_infer_plugin_spark.sources.views import transcripts_from_events
 
@@ -789,8 +747,6 @@ def resolve_transcripts_input(
             t = local_frame(spark, [], BUCKETED_SCHEMA)
         else:
             t = spark.read.parquet(bdir)
-        if bucket_rows is None:
-            t = t.drop("partition_key")
     elif input_str.startswith("iceberg:"):
         from schema_infer_plugin_spark.sources.metadata import iceberg_verified_counts
 
@@ -803,19 +759,129 @@ def resolve_transcripts_input(
         t = transcripts_from_events(spark, load_table(spark, input_str, "events"))
     else:
         t = transcripts_from_events(spark, load_table(spark, input_str, "events"))
+    if bucket_rows is not None and set(bucket_rows) != {str(i) for i in range(n_buckets)}:
+        # belt-and-braces behind the verified_* gates: pruning needs an
+        # explicit count for EVERY bucket of this scheme, never absent = empty
+        bucket_rows = None
+    if bucket_rows is None:  # only a verified layout keeps its stored key
+        t = t.drop("partition_key")
     return t, bucket_rows
 
 
+class Step(NamedTuple):
+    """One step of a run. ``run()`` does its work; a dict it returns holds its
+    entries of the run's summary. A step with a ``pass_name`` is done once
+    the ledger holds that pass's ``__all__`` row for the run, and
+    :func:`run_plan` then skips it; a step without one runs on every call."""
+
+    name: str
+    pass_name: str | None
+    run: Callable[[], object]
+
+
+def plan(
+    spark: SparkSession, t: DataFrame, out_dir: str, run_id: str, v: ValidationConfig,
+    bucket_rows: dict[str, int] | None = None, baseline: str | None = None,
+    triage_k: int = 100, domain_coverage: float | None = None,
+) -> list[Step]:
+    """``main()``'s run over ``t`` as its steps, in order: Pass A, the drift
+    baseline, Pass B, its triage (unless ``triage_k`` is 0) and scorecard;
+    then, given the out dir of a ``baseline`` run, drift, schema evolution,
+    the profile diff and the violations diff. ``v`` (the config's validation
+    section) gives Pass B's buckets, batches, domains and rules;
+    ``domain_coverage`` (``--infer-domains``) infers the role/tool domains
+    from ``t`` at that cumulative coverage instead, inside the Pass-B step.
+    Pass B resumes per bucket inside its step; triage and scorecard, bounded
+    rewrites of its output, rerun. Builds no Spark job: the work is in the
+    steps' ``run``."""
+
+    def validate() -> dict:
+        role_domain, tool_domain = v.role_domain or None, v.tool_domain or None
+        if domain_coverage is not None:
+            from schema_infer_plugin_spark.checks.domains import inferred_domain_values
+
+            role_domain = inferred_domain_values(t, "role", domain_coverage)
+            tool_domain = inferred_domain_values(t, "tool", domain_coverage)
+        ends = (v.boundary_first_roles, v.boundary_last_roles)
+        return run_validation(
+            spark, t, out_dir, run_id=run_id, n_buckets=v.n_buckets,
+            batch_buckets=v.batch_buckets, role_domain=role_domain, tool_domain=tool_domain,
+            bucket_rows=bucket_rows, custom_rules=v.custom_rules,
+            boundary_roles=ends if all(ends) else None,
+            allowed_transitions=v.allowed_transitions or None,
+        )
+
+    def verdicts(run: Callable[..., DataFrame], *args, **kw) -> list:
+        """The rows of a whole pass's verdict frame, for the summary."""
+        return run(spark, *args, run_id=run_id, **kw).collect()
+
+    triage = Step("write_triage", None, lambda: {
+        "triage_rows": write_triage(spark, out_dir, k=triage_k, run_id=run_id)
+    })
+    steps = [
+        Step("run_profile", PASS_A, lambda: run_profile(spark, t, out_dir, run_id=run_id)),
+        Step("write_histograms", PASS_HISTOGRAMS,
+             lambda: write_histograms(spark, t, out_dir, run_id=run_id)),
+        Step("run_validation", None, validate),
+        *([triage] if triage_k else []),
+        Step("write_scorecard", None, lambda: {
+            "scorecard_rows": write_scorecard(spark, out_dir, run_id=run_id)
+        }),
+    ]
+    if baseline is None:
+        return steps
+    return steps + [
+        Step("run_drift", PASS_DRIFT, lambda: {"drift": {
+            r["check_name"]: (r["pass"], dict(r["metrics"]))
+            for r in verdicts(run_drift, t, out_dir, baseline, psi_threshold=v.psi_threshold)
+        }}),
+        Step("run_schema_evolution", PASS_EVOLUTION, lambda: {"schema_evolution": [
+            (r["pass"], r["kind"], r["field"])
+            for r in verdicts(run_schema_evolution, out_dir, baseline)
+        ]}),
+        Step("run_profile_compare", PASS_PROFILE_DIFF, lambda: {"profile_diff": {
+            r["col_name"]: r["verdict"] for r in verdicts(run_profile_compare, out_dir, baseline)
+        }}),
+        Step("run_violations_diff", PASS_VIOL_DIFF, lambda: {"violations_diff": {
+            r["check_name"]: (r["pass"], int(r["n_new"]), int(r["n_resolved"]))
+            for r in verdicts(run_violations_diff, out_dir, baseline)
+        }}),
+    ]
+
+
+def run_plan(
+    spark: SparkSession, steps: list[Step], out_dir: str, run_id: str,
+    around: Callable[[Step, Callable[[], object]], object] | None = None,
+) -> dict:
+    """Run ``steps`` in order and return the run's summary: the entries the
+    run steps return, plus, under ``resumed``, the names of the steps
+    skipped because the ledger records their pass done for ``run_id``. The
+    ledger is read once, here: the one place a resume decides what it
+    skips. Every other step runs as ``around(step, step.run)`` (a caller's
+    hook to time, label or interrupt it), or as ``step.run()``."""
+    done = {
+        r["pass_name"]
+        for r in read_ledger(spark, out_dir)
+        .filter((F.col("run_id") == run_id) & (F.col("partition_key") == "__all__"))
+        .select("pass_name")
+        .collect()
+    }
+    summary: dict = {}
+    resumed = [step.name for step in steps if step.pass_name in done]
+    for step in steps:
+        if step.pass_name not in done:
+            out = step.run() if around is None else around(step, step.run)
+            summary.update(out if isinstance(out, dict) else {})
+    if resumed:
+        summary["resumed"] = resumed
+    return summary
+
+
 def main(argv: list[str] | None = None) -> None:
-    from schema_infer_plugin_spark.session import get_spark
-
-    from schema_infer_plugin_spark.config import ConfigError, load_config
-
     ap = argparse.ArgumentParser(description="transcripts validation run")
     ap.add_argument("--config", default=None, help="YAML/JSON config file (flags override)")
     ap.add_argument(
-        "--input",
-        default=None,
+        "--input", default=None,
         help="sf dir, iceberg:ns, synth:N_convs, or bucketed:DIR (a transcripts"
         " parquet dir written by write_bucketed — its _bucket_scheme.json"
         " sidecar must match --n-buckets to enable metadata-only empty-bucket"
@@ -825,37 +891,29 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--run-id", default="run0")
     ap.add_argument("--n-buckets", type=int, default=None)
     ap.add_argument(
-        "--batch-buckets",
-        type=int,
-        default=None,
+        "--batch-buckets", type=int, default=None,
         help="buckets per Pass-B batch, each of which scans the whole table, over"
         " any input but a verified bucketed: layout (default: config, min(16,"
         " n_buckets)); a verified bucketed: batch reads only its buckets and is"
         f" packed by their row counts up to {BATCH_ROWS:,} rows",
     )
     ap.add_argument(
-        "--baseline",
-        default=None,
+        "--baseline", default=None,
         help="a previous run's --out dir; enables the KL/PSI drift pass",
     )
     ap.add_argument(
-        "--infer-domains",
-        action="store_true",
+        "--infer-domains", action="store_true",
         help="derive role/tool domains from the DATA (checks/domains."
         "inferred_domain_values) instead of config/schema constants — the"
         " inference-first mode: values below --domain-coverage cumulative"
         " frequency become violations",
     )
     ap.add_argument(
-        "--domain-coverage",
-        type=float,
-        default=0.999,
+        "--domain-coverage", type=float, default=0.999,
         help="cumulative-frequency bar for --infer-domains (default 0.999)",
     )
     ap.add_argument(
-        "--triage-k",
-        type=int,
-        default=100,
+        "--triage-k", type=int, default=100,
         help="rows per check in the violations_triage artifact (0 disables)",
     )
     args = ap.parse_args(argv)
@@ -866,81 +924,23 @@ def main(argv: list[str] | None = None) -> None:
     args.input = args.input or cfg.tables.input
     if not args.input:
         raise SystemExit("--input is required (flag or config tables.input)")
-    n_buckets = args.n_buckets if args.n_buckets is not None else cfg.validation.n_buckets
-    batch_buckets = (
-        args.batch_buckets if args.batch_buckets is not None else cfg.validation.batch_buckets
-    )
+    v = cfg.validation
+    v.n_buckets = v.n_buckets if args.n_buckets is None else args.n_buckets
+    v.batch_buckets = v.batch_buckets if args.batch_buckets is None else args.batch_buckets
 
+    perf = cfg.performance
     spark = get_spark(
-        app_name=f"validate-{args.run_id}",
-        master=cfg.performance.master,
-        shuffle_partitions=cfg.performance.shuffle_partitions,
+        app_name=f"validate-{args.run_id}", master=perf.master,
+        shuffle_partitions=perf.shuffle_partitions,
         extra_conf={
-            "spark.sql.adaptive.enabled": str(cfg.performance.aqe).lower(),
-            "spark.sql.files.maxPartitionBytes": cfg.performance.max_partition_bytes,
+            "spark.sql.adaptive.enabled": str(perf.aqe).lower(),
+            "spark.sql.files.maxPartitionBytes": perf.max_partition_bytes,
         },
     )
-    t, bucket_rows = resolve_transcripts_input(spark, args.input, n_buckets)
-    if bucket_rows is not None and set(bucket_rows) != {str(i) for i in range(n_buckets)}:
-        # belt-and-braces behind the verified_* gates: pruning requires an
-        # explicit count for EVERY bucket of this run's scheme — a key set
-        # from any other transform or bucket count can't satisfy this, and
-        # absent-key-means-empty is never assumed at this layer
-        bucket_rows = None
-    role_domain = cfg.validation.role_domain or None
-    tool_domain = cfg.validation.tool_domain or None
-    if args.infer_domains:
-        from schema_infer_plugin_spark.checks.domains import inferred_domain_values
-
-        role_domain = inferred_domain_values(t, "role", args.domain_coverage)
-        tool_domain = inferred_domain_values(t, "tool", args.domain_coverage)
-    run_profile(spark, t, args.out, run_id=args.run_id)
-    write_histograms(spark, t, args.out)
-    summary = run_validation(
-        spark,
-        t,
-        args.out,
-        run_id=args.run_id,
-        n_buckets=n_buckets,
-        batch_buckets=batch_buckets,
-        role_domain=role_domain,
-        tool_domain=tool_domain,
-        bucket_rows=bucket_rows,
-        custom_rules=cfg.validation.custom_rules,
-        boundary_roles=(
-            (cfg.validation.boundary_first_roles, cfg.validation.boundary_last_roles)
-            if cfg.validation.boundary_first_roles and cfg.validation.boundary_last_roles
-            else None
-        ),
-        allowed_transitions=cfg.validation.allowed_transitions or None,
-    )
-    if args.triage_k:
-        summary["triage_rows"] = write_triage(
-            spark, args.out, k=args.triage_k, run_id=args.run_id
-        )
-    summary["scorecard_rows"] = write_scorecard(spark, args.out, run_id=args.run_id)
-    if args.baseline:
-        drift = run_drift(
-            spark, t, args.out, args.baseline, run_id=args.run_id,
-            psi_threshold=cfg.validation.psi_threshold,
-        )
-        summary["drift"] = {
-            r["check_name"]: (r["pass"], dict(r["metrics"])) for r in drift.collect()
-        }
-        evo = run_schema_evolution(spark, args.out, args.baseline, run_id=args.run_id)
-        summary["schema_evolution"] = [
-            (r["pass"], r["kind"], r["field"]) for r in evo.collect()
-        ]
-        pdiff = run_profile_compare(spark, args.out, args.baseline, run_id=args.run_id)
-        summary["profile_diff"] = {
-            r["col_name"]: r["verdict"] for r in pdiff.collect()
-        }
-        vdiff = run_violations_diff(spark, args.out, args.baseline, run_id=args.run_id)
-        summary["violations_diff"] = {
-            r["check_name"]: (r["pass"], int(r["n_new"]), int(r["n_resolved"]))
-            for r in vdiff.collect()
-        }
-    print(summary)
+    t, bucket_rows = resolve_transcripts_input(spark, args.input, v.n_buckets)
+    steps = plan(spark, t, args.out, args.run_id, v, bucket_rows, args.baseline, args.triage_k,
+                 args.domain_coverage if args.infer_domains else None)
+    print(run_plan(spark, steps, args.out, args.run_id))
 
 
 if __name__ == "__main__":

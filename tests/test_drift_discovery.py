@@ -4,8 +4,13 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from schema_infer_plugin_spark.plans.artifacts import read_artifact
 from schema_infer_plugin_spark.plans.runner import (
+    PASS_DRIFT,
+    PASS_PROFILE_DIFF,
+    Step,
     run_drift,
+    run_plan,
     write_histograms,
 )
 from schema_infer_plugin_spark.sources.discovery import discover_tables
@@ -47,8 +52,12 @@ def test_drift_pass_self_vs_shifted(spark, tmp_path):
         dof = rows2["drift_role"]["metrics"]["dof"]
         assert rows2["drift_role"]["metrics"]["chi2"] > 10 * (dof + 1)
 
-        # resume: second call served from disk (ledger short-circuit)
-        v3 = run_drift(spark, shifted, out2, base_out, run_id="r2")
+        # resume: a second run is served from disk (ledger short-circuit)
+        step = Step("run_drift", PASS_DRIFT, lambda: run_drift(
+            spark, shifted, out2, base_out, run_id="r2"
+        ))
+        assert run_plan(spark, [step], out2, "r2") == {"resumed": ["run_drift"]}
+        v3 = read_artifact(spark, out2, "drift_verdicts")
         assert v3.count() == v2.count()
     finally:
         t.unpersist()
@@ -147,7 +156,11 @@ def test_profile_diff_pass(spark, tmp_path):
     assert rows and all(r["verdict"] == "OK" for r in rows.values())
     assert all(r["run_id"] == "cur" for r in rows.values())
     # resume: served from disk
-    v2 = run_profile_compare(spark, cur_out, base_out, run_id="cur")
+    step = Step("run_profile_compare", PASS_PROFILE_DIFF, lambda: run_profile_compare(
+        spark, cur_out, base_out, run_id="cur"
+    ))
+    assert run_plan(spark, [step], cur_out, "cur") == {"resumed": ["run_profile_compare"]}
+    v2 = read_artifact(spark, cur_out, "profile_diff_verdicts")
     assert v2.count() == v.count()
 
 

@@ -8,8 +8,15 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from schema_infer_plugin_spark.plans.artifacts import completed_keys, read_ledger
-from schema_infer_plugin_spark.plans.runner import PASS_B, run_profile, run_validation
+from schema_infer_plugin_spark.plans.artifacts import completed_keys, read_artifact, read_ledger
+from schema_infer_plugin_spark.plans.runner import (
+    PASS_A,
+    PASS_B,
+    Step,
+    run_plan,
+    run_profile,
+    run_validation,
+)
 from schema_infer_plugin_spark.plans.validate import CHECK_NAMES, validate_transcripts
 from schema_infer_plugin_spark.sources.synth import synth_transcripts
 
@@ -37,6 +44,19 @@ def _verdict_rows(spark, out):
     return sorted(map(tuple, verd.select(cols).collect()))
 
 
+def _crash_after(n, seen=None):
+    """An ``on_batch`` hook that appends each batch to ``seen`` and raises
+    after the ``n``-th: a crash once that batch's ledger row is written."""
+    seen = [] if seen is None else seen
+
+    def hook(batch):
+        seen.append(batch)
+        if len(seen) >= n:
+            raise RuntimeError(f"injected failure after batch {len(seen)}")
+
+    return hook
+
+
 def test_resume_after_injected_crash_matches_single_shot(spark, tmp_path):
     t = synth_transcripts(spark, 3_000).persist()
     try:
@@ -49,7 +69,7 @@ def test_resume_after_injected_crash_matches_single_shot(spark, tmp_path):
         with pytest.raises(RuntimeError, match="injected failure"):
             run_validation(
                 spark, t, resumed, n_buckets=N_BUCKETS, batch_buckets=BATCH,
-                fail_after_batches=2,
+                on_batch=_crash_after(2),
             )
         done_mid = completed_keys(spark, resumed, "run0", PASS_B)
         assert len(done_mid) == 2 * BATCH  # partial progress is durable
@@ -283,9 +303,12 @@ def test_one_input_scan_per_batch_every_option(spark, tmp_path):
 def test_profile_pass_resumes_without_recompute(spark, tmp_path):
     t = synth_transcripts(spark, 500)
     out = str(tmp_path / "run")
+    steps = [Step("run_profile", PASS_A, lambda: run_profile(spark, t, out))]
     p1 = run_profile(spark, t, out)
     n_ledger = read_ledger(spark, out).count()
-    p2 = run_profile(spark, t, out)  # second call: served from disk
+    # second run: the ledger records the pass, so it is served from disk
+    assert run_plan(spark, steps, out, "run0") == {"resumed": ["run_profile"]}
+    p2 = read_artifact(spark, out, "profiles")
     assert read_ledger(spark, out).count() == n_ledger
     assert p1.count() == p2.count()
 
@@ -394,7 +417,7 @@ def test_violations_diff_new_and_resolved(spark, tmp_path):
     identity in the current run only, RESOLVED = baseline only; pass iff no
     new rows. Built by running validation over two corpora whose injected
     violations differ by a known conversation slice."""
-    from schema_infer_plugin_spark.plans.runner import run_violations_diff
+    from schema_infer_plugin_spark.plans.runner import PASS_VIOL_DIFF, run_violations_diff
 
     full = synth_transcripts(spark, 2_000).persist()
     try:
@@ -418,8 +441,12 @@ def test_violations_diff_new_and_resolved(spark, tmp_path):
         # the regression sample artifact is bounded and non-empty
         new_sample = spark.read.parquet(str(tmp_path / "cur" / "violations_new"))
         assert 0 < new_sample.count() <= 100 * len(rows)
-        # resumable: second call reads the verdict back without recompute
-        again = run_violations_diff(spark, cur_out, base_out, run_id="r")
+        # resumable: a second run reads the verdict back without recompute
+        step = Step("run_violations_diff", PASS_VIOL_DIFF, lambda: run_violations_diff(
+            spark, cur_out, base_out, run_id="r"
+        ))
+        assert run_plan(spark, [step], cur_out, "r") == {"resumed": ["run_violations_diff"]}
+        again = read_artifact(spark, cur_out, "violations_diff_verdicts")
         assert sorted(map(tuple, again.collect())) == sorted(map(tuple, verd.collect()))
     finally:
         full.unpersist()
@@ -525,7 +552,7 @@ def test_observed_verdicts_and_ledger_match_read_back(spark, tmp_path):
     )
     # 5 is pruned, the first batch is [0,1,2]; crash after it
     with pytest.raises(RuntimeError, match="injected failure"):
-        run_validation(spark, t, out, fail_after_batches=1, **options)
+        run_validation(spark, t, out, **{**options, "on_batch": _crash_after(1, batches)})
     assert batches == [["0", "1", "2"]]
     assert _verdict_files(out) == []  # a crashed run leaves no half grid
     resumed = run_validation(spark, t, out, **options)
@@ -602,7 +629,7 @@ def test_resume_refuses_ledger_rows_it_cannot_trust(spark, tmp_path):
     # (b) the rule list changed between a crash and its resume
     changed = str(tmp_path / "changed")
     with pytest.raises(RuntimeError, match="injected failure"):
-        run_validation(spark, t, changed, run_id="r_chg", fail_after_batches=1, **options)
+        run_validation(spark, t, changed, run_id="r_chg", on_batch=_crash_after(1), **options)
     rule = ("turn_cap_3", "turn_idx <= 3", "turn_idx", "turn_idx", "<= 3")
     with pytest.raises(RuntimeError, match=r"'r_chg'.*differing checks: \['turn_cap_3'\]"):
         run_validation(spark, t, changed, run_id="r_chg", custom_rules=[rule], **options)
@@ -764,6 +791,39 @@ def test_verified_count_off_by_one_raises(spark, tmp_path):
     assert _verdict_files(out) == []
 
 
+def test_read_back_lists_only_its_batch_directories(spark, tmp_path, monkeypatch):
+    """Over many one-bucket batches, each batch's violations read-back reads
+    files under its own ``partition_key=`` directories only, so a run lists
+    each bucket's directory once rather than every directory per batch; its
+    ``partition_key`` column survives (the ledger counts stay exact)."""
+    from schema_infer_plugin_spark.plans import runner
+
+    n = 8
+    t, bucket_rows = _bucketed_input(spark, tmp_path, synth_transcripts(spark, 400), n)
+    read, reads = runner.read_artifact, []
+
+    def spy(spark, out_dir, name, *args, **kwargs):
+        frame = read(spark, out_dir, name, *args, **kwargs)
+        if name == "violations":
+            reads.append((kwargs.get("partitions"), frame.inputFiles()))
+        return frame
+
+    monkeypatch.setattr(runner, "read_artifact", spy)
+    batches = []
+    out = str(tmp_path / "run")
+    s = run_validation(
+        spark, t, out, n_buckets=n, batch_rows=1, bucket_rows=bucket_rows,
+        on_batch=batches.append,
+    )
+    assert len(batches) == n and [p for p, _ in reads] == batches
+    for batch, files in reads:
+        dirs = {os.path.basename(os.path.dirname(f)) for f in files}
+        assert dirs <= {f"partition_key={k}" for k in batch}, (batch, files)
+    assert sum(len(files) for _, files in reads) == len(_violations(spark, out).inputFiles())
+    led = read_ledger(spark, out).filter(F.col("pass_name") == PASS_B).collect()
+    assert sum(r["violation_count"] for r in led) == s["violations"] == _violations(spark, out).count()
+
+
 def test_stale_bucket_directory_raises(spark, tmp_path):
     """Dynamic overwrite replaces only the bucket directories a write
     touches. Rows an earlier write left in a pending bucket's directory (a
@@ -838,7 +898,7 @@ def test_row_packed_resume_matches_single_shot(spark, tmp_path):
     run_validation(spark, t, single, **options)
     first, second = [], []
     with pytest.raises(RuntimeError, match="injected failure"):
-        run_validation(spark, t, resumed, fail_after_batches=2, on_batch=first.append, **options)
+        run_validation(spark, t, resumed, on_batch=_crash_after(2, first), **options)
     r = run_validation(spark, t, resumed, on_batch=second.append, **options)
     done = sum(first, [])
     assert len(first) == 2 and second and r["skipped"] == len(done)
